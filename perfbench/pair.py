@@ -12,9 +12,9 @@ benchmark code), builds each on its first run, and runs the workload in
 --pairs pairs, pair i with seed seed0+i on both sides and the side that
 goes first alternating. Prints, for every end-to-end metric, each side's
 median and quartiles and how many pairs the change won; ties count for
-neither side. A gain is claimed only when the change wins at least 9/10 of
-the pairs and the medians differ by more than the parent's quartile
-spread. The worktrees are removed at the end.
+neither side. A gain is claimed only from at least 10 pairs, when the
+change wins at least 9/10 of them, the medians differ by more than the
+parent's quartile spread, and no more operations failed than at the parent. The worktrees are removed at the end.
 """
 import argparse
 import json
@@ -107,8 +107,8 @@ def main():
         better = (lambda x, y: x > y) if name in HIGHER else (lambda x, y: x < y)
         wins = sum(better(y, x) for x, y in zip(p, c))
         (pm, pq1, pq3), (cm, cq1, cq3) = summary(p), summary(c)
-        gain = (wins >= 0.9 * a.pairs and abs(cm - pm) > (pq3 - pq1) and better(cm, pm)
-                and failed["change"] <= failed["parent"])
+        gain = (a.pairs >= 10 and wins >= 0.9 * a.pairs and abs(cm - pm) > (pq3 - pq1)
+                and better(cm, pm) and failed["change"] <= failed["parent"])
         print(f"{name:20s} {vals['parent'][0][name][1]:9s} "
               f"{pm:12.4g} [{pq1:8.4g}, {pq3:8.4g}] {cm:12.4g} [{cq1:8.4g}, {cq3:8.4g}] "
               f"{wins:3d}/{a.pairs}  {'gain' if gain else '-'}")

@@ -26,8 +26,7 @@ final case class JobRec(id: Int, op: Option[Int], start: Long, end: Long,
     stages: Int, agg: TaskAgg)
 final case class PlanRec(analysisMs: Double, optimizationMs: Double,
     planningMs: Double)
-final case class StreamRec(startMs: Long, batchMs: Long, planMs: Long,
-    walMs: Long, rows: Long)
+final case class StreamRec(batchMs: Long, planMs: Long, walMs: Long)
 
 /** What the listeners saw between two [[Tracer.take]] calls. */
 final case class Epoch(jobs: Seq[JobRec], plans: Seq[PlanRec],
@@ -101,9 +100,8 @@ final class Tracer(spark: SparkSession) {
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
       def d(k: String): Long = Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
-      lock.synchronized(streams += StreamRec(
-        java.time.Instant.parse(p.timestamp).toEpochMilli, d("triggerExecution"),
-        d("queryPlanning"), d("walCommit") + d("commitOffsets"), p.numInputRows))
+      lock.synchronized(streams += StreamRec(d("triggerExecution"),
+        d("queryPlanning"), d("walCommit") + d("commitOffsets")))
     }
   }
 
