@@ -4,17 +4,21 @@
 Usage, from anywhere inside the git repository:
 
     python3 perfbench/pair.py --workload snapshot_cdc [--parent HEAD~1]
-        [--change HEAD] [--pairs 10] [--seconds 12] [--seed0 1000]
+        [--change HEAD] [--pairs 10]
 
 Checks the two revisions out as git worktrees under .perfbench_work/pair/,
 puts this benchmark directory into both (so both sides run identical
 benchmark code), builds each on its first run, and runs the workload in
---pairs pairs, pair i with seed seed0+i on both sides and the side that
-goes first alternating. Prints, for every end-to-end metric, each side's
-median and quartiles and how many pairs the change won; ties count for
-neither side. A gain is claimed only from at least 10 pairs, when the
-change wins at least 9/10 of them, the medians differ by more than the
-parent's quartile spread, and no more operations failed than at the parent. The worktrees are removed at the end.
+--pairs pairs of BENCHMARK.json's run_seconds each, pair i with seed
+1000+i on both sides and the side that goes first alternating. Prints, for
+every end-to-end metric, each side's median and quartiles and how many
+pairs the change won; ties count for neither side. steal_pct, the share of
+CPU time the host took during the timed run, is a control: it shows
+whether the machine was as free for both sides, and is never a gain. A
+gain is claimed only from at least 10 pairs, when the change wins at least
+9/10 of them, the medians differ by more than the parent's quartile
+spread, and no more operations failed than at the parent. The worktrees
+are removed at the end.
 """
 import argparse
 import json
@@ -27,6 +31,9 @@ from pathlib import Path
 
 BENCH = Path(__file__).resolve().parent
 HIGHER = {"ops_per_min"}
+CONTROL = {"steal_pct"}
+SEED0 = 1000
+SECONDS = json.loads((BENCH.parent / "BENCHMARK.json").read_text())["run_seconds"]
 INFO = {"query_tail_pct", "query_samples"}
 LINE = re.compile(r"^\[perfbench\] (\S+)\s+(\S+)\s+(\S+) (\S+)$")
 
@@ -45,9 +52,9 @@ def checkout(top, dest, rev):
     shutil.copy(BENCH / "project/build.properties", dest / "perfbench/project/")
 
 
-def run_once(tree, workload, seed, seconds):
+def run_once(tree, workload, seed):
     r = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"],
                        cwd=tree, text=True, stdout=subprocess.PIPE)
     lines = r.stdout.splitlines()
     if r.returncode != 0 or not lines:
@@ -72,9 +79,6 @@ def main():
     ap.add_argument("--parent", default="HEAD~1")
     ap.add_argument("--change", default="HEAD")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=int,
-                    default=json.loads((BENCH.parent / "BENCHMARK.json").read_text())["run_seconds"])
-    ap.add_argument("--seed0", type=int, default=1000)
     a = ap.parse_args()
     top = Path(git("rev-parse", "--show-toplevel", cwd=BENCH))
     base = top / ".perfbench_work/pair"
@@ -89,7 +93,7 @@ def main():
         for i in range(a.pairs):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for side in order:
-                m, f = run_once(trees[side], a.workload, a.seed0 + i, a.seconds)
+                m, f = run_once(trees[side], a.workload, SEED0 + i)
                 vals[side].append(m)
                 failed[side] += f
                 print(f"pair {i} {side}: " + ", ".join(f"{k}={v[0]:.4g}" for k, v in m.items()),
@@ -107,8 +111,9 @@ def main():
         better = (lambda x, y: x > y) if name in HIGHER else (lambda x, y: x < y)
         wins = sum(better(y, x) for x, y in zip(p, c))
         (pm, pq1, pq3), (cm, cq1, cq3) = summary(p), summary(c)
-        gain = (a.pairs >= 10 and wins >= 0.9 * a.pairs and abs(cm - pm) > (pq3 - pq1)
-                and better(cm, pm) and failed["change"] <= failed["parent"])
+        gain = (name not in CONTROL and a.pairs >= 10 and wins >= 0.9 * a.pairs
+                and abs(cm - pm) > (pq3 - pq1) and better(cm, pm)
+                and failed["change"] <= failed["parent"])
         print(f"{name:20s} {vals['parent'][0][name][1]:9s} "
               f"{pm:12.4g} [{pq1:8.4g}, {pq3:8.4g}] {cm:12.4g} [{cq1:8.4g}, {cq3:8.4g}] "
               f"{wins:3d}/{a.pairs}  {'gain' if gain else '-'}")

@@ -28,7 +28,7 @@ object Main {
       case Some(dir) =>
         Rig.prepare(spark, a("data"), rigDir, nproc)
         val rec = new Recorder(spark, traced = false)
-        val hashes = queryWorkload(spark, rec, rigDir, 0L, Map.empty).record(s"$dir/out")
+        val hashes = new QueryWorkload(spark, rec, rigDir, 0L, Map.empty).record(s"$dir/out")
         Files.writeString(Paths.get(s"$dir/hashes.json"),
           hashes.map { case (q, h) => s"  ${Json.str(q)}: ${Json.str(h)}" }
             .mkString("{\n", ",\n", "\n}\n"))
@@ -39,12 +39,6 @@ object Main {
         run(a, spark, rigDir, nproc, traced, t0)
     } finally spark.stop()
   }
-
-  private def queryWorkload(spark: org.apache.spark.sql.SparkSession,
-      rec: Recorder, rigDir: String, seed: Long, expected: Map[String, String]) =
-    new QueryWorkload(spark, rec, rigDir, seed,
-      QueryWorkload.Families.flatMap { case (f, qs) => qs.map(_ -> f) }, expected,
-      QueryWorkload.Warm)
 
   private def run(a: Map[String, String], spark: org.apache.spark.sql.SparkSession,
       rigDir: String, nproc: Int, traced: Boolean, t0: Long): Unit = {
@@ -59,7 +53,7 @@ object Main {
       case "snapshot_cdc" =>
         new SnapshotCdc(spark, rec, rigDir, a("work"), seed, traced)
       case _ =>
-        queryWorkload(spark, rec, rigDir, seed, Json.flatStrings(
+        new QueryWorkload(spark, rec, rigDir, seed, Json.flatStrings(
           new String(Files.readAllBytes(Paths.get(a("expected"))), UTF_8)))
     }
     val s0 = System.nanoTime()
@@ -70,8 +64,12 @@ object Main {
     val setupS = (start - t0) / 1e9
     System.err.println(f"[perfbench] set-up ${setupS}%.2f s: session and rig ${(s0 - t0) / 1e9}%.2f s, " +
       f"fixtures ${(w0 - s0) / 1e9}%.2f s, warm ${(start - w0) / 1e9}%.2f s")
+    val steal0 = Metrics.cpuSteal()
     wl.timed(start + seconds * 1000000000L)
     val timedMin = (System.nanoTime() - start) / 6e10
+    val steal1 = Metrics.cpuSteal()
+    val stealPct = 100.0 * (steal1._1 - steal0._1) / math.max(1L, steal1._2 - steal0._2)
+    val liveHeapMb = Metrics.liveHeapMb(spark)
     val c0 = System.nanoTime()
     val mismatches = wl.check()
     System.err.println(f"[perfbench] timed ${(c0 - start) / 1e9}%.2f s, check ${(System.nanoTime() - c0) / 1e9}%.2f s")
@@ -80,7 +78,8 @@ object Main {
     val failed = ops.count(!_.ok)
     val correct = mismatches.isEmpty && failed == 0
 
-    val e2e = Metrics.endToEnd(ops, setupS, timedMin) ++ wl.extraMetrics()
+    val e2e = Metrics.endToEnd(ops, setupS, timedMin, liveHeapMb) ++ wl.extraMetrics() :+
+      (("steal_pct", stealPct, "%"))
     e2e.foreach { case (n, v, u) => println(f"[perfbench] $workload%-13s $n%-18s $v%14.4f $u") }
     val reported =
       if (!traced) e2e.filter(m => Metrics.EndToEnd.contains(m._1))

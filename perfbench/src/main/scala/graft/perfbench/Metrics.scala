@@ -12,12 +12,14 @@ object Metrics {
     * query latency there is the mean: a run has 12-17 queries of kinds
     * whose latencies differ several-fold, so their median jumps between
     * kinds from run to run, while the mean moves only with the work. The
-    * median and the tail are report lines. */
-  val EndToEnd = Seq("setup_s", "ops_per_min", "query_mean_ms", "peak_rss_mb")
+    * median and the tail are report lines. The memory figure is the heap
+    * the program holds live, not the JVM's resident size, which a fixed
+    * heap pins near its maximum. */
+  val EndToEnd = Seq("setup_s", "ops_per_min", "query_mean_ms", "live_heap_mb")
 
   def med(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else Stats.median(xs)
 
-  def endToEnd(ops: Seq[OpRec], setupS: Double, timedMin: Double): Seq[M] = {
+  def endToEnd(ops: Seq[OpRec], setupS: Double, timedMin: Double, liveHeapMb: Double): Seq[M] = {
     val done = ops.filter(_.ok)
     val q = done.filter(_.kind == "query").map(_.wallMs)
     val (tailP, tailV) = if (q.isEmpty) (0, 0.0) else Stats.tail(q)
@@ -32,8 +34,33 @@ object Metrics {
       ("query_samples", q.size.toDouble, "count"),
       ("op_error_rate", (ops.size - done.size).toDouble / math.max(1, ops.size), "fraction"),
       ("op_errors", (ops.size - done.size).toDouble, "count"),
+      ("live_heap_mb", liveHeapMb, "MB"),
       ("peak_rss_mb", peakRssMb(), "MB")) ++
       (if (commits.isEmpty) Nil else Seq(("commit_p50_ms", med(commits), "ms")))
+  }
+
+  /** Heap in use after a full collection: what the program holds live
+    * (caches, pinned blocks, table and plan metadata) at this point. */
+  def liveHeapMb(spark: org.apache.spark.sql.SparkSession): Double = {
+    // Spark holds the plan of the last query it ran, and with it that
+    // query's broadcast relations, until the next query runs: a one-row
+    // query first makes the figure the same whichever query ran last.
+    spark.range(1).count()
+    // The first collection queues the broadcasts, shuffles and cached
+    // blocks nothing references any more; Spark's cleaner then drops
+    // them, and the second collection frees what they held.
+    System.gc()
+    Thread.sleep(1000)
+    System.gc()
+    java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+  }
+
+  /** (steal, total) CPU time of the machine so far, from /proc/stat: the
+    * time the host ran something else while this machine wanted a core. */
+  def cpuSteal(): (Long, Long) = {
+    val f = scala.io.Source.fromFile("/proc/stat").getLines().next()
+      .split("\\s+").drop(1).take(8).map(_.toLong)
+    (f(7), f.sum)
   }
 
   /** `VmHWM` of this JVM. */

@@ -63,15 +63,17 @@ object QueryWorkload {
   * per pass, with the cache cleared after each query outside its timing.
   * Every hash must equal the expected one. */
 final class QueryWorkload(spark: SparkSession, rec: Recorder, rigDir: String,
-    seed: Long, queries: Seq[(String, String)], expected: Map[String, String],
-    warmQueries: Seq[String]) extends Workload {
+    seed: Long, expected: Map[String, String]) extends Workload {
+  import QueryWorkload._
+
+  private val queries = Families.flatMap { case (f, qs) => qs.map(_ -> f) }
   private val rng = new scala.util.Random(seed)
   private val mismatches = scala.collection.mutable.ArrayBuffer.empty[String]
 
   private def run(name: String, family: String): Unit = {
     rec.op("query", name, family) {
       val df = rec.span("catalog")(graft.SparkEntry.queries(name)(spark, rigDir))
-      val h = rec.span("action")(QueryWorkload.hashAction(df))
+      val h = rec.span("action")(hashAction(df))
       if (!expected.get(name).contains(h))
         mismatches += s"$name: hash $h, expected ${expected.getOrElse(name, "none")}"
     }
@@ -81,7 +83,7 @@ final class QueryWorkload(spark: SparkSession, rec: Recorder, rigDir: String,
   private def pass(): Unit = rng.shuffle(queries).foreach { case (q, f) => run(q, f) }
 
   def setup(): Unit = ()
-  def warm(): Unit = rec.untimed(warmQueries.foreach(q => run(q, "warm")))
+  def warm(): Unit = rec.untimed(Warm.foreach(q => run(q, "warm")))
   def timed(deadlineNs: Long): Unit =
     while (System.nanoTime() < deadlineNs) pass()
   def check(): Seq[String] = mismatches.distinct.toSeq
@@ -90,10 +92,10 @@ final class QueryWorkload(spark: SparkSession, rec: Recorder, rigDir: String,
     * `dumpDir` and returns its hash: the expected-hash file's source,
     * never used in a timed run. */
   def record(dumpDir: String): Seq[(String, String)] =
-    (queries.map(_._1) ++ warmQueries).distinct.map { q =>
+    (queries.map(_._1) ++ Warm).distinct.map { q =>
       val df = graft.SparkEntry.queries(q)(spark, rigDir)
       df.coalesce(1).write.mode("overwrite").parquet(s"$dumpDir/$q")
-      val h = QueryWorkload.hashAction(df)
+      val h = hashAction(df)
       spark.catalog.clearCache()
       q -> h
     }
