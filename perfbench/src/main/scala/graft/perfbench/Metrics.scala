@@ -56,7 +56,7 @@ object Metrics {
   }
 
   /** (steal, total) CPU time of the machine so far, from /proc/stat: the
-    * time the host ran something else while this machine wanted a core. */
+    * time the hypervisor ran something else while a virtual CPU had work. */
   def cpuSteal(): (Long, Long) = {
     val f = scala.io.Source.fromFile("/proc/stat").getLines().next()
       .split("\\s+").drop(1).take(8).map(_.toLong)

@@ -268,8 +268,8 @@ final class SnapshotCdc(spark: SparkSession, rec: Recorder, rigDir: String,
     (cols, h)
   }
 
-  /** Every read must equal the driver-side replay; the final sink and the
-    * aggregate must equal the DataFrame replay, and so must the driver-side
+  /** Every read must equal the in-memory replay; the final sink and the
+    * aggregate must equal the DataFrame replay, and so must the in-memory
     * replay of the whole stream. */
   def check(): Seq[String] = {
     val v = latest()
@@ -290,7 +290,7 @@ final class SnapshotCdc(spark: SparkSession, rec: Recorder, rigDir: String,
     if (sinkFp != wantFp) out += s"sink v$v: $sinkFp, replay: $wantFp"
     val last = model.at(history.size, history.size)
     val modelFp = (last.size.toLong, model.hash(schema.fieldNames, last.values.map((null, _))))
-    if (modelFp != wantFp) out += s"driver-side replay: $modelFp, replay: $wantFp"
+    if (modelFp != wantFp) out += s"in-memory replay: $modelFp, replay: $wantFp"
     val aggCols = Seq("event_type", "n", "n_val", "sum_v", "min_v", "max_v")
     val aggFp = fingerprint(Upsert.readSnapshot(spark, agg, Upsert.latestVersion(spark, agg)),
       aggCols)
@@ -302,7 +302,7 @@ final class SnapshotCdc(spark: SparkSession, rec: Recorder, rigDir: String,
     out.toSeq
   }
 
-  /** The replay the reads are checked against, on the driver: the live
+  /** The replay the reads are checked against, kept in memory: the live
     * rows by key after the merges among the first `n` entries of the
     * change stream and the erasures among the first `t`, with the same
     * rule as [[replay]]. */

@@ -28,7 +28,7 @@ object Stats {
       .filter { case (s, e) => e > s }
 
   /** Wall time of a call minus the union of its jobs inside the call:
-    * the driver-side time no job accounts for. Never negative. */
+    * the time of the call that no job accounts for. Never negative. */
   def gap(lo: Long, hi: Long, jobs: Seq[(Long, Long)]): Long =
     (hi - lo) - unionLength(clip(jobs, lo, hi))
 
