@@ -7,13 +7,24 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   * runs named queries with the BENCH session/action and prints, per
   * query, wall time vs per-Spark-job time (id, duration, stages,
   * tasks, call site) — the gap is driver/FS/planning work no job
-  * accounts for. Usage:
+  * accounts for (wall minus the union of job intervals: concurrent
+  * jobs overlap, so their summed durations can exceed the wall). Usage:
   *   SPARK_GRAFT_SF_DIR=… sbt "runMain graft.Profile q_snap_merge …"
   * Each query runs twice (codegen/JIT warm), the second run is the one
   * to read. Not part of any declared surface. */
 object Profile {
   private case class JobRec(id: Int, desc: String, start: Long,
       var end: Long = 0L, stages: Int = 0, tasks: Int = 0)
+
+  /** Time covered by at least one of the `(start, end)` intervals —
+    * the busy time of jobs that may run concurrently. Intervals that
+    * never ended (`end <= start`) cover nothing. */
+  private[graft] def unionMs(intervals: Seq[(Long, Long)]): Long =
+    intervals.filter { case (s, e) => e > s }.sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((busy, reach), (s, e)) =>
+        if (e <= reach) (busy, reach)
+        else (busy + e - math.max(s, reach), e)
+      }._1
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -80,9 +91,9 @@ object Profile {
       spark.catalog.clearCache()
       if (report) {
         val js = lock.synchronized(jobs.toVector)
-        val jt = js.map(j => (j.end - j.start) / 1e3).sum
+        val jt = unionMs(js.map(j => (j.start, j.end))) / 1e3
         println(f"== $name wall=$wall%.3f s jobs=${js.size} " +
-          f"sum(job)=$jt%.3f s gap=${wall - jt}%.3f s")
+          f"busy=$jt%.3f s gap=${wall - jt}%.3f s")
         js.foreach { j =>
           println(f"   job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3f s " +
             f"stages=${j.stages} tasks=${j.tasks}%4d ${j.desc.take(60)}")

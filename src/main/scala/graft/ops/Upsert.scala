@@ -247,6 +247,101 @@ object Upsert {
         d -> kvs.flatMap(_._2).distinct.sorted }
   }
 
+  // ── sink-dir schemas ────────────────────────────────────────────
+  // The one owner of "what schema does this sink dir have". Every read
+  // of a dir the sink wrote (data, dv, landing and change-record dirs)
+  // pins the schema [[dirsSchema]] returns, so no read or write
+  // submits Spark's parquet schema-discovery job — a footer scan per
+  // read, the bulk of a small read's jobs and driver gap.
+
+  /** Key under which Spark stores the writing frame's schema in every
+    * parquet footer it writes. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Dir schema by (qualified dir path, dir modification time). A data
+    * dir is immutable once written (its sidecars live under
+    * `_snapshots/`), so one footer read per dir is a permanent fact.
+    * The mtime is the dir's identity: a sink deleted and re-created at
+    * the same path re-uses dir names (claims restart at v1) but never
+    * a dir's write time, so it never hits the dead sink's schema.
+    * Access-ordered, capped. */
+  private val dirSchemaCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long),
+        org.apache.spark.sql.types.StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long),
+            org.apache.spark.sql.types.StructType]): Boolean =
+        size > 4096
+    })
+
+  /** The schema a `mergeSchema` read of `dirs` (full paths) infers,
+    * from driver metadata: each dir's footer schema (cached), merged
+    * with the same `StructType.merge` in the same order — Spark folds
+    * footers sorted by file path — so column order and the NULL-fill
+    * of dirs lacking a column are exactly the inferring read's (all
+    * fields nullable, as every file read exposes them). Dir identities
+    * cost one status call, or one listing per parent when a read spans
+    * several dirs of it. */
+  private def dirsSchema(spark: SparkSession, dirs: Seq[String])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    require(dirs.nonEmpty, "dirsSchema: no dirs")
+    val fs = fsFor(spark, dirs.head)
+    val qualified = dirs.distinct.map(d => fs.makeQualified(new Path(d)))
+    val statuses: Seq[FileStatus] = qualified.groupBy(_.getParent).toSeq
+      .flatMap {
+        case (_, Seq(one)) => Seq(fs.getFileStatus(one))
+        case (parent, ds) =>
+          val byName = fs.listStatus(parent)
+            .map(st => st.getPath.getName -> st).toMap
+          ds.map(d => byName.getOrElse(d.getName,
+            throw new java.io.FileNotFoundException(s"no sink dir $d")))
+      }
+    val caseSensitive =
+      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    ColumnBridge.asNullable(statuses.sortBy(_.getPath.toString + "/")
+      .map { st =>
+        val key = (st.getPath.toString, st.getModificationTime)
+        val hit = dirSchemaCache.get(key)
+        if (hit != null) hit
+        else {
+          val sc = footerSchema(spark, fs, st.getPath)
+          dirSchemaCache.put(key, sc)
+          sc
+        }
+      }
+      .reduce(ColumnBridge.mergeSchemas(_, _, caseSensitive)))
+  }
+
+  /** The Spark schema in the footer of `dir`'s first data file: every
+    * file of a dir comes from one write, so one footer speaks for all,
+    * and a Spark write always leaves at least one file (partition 0
+    * writes even when empty, carrying the schema). */
+  private def footerSchema(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path)
+      : org.apache.spark.sql.types.StructType = {
+    val st = fs.listStatus(dir).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName).headOption.getOrElse(
+      throw new IllegalStateException(s"no parquet data file in $dir"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+        st, spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData
+      .getKeyValueMetaData.get(SparkSchemaKey)
+    finally reader.close()
+    if (json == null) throw new IllegalStateException(
+      s"${st.getPath}: no Spark schema in the footer")
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
+  /** Read of sink dirs (full paths) under their pinned schema. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    spark.read.schema(dirsSchema(spark, dirs)).parquet(dirs: _*)
+
   /** Read of a pinned-schema dir scan with a dv set applied: the dv
     * dirs' own columns (the merge-time keys) anti-join the scan. The
     * identity for dv-less entries — every pre-MoR path pays nothing. */
@@ -254,25 +349,23 @@ object Upsert {
       dvs: Seq[String]): DataFrame =
     if (dvs.isEmpty) df
     else {
-      val dv = spark.read.option("mergeSchema", "true")
-        .parquet(dvs.map(d => s"$path/$d"): _*)
+      val dv = readDirs(spark, dvs.map(d => s"$path/$d"))
       df.join(dv, dv.columns.toIndexedSeq, "left_anti")
     }
 
   /** Union read of manifest entries with deletion vectors applied:
-    * one mergeSchema scan per DISTINCT dv set (the dv-less common case
-    * is exactly one scan — the pre-MoR plan, unchanged), `prep` applied
-    * to each group's dir scan BEFORE the anti join so pushable bounds
-    * still reach the parquet footers, groups unioned by name. */
+    * one pinned-schema scan per DISTINCT dv set (the dv-less common
+    * case is exactly one scan — the pre-MoR plan, unchanged), `prep`
+    * applied to each group's dir scan BEFORE the anti join so pushable
+    * bounds still reach the parquet footers, groups unioned by name. */
   private def readEntriesRaw(spark: SparkSession, path: String,
       entries: Seq[SnapEntry],
       prep: DataFrame => DataFrame = identity): DataFrame = {
     require(entries.nonEmpty, "readEntriesRaw: no entries")
     entries.groupBy(_.dvs).toSeq.sortBy(_._1.mkString(","))
       .map { case (dvs, es) =>
-        antiDv(spark, path, prep(
-          spark.read.option("mergeSchema", "true")
-            .parquet(es.map(e => s"$path/${e.dir}"): _*)), dvs)
+        antiDv(spark, path,
+          prep(readDirs(spark, es.map(e => s"$path/${e.dir}"))), dvs)
       }
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -513,7 +606,7 @@ object Upsert {
       preBloom: Option[Array[Byte]] = None): Unit =
     try {
       val fs = fsFor(spark, path)
-      val df = spark.read.parquet(s"$path/$dirName")
+      val df = readDirs(spark, Seq(s"$path/$dirName"))
       // GATED sinks ([[gateMarkerPath]] present): stamp the dir's
       // drift profile here, where every dir write in the sink already
       // converges (appends, merge rewrites + landings, compaction
@@ -542,7 +635,7 @@ object Upsert {
         .filter(df.columns.contains).filterNot(present.contains)
       val (ranges, n, totalRows) = keyRangesWithCount(df, statCols, present)
       writeKeyStatsFrom(spark, path, dirName, keys, ranges, n, totalRows,
-        Some(df.schema), preBloom)
+        preBloom)
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Sidecar writer from PRECOMPUTED range/count facts — the shared
@@ -555,7 +648,6 @@ object Upsert {
   private def writeKeyStatsFrom(spark: SparkSession, path: String,
       dirName: String, keys: Seq[String], ranges: ProbeRanges,
       n: Long, totalRows: Long,
-      dataSchema: Option[org.apache.spark.sql.types.StructType] = None,
       preBloom: Option[Array[Byte]] = None)
       : Unit =
     try {
@@ -590,12 +682,7 @@ object Upsert {
             val bo = fs.create(bloomPath(path, dirName), true)
             try bo.write(bytes) finally bo.close()
           case None =>
-            // Schema pinned when the caller knows it (the dir was just
-            // written from that schema): skips the footer-inference job
-            // spark.read.parquet would otherwise run per sidecar write.
-            val df = dataSchema
-              .map(s => spark.read.schema(s).parquet(s"$path/$dirName"))
-              .getOrElse(spark.read.parquet(s"$path/$dirName"))
+            val df = readDirs(spark, Seq(s"$path/$dirName"))
             val nn = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
             val bf = labeledBloom(spark, dirName)(
               nn.stat.bloomFilter(keyCanon(df, keys),
@@ -697,7 +784,7 @@ object Upsert {
     footerStats(spark, path, dirName, tagged, present) match {
       case Some((ranges, nn, totalRows)) =>
         writeKeyStatsFrom(spark, path, dirName, keys, ranges, nn,
-          totalRows, Some(df.schema), preBloom)
+          totalRows, preBloom)
       // profileDone: the gate profile above already stamped this dir —
       // the fallback must not pay the KMV sketch pass a second time.
       case None => writeKeyStats(spark, path, dirName, keys,
@@ -1734,56 +1821,14 @@ object Upsert {
     case _ => None
   }
 
-  /** Driver-side cache of a DIR SET's merged PHYSICAL schema, keyed by
-    * (path, exact dir list). Data dirs are immutable, so the merged
-    * footer schema of a fixed dir list is a permanent fact — but
-    * re-deriving it via a mergeSchema `.limit(0)` read costs one footer
-    * GET per file across the whole manifest, which on an object store
-    * turns every bounded read's schema-stability step into a
-    * corpus-wide metadata storm (the exact win data skipping exists
-    * for). Repoints/rewrites change the dir LIST, so they change the
-    * key — never a stale hit. Access-ordered, capped: a long-lived
-    * session touching many sinks evicts, it never grows unbounded. */
-  private val rawSchemaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, Seq[String]),
-        org.apache.spark.sql.types.StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Seq[String]),
-            org.apache.spark.sql.types.StructType]): Boolean = size > 64
-    })
-
-  private def rawUnionSchema(spark: SparkSession, path: String,
-      gen: String, dirs: Seq[String])
-      : org.apache.spark.sql.types.StructType = {
-    val key = (path, gen, dirs)
-    val hit = rawSchemaCache.get(key)
-    if (hit != null) hit
-    else {
-      val sc = spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(d => s"$path/$d"): _*).schema
-      rawSchemaCache.put(key, sc)
-      sc
-    }
-  }
-
   /** EMPTY frame in snapshot `version`'s LOGICAL (schema-mapped) shape,
-    * at driver-metadata cost after the first call per (path, manifest
-    * generation, dir list) — the schema-stability anchor for
-    * bounded/pruned reads, replacing a full-manifest mergeSchema
-    * footer read per call. The manifest FILE's (mtime, length) rides
-    * the cache key: dir-name reuse after a delete-and-recreate of the
-    * whole sink at the same path (claims restart at v1, so batch-1
-    * names recur) must never serve the dead sink's schema. */
+    * at driver-metadata cost ([[dirsSchema]]: cached per-dir footer
+    * schemas, no corpus footer scan) — the schema-stability anchor for
+    * bounded/pruned reads. */
   private def emptyLogicalFrame(spark: SparkSession, path: String,
       version: Int): DataFrame = {
-    val fs = fsFor(spark, path)
-    val gen = try {
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-        snapDir(path), s"v$version.list"))
-      s"${st.getModificationTime}:${st.getLen}"
-    } catch { case scala.util.control.NonFatal(_) => "?" }
-    val raw = rawUnionSchema(spark, path, gen,
-      manifestDirs(spark, path, version))
+    val raw = dirsSchema(spark,
+      manifestDirs(spark, path, version).map(d => s"$path/$d"))
     applySchemaMap(spark, path, spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw))
   }
@@ -2163,6 +2208,18 @@ object Upsert {
         "1000 attempts — writer storm or a filesystem refusing exclusive create")
   }
 
+  /** Mark claim `v` SPENT: its owner will never publish that version
+    * (an erase epoch is only a name source). The marker stays — it
+    * keeps the number unique — but turns non-empty, which the erase's
+    * claim wait reads as "no appender behind this claim" (an appender's
+    * claim stays empty until its publish deletes it). */
+  private def retireClaim(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, v: Int): Unit = {
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.claim"), true)
+    try out.write("spent".getBytes("UTF-8")) finally out.close()
+  }
+
   /** Post-publish LINEAGE reconciliation — the second half of the
     * optimistic protocol. The hazard: W1 claims v2, W2 claims v3, both
     * chain off v1; W2 publishes v3 = [b1, b3] first, W1 then publishes
@@ -2278,8 +2335,7 @@ object Upsert {
     // into a heal rewrite (resurrected delete; the rewrite FOLDS dvs).
     val dvs = dvUnionFor(spark, path)
     def dvRead(d: String) = antiDv(spark, path,
-      spark.read.option("mergeSchema", "true").parquet(s"$path/$d"),
-      dvs.getOrElse(d, Nil))
+      readDirs(spark, Seq(s"$path/$d")), dvs.getOrElse(d, Nil))
     def selfRooted(d: String) =
       provenance(spark, path, d) == Set(familyRoot(d))
     def rootNum(d: String): Long =
@@ -2458,7 +2514,7 @@ object Upsert {
     val candidates = pruneDirs(spark, path, baseEntries.map(_.dir), keys,
       keyRows, Some(pr), canons)
     lastProbedDirs.set(candidates)
-    // mergeSchema union read, PROJECTED to the key columns: the scan
+    // Merged-schema union read, PROJECTED to the key columns: the scan
     // still reads only the keys (Catalyst prunes ReadSchema to the
     // select), but the column TYPES are the dirs' own — pinning the
     // probe's schema instead crashes the vectorized reader when a
@@ -2834,7 +2890,7 @@ object Upsert {
       val perDir = baseDirs.map { d =>
         readProfileFile(fs, dirProfilePath(path, d)).getOrElse {
           missing ::= d
-          val p = profileSketch(spark.read.parquet(s"$path/$d"))
+          val p = profileSketch(readDirs(spark, Seq(s"$path/$d")))
           writeProfileFile(fs, dirProfilePath(path, d), p._1, p._2)
           p
         }
@@ -3744,7 +3800,7 @@ object Upsert {
                   latestEntries.filter(e => interleaved.contains(e.dir)))
                 .select(keys.map(col): _*).distinct()
               val rw = s"$mergeDir-r$pubV"
-              spark.read.parquet(s"$path/$mergeDir")
+              readDirs(spark, Seq(s"$path/$mergeDir"))
                 .join(inKeys, keys, "left_anti")
                 .write.mode("overwrite").parquet(s"$path/$rw")
               writeKeyStats(spark, path, rw, keys)
@@ -3849,12 +3905,10 @@ object Upsert {
 
   /** Time travel: version N exactly as published, whatever has been
     * written since — a union read of its manifest's immutable dirs.
-    * mergeSchema makes the read ADDITIVELY SCHEMA-EVOLVED: a later
-    * batch may carry new columns, and earlier dirs surface NULL there
-    * (without it, parquet union reads take ONE footer's schema and
-    * silently drop the new columns for every row). Cost: one footer
-    * read per file at planning — bounded by the batch-dir chain length,
-    * which [[compactSnapshots]] keeps short. Renames/drops/retypes are
+    * The read is ADDITIVELY SCHEMA-EVOLVED: a later batch may carry new
+    * columns, and earlier dirs surface NULL there — the merged schema
+    * of every dir ([[dirsSchema]], pinned: one cached footer per dir,
+    * never a footer scan per read). Renames/drops/retypes are
     * NOT supported (no column-id mapping in this format-lite sink —
     * the documented line short of Delta/Iceberg). */
   def readSnapshot(spark: SparkSession, path: String, version: Int): DataFrame =
@@ -4257,13 +4311,12 @@ object Upsert {
           if (!fs.exists(new org.apache.hadoop.fs.Path(path, dir)))
             return None
           val df = applySchemaMap(spark, path,
-            spark.read.option("mergeSchema", "true").parquet(s"$path/$dir"))
+            readDirs(spark, Seq(s"$path/$dir")))
           if (df.columns.exists(ChangeRecCols)) return None
           Some(df.withColumn("__op", lit("I")).withColumn("__v", lit(v)))
         case (v, Some(DeltaRecord(_))) =>
           if (!fs.exists(changesDirPath(path, v))) return None
-          val raw = spark.read.option("mergeSchema", "true")
-            .parquet(changesDirPath(path, v).toString)
+          val raw = readDirs(spark, Seq(changesDirPath(path, v).toString))
           // The op marker must survive the map (it is ours, not data):
           // shelter it under a reserved alias across the application.
           Some(applySchemaMap(spark, path,
@@ -4629,7 +4682,6 @@ object Upsert {
     // dirs are immutable, so results carry across retries.
     val processed =
       scala.collection.mutable.LinkedHashMap.empty[String, (Option[String], Long)]
-    val myClaims = scala.collection.mutable.ListBuffer.empty[Int]
     def cleanupRewrites(): Unit =
       processed.values.foreach(_._1.foreach { rw =>
         fs.delete(new org.apache.hadoop.fs.Path(path, rw), true)
@@ -4641,7 +4693,10 @@ object Upsert {
     // number — colliding `-e<epoch>` dir names and, worse, the
     // `gen-<epoch>.touch` marker, silently losing a generation bump).
     // One skipped version number per attempt, by construction;
-    // [[expireSnapshots]] sweeps them once later publishes pass.
+    // [[expireSnapshots]] sweeps them once later publishes pass. Each
+    // is marked SPENT ([[retireClaim]]) as soon as it is taken, so the
+    // claim wait below — this erase's and every later one's — never
+    // mistakes an erase epoch for an in-flight appender.
     var attempts = 0
     while (attempts < 7) {
         // ── Phase 1, LOCK-FREE: probe + rewrite new candidates ──────
@@ -4650,15 +4705,14 @@ object Upsert {
         // with zero new state formats (two racing erasures must not
         // write the same `-e` name).
         val epoch = claimVersion(spark, path)
-        myClaims += epoch
+        retireClaim(fs, path, epoch)
         val perVersion = listVersions()
         val allDirs = namesOf(perVersion.flatMap(_._2))
         val candidates = pruneDirs(spark, path,
           allDirs.filterNot(processed.contains), keys, keyRows,
           Some(doomedPr), doomedCanons)
         candidates.foreach { d =>
-          val df = spark.read.option("mergeSchema", "true")
-            .parquet(s"$path/$d")
+          val df = readDirs(spark, Seq(s"$path/$d"))
           // Bounded hit PROBE (pushed bounding box + semi join)
           // decides whether the dir rewrites at all.
           val probeSide = probeRangeFilter(df.schema, doomedPr)
@@ -4752,8 +4806,8 @@ object Upsert {
               // pre-repoint manifest and may publish dirs we are about
               // to delete. Fresh foreign claims get a bounded window
               // to publish (their manifests then hit the fixpoint
-              // below); stale claims are crashed writers and don't
-              // block.
+              // below); stale claims are crashed writers and spent
+              // (non-empty) claims are erase epochs — neither blocks.
               val deadline = System.currentTimeMillis() + 5000
               var waiting = true
               while (waiting && System.currentTimeMillis() < deadline) {
@@ -4765,12 +4819,9 @@ object Upsert {
                     // ignored, not thrown on: a NumberFormatException
                     // here lands mid-commit — after the repoints,
                     // before the original deletes — aborting the
-                    // erasure. Same Try discipline as consumeChanges'
-                    // marker parse.
-                    n.startsWith("v") && n.endsWith(".claim") &&
-                      scala.util.Try(n.stripPrefix("v")
-                        .stripSuffix(".claim").toInt).toOption
-                        .exists(!myClaims.contains(_)) &&
+                    // erasure; [[numberedName]] skips them.
+                    numberedName(n, "v", ".claim").isDefined &&
+                      st.getLen == 0 &&
                       now - st.getModificationTime < 60000
                   }
                 if (freshClaims.isEmpty) waiting = false
@@ -5080,8 +5131,7 @@ object Upsert {
             groupCols, groupCols, "__op")
         } else {
           lastRefresh.set(s"incremental:${dirs.mkString(",")}")
-          val delta = spark.read.option("mergeSchema", "true")
-            .parquet(dirs.map(d => s"$srcPath/$d"): _*)
+          val delta = readDirs(spark, dirs.map(d => s"$srcPath/$d"))
           val deltaAgg = aggOf(delta).drop("distinct_v")
             .withColumnRenamed("n", "__dn").withColumnRenamed("sum_v", "__ds")
             .withColumnRenamed("min_v", "__dmin")

@@ -6,7 +6,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge to `private[sql]` surface needed to expose custom
   * Catalyst expressions as user-facing Columns (the Expression↔Column
-  * converters moved behind the Column-node API in Spark 4). Lives in a
+  * converters moved behind the Column-node API in Spark 4), and to
+  * merge parquet footer schemas the way `mergeSchema` does. Lives in a
   * subpackage of org.apache.spark.sql solely for access; no Spark
   * internals are modified.
   */
@@ -24,6 +25,18 @@ object ColumnBridge {
     * empty map until the async listener delivers them. */
   def observationGetOrEmpty(o: org.apache.spark.sql.Observation)
       : Map[String, Any] = o.getOrEmpty
+
+  /** `StructType.merge` (private[sql]) — the merge parquet's
+    * `mergeSchema` folds footer schemas with: fields of `a` first in
+    * their order, then `b`'s new fields; nested structs merge alike. */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType, caseSensitive: Boolean)
+      : org.apache.spark.sql.types.StructType = a.merge(b, caseSensitive)
+
+  /** `StructType.asNullable` (private[spark]): the shape every file
+    * source read exposes, nested fields included. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
 
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
