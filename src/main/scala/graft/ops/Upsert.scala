@@ -548,12 +548,9 @@ object Upsert {
     * keys (dropped point-read rows). The canon below is
     * timezone-independent; bumping the file name makes every v1
     * sidecar invisible rather than wrong (a bloomless dir degrades to
-    * "always probe" — sound). Cleanup paths delete both suffixes. */
+    * "always probe" — sound). Nothing writes v1 sidecars any more. */
   private def bloomPath(path: String, dirName: String) =
     new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.bloom2")
-
-  private def legacyBloomPath(path: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.bloom")
 
   /** Canonical composite-key string for the bloom sidecars: each key
     * column canonicalized to a string, unit-separator joined -- in
@@ -1256,14 +1253,13 @@ object Upsert {
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
 
   /** Delete every sidecar a data dir may own (provenance record, range
-    * stats, bloom — current and legacy canon suffix). Data-dir deletion
+    * stats, bloom, profile). Data-dir deletion
     * stays at the call sites; missing files are no-ops. */
   private def deleteDirSidecars(fs: org.apache.hadoop.fs.FileSystem,
       path: String, dirName: String): Unit = {
     fs.delete(absorbedPath(path, dirName), false)
     fs.delete(statsPath(path, dirName), false)
     fs.delete(bloomPath(path, dirName), false)
-    fs.delete(legacyBloomPath(path, dirName), false)
     fs.delete(dirProfilePath(path, dirName), false)
   }
 
@@ -2776,9 +2772,6 @@ object Upsert {
       .toDF("column", "n_rows", "n_nulls", "n_distinct")
   }
 
-  // Legacy r17 VERSION-keyed profiles (`v<N>.profile`) are only swept
-  // by expiry/erasure hygiene now; nothing writes or reads them.
-
   private def dirProfilePath(path: String, dirName: String) =
     new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.profile")
 
@@ -3962,8 +3955,6 @@ object Upsert {
       // and the publish-timestamp sidecar.
       fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.src"), false)
       fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.meta"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.profile"),
-        false)
       fs.delete(changesMetaPath(path, v), false)
       fs.delete(changesDirPath(path, v), true)
     }
@@ -4354,7 +4345,8 @@ object Upsert {
           col("__op") =!= "P")
         .select((keys.map(col) :+ (col("__op") =!= "D").as("__exists")) ++
           cols.map(c => col(c).as(s"__post_$c")): _*)
-      val same = cols.map(c => col(s"__pre_$c") <=> col(s"__post_$c"))
+      val same = cols.map(c => comparable(pre, s"__pre_$c") <=>
+          comparable(post, s"__post_$c"))
         .reduceOption(_ && _).getOrElse(lit(true))
       val opExpr = when(col("__had_pre").isNull && col("__exists"), "I")
         .when(col("__had_pre").isNotNull && !col("__exists"), "D")
@@ -4372,6 +4364,30 @@ object Upsert {
           .select((lit("UP").as(opCol) +: keys.map(col)) ++
             cols.map(c => col(s"__pre_$c").as(c)): _*)))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Column `name` of `df` in a form `<=>` can compare: Spark orders
+    * no map type, so every map inside it becomes its entry array
+    * sorted by key (keys are unique: equal maps, equal arrays). */
+  private def comparable(df: DataFrame, name: String)
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    def hasMap(dt: DataType): Boolean = dt match {
+      case _: MapType => true
+      case ArrayType(et, _) => hasMap(et)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    def canon(c: Column, dt: DataType): Column = dt match {
+      case _ if !hasMap(dt) => c
+      case MapType(_, vt, _) => array_sort(transform(map_entries(c), e =>
+        struct(e("key").as("key"), canon(e("value"), vt).as("value"))))
+      case ArrayType(et, _) => transform(c, canon(_, et))
+      case st: StructType => when(c.isNotNull, struct(st.fields.toIndexedSeq
+        .map(f => canon(c(f.name), f.dataType).as(f.name)): _*))
+    }
+    canon(col(name), df.schema(name).dataType)
+  }
 
   /** Audit: the (from-only, to-only) dir lists the last
     * [[snapshotChanges]] actually read — spec hook for the
@@ -4491,7 +4507,8 @@ object Upsert {
     }
     val o = prep(oldDf, "__o_present", "__o_")
     val n = prep(newDf, "__n_present", "__n_")
-    val same = cols.map(c => col(s"__o_$c") <=> col(s"__n_$c"))
+    val same = cols.map(c => comparable(o, s"__o_$c") <=>
+        comparable(n, s"__n_$c"))
       .reduceOption(_ && _).getOrElse(lit(true))
     val op = when(col("__o_present").isNull, "I")
       .when(col("__n_present").isNull, "D")
@@ -4838,14 +4855,12 @@ object Upsert {
                   "quiesce appends and rerun")
               // Per-dir profiles survive erasure BY CONSTRUCTION
               // (rewrites were stamped fresh ones; deleted dirs lose
-              // theirs below) — only the legacy r17 version-keyed
-              // profiles are swept, plus every change record: their
-              // D/update-pre rows hold PRE-IMAGES, possibly the
+              // theirs below) — only the change records are swept:
+              // their D/update-pre rows hold PRE-IMAGES, possibly the
               // subject's ("the data is gone" covers them; the feed
               // falls back to the key-diff over erased content).
               fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-                .filter(n => (n.startsWith("v") && n.endsWith(".profile")) ||
-                  n.contains(".changes"))
+                .filter(_.contains(".changes"))
                 .foreach { n =>
                   fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), n),
                     true)

@@ -2,21 +2,13 @@ package graft.sources
 
 import graft.ops.Upsert
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PqType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsRuntimeFiltering}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Filter → per-column closed bounding box, shared by the plan-time
   * pushdown ([[GraftScanBuilder.pushFilters]]) and the execution-time
@@ -167,42 +159,15 @@ private[sources] object FilterBounds {
   *
   * Planning: one [[InputPartition]] per parquet file of the admitted
   * dirs (dir admission = [[Upsert.admitDirsFor]], the same range+bloom
-  * machinery as the library probes). Reading: a plain parquet-mr
-  * row reader (public Group API) — NOT Spark's vectorized reader. At
-  * 100 TB the win this path exists for is DIR-level skipping (entire
-  * partitions never open); within admitted dirs the row materializer
-  * costs more per byte than the vectorized V1 path, which is why
-  * build() only routes here when the scan could actually benefit and
-  * every other shape falls back to the V1 bridge.
+  * machinery as the library probes). Reading: Spark's vectorized
+  * parquet reader ([[GraftColumnarPartitionReader]]), every column
+  * type, nested ones included.
   *
   * Eligibility ([[Upsert.batchScanEligible]]): no declared schema
-  * evolution, no deletion vectors, and every read column of a type the
-  * row reader serves ([[GraftBatchScan.typeSupported]]) — anything
-  * else uses the V1 bridge. Exactness never rests on this choice:
-  * both paths keep every filter residual. */
+  * evolution and no deletion vectors — anything else uses the V1
+  * bridge. Exactness never rests on this choice: both paths keep every
+  * filter residual. */
 private[sources] object GraftBatchScan {
-  private[sources] def scalarSupported(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType
-       | FloatType | DoubleType | StringType | BinaryType | DateType
-       | TimestampType => true
-    case _ => false
-  }
-
-  /** Escape hatch for the vectorized Batch read path: set
-    * `graft.batch.columnar=false` (runtime conf) to force the row
-    * reader — e.g. for a sink holding foreign-written TIMESTAMP(NANOS)
-    * files, which the vectorized schema converter refuses loudly while
-    * the row reader floors them to micros. */
-  val ColumnarConf = "graft.batch.columnar"
-
-  def columnarEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(ColumnarConf).forall(_.toBoolean)
-
-  def typeSupported(dt: DataType): Boolean = dt match {
-    case ArrayType(et, _) => scalarSupported(et)
-    case other => scalarSupported(other)
-  }
-
   /** Hadoop conf as serializable pairs for the executor-side readers
     * (credentials/fs settings must travel; Configuration itself is not
     * serializable). */
@@ -268,61 +233,55 @@ private[sources] class GraftBatchScan(path: String, version: Int,
       .map(f => GraftInputPartition(f): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    // COLUMNAR when every read column is a scalar the vectorized
-    // parquet reader serves (guide §4: vectorized beats row-at-a-time
-    // per byte; the row materializer stays the fallback for arrays and
-    // as the conf escape hatch). The decision is per-scan: mixed
-    // support cannot arise within one scan, so Spark's all-partitions
-    // columnar requirement is satisfied by construction.
-    val columnar = GraftBatchScan.columnarEnabled(spark) &&
-      required.fields.forall(f => GraftBatchScan.scalarSupported(f.dataType))
+  override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required,
-      GraftBatchScan.hadoopConfKVs(spark), columnar)
-  }
+      GraftBatchScan.hadoopConfKVs(SparkSession.active))
 }
 
 private[sources] final case class GraftInputPartition(file: String)
   extends InputPartition
 
-private[sources] class GraftReaderFactory(required: StructType,
-    confKVs: Array[(String, String)], columnar: Boolean = false)
+/** Base of the sink's reader factories: every partition is read
+  * COLUMNAR, so Spark never asks for a row reader. */
+private[sources] abstract class GraftColumnarReaderFactory
   extends PartitionReaderFactory {
+  override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(
-      p.asInstanceOf[GraftInputPartition].file, required, confKVs)
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+    throw new UnsupportedOperationException(
+      "graft: sink files are read columnar only")
+}
+
+private[sources] class GraftReaderFactory(required: StructType,
+    confKVs: Array[(String, String)]) extends GraftColumnarReaderFactory {
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+      : PartitionReader[ColumnarBatch] =
     new GraftColumnarPartitionReader(
       p.asInstanceOf[GraftInputPartition].file, required, confKVs)
 }
 
-/** COLUMNAR reader over ONE parquet file via Spark's own
+/** The one reader of sink and staged change-feed parquet files: ONE
+  * file via Spark's own
   * [[org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader]]
-  * (a public class of the Spark jar — no internals modified): batches
-  * flow to WholeStageCodegen through the standard ColumnarToRow
-  * transition instead of one GenericInternalRow per row. Semantics are
-  * pinned to [[GraftPartitionReader]]: missing required columns
-  * null-fill (the vectorized reader's own missing-column vectors),
-  * CORRECTED (no-op) datetime/INT96 rebase — the raw proleptic
-  * interpretation the row reader computes by hand — and the same
-  * additive-only physical divergence the eligibility gate admits.
-  * Foreign TIMESTAMP(NANOS) files fail LOUDLY in schema conversion
-  * (the row reader floors them): set [[GraftBatchScan.ColumnarConf]]
-  * false for such sinks. */
+  * (a public class of the Spark jar — no internals modified), nested
+  * columns included. Batches flow to WholeStageCodegen through the
+  * standard ColumnarToRow transition. Requested columns the file does
+  * not carry null-fill (additive mergeSchema semantics — the only
+  * physical divergence the eligibility gate admits); datetime and
+  * INT96 rebase are CORRECTED (no-op), the raw proleptic values the
+  * library's V1 reads return. A file the reader refuses (a foreign
+  * TIMESTAMP(NANOS) column, which no Spark write produces) fails the
+  * task with an error naming the file. */
 private[sources] class GraftColumnarPartitionReader(file: String,
     required: StructType, confKVs: Array[(String, String)])
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  extends PartitionReader[ColumnarBatch] {
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
 
   private val conf = {
     val c = new Configuration(false)
     confKVs.foreach { case (k, v) => c.set(k, v) }
     // The requested Spark schema rides the conf (ParquetReadSupport's
-    // contract); the converter knobs pin the same semantics the row
-    // reader and the library's V1 reads use.
+    // contract); the converter knobs pin the same semantics the
+    // library's V1 reads use.
     c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, required.json)
     c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
@@ -352,222 +311,22 @@ private[sources] class GraftColumnarPartitionReader(file: String,
         org.apache.hadoop.mapreduce.TaskType.MAP, 0), 0)
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       conf, attempt)
-    try {
+    try naming {
       reader.initialize(split, ctx)
       reader.initBatch(new StructType(), InternalRow.empty)
       reader.enableReturningBatches()
     } catch { case e: Throwable => reader.close(); throw e }
   }
 
-  override def next(): Boolean = reader.nextKeyValue()
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    reader.getCurrentValue
-      .asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-  override def close(): Unit = reader.close()
-}
-
-/** Row reader over ONE parquet file via the public parquet-mr Group
-  * API. Columns the file does not carry surface as typed NULLs
-  * (additive mergeSchema semantics — the only physical divergence an
-  * eligible sink can have). Handles Spark's timestamp encodings
-  * (INT64 MICROS/MILLIS/NANOS and legacy INT96) and both standard
-  * 3-level and legacy 2-level list layouts. Unsupported shapes throw
-  * loudly — the eligibility gate should have routed them to the V1
-  * bridge, and a loud failure beats a silent wrong row. */
-private[sources] class GraftPartitionReader(file: String,
-    required: StructType, confKVs: Array[(String, String)])
-  extends PartitionReader[InternalRow] {
-
-  private val conf = {
-    val c = new Configuration(false)
-    confKVs.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
-  private val fileSchema: MessageType =
-    reader.getFooter.getFileMetaData.getSchema
-
-  // Projection: only the required fields the file physically carries.
-  private val carried: Array[StructField] =
-    required.fields.filter(f => fileSchema.containsField(f.name))
-  private val requested: MessageType =
-    new MessageType(fileSchema.getName,
-      carried.map(f =>
-        fileSchema.getType(fileSchema.getFieldIndex(f.name))): _*)
-  private val emptyProjection = carried.isEmpty
-
-  // Rows to emit when NO required column is physically present (pure
-  // null-fill, or an empty projection under a filtered count): the
-  // footer's row count, zero page reads.
-  private var nullRowsLeft: Long =
-    if (emptyProjection) {
-      var n = 0L
-      reader.getFooter.getBlocks.forEach(b => n += b.getRowCount)
-      n
-    } else {
-      reader.setRequestedSchema(requested)
-      0L
+  /** Spark's decode errors name the column, not the file. */
+  private def naming[T](body: => T): T =
+    try body catch {
+      case scala.util.control.NonFatal(e) => throw new java.io.IOException(
+        s"graft: cannot read parquet file $file: ${e.getMessage}", e)
     }
 
-  private val columnIO =
-    if (emptyProjection) null
-    else new ColumnIOFactory().getColumnIO(requested)
-
-  // requested-schema index (or -1) per required field, plus a
-  // precompiled per-field converter — no per-row type dispatch.
-  private val fieldIdx: Array[Int] = required.fields.map { f =>
-    if (fileSchema.containsField(f.name)) requested.getFieldIndex(f.name)
-    else -1
-  }
-  private val converters: Array[Group => Any] =
-    required.fields.zipWithIndex.map { case (f, i) =>
-      val idx = fieldIdx(i)
-      if (idx < 0) (_: Group) => null
-      else compile(idx, requested.getType(idx), f.dataType)
-    }
-
-  private def compile(idx: Int, pq: PqType, dt: DataType): Group => Any =
-    dt match {
-      case at: ArrayType =>
-        val g = pq.asGroupType()
-        require(g.getFieldCount == 1 && g.getType(0).isRepetition(
-          PqType.Repetition.REPEATED),
-          s"graft: unsupported list layout for ${pq.getName} in $file")
-        val rep = g.getType(0)
-        if (rep.isPrimitive) {
-          // Legacy 2-level: repeated primitive directly.
-          val elem = primAt(rep.asPrimitiveType(), at.elementType)
-          (grp: Group) => {
-            if (grp.getFieldRepetitionCount(idx) == 0) null
-            else {
-              val lst = grp.getGroup(idx, 0)
-              val n = lst.getFieldRepetitionCount(0)
-              val out = new Array[Any](n)
-              var k = 0
-              while (k < n) { out(k) = elem(lst, 0, k); k += 1 }
-              new GenericArrayData(out)
-            }
-          }
-        } else {
-          // Standard 3-level: repeated group "list" { element }.
-          val wrapper = rep.asGroupType()
-          require(wrapper.getFieldCount == 1 && wrapper.getType(0).isPrimitive,
-            s"graft: unsupported list element for ${pq.getName} in $file")
-          val elem = primAt(wrapper.getType(0).asPrimitiveType(),
-            at.elementType)
-          (grp: Group) => {
-            if (grp.getFieldRepetitionCount(idx) == 0) null
-            else {
-              val lst = grp.getGroup(idx, 0)
-              val n = lst.getFieldRepetitionCount(0)
-              val out = new Array[Any](n)
-              var k = 0
-              while (k < n) {
-                val w = lst.getGroup(0, k)
-                out(k) = if (w.getFieldRepetitionCount(0) == 0) null
-                         else elem(w, 0, 0)
-                k += 1
-              }
-              new GenericArrayData(out)
-            }
-          }
-        }
-      case _ =>
-        require(pq.isPrimitive,
-          s"graft: expected primitive for ${pq.getName} in $file")
-        val get = primAt(pq.asPrimitiveType(), dt)
-        (grp: Group) =>
-          if (grp.getFieldRepetitionCount(idx) == 0) null
-          else get(grp, idx, 0)
-    }
-
-  /** Converter for one primitive value at (field, repetition). */
-  private def primAt(pt: PrimitiveType, dt: DataType)
-      : (Group, Int, Int) => Any = {
-    import PrimitiveType.PrimitiveTypeName._
-    dt match {
-      case BooleanType => (g, i, r) => g.getBoolean(i, r)
-      case ByteType => (g, i, r) => g.getInteger(i, r).toByte
-      case ShortType => (g, i, r) => g.getInteger(i, r).toShort
-      case IntegerType => (g, i, r) => g.getInteger(i, r)
-      case LongType =>
-        if (pt.getPrimitiveTypeName == INT32) (g, i, r) =>
-          g.getInteger(i, r).toLong
-        else (g, i, r) => g.getLong(i, r)
-      case FloatType => (g, i, r) => g.getFloat(i, r)
-      case DoubleType => (g, i, r) => g.getDouble(i, r)
-      case StringType => (g, i, r) =>
-        UTF8String.fromBytes(g.getBinary(i, r).getBytes)
-      case BinaryType => (g, i, r) => g.getBinary(i, r).getBytes
-      case DateType => (g, i, r) => g.getInteger(i, r)
-      case TimestampType =>
-        pt.getPrimitiveTypeName match {
-          case INT96 => (g, i, r) => {
-            // 12 bytes little-endian: 8-byte nanos-of-day + 4-byte
-            // Julian day (epoch Julian day = 2440588).
-            val bytes = g.getInt96(i, r).getBytes
-            val buf = java.nio.ByteBuffer.wrap(bytes)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val nanosOfDay = buf.getLong
-            val julianDay = buf.getInt
-            (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-          }
-          case INT64 =>
-            val unit = pt.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit
-              case _ => LogicalTypeAnnotation.TimeUnit.MICROS
-            }
-            unit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                (g, i, r) => g.getLong(i, r) * 1000L
-              case LogicalTypeAnnotation.TimeUnit.NANOS =>
-                // floorDiv: pre-epoch nanos must round DOWN to micros
-                // (Spark's floor semantics); truncation reads one
-                // microsecond high for negative non-multiples.
-                (g, i, r) => Math.floorDiv(g.getLong(i, r), 1000L)
-              case _ => (g, i, r) => g.getLong(i, r)
-            }
-          case other => throw new IllegalStateException(
-            s"graft: unsupported timestamp encoding $other in $file")
-        }
-      case other => throw new IllegalStateException(
-        s"graft: unsupported read type $other in $file")
-    }
-  }
-
-  private var recordReader:
-    org.apache.parquet.io.RecordReader[Group] = null
-  private var remainingInGroup = 0L
-  private var current: InternalRow = null
-  private val nullRow: InternalRow =
-    new GenericInternalRow(new Array[Any](required.fields.length))
-
-  override def next(): Boolean = {
-    if (emptyProjection) {
-      if (nullRowsLeft <= 0) return false
-      nullRowsLeft -= 1
-      current = nullRow
-      return true
-    }
-    while (remainingInGroup == 0) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null) return false
-      remainingInGroup = pages.getRowCount
-      recordReader = columnIO.getRecordReader(pages,
-        new GroupRecordConverter(requested))
-    }
-    val g = recordReader.read()
-    remainingInGroup -= 1
-    val vals = new Array[Any](converters.length)
-    var i = 0
-    while (i < converters.length) { vals(i) = converters(i)(g); i += 1 }
-    current = new GenericInternalRow(vals)
-    true
-  }
-
-  override def get(): InternalRow = current
+  override def next(): Boolean = naming(reader.nextKeyValue())
+  override def get(): ColumnarBatch =
+    reader.getCurrentValue.asInstanceOf[ColumnarBatch]
   override def close(): Unit = reader.close()
 }

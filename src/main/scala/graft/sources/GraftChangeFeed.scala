@@ -6,14 +6,13 @@ import graft.ops.Upsert
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, V1Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** The snapshot sink's CHANGE FEED as a first-class Spark relation —
   * batch AND structured streaming:
@@ -41,7 +40,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (the recorded-records fast path — O(changes) even across a
   * compaction) as a normal distributed Spark job that STAGES the span
   * under the stream's checkpoint location, then serves the staged
-  * files through the same parquet-mr readers as the Batch scan — no
+  * files through the Batch scan's columnar reader — no
   * driver-side row collection at any size, and a replayed batch
   * re-reads its already-staged files byte-identically. `commit`
   * sweeps spans the offset log has passed. Restarting from the
@@ -166,20 +165,9 @@ private[sources] class GraftFeedScan(path: String, declared: StructType,
 
   // ── streaming: versions as offsets ───────────────────────────────
   override def toMicroBatchStream(
-      checkpointLocation: String): MicroBatchStream = {
-    // The staged spans are served by the parquet-mr row readers; gate
-    // the schema up front so an exotic column fails at stream START
-    // with the real message, not mid-batch on an executor.
-    val unsupported = declared.fields
-      .filterNot(f => GraftBatchScan.typeSupported(f.dataType))
-    require(unsupported.isEmpty,
-      s"graft changeFeed streaming: unsupported column type(s) ${
-        unsupported.map(f => s"${f.name}: ${f.dataType.simpleString}")
-          .mkString(", ")} — batch option(\"changeFeed\",\"true\") reads " +
-        "and consumeChanges/followChanges serve every type")
+      checkpointLocation: String): MicroBatchStream =
     new GraftMicroBatchStream(path, declared, keys, opCol,
       startingVersion, checkpointLocation, maxVersionsPerBatch)
-  }
 }
 
 private[sources] final case class GraftOffset(version: Int) extends Offset {
@@ -198,6 +186,7 @@ private[sources] class GraftMicroBatchStream(path: String,
   extends MicroBatchStream with SupportsAdmissionControl {
 
   private def spark = SparkSession.active
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def stagedRoot = new org.apache.hadoop.fs.Path(
     checkpointLocation, "graft-staged")
@@ -297,7 +286,11 @@ private[sources] class GraftMicroBatchStream(path: String,
             scala.util.Try(parts(1).toInt).toOption.exists(_ <= committed)
           if (stale) fs.delete(st.getPath, true)
         }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        log.warn("changeFeed: staging sweep of {} failed; stale spans " +
+          "stay on disk: {}", stagedRoot, e)
+    }
   }
 
   override def stop(): Unit = ()
@@ -309,30 +302,39 @@ private[sources] class GraftMicroBatchStream(path: String,
 private[sources] final case class GraftFeedInitialPartition(file: String)
   extends InputPartition
 
-/** Feed partition reader factory: staged span files read under the
-  * full declared schema (op is a real column of the staged parquet);
-  * zero-copy initial-batch files read under the data columns with a
-  * constant op="I" prepended (op is the declared schema's FIRST field
-  * by [[GraftChangeFeed.feedSchema]] construction). */
+/** Feed partition reader factory, columnar throughout: staged span
+  * files read under the full declared schema (op is a real column of
+  * the staged parquet); zero-copy initial-batch files read under the
+  * data columns, with a constant op="I" vector placed first (op is the
+  * declared schema's FIRST field by [[GraftChangeFeed.feedSchema]]
+  * construction). */
 private[sources] class GraftFeedReaderFactory(declared: StructType,
     opCol: String, confKVs: Array[(String, String)])
-  extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+  extends GraftColumnarReaderFactory {
+  override def createColumnarReader(p: InputPartition)
+      : PartitionReader[ColumnarBatch] =
     p match {
       case GraftInputPartition(f) =>
-        new GraftPartitionReader(f, declared, confKVs)
+        new GraftColumnarPartitionReader(f, declared, confKVs)
       case GraftFeedInitialPartition(f) =>
         val dataSchema = StructType(
           declared.fields.filterNot(_.name == opCol))
-        val inner = new GraftPartitionReader(f, dataSchema, confKVs)
-        new PartitionReader[InternalRow] {
-          private val opRow: InternalRow = new GenericInternalRow(
-            Array[Any](org.apache.spark.unsafe.types.UTF8String
-              .fromString("I")))
-          private val joined = new JoinedRow()
+        val inner = new GraftColumnarPartitionReader(f, dataSchema, confKVs)
+        new PartitionReader[ColumnarBatch] {
+          // ConstantColumnVector ignores the row id, so one vector of
+          // any capacity serves every batch.
+          private val op = new org.apache.spark.sql.execution.vectorized
+            .ConstantColumnVector(1, StringType)
+          op.setUtf8String(
+            org.apache.spark.unsafe.types.UTF8String.fromString("I"))
           override def next(): Boolean = inner.next()
-          override def get(): InternalRow = joined(opRow, inner.get())
-          override def close(): Unit = inner.close()
+          override def get(): ColumnarBatch = {
+            val data = inner.get()
+            new ColumnarBatch(
+              op +: Array.tabulate[ColumnVector](data.numCols)(data.column),
+              data.numRows)
+          }
+          override def close(): Unit = { op.close(); inner.close() }
         }
       case other => throw new IllegalStateException(
         s"graft changeFeed: unexpected partition $other")

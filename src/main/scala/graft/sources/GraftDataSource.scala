@@ -445,16 +445,14 @@ private[sources] class GraftScanBuilder(path: String, version: Int,
 
   override def build(): Scan = {
     // ROUTE: plain row scans (no pushed aggregate/limit) on an
-    // evolution-free, dv-less snapshot whose read columns the row
-    // reader serves go to the BATCH path — the one Spark's runtime
-    // filtering (broadcast-join build-side pruning) can reach. Pushed
-    // aggregates (metadata one-row answer), pushed limits (early-stop
-    // inside the bridged plan), MoR versions, schema-mapped sinks and
-    // exotic column types stay on the V1 bridge. Both paths keep every
+    // evolution-free, dv-less snapshot go to the BATCH path — the one
+    // Spark's runtime filtering (broadcast-join build-side pruning) can
+    // reach. Pushed aggregates (metadata one-row answer), pushed limits
+    // (early-stop inside the bridged plan), MoR versions and
+    // schema-mapped sinks stay on the V1 bridge. Both paths keep every
     // filter residual, so the route is a performance choice, never a
     // correctness one.
     val batchable = agg.isEmpty && limit.isEmpty &&
-      required.fields.forall(f => GraftBatchScan.typeSupported(f.dataType)) &&
       Upsert.batchScanEligible(SparkSession.active, path, version)
     if (batchable)
       new GraftBatchScan(path, version, tableSchema, required, bounds, pushed)

@@ -302,7 +302,7 @@ class DataSourceV2Spec extends SparkSpec {
     assert(afterMor.count() == 40L)
   }
 
-  test("Batch scan reads COLUMNAR for scalar schemas: vectorized batches, null-fill, conf escape hatch") {
+  test("Batch scan reads COLUMNAR: vectorized batches, null-fill, within 2x of V1") {
     val path = java.nio.file.Files.createTempDirectory("colr").toString
     val rows = (1L to 5000L).map { i =>
       (i, i.toInt, i * 1.5, s"s$i", i % 2 == 0,
@@ -346,32 +346,31 @@ class DataSourceV2Spec extends SparkSpec {
     assert(tCol <= math.max(2.0 * tLib, tLib + 0.5),
       f"columnar Batch read $tCol%.3f s should be within ~2x of the " +
         f"library read $tLib%.3f s")
-    // Escape hatch: graft.batch.columnar=false restores the row reader.
-    spark.conf.set("graft.batch.columnar", "false")
-    try {
-      val rowPath = spark.read.format("graft").load(path)
-        .filter(col("id") >= 1L)
-      val p2 = rowPath.queryExecution.executedPlan.toString
-      assert(p2.contains("GraftSnapshotBatch") &&
-        !p2.contains("ColumnarToRow"),
-        s"conf must force the row reader:\n${p2.take(900)}")
-      assert(norm(rowPath) == norm(lib), "row fallback stays exact")
-    } finally spark.conf.unset("graft.batch.columnar")
   }
 
-  test("Batch row reader serves INT96 timestamps and legacy 2-level lists") {
+  test("Batch scan reads INT96, legacy lists, decimal and nested columns columnar") {
     // Pre-Spark-4 writers (and Hive-compat settings) produce INT96
-    // timestamps and 2-level list layouts — both claimed by the
-    // reader; pin them with a sink written under those settings.
+    // timestamps and 2-level list layouts; decimal and nested columns,
+    // NULL ones included, ride the same vectorized reader. Pin them
+    // with a sink written under those settings.
     val path = java.nio.file.Files.createTempDirectory("int96").toString
     spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     spark.conf.set("spark.sql.parquet.writeLegacyFormat", "true")
     try {
+      def nullEvery7(c: org.apache.spark.sql.Column) =
+        when(col("id") % 7 =!= 0, c)
       Upsert.writeSnapshot(spark, path,
         (1L to 30L).map(i => (i,
           java.sql.Timestamp.from(java.time.Instant.parse(
             "2025-03-01T12:00:00Z").plusSeconds(i * 3607)),
-          Seq(i.toFloat, i * 2.0f))).toDF("id", "ts", "af"),
+          Seq(i.toFloat, i * 2.0f))).toDF("id", "ts", "af")
+          .withColumn("dec", (col("id") * 1.25).cast("decimal(28,6)"))
+          .withColumn("st", nullEvery7(struct(col("id").as("a"),
+            concat(lit("s"), col("id")).as("b"))))
+          .withColumn("m", nullEvery7(map(lit("k"),
+            col("id").cast("double"))))
+          .withColumn("as", nullEvery7(array(struct(col("id").as("x"),
+            lit("y").as("y"))))),
         Seq("id"), Seq("id"))
     } finally {
       spark.conf.unset("spark.sql.parquet.outputTimestampType")
@@ -379,16 +378,53 @@ class DataSourceV2Spec extends SparkSpec {
     }
     val viaBatch = spark.read.format("graft").load(path)
       .filter(col("id") >= 1L)
-    assert(viaBatch.queryExecution.executedPlan.toString
-      .contains("GraftSnapshotBatch"), "must ride the Batch path")
+    val plan = viaBatch.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftSnapshotBatch") &&
+      plan.contains("ColumnarToRow"),
+      s"must ride the Batch path, columnar:\n${plan.take(900)}")
     val lib = Upsert.readSnapshot(spark, path, 1)
-      .select("id", "ts", "af").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getSeq[Float](2)))
-      .toSet
-    val got = viaBatch.select("id", "ts", "af").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getSeq[Float](2)))
-      .toSet
-    assert(got == lib, "INT96 + legacy lists must roundtrip exactly")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(to_json(struct(lib.columns.toIndexedSeq.map(col): _*)))
+        .as[String].collect().toSet
+    assert(rows(viaBatch) == rows(lib),
+      "INT96, legacy lists, decimal and nested columns must roundtrip exactly")
+  }
+
+  test("a foreign TIMESTAMP(NANOS) file in a sink fails the read, naming the file") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Types}
+    val path = java.nio.file.Files.createTempDirectory("nanos").toString
+    Upsert.writeSnapshot(spark, path,
+      (1L to 5L).map(i => (i, java.sql.Timestamp.from(
+        java.time.Instant.parse("2025-01-01T00:00:00Z").plusSeconds(i))))
+        .toDF("id", "ts"), Seq("id"), Seq("id"))
+    // A parquet-mr file (no Spark schema key) in the data dir, named to
+    // sort after Spark's part files: the dir's schema still comes from
+    // a Spark footer, so the file reaches the scan's reader.
+    val dir = Upsert.manifestEntries(spark, path, 1).head.dir
+    val file = s"$path/$dir/zz-foreign.parquet"
+    val schema = Types.buildMessage()
+      .addField(Types.optional(PrimitiveType.PrimitiveTypeName.INT64)
+        .named("id"))
+      .addField(Types.optional(PrimitiveType.PrimitiveTypeName.INT64)
+        .as(LogicalTypeAnnotation.timestampType(true,
+          LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts"))
+      .named("spark_schema")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withConf(conf).withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try w.write(groups.newGroup().append("id", 9L).append("ts", -1500L))
+    finally w.close()
+    val e = intercept[Exception] {
+      spark.read.format("graft").load(path).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(s"$dir/zz-foreign.parquet")),
+      s"the error must name the foreign file: ${messages.mkString(" | ")}")
   }
 
   test("TableCatalog: SQL DDL/DML + time travel over named tables equal the path API") {

@@ -1230,6 +1230,54 @@ class StreamingSpec extends SparkSpec {
       "capped feed application must reconstruct the latest state")
   }
 
+  test("streaming change feed serves decimal, struct, map, array<struct> columns") {
+    import graft.ops.Upsert
+    val src = java.nio.file.Files.createTempDirectory("gnest").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("gnestck").toString
+    val outDir = java.nio.file.Files.createTempDirectory("gnestout").toString
+    def rows(ops: (String, Long, String)*) =
+      ops.toDF("op", "id", "tag")
+        .withColumn("dec", (col("id") * 1.5).cast("decimal(28,6)"))
+        .withColumn("st", struct(col("id").as("a"), col("tag").as("b")))
+        .withColumn("m", map(col("tag"), col("id").cast("double")))
+        .withColumn("as", array(struct(col("id").as("x"),
+          col("tag").as("y"))))
+    Upsert.writeSnapshot(spark, src,
+      rows((1L to 6L).map(i => ("I", i, "a")): _*).drop("op"),
+      Seq("id"), Seq("id"))                                      // v1
+    Upsert.mergeSnapshot(spark, src,
+      rows(("U", 2L, "b"), ("D", 5L, "b"), ("I", 7L, "b")),
+      Seq("id"), Seq("id"), "op")                                // v2 CoW
+    Upsert.mergeSnapshotMoR(spark, src,
+      rows(("U", 3L, "c"), ("D", 4L, "c"), ("I", 8L, "c")),
+      Seq("id"), Seq("id"), "op")                                // v3 MoR
+    // One version per micro-batch, so batch k is the span (k, k+1]:
+    // the zero-copy initial snapshot, then the two staged merge spans.
+    val q = spark.readStream.format("graft")
+      .option("changeFeed", "true")
+      .option("maxVersionsPerBatch", 1).load(src)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        df.withColumn("__batch", lit(id)).write.mode("append")
+          .parquet(outDir)
+        ()
+      }.start()
+    q.processAllAvailable(); q.stop()
+    val streamed = spark.read.parquet(outDir)
+    def json(df: org.apache.spark.sql.DataFrame) =
+      df.select(to_json(struct(
+          Seq("op", "id", "tag", "dec", "st", "m", "as").map(col): _*)))
+        .as[String].collect().toSet
+    for (k <- 0 to 2) {
+      val span = spark.read.format("graft").option("changeFeed", "true")
+        .option("startingVersion", k).option("endingVersion", k + 1)
+        .load(src)
+      val got = json(streamed.filter(col("__batch") === k))
+      assert(got.nonEmpty && got == json(span),
+        s"streamed span ($k, ${k + 1}] must equal the batch feed read")
+    }
+  }
+
   test("change-feed subscription: downstream aggregate tracks merges, MoR, compaction; replay-safe; erasure forces recompute") {
     import graft.ops.Upsert
     val src = java.nio.file.Files.createTempDirectory("feedsrc").toString
