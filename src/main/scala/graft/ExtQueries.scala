@@ -1242,7 +1242,7 @@ object ExtQueries {
           Seq("doc_id"), Seq("doc_id"))
       val bigSize = fs.getContentSummary(
         new org.apache.hadoop.fs.Path(path, "batch-1")).getLength
-      val v = graft.ops.Upsert.compactSmallDirs(s, path,
+      val v = graft.ops.Upsert.compactSnapshots(s, path,
         smallBytes = bigSize - 1)
       val in = fs.open(new org.apache.hadoop.fs.Path(
         path + "/_snapshots", s"v$v.list"))
@@ -1806,8 +1806,8 @@ object ExtQueries {
       graft.ops.Upsert.declareSkipCols(s, path, Seq("score_a", "score_b"))
       graft.ops.Upsert.writeSnapshot(s, path, docs,
         Seq("doc_id"), Seq("doc_id"))
-      val v = graft.ops.Upsert.compactSnapshotsZOrdered(s, path,
-        Seq("score_a", "score_b"), bits = 4, shards = 4)
+      val v = graft.ops.Upsert.compactSnapshots(s, path,
+        zOrderBy = Seq("score_a", "score_b"), zBits = 4, zShards = 4)
       val out = graft.ops.Upsert.readSnapshotWhere(s, path, v,
         Map("score_b" -> ((4L, 7L)))).orderBy("doc_id")
       val plan = out.queryExecution.executedPlan.toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: print physical plans for queries (all, or names passed as
@@ -62,13 +61,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val executed = args.contains("--executed")
     val names0 = args.filterNot(_ == "--executed").toSeq
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionRecipe.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (names0.nonEmpty) names0 else SparkEntry.queries.keys.toSeq.sorted

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum, xxhash64}
 
 /** Job-level profiling aid for the optimization rounds (guide §1):
@@ -29,15 +28,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionRecipe.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Tables.configureReads(spark)
     // Same split-file rig as Bench, reused if already built.

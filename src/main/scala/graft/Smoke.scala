@@ -1,20 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: run the flagship `SparkEntry.entry` (what the driver's t1
   * does) and print its row count + plan. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionRecipe.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.show(5, truncate = false)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,19 +12,7 @@ object Verify {
     val unknown = only.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Reference semantics are permissive (pandas): failed parses → null,
-      // not errors. Spark 4 defaults ANSI on; turn it off for parity.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // testdata events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects;
-      // read as epoch-nanos long, graft.sources.Tables converts back.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionRecipe.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -34,6 +34,10 @@ final class DriftRefusedException(msg: String)
   */
 object Upsert {
 
+  /** slf4j (Spark's own logging backend): a best-effort sidecar that
+    * is not written costs readers pruning, so it must not be silent. */
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Deterministic within-batch dedup: keep the first row per key under
     * `tieBreak` ordering (row_number, not dropDuplicates, so the surviving
     * row is stable across runs/partitionings — SURVEY.md §7.4 hazard 7). */
@@ -438,7 +442,7 @@ object Upsert {
 
   /** Accepts both EXTERNAL values (Timestamp/Date/Instant/LocalDate —
     * what Spark aggregates collect) and the CANONICAL Long the decode
-    * side produces: writeKeyStats re-encodes decoded range values when
+    * side produces: writeKeyStatsFrom re-encodes decoded range values when
     * rendering sidecar lines, and before the Number branches below,
     * that re-encode MatchError'd for date/ts tags — silently swallowed
     * by the sidecar writer's best-effort catch, so every timestamp- or
@@ -587,66 +591,18 @@ object Upsert {
     * bounded driver set, same class as the manifest listings. */
   private[graft] val BloomProbeMax = 1024
 
-  /** Record the `.stats` sidecar for a just-written data dir: one line
-    * per supported key column, `col TAB tag TAB min TAB max` (URL-coded
-    * strings), or `col TAB tag TAB none` when the dir holds no non-null
-    * values for it. Small dirs (≤ [[BloomMaxKeys]] non-null keys) also
-    * get a `.bloom` exact-membership sketch over [[keyCanon]] — range
-    * stats cannot prune hash-distributed keys (every dir spans the full
-    * range), the bloom can. One columnar scan of the NEW dir only — at
-    * 100 TB the dir is the batch, never the corpus. Best-effort: a
-    * failure to write sidecars must never fail the data write (readers
-    * just probe). */
-  private def writeKeyStats(spark: SparkSession, path: String,
-      dirName: String, keys: Seq[String],
-      profileDone: Boolean = false,
-      preBloom: Option[Array[Byte]] = None): Unit =
-    try {
-      val fs = fsFor(spark, path)
-      val df = readDirs(spark, Seq(s"$path/$dirName"))
-      // GATED sinks ([[gateMarkerPath]] present): stamp the dir's
-      // drift profile here, where every dir write in the sink already
-      // converges (appends, merge rewrites + landings, compaction
-      // outputs, erasure rewrites, heals) — one extra pass over the
-      // NEW dir, and the gate never re-reads published data. Before
-      // the key-presence bail: a dir without the key columns still
-      // profiles (the gate covers all columns, not just keys).
-      // `profileDone` skips it when the caller (writeDirWithStats'
-      // footer fallback) already stamped this dir's profile — the
-      // KMV sketch pass must not run twice per gated write.
-      try {
-        if (!profileDone && fs.exists(gateMarkerPath(path))) {
-          val (rows, m) = profileSketch(df)
-          writeProfileFile(fs, dirProfilePath(path, dirName), rows, m)
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-      val present = keys.filter(df.columns.contains)
-      if (present.size != keys.size) return
-      // Ranges and the fully-keyed row count in ONE pass (the count
-      // sizes the bloom); the bloom build is the only second pass —
-      // two scans of the NEW dir per sidecar write, down from three.
-      // Declared skip columns ride the SAME aggregate (a few extra
-      // min/max columns, zero extra passes); the non-null count stays
-      // keyed to the key columns (it sizes the key bloom).
-      val statCols = present ++ recordedSkipCols(spark, path)
-        .filter(df.columns.contains).filterNot(present.contains)
-      val (ranges, n, totalRows) = keyRangesWithCount(df, statCols, present)
-      writeKeyStatsFrom(spark, path, dirName, keys, ranges, n, totalRows,
-        preBloom)
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Sidecar writer from PRECOMPUTED range/count facts — the shared
-    * tail of [[writeKeyStats]] (re-read aggregate) and
-    * [[writeDirWithStats]] (stats observed on the write job). Writes
-    * the `.stats` lines; small dirs also get the `.bloom2` sketch —
-    * the one residual post-write pass, column-pruned to the keys.
-    * Best-effort, same contract as ever: a sidecar failure never fails
-    * the data write. */
+  /** Record the `.stats` sidecar of a just-written data dir from its
+    * range/count facts: one line per supported stat column, `col TAB
+    * tag TAB min TAB max` (URL-coded strings), or `col TAB tag TAB
+    * none` when the dir holds no non-null values for it. Small dirs
+    * (≤ [[BloomMaxKeys]] non-null keys) also get a `.bloom2`
+    * exact-membership sketch over [[keyCanon]] — range stats cannot
+    * prune hash-distributed keys, the bloom can. Best-effort: a sidecar
+    * failure never fails the data write (readers just probe); it logs
+    * a WARN naming the dir. */
   private def writeKeyStatsFrom(spark: SparkSession, path: String,
       dirName: String, keys: Seq[String], ranges: ProbeRanges,
-      n: Long, totalRows: Long,
-      preBloom: Option[Array[Byte]] = None)
-      : Unit =
+      n: Long, totalRows: Long, preBloom: Option[Array[Byte]]): Unit =
     try {
       val fs = fsFor(spark, path)
       val lines = ranges.map {
@@ -687,21 +643,27 @@ object Upsert {
             val bo = fs.create(bloomPath(path, dirName), true)
             try bf.writeTo(bo) finally bo.close()
         }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    } catch { case scala.util.control.NonFatal(_) => () }
+      } catch { case scala.util.control.NonFatal(e) =>
+        sidecarSkipped("bloom", dirName, e) }
+    } catch { case scala.util.control.NonFatal(e) =>
+      sidecarSkipped("stats", dirName, e) }
 
-  /** Write `df` as data dir `<path>/<dirName>` and stamp its `.stats`
-    * sidecar from the just-written PARQUET FOOTERS at driver-metadata
-    * cost — replacing the re-read range-aggregate pass every dir write
-    * used to pay. At 100 TB that pass is a full scan of the batch;
-    * the footers already carry exact per-column min/max/null-count
-    * statistics (guide §6: footer stats are the skip machinery), so
-    * deriving the sidecar from them removes a whole pass per publish.
-    * The bloom build (small dirs) stays the one post-write pass;
-    * gated sinks keep their profile pass (a KMV sketch needs the
-    * data). Unusable footers (INT96 timestamps, stats omitted for
-    * oversized values, unexpected physical types) fall back to the
-    * re-read path, so the sidecar contract is unchanged. */
+  private def sidecarSkipped(what: String, dirName: String,
+      e: Throwable): Unit =
+    log.warn("graft: {} sidecar of {} not written: {}", what, dirName, e)
+
+  /** Write `df` as data dir `<path>/<dirName>` — every data dir the
+    * sink writes goes through here — and stamp its `.stats` sidecar
+    * from the just-written PARQUET FOOTERS at driver-metadata cost: the
+    * footers already carry exact per-column min/max/null-count
+    * statistics (guide §6: footer stats are the skip machinery), so no
+    * re-read range aggregate runs. Declared skip columns ride the same
+    * footers. The bloom build (small dirs) stays the one post-write
+    * pass unless `keyBound` lets it ride the write job; gated sinks
+    * keep their profile pass (a KMV sketch needs the data). Unusable
+    * footers (INT96 timestamps, stats omitted for oversized values,
+    * unexpected physical types) fall back to one range aggregate over
+    * the re-read dir, so the sidecar contract is unchanged. */
   private def writeDirWithStats(spark: SparkSession, path: String,
       dirName: String, df: DataFrame, keys: Seq[String],
       keyBound: Option[Long] = None,
@@ -709,8 +671,10 @@ object Upsert {
       : Unit =
     labeled(spark, s"graft.writeDir $dirName") {
     val present = keys.filter(df.columns.contains)
+    // A keyless write (a sink that never recorded its keys) gets no
+    // sidecar: nothing prunes by a key it does not have.
     val statCols =
-      if (present.size != keys.size) Nil
+      if (keys.isEmpty || present.size != keys.size) Nil
       else present ++ recordedSkipCols(spark, path)
         .filter(df.columns.contains).filterNot(present.contains)
     val tagged = statCols.flatMap(k =>
@@ -759,7 +723,8 @@ object Upsert {
           spark.read.schema(df.schema).parquet(s"$path/$dirName")))
         writeProfileFile(fs, dirProfilePath(path, dirName), rows, m)
       }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) =>
+      sidecarSkipped("profile", dirName, e) }
     if (present.size != keys.size || tagged.isEmpty) return
     // Drain the observation (the listener delivering it is async —
     // poll briefly, then fall back to the scan-built pass; a missing
@@ -778,14 +743,14 @@ object Upsert {
       }
       bytes
     }
-    footerStats(spark, path, dirName, tagged, present) match {
-      case Some((ranges, nn, totalRows)) =>
-        writeKeyStatsFrom(spark, path, dirName, keys, ranges, nn,
-          totalRows, preBloom)
-      // profileDone: the gate profile above already stamped this dir —
-      // the fallback must not pay the KMV sketch pass a second time.
-      case None => writeKeyStats(spark, path, dirName, keys,
-        profileDone = true, preBloom = preBloom)
+    val facts = footerStats(spark, path, dirName, tagged, present)
+      .orElse(try Some(keyRangesWithCount(
+          readDirs(spark, Seq(s"$path/$dirName")), statCols, present))
+        catch { case scala.util.control.NonFatal(e) =>
+          sidecarSkipped("stats", dirName, e); None })
+    facts.foreach { case (ranges, nn, totalRows) =>
+      writeKeyStatsFrom(spark, path, dirName, keys, ranges, nn,
+        totalRows, preBloom)
     }
   }
 
@@ -795,7 +760,7 @@ object Upsert {
 
   /** Range/count facts of a just-written dir read from its parquet
     * FOOTERS — zero data passes. Returns (per-column ranges in
-    * [[writeKeyStats]]' shape, joint-non-null UPPER bound over
+    * [[keyRangesWithCount]]' shape, joint-non-null UPPER bound over
     * `nnCols`, exact row total), or None when any needed column's
     * stats are unusable. The non-null bound sizes the bloom: joint
     * non-null ≤ min per-column non-null, so the bloom is sized ≥ the
@@ -1551,7 +1516,8 @@ object Upsert {
       val fs = fsFor(spark, path)
       val out = fs.create(keyColsPath(path), true)
       try out.write(keys.mkString("\n").getBytes("UTF-8")) finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) =>
+      log.warn("graft: key columns of {} not recorded: {}", path, e) }
 
   private def recordedKeyCols(spark: SparkSession, path: String): Seq[String] = {
     val fs = fsFor(spark, path)
@@ -2085,6 +2051,15 @@ object Upsert {
   private def absorbedPath(path: String, dirName: String) =
     new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.absorbed")
 
+  /** Record `dirName`'s provenance explicitly: the roots whose rows it
+    * holds (a rewrite or compact dir's name does not parse to them). */
+  private def writeAbsorbed(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, dirName: String, roots: Set[String]): Unit = {
+    val out = fs.create(absorbedPath(path, dirName), true)
+    try out.write(roots.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
   private def provenance(spark: SparkSession, path: String,
                          dirName: String): Set[String] = {
     val fs = fsFor(spark, path)
@@ -2361,13 +2336,11 @@ object Upsert {
             // erasure rewrite (batch-1-m5-r12) would name-derive the
             // wrong root (rootOf only strips the final -r).
             val rw = s"${current(b)}-r$version"
-            bDf.join(eKeys, keys, "left_anti")
-              .write.mode("overwrite").parquet(s"$path/$rw")
-            val out = fsFor(spark, path).create(absorbedPath(path, rw), true)
-            try out.write(provenance(spark, path, b).toSeq.sorted
-              .mkString("\n").getBytes("UTF-8"))
-            finally out.close()
-            writeKeyStats(spark, path, rw, keys)
+            writeDirWithStats(spark, path, rw,
+              bDf.join(eKeys, keys, "left_anti"), keys,
+              keyBound = readDirRowCount(spark, path, bCur))
+            writeAbsorbed(fsFor(spark, path), path, rw,
+              provenance(spark, path, b))
             touchRewriteGen(spark, path, version)
             current(b) = rw
           }
@@ -2458,9 +2431,9 @@ object Upsert {
           if (stolen == 0) ownDir
           else {
             val rw = s"${rootOf(dirName)}-r$version"
-            own.join(rivalKeys, keys, "left_anti")
-              .write.mode("overwrite").parquet(s"$path/$rw")
-            writeKeyStats(spark, path, rw, keys)
+            writeDirWithStats(spark, path, rw,
+              own.join(rivalKeys, keys, "left_anti"), keys,
+              keyBound = readDirRowCount(spark, path, ownDir))
             // The heal yields keys a reader may already have counted —
             // a content-changing rewrite for delta-purity purposes.
             touchRewriteGen(spark, path, version)
@@ -2638,7 +2611,7 @@ object Upsert {
   // invalidation problem — a version created by merge/compaction/
   // erasure reuses the carried dirs' sidecars and only its REWRITTEN
   // dirs (batch-sized by the copy-on-write discipline) ever need a
-  // profile pass, run by the same writeKeyStats hook that stamps range
+  // profile pass, run by the same writeDirWithStats hook that stamps range
   // stats. (The r17 design keyed profiles by VERSION: one merge or
   // erasure orphaned the cache and the next gated publish re-profiled
   // the corpus.) Sinks opt in via the `gate.on` marker (first gated
@@ -2841,7 +2814,7 @@ object Upsert {
     * sidecars (dirs are immutable, so a dir's sidecar is truthful
     * forever — versions created by merge/compaction/erasure reuse the
     * carried dirs' sidecars, their rewrites having been stamped by the
-    * same writeKeyStats hook that writes range stats); the candidate
+    * same writeDirWithStats hook that writes range stats); the candidate
     * adds the fresh rows' one-pass sketch, and the probe-pruned anti
     * join supplies those fresh rows at batch cost too. Only dirs
     * predating the sink's gate opt-in (or whose best-effort sidecar
@@ -2908,7 +2881,7 @@ object Upsert {
             .mkString(", "))
     } else lastGateMode.set("bootstrap")
     // No version-level persist: the batch dir's own profile sidecar is
-    // stamped inside the publish path (writeKeyStats sees the gate
+    // stamped inside the publish path (writeDirWithStats sees the gate
     // marker), and carried dirs already have theirs — there is nothing
     // that can go stale when an interleaved writer or reconcile
     // rewrite changes the published manifest.
@@ -3053,62 +3026,163 @@ object Upsert {
     }
   }
 
-  /** Compact the current version's batch-dir chain into ONE dir and
-    * publish it as version latest+1 (content-identical read). Older
-    * manifests keep referencing the original immutable dirs, so every
-    * historical version still time-travels — nothing is deleted here
-    * (retention is a separate, explicitly destructive decision a
-    * deployment makes against its own version horizon).
-    *
-    * Concurrency: compaction is SERIALIZED by an exclusive
-    * `_snapshots/compact.lock` — two concurrent compactors basing on
-    * the same version would otherwise each publish a full base rewrite
-    * and the later one's carry would double-read the earlier's rows.
-    * (A crashed compactor leaves the lock; the error message names it
-    * — remove it after confirming no compactor is live. Writers are
-    * never blocked by the lock.) Compaction racing WRITERS stays
-    * optimistic: interleaved batch dirs are carried next to the
-    * compact dir, diffed by PROVENANCE so a dir whose rows the
-    * compacted base already covers (the base dirs themselves, or a
-    * rewrite of an absorbed batch) is never double-included. */
-  /** Test hook: runs between the (lock-free) base rewrite and the lock
-    * acquisition, so specs can inject a racing rewriter into exactly
-    * the window the staleness re-validation exists for. */
+  /** Test hook: runs between the (lock-free) compaction rewrite and
+    * the lock acquisition, so specs can inject a racing rewriter into
+    * exactly the window the staleness re-validation exists for. */
   private[graft] var compactPreLockHook: () => Unit = () => ()
 
-  def compactSnapshots(spark: SparkSession, path: String): Int =
-    compactSnapshotsWith(spark, path,
-      df => keySortedForFooters(df, recordedKeyCols(spark, path)))
+  /** OPTIMIZE: repackage the current version's dirs into ONE claim-named
+    * `compact-<v>` dir and publish it as a new version (content-identical
+    * read). Older manifests keep referencing the original immutable
+    * dirs, so every historical version still time-travels — nothing is
+    * deleted here (retention is [[expireSnapshots]]' decision).
+    *
+    * Which dirs pack: every entry by default; with `smallBytes`, only
+    * the entries whose dir holds at most that many bytes (the bin-pack
+    * a 100 TB sink runs routinely — a day of trickle CDC batches packs
+    * while the multi-TB base carries by reference, so the cost tracks
+    * the NEW data, not the corpus). The input decides the rest:
+    *   - every entry packs: the rewrite reads the LOGICAL snapshot
+    *     (schema map applied, dvs folded — compaction is what resets
+    *     dv'd entries and physically migrates renames), and interleaved
+    *     appends carry by PROVENANCE diff;
+    *   - some entries carry: the pack reads its entries RAW (dvs still
+    *     folded) so it matches the carried dirs' physical schema, the
+    *     carry is every latest dir not packed, and fewer than 2 packed
+    *     dirs is a no-op returning the current version.
+    * Layout: key-sorted (range-partitioned) so the big dir's footers
+    * stay probe-skippable; with `zOrderBy`, the Morton interleave of
+    * those integral columns instead ([[graft.ext.Export.zorderKey]],
+    * `zBits` low bits each, `zBits * zOrderBy.size <= 62`, `zShards`
+    * pinned output files) — looser on the first key, but a bound on
+    * ANY z column skips files (declare them with [[declareSkipCols]]
+    * so bounded reads also prune dirs).
+    *
+    * Concurrency: the rewrite runs LOCK-FREE; only the staleness check
+    * + publish + carry reconcile hold the exclusive
+    * `_snapshots/compact.lock` (holding it across the rewrite would
+    * serialize every merge, erasure and streaming CDC batch behind the
+    * slowest operation in the sink — the r15 liveness hole). Dirs are
+    * immutable and every rewriter REPLACES the entries it touches, so
+    * "every packed entry still listed" ⟺ "the content we packed is
+    * still live"; a stale pack is deleted and redone from the new
+    * latest. A crashed compactor leaves the lock; the error names it.
+    * Content-preserving: never bumps the rewrite generation. */
+  def compactSnapshots(spark: SparkSession, path: String,
+      smallBytes: Long = Long.MaxValue, zOrderBy: Seq[String] = Nil,
+      zBits: Int = 12, zShards: Int = 0): Int =
+      labeled(spark, "graft.compact") {
+    val fs = fsFor(spark, path)
+    fs.mkdirs(snapDir(path))
+    var attempts = 0
+    while (attempts < 5) {
+      // Advisory fail-fast (not the protection — the post-lock
+      // staleness check is): a rewriter holding the lock RIGHT NOW is
+      // about to invalidate whatever we'd pack, so don't burn a rewrite
+      // on it. Racy by nature; a collision that slips through just
+      // costs one stale-retry.
+      val advisory = new org.apache.hadoop.fs.Path(snapDir(path),
+        "compact.lock")
+      if (fs.exists(advisory)) throw new LockHeldException(
+        s"compactSnapshots: another rewriter holds $advisory — if its " +
+          "process crashed, delete the lock file and retry", null)
+      val cur = latestVersion(spark, path)
+      require(cur >= 1, "nothing to compact: no published snapshot")
+      val baseEntries = manifestEntries(spark, path, cur)
+      val packedEntries =
+        if (smallBytes == Long.MaxValue) baseEntries
+        else baseEntries.filter { e =>
+          fs.getContentSummary(new org.apache.hadoop.fs.Path(path, e.dir))
+            .getLength <= smallBytes
+        }
+      val full = packedEntries.size == baseEntries.size
+      if (!full && packedEntries.size < 2) return cur
+      val packed = packedEntries.map(_.dir)
+      val absorbed = coverage(spark, path, packed)
+      // Same claim discipline as writeSnapshot: a compactor racing a
+      // writer must not reuse the writer's version number, and the dir
+      // name is unique across racing compactors before either locks.
+      val target = claimVersion(spark, path)
+      val dirName = s"compact-$target"
+      val statKeys = recordedKeyCols(spark, path)
+      val rows =
+        if (full) readSnapshot(spark, path, cur)
+        else readEntriesRaw(spark, path, packedEntries)
+      writeDirWithStats(spark, path, dirName,
+        if (zOrderBy.nonEmpty) zOrderLayout(rows, zOrderBy, zBits, zShards)
+        else keySortedForFooters(rows, statKeys),
+        statKeys)
+      // Provenance BEFORE the manifest publish: a manifest referencing
+      // a compact dir must never be readable without its absorbed set
+      // (reconciliation reasons over it).
+      writeAbsorbed(fs, path, dirName, absorbed)
+      compactPreLockHook()
+      val lock = try acquireRewriterLock(fs, path, "compactSnapshots")
+        catch { case e: LockHeldException =>
+          fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
+          deleteDirSidecars(fs, path, dirName)
+          throw e
+        }
+      try {
+        val latestNow = latestVersion(spark, path)
+        val latestEntries = manifestEntries(spark, path, latestNow)
+        val latestDirs = latestEntries.map(_.dir)
+        // Entry-level: a dv added to a packed dir is a content change.
+        if (packedEntries.forall(latestEntries.contains)) {
+          // Carry from the LATEST manifest. A full pack carries the
+          // dirs a writer published since `cur` whose provenance the
+          // pack does not cover (sequential compact-then-write content;
+          // the writers' own reconcileLineage covers the inverse
+          // order). A partial pack carries every dir it did not pack —
+          // large base dirs, appends, even rewrites of large dirs.
+          val carry =
+            if (full) latestDirs
+              .filterNot(d => provenance(spark, path, d).subsetOf(absorbed))
+            else latestDirs.filterNot(packed.contains)
+          carry.foreach { d =>
+            val p = provenance(spark, path, d)
+            if (p.exists(absorbed)) throw new IllegalStateException(
+              s"compactSnapshots: carried dir $d partially overlaps " +
+                s"the packed set (${p.filter(absorbed)}) — concurrent " +
+                "compaction artifacts; resolve manually")
+          }
+          // Publish strictly above whatever is latest: re-claim when a
+          // writer published past our pre-rewrite claim (readers take
+          // the max version as "current").
+          val pubV = if (latestNow >= target) claimVersion(spark, path)
+                     else target
+          publishManifest(spark, path, pubV, dirName +: carry)
+          val rv = reconcileCompact(spark, path, pubV, dirName, absorbed,
+            baseVersion = cur)
+          // Change record (none kind): this version's content equals
+          // latestNow's only when every latest dir was packed or carried
+          // and the reconcile did not republish; a covered-but-not-packed
+          // latest dir would make "no change" a lie, so it skips.
+          if (rv == pubV && latestDirs.forall(d =>
+              packed.contains(d) || carry.contains(d)))
+            writeChangeMeta(fs, path, rv, "none", latestNow, None)
+          return rv
+        }
+      } finally fs.delete(lock, false)
+      // Stale: a rewriter (merge/erasure/another compactor) replaced
+      // part of what we packed. Drop the orphan and retry.
+      fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
+      deleteDirSidecars(fs, path, dirName)
+      attempts += 1
+    }
+    throw new IllegalStateException(
+      s"compactSnapshots: packed dirs rewritten under us 5 times at " +
+        s"$path — rewriter storm; retry when merges/erasures quiesce")
+  }
 
-  /** [[compactSnapshots]] with a Z-ORDER layout: the compact dir is
-    * range-partitioned and sorted by the Morton interleave of `zCols`
-    * ([[graft.ext.Export.zorderKey]] — `bits` low bits per column,
-    * `bits * zCols.size <= 62`), instead of lexicographic key order.
-    * The key sort gives perfect footer ranges on the FIRST key column
-    * and nothing on the second — a probe bounded only on column 2 of
-    * a big compact dir reads every row group. The Morton order gives
-    * every listed column PARTIAL locality: each output file covers a
-    * hypercube of the value space, so its footer min/max is tight on
-    * EVERY z column and a bound on any of them skips files/row groups.
-    * That is the multi-dimensional skipping trade: slightly looser on
-    * column 1, usable on all of them. Integral columns only (the
-    * Morton key interleaves low bits of a long cast; declare the
-    * columns with [[declareSkipCols]] so bounded reads also prune at
-    * dir level). Content-identical, same optimistic protocol. */
-  def compactSnapshotsZOrdered(spark: SparkSession, path: String,
-      zCols: Seq[String], bits: Int = 12, shards: Int = 0): Int =
-    compactSnapshotsWith(spark, path,
-      zOrderLayout(_, zCols, bits, shards, "compactSnapshotsZOrdered"))
-
-  /** The shared Morton layout body behind [[compactSnapshotsZOrdered]]
-    * and [[compactSmallDirs]]' z option. */
+  /** The Morton layout of [[compactSnapshots]]' `zOrderBy`. */
   private def zOrderLayout(df: DataFrame, zCols: Seq[String], bits: Int,
-      shards: Int, opName: String): DataFrame = {
-    require(zCols.nonEmpty && zCols.forall(df.columns.contains),
-      s"$opName: z columns ${zCols.mkString(",")} " +
+      shards: Int): DataFrame = {
+    require(zCols.forall(df.columns.contains),
+      s"compactSnapshots: z columns ${zCols.mkString(",")} " +
         s"must exist in the snapshot (${df.columns.mkString(",")})")
     require(!df.columns.contains("__z"),
-      s"$opName: the sink has a data column named " +
+      "compactSnapshots: the sink has a data column named " +
         "'__z' (the reserved scratch column) — the layout would " +
         "silently destroy it; rename the column first")
     val z = df.withColumn("__z",
@@ -3121,252 +3195,6 @@ object Upsert {
      else z.repartitionByRange(col("__z")))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-  }
-
-  private def compactSnapshotsWith(spark: SparkSession, path: String,
-      layout: DataFrame => DataFrame): Int =
-      labeled(spark, "graft.compact") {
-    val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    // The critical section covers ONLY claim-diff + publish + carry
-    // reconcile — metadata ops. The base rewrite (the hours-long part
-    // at 100 TB) runs LOCK-FREE and is re-validated after acquisition:
-    // holding the lock across the rewrite would serialize every merge,
-    // erasure, and streaming CDC batch behind the slowest operation in
-    // the sink (the r15 liveness hole). Staleness check: dirs are
-    // immutable and every rewriter REPLACES the dirs it touches in the
-    // latest manifest, so "all base dirs still listed" ⟺ "the content
-    // we compacted is still the live content". Plain appends only ADD
-    // dirs and are carried. On a stale base the orphaned rewrite is
-    // deleted and the compaction retried from the new latest.
-    var attempts = 0
-    while (attempts < 5) {
-      // Advisory fail-fast (not the protection — the post-lock
-      // staleness check is): a rewriter holding the lock RIGHT NOW is
-      // about to invalidate whatever base we'd compact, so don't burn a
-      // full rewrite on it. Racy by nature; a collision that slips
-      // through just costs one stale-retry.
-      val advisory = new org.apache.hadoop.fs.Path(snapDir(path),
-        "compact.lock")
-      if (fs.exists(advisory)) throw new LockHeldException(
-        s"compactSnapshots: another rewriter holds $advisory — if its " +
-          "process crashed, delete the lock file and retry", null)
-      val cur = latestVersion(spark, path)
-      require(cur >= 1, "nothing to compact: no published snapshot")
-      // Same claim discipline as writeSnapshot: a compactor racing a
-      // writer must not reuse the writer's version number. The claim
-      // also makes the dir name unique across racing compactors even
-      // before either holds the lock.
-      val target = claimVersion(spark, path)
-      val dirName = s"compact-$target"
-      val baseEntries = manifestEntries(spark, path, cur)
-      val baseDirs = baseEntries.map(_.dir)
-      val absorbed = coverage(spark, path, baseDirs)
-      val statKeys = recordedKeyCols(spark, path)
-      // readSnapshot resolves merge-on-read dvs, so the compact dir is
-      // the FOLDED truth — compaction is what resets dv'd entries back
-      // to plain dirs (the MoR steady-state loop).
-      if (statKeys.nonEmpty)
-        writeDirWithStats(spark, path, dirName,
-          layout(readSnapshot(spark, path, cur)), statKeys)
-      else
-        layout(readSnapshot(spark, path, cur))
-          .write.mode("overwrite").parquet(s"$path/$dirName")
-      // Record provenance BEFORE the manifest publish: a manifest
-      // referencing a compact dir must never be readable without the
-      // dir's absorbed set (reconciliation reasons over it).
-      val af = absorbedPath(path, dirName)
-      val out = fs.create(af, true)
-      try out.write(absorbed.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      compactPreLockHook()
-      val lock = try acquireRewriterLock(fs, path, "compactSnapshots")
-        catch { case e: LockHeldException =>
-          fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
-          deleteDirSidecars(fs, path, dirName)
-          throw e
-        }
-      try {
-        val latestNow = latestVersion(spark, path)
-        val latestEntries = manifestEntries(spark, path, latestNow)
-        val latestDirs = latestEntries.map(_.dir)
-        // Entry-level: a dv added to a base dir is a content change.
-        if (baseEntries.forall(latestEntries.contains)) {
-          // A writer may publish BETWEEN the base read (cur) and this
-          // publish; its dirs are not in the compacted file, and a bare
-          // [compact-N] manifest would drop them from the lineage.
-          // Carry the latest dirs whose provenance the base does NOT
-          // cover (the rows are rewritten-base + the interleaved
-          // appends — exactly what a sequential compact-then-write
-          // would read). The writers' own reconcileLineage covers the
-          // inverse order (writer publishes after this publish).
-          val interleaved = latestDirs
-            .filterNot(d => provenance(spark, path, d).subsetOf(absorbed))
-          interleaved.foreach { d =>
-            val p = provenance(spark, path, d)
-            if (p.exists(absorbed)) throw new IllegalStateException(
-              s"compactSnapshots: interleaved dir $d partially overlaps " +
-                s"the compacted base (${p.filter(absorbed)}) — concurrent " +
-                "compaction artifacts; resolve manually")
-          }
-          // Publish strictly above whatever is latest: re-claim when a
-          // writer published past our pre-rewrite claim (readers take
-          // the max version as "current"; publishing below it would
-          // park the compact dir in dead history).
-          val pubV = if (latestNow >= target) claimVersion(spark, path)
-                     else target
-          publishManifest(spark, path, pubV, dirName +: interleaved)
-          val rv = reconcileCompact(spark, path, pubV, dirName, absorbed,
-            baseVersion = cur)
-          // Change record (none kind): this version's content equals
-          // latestNow's — but only when every latest dir was cleanly
-          // classified base-or-interleaved and the reconcile did not
-          // republish; a covered-but-not-base carry would make "no
-          // change vs latestNow" a lie, so it skips instead.
-          if (rv == pubV && latestDirs.forall(d =>
-              baseDirs.contains(d) || interleaved.contains(d)))
-            writeChangeMeta(fs, path, rv, "none", latestNow, None)
-          return rv
-        }
-      } finally fs.delete(lock, false)
-      // Stale base: a rewriter (merge/erasure/another compactor)
-      // replaced part of what we compacted. Drop the orphan and retry.
-      fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
-      deleteDirSidecars(fs, path, dirName)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"compactSnapshots: base rewritten under us 5 times at $path — " +
-        "rewriter storm; retry when merges/erasures quiesce")
-  }
-
-  /** PARTIAL compaction — the bin-pack "OPTIMIZE" a 100 TB sink runs
-    * ROUTINELY where [[compactSnapshots]] is the rare full rewrite:
-    * repackage into one dir ONLY the current version's dirs smaller
-    * than `smallBytes`, carrying every large dir by reference. A day
-    * of trickle CDC batches packs into one dir while the multi-TB
-    * compacted base is never touched — maintenance cost proportional
-    * to the NEW data, not the corpus (a full compaction's rewrite is
-    * itself the most expensive op in the sink; running it daily is the
-    * anti-pattern this exists to avoid).
-    *
-    * Same discipline as [[compactSnapshots]]: the pack rewrite runs
-    * LOCK-FREE into a claim-named `compact-<v>` dir with an
-    * `.absorbed` record (= the packed dirs' coverage, so provenance
-    * reasoning, [[collapseShadows]] and [[refreshAggregate]]'s
-    * purity classification all compose — a pack of already-counted
-    * dirs reads as a counted carrier, a pack of fresh appends as
-    * fresh); staleness is re-validated under the lock (a rewriter
-    * replacing a PACKED dir forces a redo; rewrites of carried-large
-    * dirs are fine — they are carried from the LATEST manifest);
-    * reconcileCompact sweeps crossed publishes. Content-preserving:
-    * never bumps the rewrite generation. Returns the published
-    * version, or the current one when fewer than `minDirs` dirs
-    * qualify (nothing to pack).
-    *
-    * `zOrderBy` nonEmpty lays the pack out in Morton order over those
-    * columns (same trade as [[compactSnapshotsZOrdered]], `zBits` low
-    * bits each, `zShards` pinned output files) instead of the
-    * lexicographic key sort — multi-column probes over the packed
-    * trickle dirs then skip on EVERY z column, not just the first
-    * key. */
-  def compactSmallDirs(spark: SparkSession, path: String,
-      smallBytes: Long = 128L << 20, minDirs: Int = 2,
-      zOrderBy: Seq[String] = Nil, zBits: Int = 12,
-      zShards: Int = 0): Int = {
-    // Deliberately mirrors compactSnapshots' claim/rewrite/validate/
-    // publish skeleton rather than sharing one parameterized loop: the
-    // two differ in load-bearing edges (what staleness re-validates —
-    // packed dirs only vs the whole base; carry = name-exclusion here
-    // vs coverage-exclusion there; a coverage overlap is a THROW here
-    // and a silent drop there), and hiding those behind predicates
-    // traded visible duplication for invisible divergence risk.
-    require(minDirs >= 2, "packing fewer than 2 dirs is a rename")
-    val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    var attempts = 0
-    while (attempts < 5) {
-      val advisory = new org.apache.hadoop.fs.Path(snapDir(path),
-        "compact.lock")
-      if (fs.exists(advisory)) throw new LockHeldException(
-        s"compactSmallDirs: another rewriter holds $advisory — if its " +
-          "process crashed, delete the lock file and retry", null)
-      val cur = latestVersion(spark, path)
-      require(cur >= 1, "nothing to compact: no published snapshot")
-      val baseEntries = manifestEntries(spark, path, cur)
-      val smallEntries = baseEntries.filter { e =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(path, e.dir))
-          .getLength <= smallBytes
-      }
-      val smalls = smallEntries.map(_.dir)
-      if (smalls.size < minDirs) return cur
-      val absorbed = coverage(spark, path, smalls)
-      val target = claimVersion(spark, path)
-      val dirName = s"compact-$target"
-      val statKeys = recordedKeyCols(spark, path)
-      // Same key-sorted discipline as the full compaction: the pack is
-      // small (that's its definition), so the sort is cheap — and the
-      // pack dir's footers stay probe-skippable instead of smearing
-      // the trickle batches' keys across every row group. Merge-on-read
-      // entries RESOLVE (dvs anti-joined) — the pack folds them.
-      // `zOrderBy` swaps the sort for the Morton layout.
-      val packed = readEntriesRaw(spark, path, smallEntries)
-      val laidOut =
-        if (zOrderBy.nonEmpty)
-          zOrderLayout(packed, zOrderBy, zBits, zShards, "compactSmallDirs")
-        else keySortedForFooters(packed, statKeys)
-      if (statKeys.nonEmpty)
-        writeDirWithStats(spark, path, dirName, laidOut, statKeys)
-      else laidOut.write.mode("overwrite").parquet(s"$path/$dirName")
-      val af = absorbedPath(path, dirName)
-      val out = fs.create(af, true)
-      try out.write(absorbed.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      compactPreLockHook()
-      val lock = try acquireRewriterLock(fs, path, "compactSmallDirs")
-        catch { case e: LockHeldException =>
-          fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
-          deleteDirSidecars(fs, path, dirName)
-          throw e
-        }
-      try {
-        val latestNow = latestVersion(spark, path)
-        val latestEntries = manifestEntries(spark, path, latestNow)
-        val latestDirs = latestEntries.map(_.dir)
-        // Entry-level: a dv added to a PACKED dir in the window means
-        // the pack carries rows the rival just deleted — redo.
-        if (smallEntries.forall(latestEntries.contains)) {
-          // Carry everything else from the LATEST manifest (large base
-          // dirs, interleaved appends, even rewrites of large dirs a
-          // merge landed meanwhile — only the PACKED dirs' liveness
-          // matters to this publish).
-          val carry = latestDirs.filterNot(smalls.contains)
-          carry.foreach { d =>
-            val p = provenance(spark, path, d)
-            if (p.exists(absorbed)) throw new IllegalStateException(
-              s"compactSmallDirs: carried dir $d partially overlaps the " +
-                s"packed set (${p.filter(absorbed)}) — concurrent " +
-                "compaction artifacts; resolve manually")
-          }
-          val pubV = if (latestNow >= target) claimVersion(spark, path)
-                     else target
-          publishManifest(spark, path, pubV, dirName +: carry)
-          val rv = reconcileCompact(spark, path, pubV, dirName, absorbed,
-            baseVersion = cur)
-          // Change record (none kind): pack(smalls) + carry is exactly
-          // latestNow's content by construction.
-          if (rv == pubV)
-            writeChangeMeta(fs, path, rv, "none", latestNow, None)
-          return rv
-        }
-      } finally fs.delete(lock, false)
-      fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
-      deleteDirSidecars(fs, path, dirName)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"compactSmallDirs: packed dirs kept being rewritten under us 5 " +
-        s"times at $path — rewriter storm; retry when merges quiesce")
   }
 
   /** Compactor's post-publish reconciliation: if an interleaved writer
@@ -3679,10 +3507,7 @@ object Upsert {
           writeDirWithStats(spark, path, rw,
             liveDir(d).join(touched, keys, "left_anti"), keys,
             keyBound = readDirRowCount(spark, path, d))
-          val out = fs.create(absorbedPath(path, rw), true)
-          try out.write(provenance(spark, path, d).toSeq.sorted
-            .mkString("\n").getBytes("UTF-8"))
-          finally out.close()
+          writeAbsorbed(fs, path, rw, provenance(spark, path, d))
           rw
         }
       val dvByDir: Map[String, String] =
@@ -3793,10 +3618,10 @@ object Upsert {
                   latestEntries.filter(e => interleaved.contains(e.dir)))
                 .select(keys.map(col): _*).distinct()
               val rw = s"$mergeDir-r$pubV"
-              readDirs(spark, Seq(s"$path/$mergeDir"))
-                .join(inKeys, keys, "left_anti")
-                .write.mode("overwrite").parquet(s"$path/$rw")
-              writeKeyStats(spark, path, rw, keys)
+              writeDirWithStats(spark, path, rw,
+                readDirs(spark, Seq(s"$path/$mergeDir"))
+                  .join(inKeys, keys, "left_anti"), keys,
+                keyBound = readDirRowCount(spark, path, mergeDir))
               // The unfiltered landing dir is never published — drop
               // it rather than leave a vacuum-bait orphan.
               fs.delete(new org.apache.hadoop.fs.Path(path, mergeDir), true)
@@ -4026,7 +3851,7 @@ object Upsert {
   /** The rows ADDED between two snapshots, diffed by PROVENANCE, not
     * dir name: a `to`-manifest dir is delta only if its provenance is
     * disjoint from `from`'s coverage. Pure repackagings — a
-    * [[compactSmallDirs]] pack, a full compaction of exactly the
+    * [[compactSnapshots]] bin-pack, a full compaction of exactly the
     * `from` lineage, a merge/erase REWRITE of old dirs — are excluded
     * (their rows were already read; the r15 name-diff surfaced a whole
     * compacted corpus as "delta" across every routine pack, which at
@@ -4738,15 +4563,12 @@ object Upsert {
           if (hit == 0) processed(d) = (None, 0L)
           else {
             val rw = s"$d-e$epoch"
-            df.join(keyRows, keys, "left_anti")
-              .write.mode("overwrite").parquet(s"$path/$rw")
-            val out = fs.create(absorbedPath(path, rw), true)
-            try out.write(provenance(spark, path, d).toSeq.sorted
-              .mkString("\n").getBytes("UTF-8"))
-            finally out.close()
             val statKeys0 = recordedKeyCols(spark, path)
-            writeKeyStats(spark, path, rw,
-              if (statKeys0.nonEmpty) statKeys0 else keys)
+            writeDirWithStats(spark, path, rw,
+              df.join(keyRows, keys, "left_anti"),
+              if (statKeys0.nonEmpty) statKeys0 else keys,
+              keyBound = readDirRowCount(spark, path, d))
+            writeAbsorbed(fs, path, rw, provenance(spark, path, d))
             processed(d) = (Some(rw), hit)
           }
         }
@@ -4901,9 +4723,9 @@ object Upsert {
 
   /** Marker payload (shared by the `.src` and `.feed` coverage
     * markers): covered source version + a source fingerprint at
-    * counting time (absent on legacy markers). A fingerprint mismatch
-    * means counted rows were mutated out from under the marker's
-    * reasoning — the owner recomputes. */
+    * counting time. A fingerprint mismatch — or a marker with no
+    * fingerprint line — means the counted rows cannot be vouched for:
+    * the owner recomputes. */
   private def readCoverageMarker(spark: SparkSession, aggPath: String,
       m: org.apache.hadoop.fs.Path): (Int, Option[String]) = {
     val fs = fsFor(spark, aggPath)
@@ -5024,13 +4846,9 @@ object Upsert {
     // Generation fingerprint read FIRST: a rewrite landing between this
     // read and the data read makes the recorded gen stale, which the
     // NEXT refresh answers with a recompute — conservative, never
-    // double-counts. Legacy markers (no gen line) only trust the name
-    // diff when the source has never seen a content rewrite at all.
+    // double-counts.
     val genNow = rewriteGen(spark, srcPath)
-    val genOk = gen0 match {
-      case Some(g) => g == genNow
-      case None => genNow == "0:0"
-    }
+    val genOk = gen0.contains(genNow)
     if (covered0 == srcLatest && genOk) { lastRefresh.set("noop"); return aggCur }
     // Delta PURITY classification. The incremental path is sound when
     // the latest manifest splits cleanly into (a) CARRIERS of exactly
@@ -5135,56 +4953,45 @@ object Upsert {
         return aggCur
       case Some(dirs) =>
         val curAgg = readSnapshot(spark, aggPath, aggCur)
-        if (!curAgg.columns.contains("min_v") ||
-            !curAgg.columns.contains("kmv")) {
-          // Pre-min/max or pre-kmv aggregate sink: one recompute
-          // upgrades every group to the full stat schema, then
-          // increments resume.
-          lastRefresh.set("recompute")
-          val full = aggOf(readSnapshot(spark, srcPath, srcLatest))
-          mergeSnapshot(spark, aggPath, full.withColumn("__op", lit("U")),
-            groupCols, groupCols, "__op")
-        } else {
-          lastRefresh.set(s"incremental:${dirs.mkString(",")}")
-          val delta = readDirs(spark, dirs.map(d => s"$srcPath/$d"))
-          val deltaAgg = aggOf(delta).drop("distinct_v")
-            .withColumnRenamed("n", "__dn").withColumnRenamed("sum_v", "__ds")
-            .withColumnRenamed("min_v", "__dmin")
-            .withColumnRenamed("max_v", "__dmax")
-            .withColumnRenamed("kmv", "__dkmv")
-          val cur = curAgg.select((groupCols.map(col) :+ col("n") :+
-            col("sum_v") :+ col("min_v") :+ col("max_v") :+
-            col("kmv")): _*)
-          // KMV union-then-recap: the k smallest of A∪B all lie in
-          // (k smallest of A) ∪ (k smallest of B), so the re-capped
-          // union IS the sketch a recompute would build — increments
-          // and recomputes agree bit-for-bit on append-pure deltas
-          // (everything else already recomputes via the generation).
-          val mergedKmv = slice(sort_array(array_distinct(concat(
-            coalesce(col("kmv"), emptyKmv), col("__dkmv")))),
-            1, ProfileK)
-          val changes = deltaAgg.join(cur, groupCols, "left")
-            .select((groupCols.map(col) :+
-              (coalesce(col("n"), lit(0L)) + col("__dn")).as("n") :+
-              // BOTH sides null-coalesced: a delta whose every row has
-              // a NULL value yields __ds = NULL, and `sum_v + NULL`
-              // would wipe the previously accumulated sum while n
-              // still increments. NULL survives only when NEITHER side
-              // has a value — matching what a recompute's sum() gives.
-              when(col("sum_v").isNull && col("__ds").isNull,
-                lit(null).cast(dec))
-                .otherwise(coalesce(col("sum_v"), lit(0).cast(dec)) +
-                  coalesce(col("__ds"), lit(0).cast(dec)))
-                .cast(dec).as("sum_v") :+
-              // least/greatest skip NULLs: a brand-new group takes the
-              // delta's bound verbatim.
-              least(col("min_v"), col("__dmin")).as("min_v") :+
-              greatest(col("max_v"), col("__dmax")).as("max_v") :+
-              mergedKmv.as("kmv") :+
-              kmvEst(mergedKmv).as("distinct_v") :+
-              lit("U").as("__op")): _*)
-          mergeSnapshot(spark, aggPath, changes, groupCols, groupCols, "__op")
-        }
+        lastRefresh.set(s"incremental:${dirs.mkString(",")}")
+        val delta = readDirs(spark, dirs.map(d => s"$srcPath/$d"))
+        val deltaAgg = aggOf(delta).drop("distinct_v")
+          .withColumnRenamed("n", "__dn").withColumnRenamed("sum_v", "__ds")
+          .withColumnRenamed("min_v", "__dmin")
+          .withColumnRenamed("max_v", "__dmax")
+          .withColumnRenamed("kmv", "__dkmv")
+        val cur = curAgg.select((groupCols.map(col) :+ col("n") :+
+          col("sum_v") :+ col("min_v") :+ col("max_v") :+
+          col("kmv")): _*)
+        // KMV union-then-recap: the k smallest of A∪B all lie in
+        // (k smallest of A) ∪ (k smallest of B), so the re-capped
+        // union IS the sketch a recompute would build — increments
+        // and recomputes agree bit-for-bit on append-pure deltas
+        // (everything else already recomputes via the generation).
+        val mergedKmv = slice(sort_array(array_distinct(concat(
+          coalesce(col("kmv"), emptyKmv), col("__dkmv")))),
+          1, ProfileK)
+        val changes = deltaAgg.join(cur, groupCols, "left")
+          .select((groupCols.map(col) :+
+            (coalesce(col("n"), lit(0L)) + col("__dn")).as("n") :+
+            // BOTH sides null-coalesced: a delta whose every row has
+            // a NULL value yields __ds = NULL, and `sum_v + NULL`
+            // would wipe the previously accumulated sum while n
+            // still increments. NULL survives only when NEITHER side
+            // has a value — matching what a recompute's sum() gives.
+            when(col("sum_v").isNull && col("__ds").isNull,
+              lit(null).cast(dec))
+              .otherwise(coalesce(col("sum_v"), lit(0).cast(dec)) +
+                coalesce(col("__ds"), lit(0).cast(dec)))
+              .cast(dec).as("sum_v") :+
+            // least/greatest skip NULLs: a brand-new group takes the
+            // delta's bound verbatim.
+            least(col("min_v"), col("__dmin")).as("min_v") :+
+            greatest(col("max_v"), col("__dmax")).as("max_v") :+
+            mergedKmv.as("kmv") :+
+            kmvEst(mergedKmv).as("distinct_v") :+
+            lit("U").as("__op")): _*)
+        mergeSnapshot(spark, aggPath, changes, groupCols, groupCols, "__op")
       case None =>
         // Bootstrap OR unknown/impure coverage: full recompute. For a
         // fresh sink this is writeSnapshot. For an existing sink the
@@ -5265,9 +5072,7 @@ object Upsert {
     * are point-recomputed from the source ([[readSnapshotForKeys]] on
     * the group columns — one bounded read), and every other group
     * stays pure arithmetic. [[lastFeedBoundRecomputed]] audits the
-    * recomputed-group count. An aggregate sink bootstrapped before
-    * bounds existed (no `min_v` column) recomputes once and carries
-    * them from then on.
+    * recomputed-group count.
     *
     * Exactly-once arithmetic across crashes, sink-as-state: the
     * covered source version + the source's ERASURE fingerprint
@@ -5308,16 +5113,11 @@ object Upsert {
     val srcFs = fsFor(spark, srcPath)
     val coveredLive = covered >= 1 && srcFs.exists(
       new org.apache.hadoop.fs.Path(snapDir(srcPath), s"v$covered.list"))
-    // A sink maintained before bounds existed migrates by one
-    // recompute (its rows carry no min_v to extend or test against).
-    val hasBounds = aggCur == 0 ||
-      snapshotLogicalSchema(spark, aggPath, aggCur)
-        .fieldNames.contains("min_v")
     val published =
-      if (covered == 0 || !genOk || !coveredLive || !hasBounds) {
-        // Bootstrap, post-erasure, expired-from-version, bounds
-        // migration, or the crash window (published agg version with
-        // no marker): full recompute — idempotent in content.
+      if (covered == 0 || !genOk || !coveredLive) {
+        // Bootstrap, post-erasure, expired-from-version, or the crash
+        // window (published agg version with no marker): full
+        // recompute — idempotent in content.
         lastFeedRefresh.set("recompute")
         val full = aggOf(readSnapshot(spark, srcPath, srcLatest))
         val vType = full.schema("min_v").dataType

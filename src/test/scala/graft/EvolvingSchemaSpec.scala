@@ -133,6 +133,32 @@ class EvolvingSchemaSpec extends SparkSpec {
         Seq(("U", "x", 9L)).toDF("op", "v", "id"),
         Seq("v"), Seq("v"), "op")
     }
+    // A threshold pack reads its dirs RAW, so it matches the carried
+    // dirs' physical schema: a pre-rename and a post-rename trickle dir
+    // pack side by side while a large dir carries; logical rows stay.
+    val pp = java.nio.file.Files.createTempDirectory("snapevopack").toString
+    Upsert.writeSnapshot(spark, pp,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), Seq("id"))
+    Upsert.renameColumn(spark, pp, "v", "val")
+    Upsert.writeSnapshot(spark, pp,
+      Seq((3L, "c")).toDF("id", "val"), Seq("id"), Seq("id"))
+    Upsert.writeSnapshot(spark, pp,
+      (100L to 3000L).map(i => (i, s"x$i")).toDF("id", "val"),
+      Seq("id"), Seq("id"))
+    def logical(v: Int) = Upsert.readSnapshot(spark, pp, v)
+      .select("id", "val").as[(Long, String)].collect().toSet
+    val packBefore = logical(3)
+    val big = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(pp), spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(new org.apache.hadoop.fs.Path(pp, "batch-3"))
+      .getLength
+    val pv = Upsert.compactSnapshots(spark, pp, smallBytes = big - 1)
+    assert(Upsert.manifestEntries(spark, pp, pv).map(_.dir).sorted ==
+      Seq("batch-3", s"compact-$pv"), "pack the trickle dirs, carry the big one")
+    val pc = spark.read.parquet(s"$pp/compact-$pv").columns.toSeq
+    assert(pc.contains("v") && pc.contains("val"),
+      s"the pack keeps the physical names it read: $pc")
+    assert(logical(pv) == packBefore, "a pack preserves the logical rows")
     // Compaction physically migrates; the map then no-ops on its dir.
     val cv = Upsert.compactSnapshots(spark, path)
     val cc = spark.read.parquet(s"$path/compact-$cv").columns.toSeq

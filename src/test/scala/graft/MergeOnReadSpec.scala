@@ -179,7 +179,7 @@ class MergeOnReadSpec extends SparkSpec {
       Seq(("D", 3L, "")).toDF("op", "id", "v"), Seq("id"), Seq("id"), "op")
     val expected = Upsert.readSnapshot(spark, path,
       Upsert.latestVersion(spark, path)).as[(Long, String)].collect().toSet
-    val v = Upsert.compactSmallDirs(spark, path, smallBytes = Long.MaxValue)
+    val v = Upsert.compactSnapshots(spark, path, smallBytes = Long.MaxValue)
     assert(Upsert.readSnapshot(spark, path, v).as[(Long, String)]
       .collect().toSet == expected)
     assert(!entriesOf(path, v).exists(_.contains("\t")),

@@ -3,18 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session per suite, configured like Verify/Bench (UTC, ANSI off,
-  * nanos-as-long for the testdata's ns parquet timestamps). */
+/** Shared session per suite, built from [[SessionRecipe]] like
+  * Verify and the other mains, with its own warehouse dir. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = SessionRecipe.builder("4")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

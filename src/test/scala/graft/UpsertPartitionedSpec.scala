@@ -853,48 +853,64 @@ class UpsertPartitionedSpec extends SparkSpec {
   }
 
   test("compaction re-validates its base after the lock: a merge in the window forces a redo") {
-    val path = java.nio.file.Files.createTempDirectory("snapcc").toString
-    Upsert.writeSnapshot(spark, path,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), Seq("id"))
-    Upsert.writeSnapshot(spark, path,
-      Seq((3L, "c")).toDF("id", "v"), Seq("id"), Seq("id"))
-    // Inject a rewriter into the rewrite→lock window: the merge deletes
-    // key 2 AFTER the compactor has already written its (now stale)
-    // compacted file. Without the re-validation the compaction would
-    // publish the pre-merge rows and resurrect the deleted key.
-    var fired = false
-    Upsert.compactPreLockHook = () => {
-      if (!fired) { // only on the first pass — the redo must see a clean window
-        fired = true
-        Upsert.mergeSnapshot(spark, path,
-          Seq(("D", 2L, "")).toDF("op", "id", "v"), Seq("id"), Seq("id"), "op")
+    // Two inputs: a full compaction, and a threshold pack whose packed
+    // dirs hold the merged key while a large dir carries by reference.
+    for (pack <- Seq(false, true)) {
+      val path = java.nio.file.Files.createTempDirectory("snapcc").toString
+      val big = if (!pack) Set.empty[(Long, String)]
+                else (100L to 3000L).map(i => (i, s"x$i")).toSet
+      if (pack)
+        Upsert.writeSnapshot(spark, path, big.toSeq.toDF("id", "v"),
+          Seq("id"), Seq("id"))
+      Upsert.writeSnapshot(spark, path,
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), Seq("id"))
+      Upsert.writeSnapshot(spark, path,
+        Seq((3L, "c")).toDF("id", "v"), Seq("id"), Seq("id"))
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+      val smallBytes =
+        if (!pack) Long.MaxValue
+        else fs.getContentSummary(
+          new org.apache.hadoop.fs.Path(path, "batch-1")).getLength - 1
+      // Inject a rewriter into the rewrite→lock window: the merge
+      // deletes key 2 AFTER the compactor has already written its (now
+      // stale) compacted file. Without the re-validation the compaction
+      // would publish the pre-merge rows and resurrect the deleted key.
+      var fired = false
+      Upsert.compactPreLockHook = () => {
+        if (!fired) { // only on the first pass — the redo must see a clean window
+          fired = true
+          Upsert.mergeSnapshot(spark, path,
+            Seq(("D", 2L, "")).toDF("op", "id", "v"), Seq("id"), Seq("id"), "op")
+        }
       }
-    }
-    try {
-      val v = Upsert.compactSnapshots(spark, path)
-      assert(fired, "hook must have fired")
-      assert(Upsert.readSnapshot(spark, path, v).as[(Long, String)]
-        .collect().toSet == Set((1L, "a"), (3L, "c")),
-        "compaction after redo reflects the merge — deleted key stays dead")
-      assert(Upsert.readSnapshot(spark, path,
-        Upsert.latestVersion(spark, path)).filter(col("id") === 2).isEmpty)
-    } finally Upsert.compactPreLockHook = () => ()
-    // The stale first-pass compact dir must not linger as a readable
-    // orphan in any manifest.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val referenced = (1 to Upsert.latestVersion(spark, path)).flatMap { v =>
-      val p = new org.apache.hadoop.fs.Path(path + "/_snapshots", s"v$v.list")
-      if (!fs.exists(p)) Nil
-      else {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
+      val cv = try {
+        val v = Upsert.compactSnapshots(spark, path, smallBytes)
+        assert(fired, "hook must have fired")
+        assert(Upsert.readSnapshot(spark, path, v).as[(Long, String)]
+          .collect().toSet == big ++ Set((1L, "a"), (3L, "c")),
+          s"compaction after redo reflects the merge — deleted key stays dead (pack = $pack)")
+        assert(Upsert.readSnapshot(spark, path,
+          Upsert.latestVersion(spark, path)).filter(col("id") === 2).isEmpty)
+        v
+      } finally Upsert.compactPreLockHook = () => ()
+      // The stale first-pass compact dir must not linger as a readable
+      // orphan in any manifest.
+      val referenced = (1 to Upsert.latestVersion(spark, path)).flatMap { v =>
+        val p = new org.apache.hadoop.fs.Path(path + "/_snapshots", s"v$v.list")
+        if (!fs.exists(p)) Nil
+        else {
+          val in = fs.open(p)
+          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+          finally in.close()
+        }
       }
+      val compacts = referenced.filter(_.startsWith("compact-")).distinct
+      assert(compacts.size == 1,
+        s"exactly one compact dir may be referenced, got: $compacts")
+      if (pack) assert(Upsert.manifestEntries(spark, path, cv).map(_.dir)
+          .contains("batch-1"), "the large dir carries by reference")
     }
-    val compacts = referenced.filter(_.startsWith("compact-")).distinct
-    assert(compacts.size == 1,
-      s"exactly one compact dir may be referenced, got: $compacts")
   }
 
   test("crossed-publish healing: a third carrier resolves conflicts between two exited writers") {
@@ -1133,7 +1149,7 @@ class UpsertPartitionedSpec extends SparkSpec {
           model += ins._1 -> ((ins._2, ins._3))
         case 1 => () // too few keys to merge distinctly this round
         case 2 => // bin-pack the trickle dirs
-          Upsert.compactSmallDirs(spark, src, smallBytes = 1L << 30)
+          Upsert.compactSnapshots(spark, src, smallBytes = 1L << 30)
         case 3 => // full compaction
           Upsert.compactSnapshots(spark, src)
         case 4 => // right-to-be-forgotten one key
@@ -1172,7 +1188,7 @@ class UpsertPartitionedSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(path, "batch-1")).getLength
     val before = Upsert.readSnapshot(spark, path, 4)
       .as[(Long, String)].collect().toSet
-    val v = Upsert.compactSmallDirs(spark, path, smallBytes = bigSize - 1)
+    val v = Upsert.compactSnapshots(spark, path, smallBytes = bigSize - 1)
     assert(v == 5, s"published version $v")
     // Manifest shape: the pack + the untouched big dir, nothing else.
     val in = fs.open(new org.apache.hadoop.fs.Path(
@@ -1186,14 +1202,14 @@ class UpsertPartitionedSpec extends SparkSpec {
     assert(Upsert.readSnapshot(spark, path, 2).count() == 5010,
       "history intact")
     // Nothing qualifies under a tiny threshold → no-op, current version.
-    assert(Upsert.compactSmallDirs(spark, path, smallBytes = 1) == v)
+    assert(Upsert.compactSnapshots(spark, path, smallBytes = 1) == v)
     // The pack is content-preserving: an incremental aggregate stays
     // delta-only across it (counted-carrier classification).
     val agg = java.nio.file.Files.createTempDirectory("snapopt_a").toString
     Upsert.writeSnapshot(spark, path,
       Seq((20001L, "z")).toDF("id", "v"), Seq("id"), Seq("id"))
     Upsert.refreshAggregate(spark, path, agg, Seq("v"), "id")
-    Upsert.compactSmallDirs(spark, path, smallBytes = bigSize - 1)
+    Upsert.compactSnapshots(spark, path, smallBytes = bigSize - 1)
     Upsert.writeSnapshot(spark, path,
       Seq((20002L, "z2")).toDF("id", "v"), Seq("id"), Seq("id"))
     Upsert.refreshAggregate(spark, path, agg, Seq("v"), "id")
@@ -2079,8 +2095,8 @@ class UpsertPartitionedSpec extends SparkSpec {
     assert(sortHits == sortFiles,
       s"id-sorted layout must be blind on b (every file spans b): " +
         s"$sortHits/$sortFiles")
-    val vZ = Upsert.compactSnapshotsZOrdered(spark, path,
-      Seq("a", "b"), bits = 5, shards = 8)
+    val vZ = Upsert.compactSnapshots(spark, path,
+      zOrderBy = Seq("a", "b"), zBits = 5, zShards = 8)
     val (zHits, zFiles) = intersecting(compactDirOf(vZ))
     assert(zHits < zFiles,
       s"z layout must skip files on the second column: $zHits/$zFiles")
@@ -2120,7 +2136,7 @@ class UpsertPartitionedSpec extends SparkSpec {
         new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
       .getContentSummary(new org.apache.hadoop.fs.Path(path, "batch-1"))
       .getLength
-    val v = Upsert.compactSmallDirs(spark, path,
+    val v = Upsert.compactSnapshots(spark, path,
       smallBytes = largeBytes - 1, zOrderBy = Seq("a", "b"),
       zBits = 5, zShards = 8)
     val entries = scala.io.Source.fromFile(
