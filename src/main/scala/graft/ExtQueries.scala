@@ -1156,11 +1156,7 @@ object ExtQueries {
       // oracle recomputes both profiles straight from the logical
       // table. (The r14 gate item: Upsert.writeSnapshotGated runs
       // driftViolations over exactly this report BEFORE publishing.)
-      val path = s"$RunScratch/graft_snap_drift_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_drift")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1179,11 +1175,7 @@ object ExtQueries {
       // The publish stamps are written by the sink itself (v<N>.meta);
       // the 15 ms pause guarantees v2's stamp is strictly later even at
       // clock granularity, so the resolver's answer is deterministic.
-      val path = s"$RunScratch/graft_snap_ttts_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_ttts")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1200,11 +1192,7 @@ object ExtQueries {
       // the probe audit (a wrong candidate set fails loudly here, and
       // UpsertPartitionedSpec pins it structurally). Oracle: a plain
       // filter on the logical table.
-      val path = s"$RunScratch/graft_snap_point_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_point")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       val mid = 250L // non-empty halves at every SF (doc_id 0..499 at sf0.01)
       graft.ops.Upsert.writeSnapshot(s, path,
@@ -1228,11 +1216,7 @@ object ExtQueries {
       // cost proportional to the new data, not the corpus. The query
       // itself requires the manifest shape (pack + carried big dir);
       // the oracle pins the content: identical to the full table.
-      val path = s"$RunScratch/graft_snap_opt_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "snap_opt")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 4 =!= 0), Seq("doc_id"), Seq("doc_id"))
@@ -1244,10 +1228,7 @@ object ExtQueries {
         new org.apache.hadoop.fs.Path(path, "batch-1")).getLength
       val v = graft.ops.Upsert.compactSnapshots(s, path,
         smallBytes = bigSize - 1)
-      val in = fs.open(new org.apache.hadoop.fs.Path(
-        path + "/_snapshots", s"v$v.list"))
-      val dirs = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
+      val dirs = graft.ops.Upsert.manifestEntries(s, path, v).map(_.dir)
       require(dirs.sorted == List("batch-1", s"compact-$v"),
         s"optimize must pack the trickle dirs and carry the big one: $dirs")
       graft.ops.Upsert.readSnapshot(s, path, v).orderBy("doc_id")
@@ -1261,11 +1242,7 @@ object ExtQueries {
       // oracle pins the keep-existing CONTENT (the re-sent high rows
       // must lose to the sink's copies, the genuinely-new low rows
       // land), which a wrong candidate set would corrupt.
-      val path = s"$RunScratch/graft_snap_wp_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_wp")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       val mid = 250L
       graft.ops.Upsert.writeSnapshot(s, path,
@@ -1303,11 +1280,7 @@ object ExtQueries {
       // (its manifest still references the shared early dirs, so their
       // bytes stay). Oracle: the full table — retention changes which
       // VERSIONS resolve, never the surviving version's content.
-      val path = s"$RunScratch/graft_snap_ret_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "snap_ret")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 3 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1319,10 +1292,8 @@ object ExtQueries {
         docs.filter(col("doc_id") % 3 === 2), Seq("doc_id"), Seq("doc_id"))
       val t3 = graft.ops.Upsert.publishedAtMs(s, path, 3)
       graft.ops.Upsert.expireSnapshotsOlderThan(s, path, t3)
-      require(!fs.exists(new org.apache.hadoop.fs.Path(
-          path + "/_snapshots", "v1.list")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          path + "/_snapshots", "v3.list")),
+      val versions = graft.table.SnapLog.list(fs, path).versions
+      require(!versions.contains(1) && versions.contains(3),
         "retention must expire v1/v2 and keep the as-of horizon v3")
       graft.ops.Upsert.readSnapshot(s, path, 3).orderBy("doc_id")
     }),
@@ -1333,11 +1304,7 @@ object ExtQueries {
       // `__rows` sidecar lines — the in-query require proves NO dir was
       // scanned. Oracle: plain count of the logical table (the merge
       // deletes the %100==3 keys and the appends cover the rest).
-      val path = s"$RunScratch/graft_snap_cnt_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_cnt")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1360,11 +1327,7 @@ object ExtQueries {
       // and row count, the counts answered from the __rows sidecars
       // (required below — no scan). published_ms is wall-clock and
       // excluded from the oracle'd columns.
-      val path = s"$RunScratch/graft_snap_hist_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_hist")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1388,11 +1351,7 @@ object ExtQueries {
       // I/U/D rows — unchanged keys (%10 ∈ {4,6,8}) absent, D rows
       // carrying the OLD values, U rows the new. One full-outer key
       // join of the two versions; no history walk.
-      val path = s"$RunScratch/graft_snap_cdf_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_cdf")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1421,12 +1380,9 @@ object ExtQueries {
       // snapshot) and the recorded mode. Output = the sink-as-state
       // accumulation of every micro-batch; the oracle recomputes the
       // same I + I/U/D multiset.
-      val base = s"$RunScratch/graft_feed_stream_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = base; val ckpt = s"${base}_ckpt"; val out = s"${base}_out"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      Seq(path, ckpt, out).foreach(p =>
+      val (path, fs) = freshScratch(s, dir, "feed_stream")
+      val ckpt = s"${path}_ckpt"; val out = s"${path}_out"
+      Seq(ckpt, out).foreach(p =>
         fs.delete(new org.apache.hadoop.fs.Path(p), true))
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
@@ -1473,11 +1429,7 @@ object ExtQueries {
       // the gate-mode audit ("maintained" = no corpus scan). The oracle
       // pins the published content; a gate that refused a clean batch
       // (sketch drift where there is none) would fail it.
-      val path = s"$RunScratch/graft_snap_gate_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_gate")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       def gated(batch: DataFrame): Int =
         graft.ops.Upsert.writeSnapshotGated(s, path, batch,
@@ -1499,11 +1451,7 @@ object ExtQueries {
       // renamed). The write-time change records compose instead — the
       // in-query require pins the recorded path (no version dirs read
       // by the feed); the oracle pins the exact endpoint I/U/D set.
-      val path = s"$RunScratch/graft_snap_cdr_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_cdr")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1543,11 +1491,7 @@ object ExtQueries {
       // cannot prune); the oracle pins the exact filtered rows, which
       // a wrong candidate set would lose. Bounds [60,70] sit inside
       // the high band at every SF (doc_id is dense from 0).
-      val path = s"$RunScratch/graft_snap_skip_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_skip")
       val docs = read(s, dir, "documents")
         .select("doc_id", "source", "n_chars")
         .withColumn("score", col("doc_id") % 100)
@@ -1571,11 +1515,7 @@ object ExtQueries {
       // len), a producer still emitting the dead name is normalized
       // into the live column (required structurally below — no fork),
       // and the added column reads as typed NULL. Zero data rewritten.
-      val path = s"$RunScratch/graft_snap_ren_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_ren")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1601,11 +1541,7 @@ object ExtQueries {
       // + the dir gone + the data dirs intact) and the read — the
       // oracle'd surface — is unchanged: hygiene touches storage,
       // never content.
-      val path = s"$RunScratch/graft_snap_vac_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "snap_vac")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1630,11 +1566,7 @@ object ExtQueries {
       // `.stats` sidecars already carry each dir's key bounds, and
       // min-of-mins over disjoint dirs IS the version's min. The
       // require pins the no-scan path; the oracle the exact values.
-      val path = s"$RunScratch/graft_snap_mm_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_mm")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1660,11 +1592,7 @@ object ExtQueries {
       // span), %10==1 absent for the I — the initial-snapshot consume
       // was the suite's most expensive fixture read and the evens'
       // other classes bought nothing.
-      val path = s"$RunScratch/graft_snap_cons_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_cons")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter((col("doc_id") % 10).isin(0, 2, 4)),
@@ -1695,11 +1623,7 @@ object ExtQueries {
       // touched dir's entry gains a `\tdv-…` annotation) and that the
       // change feed still emits the exact span; the oracle pins the
       // merged table state (same logical result as copy-on-write).
-      val path = s"$RunScratch/graft_snap_mor_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "snap_mor")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1740,13 +1664,8 @@ object ExtQueries {
       // (no recompute despite the merge, which refreshAggregate's
       // name-based purity could never allow); the oracle recomputes
       // the same grouped aggregate from the merged logical table.
-      val path = s"$RunScratch/graft_feed_src_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val aggP = s"$RunScratch/graft_feed_agg_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "feed_src")
+      val aggP = scratchPath(dir, "feed_agg")
       fs.delete(new org.apache.hadoop.fs.Path(aggP), true)
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       // Same fixture-slimming as q_snap_consume: v1 carries only the
@@ -1794,11 +1713,7 @@ object ExtQueries {
       // scan — the require pins the pushdown; the file-level skipping
       // win itself is spec-pinned (UpsertPartitionedSpec measures the
       // skip fractions).
-      val path = s"$RunScratch/graft_snap_zo_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_zo")
       val docs = read(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),
           (col("doc_id") % 16).as("score_a"),
@@ -1825,11 +1740,7 @@ object ExtQueries {
       // and the read back rides the DSv2 relation. Same logical result
       // as q_snap_merge_mor; the require pins that the mor write went
       // through deletion vectors, not rewrites.
-      val path = s"$RunScratch/graft_snap_dsv2w_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "snap_dsv2w")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       docs.filter(col("doc_id") % 2 === 0)
         .write.format("graft").option("keys", "doc_id")
@@ -1860,11 +1771,7 @@ object ExtQueries {
       // the bounds surface as PushedFilters on the scan node; the
       // oracle is the same BETWEEN filter (what is returned never
       // depends on what was pruned).
-      val path = s"$RunScratch/graft_snap_dsv2_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_dsv2")
       val docs = read(s, dir, "documents")
         .select("doc_id", "source", "n_chars")
         .withColumn("score", col("doc_id") % 100)
@@ -1907,11 +1814,7 @@ object ExtQueries {
       // sidecars — the requires pin zero scanned dirs on both audits
       // and no aggregate exec in the plan (the metadata row IS the
       // answer); the oracle recomputes the same aggregates.
-      val path = s"$RunScratch/graft_snap_dsv2a_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_dsv2a")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -1949,11 +1852,7 @@ object ExtQueries {
       // dim's quartile opens. The requires pin the runtime-filter plan
       // node and the one-dir probe audit; the oracle is the plain join
       // (what is returned never depends on pruning).
-      val path = s"$RunScratch/graft_snap_dsv2j_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, fs) = freshScratch(s, dir, "snap_dsv2j")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       val quarter = math.max(docs.count() / 4, 1L)
       for (b <- 0L until 4L) {
@@ -1994,11 +1893,7 @@ object ExtQueries {
       // audits ride unchanged. The requires pin keep-existing
       // semantics (the overlapping second INSERT does not clobber) and
       // the time-traveled v1 count.
-      val wh = s"$RunScratch/graft_cat_wh_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(wh), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(wh), true)
+      val (wh, _) = freshScratch(s, dir, "cat_wh")
       s.conf.set("spark.sql.catalog.graft_cat",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2841,8 +2736,7 @@ object ExtQueries {
       // a hash match proves the write+read round trip preserved every
       // row of every shard (receiver-side validation with zero row
       // comparisons).
-      val path = s"$RunScratch/graft_export_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export")
       Export.writeShardedCorpus(s,
           read(s, dir, "documents").select("doc_id", "text", "n_chars"),
           col("doc_id"), ExportShards, path, Seq("doc_id", "text", "n_chars"))
@@ -2855,11 +2749,7 @@ object ExtQueries {
       // v2 exists must return exactly the even half — history stays
       // readable forever because batch dirs are immutable and manifests
       // are published atomically.
-      val path = s"$RunScratch/graft_snap_tt_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_tt")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -2872,11 +2762,7 @@ object ExtQueries {
       // the delta IS v2's immutable batch dir, plus an idempotence
       // check: v3 replays the full corpus and must add nothing, so the
       // (1, 3] delta still equals the odd half.
-      val path = s"$RunScratch/graft_snap_delta_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_delta")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -2895,11 +2781,7 @@ object ExtQueries {
       // the final state straight from the logical table — one SQL
       // expression, no sink — so the hash pins delete, update, insert,
       // AND the dropped clobber at once.
-      val path = s"$RunScratch/graft_snap_merge_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_merge")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -2923,11 +2805,7 @@ object ExtQueries {
       // sink and read VERSION 1 — the hash pins that HISTORY lost the
       // subject too (time travel must not resurrect an erased key),
       // which is what separates erasure from a delete-merge.
-      val path = s"$RunScratch/graft_snap_erase_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val (path, _) = freshScratch(s, dir, "snap_erase")
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, path,
         docs.filter(col("doc_id") % 2 === 0), Seq("doc_id"), Seq("doc_id"))
@@ -2944,13 +2822,8 @@ object ExtQueries {
       // odd-docs delta. The oracle recomputes the aggregate from the
       // full logical table — the hash proves increment == recompute
       // bit-for-bit (decimal sums, never float).
-      val src = s"$RunScratch/graft_incr_src_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val agg = s"$RunScratch/graft_incr_agg_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(src), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(src), true)
+      val (src, fs) = freshScratch(s, dir, "incr_src")
+      val agg = scratchPath(dir, "incr_agg")
       fs.delete(new org.apache.hadoop.fs.Path(agg), true)
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, src,
@@ -2973,13 +2846,8 @@ object ExtQueries {
       // mutation is routed to the recompute path by the generation
       // fingerprint). Oracle recomputes all four from the logical
       // table: increment == recompute bit-for-bit.
-      val src = s"$RunScratch/graft_incrmm_src_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val agg = s"$RunScratch/graft_incrmm_agg_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(src), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(src), true)
+      val (src, fs) = freshScratch(s, dir, "incrmm_src")
+      val agg = scratchPath(dir, "incrmm_agg")
       fs.delete(new org.apache.hadoop.fs.Path(agg), true)
       val docs = read(s, dir, "documents").select("doc_id", "source", "n_chars")
       graft.ops.Upsert.writeSnapshot(s, src,
@@ -3007,13 +2875,8 @@ object ExtQueries {
       // domain (n_chars % 200 < k = 256) keeps it in the exact regime
       // at every SF, so the oracle is a plain COUNT(DISTINCT). The
       // require pins the delta-only path on the second refresh.
-      val src = s"$RunScratch/graft_incrd_src_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val agg = s"$RunScratch/graft_incrd_agg_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(src), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(src), true)
+      val (src, fs) = freshScratch(s, dir, "incrd_src")
+      val agg = scratchPath(dir, "incrd_agg")
       fs.delete(new org.apache.hadoop.fs.Path(agg), true)
       val docs = read(s, dir, "documents")
         .select(col("doc_id"), col("source"),
@@ -3038,8 +2901,7 @@ object ExtQueries {
       // full-corpus scan; per-shard blooms prune to the might-contain
       // shards (driver-side filter test), the exact re-filter closes,
       // and one absent key exercises the miss path.
-      val path = s"$RunScratch/graft_bloomidx_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "bloomidx")
       Export.writeBloomIndexed(s,
         read(s, dir, "documents").select("doc_id", "source", "n_chars", "text"),
         shardBy = col("text"), keyCol = "doc_id", nShards = ExportShards,
@@ -3057,8 +2919,7 @@ object ExtQueries {
       // TEXT-IDENTICAL to q_export_manifest's, which is the
       // shard-compatibility claim stated as a testable fact: parquet
       // and JSONL deliveries of one corpus carry one manifest.
-      val path = s"$RunScratch/graft_export_jsonl_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export_jsonl")
       Export.writeJsonlCorpus(s,
           read(s, dir, "documents").select("doc_id", "text", "n_chars"),
           col("doc_id"), ExportShards, path, Seq("doc_id", "text", "n_chars"))
@@ -3072,8 +2933,7 @@ object ExtQueries {
       // bundled pure-Java zstd codec (`.json.zst` part files). Manifest
       // from the sink read back through the schema-pinned reader; the
       // oracle replays the prefix-sum shard rule on the logical corpus.
-      val path = s"$RunScratch/graft_export_jsonl_sized_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export_jsonl_sized")
       Export.writeJsonlCorpusSized(s,
           read(s, dir, "documents").select("doc_id", "text", "n_chars"),
           col("doc_id"), octet_length(col("text")), ExportTargetBytes,
@@ -3087,8 +2947,7 @@ object ExtQueries {
       // reading shards in order sees a reproducible pseudo-random
       // permutation. Oracle recomputes positions, cuts, membership,
       // and the per-shard count/checksum/position-range.
-      val path = s"$RunScratch/graft_export_shuffled_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export_shuffled")
       Export.writeShuffledCorpus(s,
           read(s, dir, "documents").select("doc_id", "text", "n_chars"),
           col("doc_id"), ExportShards, path, Seq("doc_id", "text", "n_chars"))
@@ -3102,8 +2961,7 @@ object ExtQueries {
       // file size; the oracle predicts it to the byte from text
       // lengths alone — Σ (512 + ceil(bytes/512)·512) + 1024 — so any
       // header/padding/member-count drift breaks the hash.
-      val path = s"$RunScratch/graft_export_tar_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export_tar")
       Export.writeTarShards(s, read(s, dir, "documents"),
           col("doc_id"), col("text"), ExportShards, path)
         .orderBy("shard")
@@ -3115,8 +2973,7 @@ object ExtQueries {
       // parquet part files, manifest from the sink read-back — and the
       // oracle is TEXT-IDENTICAL to q_export_jsonl_sized's, which is
       // the format-independence claim stated as a testable fact.
-      val path = s"$RunScratch/graft_export_pq_sized_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export_pq_sized")
       Export.writeShardedCorpusSized(s,
           read(s, dir, "documents").select("doc_id", "text", "n_chars"),
           col("doc_id"), octet_length(col("text")), ExportTargetBytes,
@@ -3135,8 +2992,7 @@ object ExtQueries {
       // proves the sorted layout landed content-complete.
       val docs = read(s, dir, "documents").select("doc_id", "text", "n_chars")
       val cuts = Export.valueRangeCuts(docs, col("doc_id"), ExportShards)
-      val path = s"$RunScratch/graft_export_sorted_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val path = scratchPath(dir, "export_sorted")
       Export.writeSortedCorpus(s, docs, "doc_id", cuts, path,
           Seq("doc_id", "text", "n_chars"))
         .orderBy("shard")
@@ -3359,8 +3215,7 @@ object ExtQueries {
       // compacted sink's read-back. Oracle text is identical to
       // q_export_manifest's — compaction must be invisible to the
       // receiver's validation token.
-      val src = s"$RunScratch/graft_export_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val src = scratchPath(dir, "export")
       Export.writeShardedCorpus(s,
         read(s, dir, "documents").select("doc_id", "text", "n_chars"),
         col("doc_id"), ExportShards, src, Seq("doc_id", "text", "n_chars"))
@@ -4758,6 +4613,22 @@ object ExtQueries {
     }
     p.toString
   }
+
+  /** A query's per-run scratch path: `tag` names the query, the slug of
+    * `dir` the input it was built from. */
+  private def scratchPath(dir: String, tag: String): String =
+    s"$RunScratch/graft_${tag}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+
+  /** [[scratchPath]] emptied of an earlier run's files, with its
+    * filesystem. */
+  private def freshScratch(s: SparkSession, dir: String,
+      tag: String): (String, org.apache.hadoop.fs.FileSystem) = {
+    val path = scratchPath(dir, tag)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    (path, fs)
+  }
   private val IvfCentCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Seq[Double])]]
   /** Persisted IVF index per corpus dir — same build/search split for the
@@ -4789,8 +4660,7 @@ object ExtQueries {
     })
   private def ivfIndexFor(s: SparkSession, dir: String): String =
     IvfIndexCache.getOrElseUpdate(dir, {
-      val p = s"$RunScratch/graft_ivf_index_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val p = scratchPath(dir, "ivf_index")
       Similarity.writeIvfIndex(
         read(s, dir, "embeddings").select("vec_id", "embedding"), IvfLists, p,
         pq = Some((PqM, PqK)))
@@ -4836,8 +4706,7 @@ object ExtQueries {
   private val CsvDocsCache = scala.collection.concurrent.TrieMap.empty[String, String]
   private def csvDocsFor(s: SparkSession, dir: String): String =
     CsvDocsCache.getOrElseUpdate(dir, {
-      val p = s"$RunScratch/graft_csv_docs_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val p = scratchPath(dir, "csv_docs")
       graft.sources.Tables.writeCsv(read(s, dir, "documents"), p)
       p
     })
@@ -4874,8 +4743,7 @@ object ExtQueries {
   private val EvolvedDocsCache = scala.collection.concurrent.TrieMap.empty[String, String]
   private def evolvedDocsFor(s: SparkSession, dir: String): String =
     EvolvedDocsCache.getOrElseUpdate(dir, {
-      val p = s"$RunScratch/graft_evolved_docs_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val p = scratchPath(dir, "evolved_docs")
       val docs = read(s, dir, "documents")
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "source", "n_chars")
@@ -4888,8 +4756,7 @@ object ExtQueries {
   private val JsonlDocsCache = scala.collection.concurrent.TrieMap.empty[String, String]
   private def jsonlDocsFor(s: SparkSession, dir: String): String =
     JsonlDocsCache.getOrElseUpdate(dir, {
-      val p = s"$RunScratch/graft_jsonl_docs_${
-        dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val p = scratchPath(dir, "jsonl_docs")
       graft.sources.Tables.writeJsonl(read(s, dir, "documents"), p)
       p
     })

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.table.SnapLog
+
 /** Thrown when a rewriter op (compaction, merge, erasure, vacuum) finds
   * the exclusive `_snapshots/compact.lock` already held. A TYPED class
   * (extending IllegalStateException for source compatibility with
@@ -129,16 +131,16 @@ object Upsert {
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
-  private def snapDir(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_snapshots")
-
   /** Latest published snapshot version; 0 for a fresh/empty sink. */
-  def latestVersion(spark: SparkSession, path: String): Int = {
-    val fs = fsFor(spark, path)
-    if (!fs.exists(snapDir(path))) 0
-    else fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-      .flatMap(numberedName(_, "v", ".list"))
-      .foldLeft(0)(math.max)
+  def latestVersion(spark: SparkSession, path: String): Int =
+    SnapLog.listIfSink(fsFor(spark, path), path).map(_.latest).getOrElse(0)
+
+  /** The log's listing; refuses a path that is no sink. */
+  private def sinkListing(spark: SparkSession,
+      path: String): SnapLog.Listing = {
+    val log = SnapLog.listIfSink(fsFor(spark, path), path)
+    require(log.isDefined, s"no snapshot sink at $path")
+    log.get
   }
 
   /** One manifest line: a data dir plus the DELETION VECTORS applied
@@ -154,19 +156,6 @@ object Upsert {
       if (dvs.isEmpty) dir else s"$dir\t${dvs.mkString(",")}"
   }
 
-  /** Numeric N from a protocol file name `<prefix>N<suffix>`; None for
-    * anything malformed. Every name parse in the sink goes through
-    * this: operator debris (a stray `vX.claim`, a hand-made
-    * `gen-old.touch`) must never wedge the protocol — a bare `.toInt`
-    * here would throw from [[claimVersion]] and fail EVERY subsequent
-    * publish on the sink until someone deletes the debris by hand. */
-  private def numberedName(n: String, prefix: String,
-      suffix: String): Option[Int] =
-    if (n.startsWith(prefix) && n.endsWith(suffix))
-      scala.util.Try(
-        n.stripPrefix(prefix).stripSuffix(suffix).toInt).toOption
-    else None
-
   private def parseEntry(line: String): SnapEntry = {
     val a = line.split("\t", 2)
     if (a.length == 1 || a(1).isEmpty) SnapEntry(a(0), Nil)
@@ -176,23 +165,14 @@ object Upsert {
   private[graft] def manifestEntries(spark: SparkSession, path: String,
                                      version: Int): Seq[SnapEntry] = {
     val fs = fsFor(spark, path)
-    val p = new org.apache.hadoop.fs.Path(snapDir(path), s"v$version.list")
+    val p = SnapLog.manifest(path, version)
     require(fs.exists(p), s"no snapshot v$version at $path")
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
-    lines.filter(_.nonEmpty).map(parseEntry)
+    SnapLog.readLines(fs, p).filter(_.nonEmpty).map(parseEntry)
   }
 
   private def manifestDirs(spark: SparkSession, path: String,
                            version: Int): Seq[String] =
     manifestEntries(spark, path, version).map(_.dir)
-
-  /** Marker: this sink has (ever) used merge-on-read. One exists-call
-    * lets every publish on the common dv-less sink skip the
-    * all-manifests dv-reattach scan. */
-  private def morMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), "mor.on")
 
   /** dir name → the UNION of its dv sets across every published
     * manifest. Reconciles and carry paths republish manifests from dir
@@ -217,11 +197,11 @@ object Upsert {
   private def dvUnionFor(spark: SparkSession,
       path: String): Map[String, Seq[String]] = {
     val fs = fsFor(spark, path)
-    if (!fs.exists(morMarkerPath(path))) return Map.empty
-    val lists = fs.listStatus(snapDir(path)).toSeq.flatMap { st =>
-      numberedName(st.getPath.getName, "v", ".list").map(st -> _)
-    }
-    val perFile = lists.flatMap { case (st, listV) =>
+    // The `mor.on` marker: this sink has (ever) used merge-on-read. One
+    // exists-call lets every publish on the common dv-less sink skip
+    // the all-manifests scan.
+    if (!fs.exists(SnapLog.morMarker(path))) return Map.empty
+    val perFile = SnapLog.list(fs, path).manifests.flatMap { case (st, listV) =>
       val n = st.getPath.getName
       val key = (path, s"$n:${st.getModificationTime}:${st.getLen}")
       val hit = manifestDvCache.get(key)
@@ -374,40 +354,6 @@ object Upsert {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** CREATE-EXCLUSIVE of a marker file — the arbitration primitive
-    * under every claim/lock here. On HDFS the namenode arbitrates
-    * `create(overwrite = false)`. On the LOCAL filesystem Hadoop's
-    * RawLocalFileSystem implements that flag as exists()-then-create —
-    * a TOCTOU window — so `file:` paths go through java.nio
-    * `Files.createFile`, which is a real O_EXCL open. Object stores
-    * without atomic create-exclusive need a fronting layer (same
-    * caveat as the manifest rename). Throws the filesystem's
-    * already-exists/IO exception on a lost race — callers classify. */
-  private def createExclusive(fs: org.apache.hadoop.fs.FileSystem,
-                              marker: org.apache.hadoop.fs.Path): Unit =
-    if (fs.getScheme == "file") {
-      val p = org.apache.hadoop.fs.Path
-        .getPathWithoutSchemeAndAuthority(fs.makeQualified(marker))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toString))
-      ()
-    } else fs.create(marker, false).close()
-
-  /** Take the exclusive rewriter lock or throw [[LockHeldException]].
-    * One lock for every rewrite-class op (compact/merge/erase/vacuum):
-    * they all rewrite or delete referenced dirs, so any two racing
-    * would double-carry or read a half-replaced base. */
-  private def acquireRewriterLock(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, opName: String): org.apache.hadoop.fs.Path = {
-    val lock = new org.apache.hadoop.fs.Path(snapDir(path), "compact.lock")
-    try createExclusive(fs, lock) catch {
-      case e: java.io.IOException =>
-        throw new LockHeldException(
-          s"$opName: another rewriter holds $lock — if its process " +
-            "crashed, delete the lock file and retry", e)
-    }
-    lock
-  }
-
   // ── dir-level key-range stats ────────────────────────────────────
   // Every data dir gets a `_snapshots/<dir>.stats` sidecar at write
   // time: per key column, the min/max of its non-null values. Probing
@@ -422,9 +368,6 @@ object Upsert {
   // "always probe" — pruning is an optimization, never a correctness
   // gate. Ranges are per-column: disjointness on ANY key column rules
   // out a composite-key match (all columns must match for equality).
-
-  private def statsPath(path: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.stats")
 
   /** Canonical comparable domain per supported key type. Unsupported
     * types (float/decimal/binary/…) return None and that column simply
@@ -544,18 +487,6 @@ object Upsert {
       : Seq[(String, String, Option[(Any, Any)])] =
     keyRangesWithCount(df, keys)._1
 
-  /** Bloom sidecars live at `<dir>.bloom2`. The suffix is a CANON
-    * VERSION: v1 (`.bloom`) canonicalized timestamp/date keys via
-    * cast-to-string, whose rendering follows the SESSION TIMEZONE — a
-    * bloom written under one zone and probed under another produced
-    * false negatives, silently pruning dirs that DO hold the probed
-    * keys (dropped point-read rows). The canon below is
-    * timezone-independent; bumping the file name makes every v1
-    * sidecar invisible rather than wrong (a bloomless dir degrades to
-    * "always probe" — sound). Nothing writes v1 sidecars any more. */
-  private def bloomPath(path: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.bloom2")
-
   /** Canonical composite-key string for the bloom sidecars: each key
     * column canonicalized to a string, unit-separator joined -- in
     * NAME-SORTED column order, so a point read passing the same key set
@@ -617,9 +548,7 @@ object Upsert {
       // `__rows\trows\t` prefix.
       } ++ (if (totalRows >= 0) Seq(s"__rows\trows\t$totalRows") else Nil)
       if (lines.isEmpty) return
-      val out = fs.create(statsPath(path, dirName), true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
+      SnapLog.writeText(fs, SnapLog.stats(path, dirName), lines.mkString("\n"))
       try {
         // n == 0: every range line is "none", so stage-1 pruning
         // already drops this dir for ANY probe — don't spend a Spark
@@ -632,16 +561,17 @@ object Upsert {
           // an EMPTY dir still writes no bloom (its all-"none" stats
           // already prune every probe).
           case Some(bytes) =>
-            val bo = fs.create(bloomPath(path, dirName), true)
-            try bo.write(bytes) finally bo.close()
+            SnapLog.writeBytes(fs, SnapLog.bloom(path, dirName), bytes)
           case None =>
             val df = readDirs(spark, Seq(s"$path/$dirName"))
             val nn = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
             val bf = labeledBloom(spark, dirName)(
               nn.stat.bloomFilter(keyCanon(df, keys),
                 math.max(n, 64L), 0.01))
-            val bo = fs.create(bloomPath(path, dirName), true)
-            try bf.writeTo(bo) finally bo.close()
+            val bytes = new java.io.ByteArrayOutputStream()
+            bf.writeTo(bytes)
+            SnapLog.writeBytes(fs, SnapLog.bloom(path, dirName),
+              bytes.toByteArray)
         }
       } catch { case scala.util.control.NonFatal(e) =>
         sidecarSkipped("bloom", dirName, e) }
@@ -718,10 +648,10 @@ object Upsert {
     // otherwise the KMV sketch reads the new dir as before.
     try {
       val fs = fsFor(spark, path)
-      if (fs.exists(gateMarkerPath(path))) {
+      if (fs.exists(SnapLog.gateMarker(path))) {
         val (rows, m) = dirProfile.getOrElse(profileSketch(
           spark.read.schema(df.schema).parquet(s"$path/$dirName")))
-        writeProfileFile(fs, dirProfilePath(path, dirName), rows, m)
+        writeProfileFile(fs, SnapLog.profile(path, dirName), rows, m)
       }
     } catch { case scala.util.control.NonFatal(e) =>
       sidecarSkipped("profile", dirName, e) }
@@ -915,28 +845,23 @@ object Upsert {
     * contract. */
   private def readKeyBloom(spark: SparkSession, path: String,
       dirName: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val fs = fsFor(spark, path)
-    try {
-      val in = fs.open(bloomPath(path, dirName))
-      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-      finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.io.ByteArrayInputStream(SnapLog.readBytes(fsFor(spark, path),
+        SnapLog.bloom(path, dirName)))))
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Parsed `.stats` sidecar: col → (tag, None = no non-null values |
     * Some(min, max)). None overall when the sidecar is absent. */
   private def readKeyStats(spark: SparkSession, path: String,
       dirName: String): Option[Map[String, (String, Option[(Any, Any)])]] = {
-    val fs = fsFor(spark, path)
-    val p = statsPath(path, dirName)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList finally in.close()
+    val lines = SnapLog.readLinesIfExists(fsFor(spark, path),
+      SnapLog.stats(path, dirName))
     // Drop only the reserved total line (tag "rows" — no data column
     // can produce it); a key column actually NAMED __rows keeps its
     // range line.
-    Some(lines.filterNot(_.startsWith("__rows\trows\t")).map { l =>
+    lines.map(_.filter(l => l.nonEmpty &&
+        !l.startsWith("__rows\trows\t")).map { l =>
       val parts = l.split("\t", -1)
       if (parts(2) == "none") parts(0) -> (parts(1), None)
       else parts(0) -> (parts(1), Some((decodeStatValue(parts(1), parts(2)),
@@ -949,20 +874,16 @@ object Upsert {
   private def readDirRowCount(spark: SparkSession, path: String,
       dirName: String): Option[Long] =
     try {
-      val fs = fsFor(spark, path)
-      val p = statsPath(path, dirName)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
       // Full-prefix match INCLUDING the reserved "rows" tag: a data
       // column literally named __rows writes a range line
       // `__rows\t<long|string|…>\t…` which must never be mistaken for
       // the total (its tag can never be "rows"). Any truncation or
       // corruption (the sidecar write is best-effort and non-atomic)
       // degrades to None → per-dir scan, per the sidecar contract.
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.startsWith("__rows\trows\t")).toList
-      finally in.close()
-      lines.headOption.map(_.split("\t", -1)(2).trim.toLong)
+      SnapLog.readLinesIfExists(fsFor(spark, path),
+          SnapLog.stats(path, dirName))
+        .flatMap(_.find(_.startsWith("__rows\trows\t")))
+        .map(_.split("\t", -1)(2).trim.toLong)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Audit for [[countSnapshot]]: the dirs whose rows had to be
@@ -1217,17 +1138,6 @@ object Upsert {
   private[graft] val lastPresentDirs =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
 
-  /** Delete every sidecar a data dir may own (provenance record, range
-    * stats, bloom, profile). Data-dir deletion
-    * stays at the call sites; missing files are no-ops. */
-  private def deleteDirSidecars(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, dirName: String): Unit = {
-    fs.delete(absorbedPath(path, dirName), false)
-    fs.delete(statsPath(path, dirName), false)
-    fs.delete(bloomPath(path, dirName), false)
-    fs.delete(dirProfilePath(path, dirName), false)
-  }
-
   /** The subset of `dirs` whose recorded key ranges can overlap
     * `probe`'s keys. One tiny min/max aggregate over the probe (bounded
     * driver metadata, like the version manifests themselves); dirs
@@ -1393,7 +1303,7 @@ object Upsert {
     if (keys.toSet != recordedKeyCols(spark, path).toSet) return ranged
     val fs = fsFor(spark, path)
     val withBloom = ranged.filter(d =>
-      try fs.exists(bloomPath(path, d))
+      try fs.exists(SnapLog.bloom(path, d))
       catch { case scala.util.control.NonFatal(_) => false }).toSet
     if (withBloom.isEmpty) return ranged
     canons() match {
@@ -1507,28 +1417,16 @@ object Upsert {
 
   /** The sink's key columns, persisted once so keyless ops (compaction)
     * can still record stats sidecars for the dirs they write. */
-  private def keyColsPath(path: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), "keys.cols")
-
   private def recordKeyCols(spark: SparkSession, path: String,
       keys: Seq[String]): Unit =
-    try {
-      val fs = fsFor(spark, path)
-      val out = fs.create(keyColsPath(path), true)
-      try out.write(keys.mkString("\n").getBytes("UTF-8")) finally out.close()
-    } catch { case scala.util.control.NonFatal(e) =>
+    try SnapLog.writeText(fsFor(spark, path), SnapLog.keyCols(path),
+      keys.mkString("\n"))
+    catch { case scala.util.control.NonFatal(e) =>
       log.warn("graft: key columns of {} not recorded: {}", path, e) }
 
-  private def recordedKeyCols(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsFor(spark, path)
-    if (!fs.exists(keyColsPath(path))) Nil
-    else {
-      val in = fs.open(keyColsPath(path))
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
-    }
-  }
+  private def recordedKeyCols(spark: SparkSession, path: String): Seq[String] =
+    SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.keyCols(path))
+      .getOrElse(Nil).filter(_.nonEmpty)
 
   // ── value-column data skipping ──────────────────────────────────
   // Key-range sidecars prune KEY probes; a reader filtering on a
@@ -1543,31 +1441,20 @@ object Upsert {
   // (conservative, never wrong). Run a compaction after declaring to
   // backfill the corpus's sidecars in one rewrite.
 
-  private def skipColsPath(path: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), "skip.cols")
-
   /** Declare the value columns whose min/max every FUTURE dir write
     * records for data skipping. Overwrites the previous declaration
     * (the sidecars of already-written dirs are unaffected either way). */
   def declareSkipCols(spark: SparkSession, path: String,
       cols: Seq[String]): Unit = {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    val out = fs.create(skipColsPath(path), true)
-    try out.write(cols.mkString("\n").getBytes("UTF-8")) finally out.close()
+    fs.mkdirs(SnapLog.snapDir(path))
+    SnapLog.writeText(fs, SnapLog.skipCols(path), cols.mkString("\n"))
   }
 
   private def recordedSkipCols(spark: SparkSession, path: String): Seq[String] =
-    try {
-      val fs = fsFor(spark, path)
-      if (!fs.exists(skipColsPath(path))) Nil
-      else {
-        val in = fs.open(skipColsPath(path))
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toList
-        finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => Nil }
+    try SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.skipCols(path))
+      .getOrElse(Nil).filter(_.nonEmpty)
+    catch { case scala.util.control.NonFatal(_) => Nil }
 
   // ── schema-evolution metadata ops ───────────────────────────────
   // The sink tolerates ADDITIVE physical evolution (mergeSchema) but
@@ -1588,28 +1475,18 @@ object Upsert {
   // declared skip columns rename atomically with the map (old dirs'
   // stats lines simply stop pruning — conservative, never wrong).
 
-  private def schemaMapPath(path: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), "schema.map")
-
   /** (kind, a, b) triples in declaration order: ("add", name, ddl) |
     * ("rename", from, to). */
   private def recordedSchemaMap(spark: SparkSession,
       path: String): Seq[(String, String, String)] =
-    try {
-      val fs = fsFor(spark, path)
-      if (!fs.exists(schemaMapPath(path))) Nil
-      else {
-        val in = fs.open(schemaMapPath(path))
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).map { l =>
-            val a = l.split("\t", 3)
-            (a(0), java.net.URLDecoder.decode(a(1), "UTF-8"),
-              if (a(0) == "add") a(2)
-              else java.net.URLDecoder.decode(a(2), "UTF-8"))
-          }.toList
-        finally in.close()
+    try SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.schemaMap(path))
+      .getOrElse(Nil).filter(_.nonEmpty).map { l =>
+        val a = l.split("\t", 3)
+        (a(0), java.net.URLDecoder.decode(a(1), "UTF-8"),
+          if (a(0) == "add") a(2)
+          else java.net.URLDecoder.decode(a(2), "UTF-8"))
       }
-    } catch { case scala.util.control.NonFatal(_) => Nil }
+    catch { case scala.util.control.NonFatal(_) => Nil }
 
   /** Append one evolution line under the REWRITER LOCK, published by
     * tmp+rename: evolution ops are rare admin actions, but a plain
@@ -1622,9 +1499,8 @@ object Upsert {
   private def appendSchemaMapLine(spark: SparkSession, path: String,
       kind: String, a: String, b: String): Unit = {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    val lock = acquireRewriterLock(fs, path, s"${kind}Column")
-    try {
+    fs.mkdirs(SnapLog.snapDir(path))
+    SnapLog.withRewriterLock(fs, path, s"${kind}Column") {
       val prior = recordedSchemaMap(spark, path)
       val bEnc = if (kind == "add") b
                  else java.net.URLEncoder.encode(b, "UTF-8")
@@ -1632,16 +1508,11 @@ object Upsert {
         val yEnc = if (k == "add") y else java.net.URLEncoder.encode(y, "UTF-8")
         s"$k\t${java.net.URLEncoder.encode(x, "UTF-8")}\t$yEnc"
       } :+ s"$kind\t${java.net.URLEncoder.encode(a, "UTF-8")}\t$bEnc"
-      val tmp = new org.apache.hadoop.fs.Path(snapDir(path),
-        "schema.map.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(schemaMapPath(path), false)
-      if (!fs.rename(tmp, schemaMapPath(path)))
+      if (!SnapLog.install(fs, SnapLog.schemaMap(path), lines.mkString("\n"),
+          replace = true))
         throw new java.io.IOException(
           s"schema.map publish failed at $path — declaration NOT applied")
-    } finally fs.delete(lock, false)
+    }
   }
 
   /** Names currently DROPPED by the map (a later add/rename-to would
@@ -1918,7 +1789,7 @@ object Upsert {
   private[graft] def declareKeys(spark: SparkSession, path: String,
       keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "declareKeys: empty key list")
-    fsFor(spark, path).mkdirs(snapDir(path))
+    fsFor(spark, path).mkdirs(SnapLog.snapDir(path))
     recordKeyCols(spark, path, keys)
   }
 
@@ -1970,7 +1841,7 @@ object Upsert {
         val canons = keySets(k).flatMap(bloomCanonOf)
         val fs = fsFor(spark, path)
         ranged.filter { d =>
-          val hasBloom = try fs.exists(bloomPath(path, d))
+          val hasBloom = try fs.exists(SnapLog.bloom(path, d))
             catch { case scala.util.control.NonFatal(_) => false }
           !hasBloom || (readKeyBloom(spark, path, d) match {
             case None => true
@@ -2048,35 +1919,26 @@ object Upsert {
     d
   }
 
-  private def absorbedPath(path: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.absorbed")
-
   /** Record `dirName`'s provenance explicitly: the roots whose rows it
     * holds (a rewrite or compact dir's name does not parse to them). */
   private def writeAbsorbed(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, dirName: String, roots: Set[String]): Unit = {
-    val out = fs.create(absorbedPath(path, dirName), true)
-    try out.write(roots.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+      path: String, dirName: String, roots: Set[String]): Unit =
+    SnapLog.writeText(fs, SnapLog.absorbed(path, dirName),
+      roots.toSeq.sorted.mkString("\n"))
 
   private def provenance(spark: SparkSession, path: String,
                          dirName: String): Set[String] = {
-    val fs = fsFor(spark, path)
-    val f = absorbedPath(path, dirName)
     // Any dir may carry an explicit absorbed record (compact dirs
     // always do; merge rewrites do too — their names don't parse to a
     // root). A compact dir WITHOUT one (pre-provenance sinks) is its
     // own opaque root — conservative: it can satisfy no other dir's
     // reachability and is never skipped from a carry.
-    if (fs.exists(f)) {
-      val in = fs.open(f)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toSet
-      finally in.close()
-    }
-    else if (dirName.startsWith("compact-")) Set(dirName)
-    else Set(rootOf(dirName))
+    SnapLog.readLinesIfExists(fsFor(spark, path),
+        SnapLog.absorbed(path, dirName))
+      .map(_.filter(_.nonEmpty).toSet)
+      .getOrElse(
+        if (dirName.startsWith("compact-")) Set(dirName)
+        else Set(rootOf(dirName)))
   }
 
   private def coverage(spark: SparkSession, path: String,
@@ -2102,27 +1964,24 @@ object Upsert {
     // rewritten rows (or retain an erased subject's sums) silently.
     // Failing the whole op is the cheap, honest outcome: the caller
     // retries and no reader ever saw a lie.
-    val fs = fsFor(spark, path)
-    fs.create(new org.apache.hadoop.fs.Path(snapDir(path),
-      s"gen-$version.touch"), true).close()
+    SnapLog.writeText(fsFor(spark, path),
+      SnapLog.rewriteGenMarker(path, version), "")
   }
 
-  /** (count, max version) of the `<prefix>-*.touch` markers — the ONE
+  /** (count, max version) of one kind of generation marker — the ONE
     * fingerprint body behind [[rewriteGen]] and [[eraseGen]]: markers
     * are only ever added with unique versions, so any new marker
     * changes the pair. */
   private def genFingerprint(spark: SparkSession, path: String,
-      prefix: String): String = {
-    val fs = fsFor(spark, path)
-    if (!fs.exists(snapDir(path))) return "0:0"
-    val vs = fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-      .flatMap(numberedName(_, prefix, ".touch"))
-    s"${vs.size}:${vs.foldLeft(0)(math.max)}"
-  }
+      gens: SnapLog.Listing => Seq[Int]): String =
+    SnapLog.listIfSink(fsFor(spark, path), path).map(gens) match {
+      case Some(vs) => s"${vs.size}:${vs.foldLeft(0)(math.max)}"
+      case None => "0:0"
+    }
 
   /** Fingerprint of the content-rewrite history (merge/heal/erase). */
   private[graft] def rewriteGen(spark: SparkSession, path: String): String =
-    genFingerprint(spark, path, "gen-")
+    genFingerprint(spark, path, _.rewriteGens)
 
   /** Fingerprint of the IN-PLACE history edits only — `erase-*.touch`
     * markers stamped by [[eraseKeys]] commits. The change feed is exact
@@ -2134,7 +1993,7 @@ object Upsert {
     * vanish from both sides and the diff can never emit their deletes.
     * This narrower fingerprint is what feed consumers pin. */
   private[graft] def eraseGen(spark: SparkSession, path: String): String =
-    genFingerprint(spark, path, "erase-")
+    genFingerprint(spark, path, _.eraseGens)
 
   /** Claim version number `latest+1` by CREATE-EXCLUSIVE of a
     * `v<N>.claim` marker: the optimistic-concurrency step that stops
@@ -2148,17 +2007,16 @@ object Upsert {
     * sweeps claims the protocol has provably passed. */
   private def claimVersion(spark: SparkSession, path: String): Int = {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
+    fs.mkdirs(SnapLog.snapDir(path))
     var attempts = 0
     while (attempts < 1000) {
-      val published = latestVersion(spark, path)
-      val claimed = fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-        .flatMap(numberedName(_, "v", ".claim"))
-        .foldLeft(0)(math.max)
-      val target = math.max(published, claimed) + 1
-      val marker = new org.apache.hadoop.fs.Path(snapDir(path), s"v$target.claim")
+      // One listing answers both: the latest version, published OR
+      // claimed.
+      val log = SnapLog.list(fs, path)
+      val target = math.max(log.latest, log.claims.foldLeft(0)(math.max)) + 1
+      val marker = SnapLog.claim(path, target)
       try {
-        createExclusive(fs, marker)
+        SnapLog.createExclusive(fs, marker)
         return target
       } catch {
         // Only a LOST RACE retries. java.nio and Hadoop each signal it
@@ -2185,11 +2043,8 @@ object Upsert {
     * claim wait reads as "no appender behind this claim" (an appender's
     * claim stays empty until its publish deletes it). */
   private def retireClaim(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, v: Int): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.claim"), true)
-    try out.write("spent".getBytes("UTF-8")) finally out.close()
-  }
+      path: String, v: Int): Unit =
+    SnapLog.writeText(fs, SnapLog.claim(path, v), "spent")
 
   /** Post-publish LINEAGE reconciliation — the second half of the
     * optimistic protocol. The hazard: W1 claims v2, W2 claims v3, both
@@ -2241,8 +2096,7 @@ object Upsert {
     // original from the latest chain, resurrecting deleted keys. The
     // caller collapses the union with [[collapseShadows]].
     ((baseVersion + 1) to latest)
-      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(
-        snapDir(path), s"v$v.list")))
+      .filter(v => fs.exists(SnapLog.manifest(path, v)))
       .map(v => manifestDirs(spark, path, v))
       .filter(_.exists(d =>
         !provenance(spark, path, d).subsetOf(latestCov)))
@@ -2745,16 +2599,6 @@ object Upsert {
       .toDF("column", "n_rows", "n_nulls", "n_distinct")
   }
 
-  private def dirProfilePath(path: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"$dirName.profile")
-
-  /** Opt-in marker for per-dir profiling: created by the first
-    * [[writeSnapshotGated]] call; from then on every dir write in this
-    * sink stamps a `.profile` sidecar alongside its range stats, so
-    * the gate never re-reads published data. */
-  private def gateMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(snapDir(path), "gate.on")
-
   /** Sidecar format: `#rows<TAB>n` then one line per column —
     * `urlenc(col) TAB nulls TAB fp,fp,…`. Best-effort write: a missing
     * sidecar only costs the next gated publish a profile pass over
@@ -2767,18 +2611,14 @@ object Upsert {
         case (c, (nulls, fps)) =>
           s"${java.net.URLEncoder.encode(c, "UTF-8")}\t$nulls\t${fps.mkString(",")}"
       }
-      val out = fs.create(target, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
+      SnapLog.writeText(fs, target, lines.mkString("\n"))
     } catch { case scala.util.control.NonFatal(_) => () }
 
   private def readProfileFile(fs: org.apache.hadoop.fs.FileSystem,
       target: org.apache.hadoop.fs.Path)
       : Option[(Long, Map[String, (Long, Array[String])])] =
     try {
-      val in = fs.open(target)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList finally in.close()
+      val lines = SnapLog.readLines(fs, target).filter(_.nonEmpty)
       val rows = lines.head.split("\t")(1).toLong
       Some((rows, lines.tail.map { l =>
         val parts = l.split("\t", -1)
@@ -2829,12 +2669,13 @@ object Upsert {
       allowDroppedColumns: Boolean = false): Int =
       labeled(spark, "graft.gate") {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    // Opt the sink into per-dir profiling BEFORE any write: this
-    // call's own batch dir (and every later rewrite) gets its sidecar
-    // stamped at write time.
-    try { if (!fs.exists(gateMarkerPath(path)))
-      fs.create(gateMarkerPath(path), true).close()
+    fs.mkdirs(SnapLog.snapDir(path))
+    // Opt the sink into per-dir profiling BEFORE any write: with the
+    // `gate.on` marker, this call's own batch dir (and every later
+    // rewrite) gets its `.profile` sidecar stamped at write time, so
+    // the gate never re-reads published data.
+    try { if (!fs.exists(SnapLog.gateMarker(path)))
+      SnapLog.writeText(fs, SnapLog.gateMarker(path), "")
     } catch { case scala.util.control.NonFatal(_) => () }
     requireLiveKeys(spark, path, keys, "writeSnapshotGated")
     val cur = latestVersion(spark, path)
@@ -2854,10 +2695,10 @@ object Upsert {
       freshForWrite = Some(fresh)
       var missing = List.empty[String]
       val perDir = baseDirs.map { d =>
-        readProfileFile(fs, dirProfilePath(path, d)).getOrElse {
+        readProfileFile(fs, SnapLog.profile(path, d)).getOrElse {
           missing ::= d
           val p = profileSketch(readDirs(spark, Seq(s"$path/$d")))
-          writeProfileFile(fs, dirProfilePath(path, d), p._1, p._2)
+          writeProfileFile(fs, SnapLog.profile(path, d), p._1, p._2)
           p
         }
       }
@@ -2903,15 +2744,18 @@ object Upsert {
       dirs.map(d => SnapEntry(d, dvs.getOrElse(d, Nil))))
   }
 
+  /** The ONE manifest writer, behind publishes (a new version) and
+    * erase's repoints (`replace`, an existing version in place). */
+  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, version: Int, entries: Seq[SnapEntry],
+      replace: Boolean): Boolean =
+    SnapLog.install(fs, SnapLog.manifest(path, version),
+      entries.map(_.line).mkString("\n"), replace)
+
   private def publishManifestEntries(spark: SparkSession, path: String,
       version: Int, entries: Seq[SnapEntry]): Unit = {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    val tmp = new org.apache.hadoop.fs.Path(snapDir(path),
-      s"v$version.list.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.map(_.line).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    fs.mkdirs(SnapLog.snapDir(path))
     // rename is the atomic-publish step; a false return (destination
     // exists, permission lost, or an object store whose "rename" is a
     // non-atomic copy that failed) would otherwise let writeSnapshot
@@ -2921,11 +2765,11 @@ object Upsert {
     // successful publish ignores. (On object stores without atomic
     // rename — S3 — front this sink with an HDFS/consistent-rename
     // layer or swap publishManifest for a conditional PUT.)
-    val ok = fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(snapDir(path), s"v$version.list"))
-    if (!ok) throw new java.io.IOException(
-      s"publishManifest: atomic rename to v$version.list failed at $path — " +
-        "snapshot NOT published (manifest tmp left for inspection)")
+    if (!writeManifest(fs, path, version, entries, replace = false))
+      throw new java.io.IOException(
+        s"publishManifest: atomic rename to " +
+          s"${SnapLog.manifest(path, version).getName} failed at $path — " +
+          "snapshot NOT published (manifest tmp left for inspection)")
     // Publish timestamp sidecar for AS-OF time travel. Best-effort and
     // written AFTER the rename: a crash in between leaves a published
     // version without a .meta, which [[publishedAtMs]] answers with the
@@ -2933,17 +2777,13 @@ object Upsert {
     // whose contract is "latest version published at or before ts").
     // The sidecar — not mtime — is the primary source because in-place
     // manifest repoints (eraseKeys) refresh mtime but preserve .meta.
-    try {
-      val mf = fs.create(new org.apache.hadoop.fs.Path(snapDir(path),
-        s"v$version.meta"), true)
-      try mf.write(System.currentTimeMillis().toString.getBytes("UTF-8"))
-      finally mf.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    try SnapLog.writeText(fs, SnapLog.publishStamp(path, version),
+      System.currentTimeMillis().toString)
+    catch { case scala.util.control.NonFatal(_) => () }
     // The claim marker has served its purpose once the manifest exists;
     // best-effort cleanup (an orphaned marker is harmless — claimVersion
     // skips past it).
-    fs.delete(new org.apache.hadoop.fs.Path(snapDir(path),
-      s"v$version.claim"), false)
+    fs.delete(SnapLog.claim(path, version), false)
   }
 
   /** Wall-clock publish time (epoch millis) of snapshot `version`: the
@@ -2951,16 +2791,12 @@ object Upsert {
     * modification time for pre-.meta sinks. */
   def publishedAtMs(spark: SparkSession, path: String, version: Int): Long = {
     val fs = fsFor(spark, path)
-    val meta = new org.apache.hadoop.fs.Path(snapDir(path), s"v$version.meta")
-    if (fs.exists(meta)) {
-      val in = fs.open(meta)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else {
-      val list = new org.apache.hadoop.fs.Path(snapDir(path), s"v$version.list")
-      require(fs.exists(list), s"no snapshot v$version at $path")
-      fs.getFileStatus(list).getModificationTime
-    }
+    SnapLog.readTextIfExists(fs, SnapLog.publishStamp(path, version))
+      .map(_.trim.toLong).getOrElse {
+        val list = SnapLog.manifest(path, version)
+        require(fs.exists(list), s"no snapshot v$version at $path")
+        fs.getFileStatus(list).getModificationTime
+      }
   }
 
   /** The snapshot version a reader at wall-clock `tsMs` would have seen
@@ -2971,11 +2807,8 @@ object Upsert {
     * answer is the max version that existed then. Throws when nothing
     * was published by `tsMs`. */
   def versionAsOf(spark: SparkSession, path: String, tsMs: Long): Int = {
-    val fs = fsFor(spark, path)
-    require(fs.exists(snapDir(path)), s"no snapshot sink at $path")
-    val versions = fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-      .flatMap(numberedName(_, "v", ".list"))
-    val at = versions.filter(v => publishedAtMs(spark, path, v) <= tsMs)
+    val at = sinkListing(spark, path).versions
+      .filter(v => publishedAtMs(spark, path, v) <= tsMs)
     require(at.nonEmpty,
       s"no snapshot published at or before epoch-ms $tsMs at $path")
     at.max
@@ -3073,7 +2906,7 @@ object Upsert {
       zBits: Int = 12, zShards: Int = 0): Int =
       labeled(spark, "graft.compact") {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
+    fs.mkdirs(SnapLog.snapDir(path))
     var attempts = 0
     while (attempts < 5) {
       // Advisory fail-fast (not the protection — the post-lock
@@ -3081,11 +2914,8 @@ object Upsert {
       // about to invalidate whatever we'd pack, so don't burn a rewrite
       // on it. Racy by nature; a collision that slips through just
       // costs one stale-retry.
-      val advisory = new org.apache.hadoop.fs.Path(snapDir(path),
-        "compact.lock")
-      if (fs.exists(advisory)) throw new LockHeldException(
-        s"compactSnapshots: another rewriter holds $advisory — if its " +
-          "process crashed, delete the lock file and retry", null)
+      if (SnapLog.rewriterActive(fs, path))
+        throw SnapLog.lockHeld("compactSnapshots", path, null)
       val cur = latestVersion(spark, path)
       require(cur >= 1, "nothing to compact: no published snapshot")
       val baseEntries = manifestEntries(spark, path, cur)
@@ -3117,18 +2947,14 @@ object Upsert {
       // (reconciliation reasons over it).
       writeAbsorbed(fs, path, dirName, absorbed)
       compactPreLockHook()
-      val lock = try acquireRewriterLock(fs, path, "compactSnapshots")
-        catch { case e: LockHeldException =>
-          fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
-          deleteDirSidecars(fs, path, dirName)
-          throw e
-        }
-      try {
+      val published = SnapLog.withRewriterLock(fs, path, "compactSnapshots",
+          () => SnapLog.dropDir(fs, path, dirName)) {
         val latestNow = latestVersion(spark, path)
         val latestEntries = manifestEntries(spark, path, latestNow)
         val latestDirs = latestEntries.map(_.dir)
         // Entry-level: a dv added to a packed dir is a content change.
-        if (packedEntries.forall(latestEntries.contains)) {
+        if (!packedEntries.forall(latestEntries.contains)) None
+        else {
           // Carry from the LATEST manifest. A full pack carries the
           // dirs a writer published since `cur` whose provenance the
           // pack does not cover (sequential compact-then-write content;
@@ -3161,13 +2987,13 @@ object Upsert {
           if (rv == pubV && latestDirs.forall(d =>
               packed.contains(d) || carry.contains(d)))
             writeChangeMeta(fs, path, rv, "none", latestNow, None)
-          return rv
+          Some(rv)
         }
-      } finally fs.delete(lock, false)
+      }
+      if (published.nonEmpty) return published.get
       // Stale: a rewriter (merge/erasure/another compactor) replaced
       // part of what we packed. Drop the orphan and retry.
-      fs.delete(new org.apache.hadoop.fs.Path(path, dirName), true)
-      deleteDirSidecars(fs, path, dirName)
+      SnapLog.dropDir(fs, path, dirName)
       attempts += 1
     }
     throw new IllegalStateException(
@@ -3336,7 +3162,7 @@ object Upsert {
       opCol: String, mor: Boolean): Int =
       labeled(spark, "graft.merge") {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
+    fs.mkdirs(SnapLog.snapDir(path))
     requireLiveKeys(spark, path, keys, "mergeSnapshot")
     val op = upper(col(opCol))
     val deduped = dedupOnKey(normalizeBatch(spark, path, changes),
@@ -3417,8 +3243,8 @@ object Upsert {
     if (mor) {
       require(latestVersion(spark, path) >= 1,
         "nothing to merge into: no published snapshot")
-      if (!fs.exists(morMarkerPath(path)))
-        fs.create(morMarkerPath(path), true).close()
+      if (!fs.exists(SnapLog.morMarker(path)))
+        SnapLog.writeText(fs, SnapLog.morMarker(path), "")
     }
     // The critical section covers ONLY staleness re-validation +
     // publish — metadata ops, the discipline compaction adopted in r16.
@@ -3443,11 +3269,8 @@ object Upsert {
       // rewrites on it; streaming CDC callers classify this typed
       // throw and retry with backoff. Racy by nature; a collision that
       // slips through just costs one stale-retry.
-      val advisory = new org.apache.hadoop.fs.Path(snapDir(path),
-        "compact.lock")
-      if (fs.exists(advisory)) throw new LockHeldException(
-        s"mergeSnapshot: another rewriter holds $advisory — if its " +
-          "process crashed, delete the lock file and retry", null)
+      if (SnapLog.rewriterActive(fs, path))
+        throw SnapLog.lockHeld("mergeSnapshot", path, null)
       val cur = latestVersion(spark, path)
       require(cur >= 1, "nothing to merge into: no published snapshot")
       val target = claimVersion(spark, path)
@@ -3565,14 +3388,9 @@ object Upsert {
       // collision (the streaming CDC sink retries them routinely)
       // would strand a full set of rewritten dirs for the offline
       // vacuum — delete the orphans before propagating.
-      val lock = try acquireRewriterLock(fs, path, "mergeSnapshot")
-        catch { case e: LockHeldException =>
-          (rewriteNames ++ dvByDir.values :+ mergeDir).foreach { d =>
-            fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
-            deleteDirSidecars(fs, path, d)
-          }
-          throw e
-        }
+      def dropRewrites(): Unit =
+        (rewriteNames ++ dvByDir.values :+ mergeDir)
+          .foreach(SnapLog.dropDir(fs, path, _))
       // Set inside the critical section, ACTED ON after it: the change
       // record re-reads the rewritten dirs and writes a parquet dir —
       // data jobs that must not run under the lock (the critical
@@ -3582,7 +3400,7 @@ object Upsert {
       var committed: Option[Int] = None
       var recordAt: Option[Int] = None
       var genAtCommit: String = ""
-      try {
+      SnapLog.withRewriterLock(fs, path, "mergeSnapshot", dropRewrites _) {
         val latestNow = latestVersion(spark, path)
         val latestEntries = manifestEntries(spark, path, latestNow)
         val latestDirs = latestEntries.map(_.dir)
@@ -3624,8 +3442,7 @@ object Upsert {
                 keyBound = readDirRowCount(spark, path, mergeDir))
               // The unfiltered landing dir is never published — drop
               // it rather than leave a vacuum-bait orphan.
-              fs.delete(new org.apache.hadoop.fs.Path(path, mergeDir), true)
-              deleteDirSidecars(fs, path, mergeDir)
+              SnapLog.dropDir(fs, path, mergeDir)
               rw
             }
           // Rows of already-published dirs changed -> name-based delta
@@ -3676,7 +3493,7 @@ object Upsert {
           }
           committed = Some(rv)
         }
-      } finally fs.delete(lock, false)
+      }
       committed match {
         case Some(rv) =>
           mergePreRecordHook()
@@ -3710,10 +3527,7 @@ object Upsert {
       // Stale base: a rewriter (another merge, a compactor, an
       // erasure) replaced a dir we probed, carried, or rewrote. Drop
       // the orphaned rewrites and retry from the new latest.
-      (rewriteNames ++ dvByDir.values :+ mergeDir).foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
-        deleteDirSidecars(fs, path, d)
-      }
+      dropRewrites()
       attempts += 1
     }
     throw new IllegalStateException(
@@ -3756,15 +3570,15 @@ object Upsert {
     * it. Returns the number of data dirs deleted. */
   def expireSnapshots(spark: SparkSession, path: String,
                       keepFrom: Int): Int = {
-    val cur = latestVersion(spark, path)
+    val fs = fsFor(spark, path)
+    // ONE listing answers every question below.
+    val log = SnapLog.listIfSink(fs, path).getOrElse(SnapLog.Listing(Nil))
+    val cur = log.latest
     require(keepFrom >= 1 && keepFrom <= cur,
       s"keepFrom must name an existing snapshot (1..$cur), got $keepFrom")
-    val fs = fsFor(spark, path)
-    val snapNames = fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
     // PUBLISHED versions only — crashed claims leave holes in the
     // version numbering, so the keep range cannot be assumed dense.
-    val allVersions = snapNames
-      .flatMap(numberedName(_, "v", ".list"))
+    val allVersions = log.versions
     // dv dirs are referenced THROUGH their entries (merge-on-read):
     // they reclaim with the versions that applied them and must never
     // be deleted while a surviving manifest still anti-joins them.
@@ -3774,52 +3588,29 @@ object Upsert {
       .flatMap(allNames).toSet
     val doomedDirs = allVersions.filter(_ < keepFrom)
       .flatMap(allNames).toSet -- referenced
-    allVersions.filter(_ < keepFrom).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.list"), false)
-      // Aggregate-maintenance coverage marker, if this sink has them,
-      // and the publish-timestamp sidecar.
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.src"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.meta"), false)
-      fs.delete(changesMetaPath(path, v), false)
-      fs.delete(changesDirPath(path, v), true)
-    }
-    snapNames
-      .flatMap(numberedName(_, "v", ".claim"))
-      .filter(_ <= cur)
-      .foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), s"v$v.claim"),
-          false)
-      }
+    // Every file an expired version owns — manifest first, then its
+    // publish stamp, change record and aggregate coverage markers —
+    // that the listing shows.
+    val present = log.statuses.map(st => st.getPath.getName -> st.getPath)
+      .toMap
+    allVersions.filter(_ < keepFrom).flatMap(SnapLog.versionFiles)
+      .flatMap(present.get).foreach(fs.delete(_, true))
+    log.claims.filter(_ <= cur)
+      .foreach(v => fs.delete(SnapLog.claim(path, v), false))
     // Rewrite-generation markers older than the horizon: without a
     // sweep they accumulate one tiny file per merge/erase/heal forever
     // (listed by every rewriteGen call — worst exactly on object
     // stores where small-file listings cost). Sweeping changes the
     // fingerprint, so the NEXT aggregate refresh recomputes once —
     // the correct price inside an op that just destroyed history.
-    snapNames
-      .flatMap(numberedName(_, "gen-", ".touch"))
-      .filter(_ < keepFrom)
-      .foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(snapDir(path),
-          s"gen-$v.touch"), false)
-      }
+    log.rewriteGens.filter(_ < keepFrom)
+      .foreach(v => fs.delete(SnapLog.rewriteGenMarker(path, v), false))
     // Erase markers age out the same way; the changed [[eraseGen]]
     // fingerprint forces feed consumers to recompute once — the
     // correct price inside an op that just destroyed history.
-    snapNames
-      .flatMap(numberedName(_, "erase-", ".touch"))
-      .filter(_ < keepFrom)
-      .foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(snapDir(path),
-          s"erase-$v.touch"), false)
-      }
-    doomedDirs.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
-      // Any dir may own an absorbed record (compact dirs, merge
-      // rewrites) and a key-range stats sidecar; deleting a missing
-      // one is a no-op.
-      deleteDirSidecars(fs, path, d)
-    }
+    log.eraseGens.filter(_ < keepFrom)
+      .foreach(v => fs.delete(SnapLog.eraseGenMarker(path, v), false))
+    doomedDirs.foreach(SnapLog.dropDir(fs, path, _))
     doomedDirs.size
   }
 
@@ -3837,12 +3628,9 @@ object Upsert {
     * jobs run it blindly). Returns the number of data dirs deleted. */
   def expireSnapshotsOlderThan(spark: SparkSession, path: String,
       tsMs: Long): Int = {
-    val fs = fsFor(spark, path)
-    require(fs.exists(snapDir(path)), s"no snapshot sink at $path")
     // One stamp pass serves both the nothing-to-expire guard and the
     // as-of horizon (versionAsOf would re-open every v<N>.meta).
-    val at = fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-      .flatMap(numberedName(_, "v", ".list"))
+    val at = sinkListing(spark, path).versions
       .filter(v => publishedAtMs(spark, path, v) <= tsMs)
     if (at.isEmpty) return 0
     expireSnapshots(spark, path, at.max)
@@ -3883,8 +3671,7 @@ object Upsert {
     * a 100 TB deployment points its dashboards at — no executor work
     * on the sidecar path. */
   def snapshotHistory(spark: SparkSession, path: String): DataFrame = {
-    val fs = fsFor(spark, path)
-    require(fs.exists(snapDir(path)), s"no snapshot sink at $path")
+    val log = sinkListing(spark, path)
     import spark.implicits._
     // The scanned-dirs audit must cover EVERY version's count, not just
     // the final loop iteration's (countSnapshot resets the slot per
@@ -3892,9 +3679,7 @@ object Upsert {
     // only the newest version and an earlier one silently falling back
     // to a scan would pass.
     val scannedUnion = scala.collection.mutable.ArrayBuffer.empty[String]
-    val rows = fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-      .flatMap(numberedName(_, "v", ".list"))
-      .sorted
+    val rows = log.versions.sorted
       .map { v =>
         val r = (v, publishedAtMs(spark, path, v),
           manifestDirs(spark, path, v).size, countSnapshot(spark, path, v))
@@ -3932,11 +3717,6 @@ object Upsert {
   // the feed falls back rather than composing against the wrong
   // predecessor.
 
-  private def changesMetaPath(path: String, version: Int) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"v$version.changes.meta")
-  private def changesDirPath(path: String, version: Int) =
-    new org.apache.hadoop.fs.Path(snapDir(path), s"v$version.changes")
-
   private sealed trait ChangeRecord { def base: Int }
   private final case class AppendRecord(base: Int, dir: String)
     extends ChangeRecord
@@ -3946,24 +3726,16 @@ object Upsert {
   private def writeChangeMeta(fs: org.apache.hadoop.fs.FileSystem,
       path: String, version: Int, kind: String, base: Int,
       dir: Option[String]): Unit =
-    try {
-      val out = fs.create(changesMetaPath(path, version), true)
-      try out.write((s"kind\t$kind\nbase\t$base" +
-        dir.map(d => s"\ndir\t$d").getOrElse("")).getBytes("UTF-8"))
-      finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    try SnapLog.writeText(fs, SnapLog.changesMeta(path, version),
+      s"kind\t$kind\nbase\t$base" + dir.map(d => s"\ndir\t$d").getOrElse(""))
+    catch { case scala.util.control.NonFatal(_) => () }
 
   private def readChangeRecord(spark: SparkSession, path: String,
       version: Int): Option[ChangeRecord] =
-    try {
-      val fs = fsFor(spark, path)
-      val p = changesMetaPath(path, version)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val m = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty)
+    try SnapLog.readLinesIfExists(fsFor(spark, path),
+        SnapLog.changesMeta(path, version)).flatMap { lines =>
+      val m = lines.filter(_.nonEmpty)
         .map { l => val a = l.split("\t", 2); a(0) -> a(1) }.toMap
-      finally in.close()
       val base = m("base").toInt
       m("kind") match {
         case "append" => Some(AppendRecord(base, m("dir")))
@@ -4039,7 +3811,7 @@ object Upsert {
       val rec = Seq(preOp, landOp)
         .reduce(_.unionByName(_, allowMissingColumns = true))
       rec.write.mode("overwrite")
-        .parquet(changesDirPath(path, version).toString)
+        .parquet(SnapLog.changesDir(path, version).toString)
       // The meta file is the record's COMMIT POINT, and this write
       // runs AFTER the merge's lock released (a data job must not run
       // under the metadata-only critical section). An eraseKeys that
@@ -4057,10 +3829,11 @@ object Upsert {
       // to the corpus-scale key-diff. An erasure holding the lock is
       // caught by the gen re-check after acquisition either way; only
       // a persistent holder (crashed rewriter) exhausts the budget.
-      var lock: org.apache.hadoop.fs.Path = null
+      var keep: Option[Boolean] = None
       var tries = 0
-      while (lock == null) {
-        try lock = acquireRewriterLock(fs, path, "mergeChangeRecord")
+      while (keep.isEmpty) {
+        try keep = Some(SnapLog.withRewriterLock(fs, path,
+          "mergeChangeRecord")(rewriteGen(spark, path) == genAtCommit))
         catch {
           case e: LockHeldException =>
             tries += 1
@@ -4068,16 +3841,14 @@ object Upsert {
             Thread.sleep(100L * tries)
         }
       }
-      val keep = try rewriteGen(spark, path) == genAtCommit
-        finally fs.delete(lock, false)
-      if (keep) writeChangeMeta(fs, path, version, "delta", base, None)
-      else fs.delete(changesDirPath(path, version), true)
+      if (keep.get) writeChangeMeta(fs, path, version, "delta", base, None)
+      else fs.delete(SnapLog.changesDir(path, version), true)
     } catch {
       case scala.util.control.NonFatal(_) =>
         // Never leave an uncommitted record dir: an erasure's sweep
         // keys off `.changes` names, and debris under _snapshots is
         // invisible to the vacuum. Best-effort, like the record.
-        try fsFor(spark, path).delete(changesDirPath(path, version), true)
+        try fsFor(spark, path).delete(SnapLog.changesDir(path, version), true)
         catch { case scala.util.control.NonFatal(_) => () }
     }
 
@@ -4103,9 +3874,7 @@ object Upsert {
       opCol: String, preImages: Boolean = false): Option[DataFrame] =
     try {
       val fs = fsFor(spark, path)
-      val published = fs.listStatus(snapDir(path)).toSeq
-        .map(_.getPath.getName)
-        .flatMap(numberedName(_, "v", ".list"))
+      val published = SnapLog.list(fs, path).versions
         .filter(v => v > from && v <= to).sorted
       if (published.isEmpty) return None
       val chain = published.map(v => v -> readChangeRecord(spark, path, v))
@@ -4131,8 +3900,8 @@ object Upsert {
           if (df.columns.exists(ChangeRecCols)) return None
           Some(df.withColumn("__op", lit("I")).withColumn("__v", lit(v)))
         case (v, Some(DeltaRecord(_))) =>
-          if (!fs.exists(changesDirPath(path, v))) return None
-          val raw = readDirs(spark, Seq(changesDirPath(path, v).toString))
+          if (!fs.exists(SnapLog.changesDir(path, v))) return None
+          val raw = readDirs(spark, Seq(SnapLog.changesDir(path, v).toString))
           // The op marker must survive the map (it is ours, not data):
           // shelter it under a reserved alias across the application.
           Some(applySchemaMap(spark, path,
@@ -4151,44 +3920,72 @@ object Upsert {
         return Some(base.withColumn(opCol, lit("I"))
           .select((col(opCol) +: keys.map(col)) ++ cs.map(col): _*))
       }
+      // The span's endpoints per key: the OLD side is the first
+      // version's pre-image (P/D row) — the key's row at `from`, if it
+      // had one; the NEW side is the last version's live row (I/U) —
+      // the key's row at `to`. The key-diff of the two sides drops
+      // no-op chains exactly like the full key-diff.
       val rec = frames.reduce(_.unionByName(_, allowMissingColumns = true))
-      val cols = rec.columns
-        .filterNot(c => keys.contains(c) || ChangeRecCols(c)).toSeq
-      require(!cols.contains(opCol) && !keys.contains(opCol),
-        s"snapshotChanges: the sink already has a column named '$opCol' — " +
-          "pass a different opCol")
-      val nn = keys.map(col(_).isNotNull).reduce(_ && _)
       val w = Window.partitionBy(keys.map(col): _*)
-      val enriched = rec.filter(nn)
+      val enriched = rec.filter(keys.map(col(_).isNotNull).reduce(_ && _))
         .withColumn("__minv", min(col("__v")).over(w))
         .withColumn("__maxv", max(col("__v")).over(w))
-      val pre = enriched.filter(col("__v") === col("__minv") &&
-          col("__op").isin("P", "D"))
-        .select((keys.map(col) :+ lit(true).as("__had_pre")) ++
-          cols.map(c => col(c).as(s"__pre_$c")): _*)
-      val post = enriched.filter(col("__v") === col("__maxv") &&
-          col("__op") =!= "P")
-        .select((keys.map(col) :+ (col("__op") =!= "D").as("__exists")) ++
-          cols.map(c => col(c).as(s"__post_$c")): _*)
-      val same = cols.map(c => comparable(pre, s"__pre_$c") <=>
-          comparable(post, s"__post_$c"))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val opExpr = when(col("__had_pre").isNull && col("__exists"), "I")
-        .when(col("__had_pre").isNotNull && !col("__exists"), "D")
-        .when(col("__had_pre").isNotNull && col("__exists") && !same, "U")
-      val joined = post.join(pre, keys, "left")
-        .withColumn(opCol, opExpr)
-        .filter(col(opCol).isNotNull)
-      val base = joined
-        .select((col(opCol) +: keys.map(col)) ++
-          cols.map(c => when(col(opCol) === "D", col(s"__pre_$c"))
-            .otherwise(col(s"__post_$c")).as(c)): _*)
-      Some(
-        if (!preImages) base
-        else base.unionByName(joined.filter(col(opCol) === "U")
-          .select((lit("UP").as(opCol) +: keys.map(col)) ++
-            cols.map(c => col(s"__pre_$c").as(c)): _*)))
+      val pre = col("__op").isin("P", "D")
+      val internal = Seq("__op", "__v", "__minv", "__maxv")
+      Some(keyDiff(
+        enriched.filter(col("__v") === col("__minv") && pre)
+          .drop(internal: _*),
+        enriched.filter(col("__v") === col("__maxv") && !pre)
+          .drop(internal: _*),
+        keys, opCol, preImages))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The exact diff of an OLD and a NEW side holding at most one row
+    * per key each — the one diff behind both change-feed paths:
+    * `op` = I (key only new, new values), D (key only old, OLD values —
+    * the consumer needs what to delete), U (key on both with any
+    * non-key column differing null-safely, new values); unchanged keys
+    * produce no row, NULL-keyed rows are excluded, and a column one
+    * side lacks compares as NULL there. `preImages` adds a `UP` row
+    * with the old values per U key. */
+  private def keyDiff(oldDf: DataFrame, newDf: DataFrame,
+      keys: Seq[String], opCol: String, preImages: Boolean): DataFrame = {
+    val cols = (oldDf.columns ++ newDf.columns).distinct
+      .filterNot(keys.contains).toSeq
+    // A DATA column named like the op column would make the final
+    // select emit two `op` columns (the computed op next to the
+    // renamed-back data column) — ambiguous for every downstream
+    // consumer. Refuse loudly; the caller picks a free name.
+    require(!cols.contains(opCol) && !keys.contains(opCol),
+      s"snapshotChanges: the sink already has a column named '$opCol' — " +
+        "pass a different opCol")
+    def prep(df: DataFrame, marker: String, prefix: String) = {
+      val withMissing = cols.foldLeft(df)((d, c) =>
+        if (d.columns.contains(c)) d else d.withColumn(c, lit(null)))
+      val nn = keys.map(col(_).isNotNull).reduce(_ && _)
+      cols.foldLeft(withMissing.filter(nn).withColumn(marker, lit(true)))(
+        (d, c) => d.withColumnRenamed(c, prefix + c))
+    }
+    val o = prep(oldDf, "__o_present", "__o_")
+    val n = prep(newDf, "__n_present", "__n_")
+    val same = cols.map(c => comparable(o, s"__o_$c") <=>
+        comparable(n, s"__n_$c"))
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val op = when(col("__o_present").isNull, "I")
+      .when(col("__n_present").isNull, "D")
+      .when(!same, "U")
+    val joined = o.join(n, keys, "full_outer")
+      .withColumn(opCol, op)
+      .filter(col(opCol).isNotNull)
+    val base = joined
+      .select((col(opCol) +: keys.map(col)) ++
+        cols.map(c => when(col(opCol) === "D", col(s"__o_$c"))
+          .otherwise(col(s"__n_$c")).as(c)): _*)
+    if (!preImages) base
+    else base.unionByName(joined.filter(col(opCol) === "U")
+      .select((lit("UP").as(opCol) +: keys.map(col)) ++
+        cols.map(c => col(s"__o_$c").as(c)): _*))
+  }
 
   /** Column `name` of `df` in a form `<=>` can compare: Spark orders
     * no map type, so every map inside it becomes its entry array
@@ -4267,8 +4064,8 @@ object Upsert {
     // SHORTER span's diff instead of the key-diff's loud failure.
     val efs = fsFor(spark, path)
     Seq(fromVersion, toVersion).foreach { v =>
-      require(efs.exists(new org.apache.hadoop.fs.Path(snapDir(path),
-        s"v$v.list")), s"no snapshot v$v at $path")
+      require(efs.exists(SnapLog.manifest(path, v)),
+        s"no snapshot v$v at $path")
     }
     // RECORDED fast path: when every published version in the span
     // carries a write-time change record whose base chains to its
@@ -4312,43 +4109,7 @@ object Upsert {
     def readDirs(es: Seq[SnapEntry]) =
       if (es.isEmpty) readSnapshot(spark, path, toVersion).limit(0)
       else applySchemaMap(spark, path, readEntriesRaw(spark, path, es))
-    val oldDf = readDirs(oldOnly)
-    val newDf = readDirs(newOnly)
-    val cols = (oldDf.columns ++ newDf.columns).distinct
-      .filterNot(keys.contains).toSeq
-    // A DATA column named like the op column would make the final
-    // select emit two `op` columns (the computed op next to the
-    // renamed-back data column) — ambiguous for every downstream
-    // consumer. Refuse loudly; the caller picks a free name.
-    require(!cols.contains(opCol) && !keys.contains(opCol),
-      s"snapshotChanges: the sink already has a column named '$opCol' — " +
-        "pass a different opCol")
-    def prep(df: DataFrame, marker: String, prefix: String) = {
-      val withMissing = cols.foldLeft(df)((d, c) =>
-        if (d.columns.contains(c)) d else d.withColumn(c, lit(null)))
-      val nn = keys.map(col(_).isNotNull).reduce(_ && _)
-      cols.foldLeft(withMissing.filter(nn).withColumn(marker, lit(true)))(
-        (d, c) => d.withColumnRenamed(c, prefix + c))
-    }
-    val o = prep(oldDf, "__o_present", "__o_")
-    val n = prep(newDf, "__n_present", "__n_")
-    val same = cols.map(c => comparable(o, s"__o_$c") <=>
-        comparable(n, s"__n_$c"))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val op = when(col("__o_present").isNull, "I")
-      .when(col("__n_present").isNull, "D")
-      .when(!same, "U")
-    val joined = o.join(n, keys, "full_outer")
-      .withColumn(opCol, op)
-      .filter(col(opCol).isNotNull)
-    val base = joined
-      .select((col(opCol) +: keys.map(col)) ++
-        cols.map(c => when(col(opCol) === "D", col(s"__o_$c"))
-          .otherwise(col(s"__n_$c")).as(c)): _*)
-    if (!preImages) base
-    else base.unionByName(joined.filter(col(opCol) === "U")
-      .select((lit("UP").as(opCol) +: keys.map(col)) ++
-        cols.map(c => col(s"__o_$c").as(c)): _*))
+    keyDiff(readDirs(oldOnly), readDirs(newOnly), keys, opCol, preImages)
   }
 
   /** Hygiene sweep for ORPHANED data dirs, OFFLINE form: deletes every
@@ -4387,19 +4148,15 @@ object Upsert {
   def vacuumOrphans(spark: SparkSession, path: String,
       minAgeMs: Long): Int = {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
-    val lock = acquireRewriterLock(fs, path, "vacuumOrphans")
-    try {
-      val versions = fs.listStatus(snapDir(path)).toSeq
-        .map(_.getPath.getName)
-        .flatMap(numberedName(_, "v", ".list"))
+    fs.mkdirs(SnapLog.snapDir(path))
+    SnapLog.withRewriterLock(fs, path, "vacuumOrphans") {
       // Entries, not dirs: a live merge-on-read dv swept as an
       // "orphan" would resurrect every row it deletes.
-      val referenced = versions
+      val referenced = SnapLog.list(fs, path).versions
         .flatMap(v => manifestEntries(spark, path, v)
           .flatMap(e => e.dir +: e.dvs)).toSet
       sweepUnreferencedDirs(fs, path, referenced, minAgeMs).size
-    } finally fs.delete(lock, false)
+    }
   }
 
   /** Newest modification time under `st` — RECURSIVE: Spark streams
@@ -4440,10 +4197,7 @@ object Upsert {
       .filter(st => graceMs <= 0L ||
         now - newestMtimeRecursive(fs, st) >= graceMs)
       .map(_.getPath.getName)
-    doomed.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
-      deleteDirSidecars(fs, path, d)
-    }
+    doomed.foreach(SnapLog.dropDir(fs, path, _))
     doomed
   }
 
@@ -4495,7 +4249,7 @@ object Upsert {
                 keys: Seq[String], orphanGraceMs: Long = 0L): Long =
       labeled(spark, "graft.erase") {
     val fs = fsFor(spark, path)
-    fs.mkdirs(snapDir(path))
+    fs.mkdirs(SnapLog.snapDir(path))
     require(latestVersion(spark, path) >= 1,
       s"no snapshot to erase from at $path")
     val keyRows = doomed.select(keys.map(col): _*).distinct()
@@ -4504,8 +4258,7 @@ object Upsert {
     // in the erase loop (the probe never changes across attempts).
     val (doomedPr, doomedCanons, _) = probeFacts(keyRows, keys)
     def listVersions(): Seq[(Int, Seq[SnapEntry])] =
-      fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-        .flatMap(numberedName(_, "v", ".list"))
+      SnapLog.list(fs, path).versions
         .sorted.map(v => v -> manifestEntries(spark, path, v))
     // The erase universe includes merge-on-read DV DIRS: a dv holds the
     // subject's KEY VALUES (a record that the subject existed) — "the
@@ -4525,10 +4278,7 @@ object Upsert {
     val processed =
       scala.collection.mutable.LinkedHashMap.empty[String, (Option[String], Long)]
     def cleanupRewrites(): Unit =
-      processed.values.foreach(_._1.foreach { rw =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, rw), true)
-        deleteDirSidecars(fs, path, rw)
-      })
+      processed.values.foreach(_._1.foreach(SnapLog.dropDir(fs, path, _)))
     // NOTE the claim markers from each attempt STAY on disk: they are
     // what keeps each epoch unique across every past and concurrent
     // operation (deleting one would let the next claimant reuse the
@@ -4574,13 +4324,9 @@ object Upsert {
         }
         erasePreLockHook()
         // ── Phase 2, LOCKED: validate + metadata commit ─────────────
-        val lock = try acquireRewriterLock(fs, path, "eraseKeys")
-          catch { case e: LockHeldException =>
-            cleanupRewrites(); throw e
-          }
         var done = false
         var erased = 0L
-        try {
+        SnapLog.withRewriterLock(fs, path, "eraseKeys", cleanupRewrites _) {
           val perVersionNow = listVersions()
           val liveDirs = namesOf(perVersionNow.flatMap(_._2))
           val liveSet = liveDirs.toSet
@@ -4588,10 +4334,7 @@ object Upsert {
           // it is junk (the replacement shows up as a new candidate).
           val stale = processed.keys.filterNot(liveSet).toList
           stale.foreach { d =>
-            processed(d)._1.foreach { rw =>
-              fs.delete(new org.apache.hadoop.fs.Path(path, rw), true)
-              deleteDirSidecars(fs, path, rw)
-            }
+            processed(d)._1.foreach(SnapLog.dropDir(fs, path, _))
             processed.remove(d)
           }
           val newWork = pruneDirs(spark, path,
@@ -4611,22 +4354,14 @@ object Upsert {
                   // Entry-aware: the dir AND its dv references repoint
                   // together (a dv rewritten minus the doomed keys
                   // keeps applying to every version that listed it).
-                  val newList = entries.map(e => SnapEntry(
+                  val newEntries = entries.map(e => SnapEntry(
                     renames.getOrElse(e.dir, e.dir),
-                    e.dvs.map(n => renames.getOrElse(n, n)).sorted)
-                    .line)
-                  val tmp = new org.apache.hadoop.fs.Path(snapDir(path),
-                    s"v$v.list.tmp")
-                  val out = fs.create(tmp, true)
-                  try out.write(newList.mkString("\n").getBytes("UTF-8"))
-                  finally out.close()
-                  val dst = new org.apache.hadoop.fs.Path(snapDir(path),
-                    s"v$v.list")
-                  fs.delete(dst, false)
-                  if (!fs.rename(tmp, dst)) throw new java.io.IOException(
-                    s"eraseKeys: manifest repoint failed for v$v at " +
-                      s"$path — restore from the rewritten dirs before " +
-                      "serving reads")
+                    e.dvs.map(n => renames.getOrElse(n, n)).sorted))
+                  if (!writeManifest(fs, path, v, newEntries, replace = true))
+                    throw new java.io.IOException(
+                      s"eraseKeys: manifest repoint failed for v$v at " +
+                        s"$path — restore from the rewritten dirs before " +
+                        "serving reads")
                 }
               }
               any
@@ -4638,8 +4373,7 @@ object Upsert {
               // not on every merge. Same not-best-effort contract as
               // the gen marker — a swallowed failure here lets a feed
               // consumer silently retain the erased subject's sums.
-              fs.create(new org.apache.hadoop.fs.Path(snapDir(path),
-                s"erase-$epoch.touch"), true).close()
+              SnapLog.writeText(fs, SnapLog.eraseGenMarker(path, epoch), "")
               repoint(perVersionNow)
               // Claim wait: an appender inside claim→publish read a
               // pre-repoint manifest and may publish dirs we are about
@@ -4651,18 +4385,14 @@ object Upsert {
               var waiting = true
               while (waiting && System.currentTimeMillis() < deadline) {
                 val now = System.currentTimeMillis()
-                val freshClaims = fs.listStatus(snapDir(path)).toSeq
-                  .filter { st =>
-                    val n = st.getPath.getName
-                    // Malformed claim names (operator debris) are
-                    // ignored, not thrown on: a NumberFormatException
-                    // here lands mid-commit — after the repoints,
-                    // before the original deletes — aborting the
-                    // erasure; [[numberedName]] skips them.
-                    numberedName(n, "v", ".claim").isDefined &&
-                      st.getLen == 0 &&
-                      now - st.getModificationTime < 60000
-                  }
+                // Malformed claim names (operator debris) are ignored,
+                // not thrown on: a NumberFormatException here lands
+                // mid-commit — after the repoints, before the original
+                // deletes — aborting the erasure; the listing's claim
+                // filter skips them.
+                val freshClaims = SnapLog.list(fs, path).claimStatuses
+                  .filter(st => st.getLen == 0 &&
+                    now - st.getModificationTime < 60000)
                 if (freshClaims.isEmpty) waiting = false
                 else Thread.sleep(100)
               }
@@ -4681,20 +4411,12 @@ object Upsert {
               // their D/update-pre rows hold PRE-IMAGES, possibly the
               // subject's ("the data is gone" covers them; the feed
               // falls back to the key-diff over erased content).
-              fs.listStatus(snapDir(path)).toSeq.map(_.getPath.getName)
-                .filter(_.contains(".changes"))
-                .foreach { n =>
-                  fs.delete(new org.apache.hadoop.fs.Path(snapDir(path), n),
-                    true)
-                }
+              SnapLog.list(fs, path).changeRecords.foreach(fs.delete(_, true))
               // Physical deletion LAST, after every manifest stopped
               // referencing the originals: a crash before this point
               // leaves a consistent (partially repointed) sink plus
               // extra copies to re-erase; a crash after never dangles.
-              renames.keys.foreach { d =>
-                fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
-                deleteDirSidecars(fs, path, d)
-              }
+              renames.keys.foreach(SnapLog.dropDir(fs, path, _))
             }
             // Orphan sweep: unreferenced dirs may hold subject bytes.
             // Grace-filtered against a live fleet (an in-flight rewrite
@@ -4703,7 +4425,7 @@ object Upsert {
               namesOf(listVersions().flatMap(_._2)).toSet, orphanGraceMs)
             done = true
           }
-        } finally fs.delete(lock, false)
+        }
         if (done) {
           lastProbedDirs.set(processed.keys.toSeq)
           return erased
@@ -4718,30 +4440,25 @@ object Upsert {
 
   // ── incremental aggregate maintenance ───────────────────────────
 
-  private def srcMarkerPath(aggPath: String, aggVersion: Int) =
-    new org.apache.hadoop.fs.Path(snapDir(aggPath), s"v$aggVersion.src")
-
-  /** Marker payload (shared by the `.src` and `.feed` coverage
-    * markers): covered source version + a source fingerprint at
-    * counting time. A fingerprint mismatch — or a marker with no
-    * fingerprint line — means the counted rows cannot be vouched for:
-    * the owner recomputes. */
+  /** Coverage marker payload (`v<N>.src` of [[refreshAggregate]],
+    * `v<N>.feed` of [[refreshAggregateFromFeed]]): covered source
+    * version + a source fingerprint at counting time. A fingerprint
+    * mismatch — or a marker with no fingerprint line — means the
+    * counted rows cannot be vouched for: the owner recomputes. */
   private def readCoverageMarker(spark: SparkSession, aggPath: String,
-      m: org.apache.hadoop.fs.Path): (Int, Option[String]) = {
-    val fs = fsFor(spark, aggPath)
-    if (!fs.exists(m)) return (0, None)
-    val in = fs.open(m)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
-    // Try-guarded: a crash-truncated or corrupted first line must read
-    // as UNKNOWN coverage — (0, None) — which the refresh answers with
-    // a recompute, the design's degrade. A bare .toInt here threw
-    // NumberFormatException from every later refresh on this aggregate
-    // forever (until the marker was hand-deleted).
-    (lines.headOption.flatMap(h =>
-        scala.util.Try(h.trim.toInt).toOption).getOrElse(0),
-      lines.drop(1).headOption.map(_.trim).filter(_.nonEmpty))
-  }
+      m: org.apache.hadoop.fs.Path): (Int, Option[String]) =
+    SnapLog.readLinesIfExists(fsFor(spark, aggPath), m) match {
+      case None => (0, None)
+      // Try-guarded: a crash-truncated or corrupted first line must
+      // read as UNKNOWN coverage — (0, None) — which the refresh
+      // answers with a recompute, the design's degrade. A bare .toInt
+      // here threw NumberFormatException from every later refresh on
+      // this aggregate forever (until the marker was hand-deleted).
+      case Some(lines) =>
+        (lines.headOption.flatMap(h =>
+            scala.util.Try(h.trim.toInt).toOption).getOrElse(0),
+          lines.drop(1).headOption.map(_.trim).filter(_.nonEmpty))
+    }
 
   private def writeCoverageMarker(spark: SparkSession, aggPath: String,
       m: org.apache.hadoop.fs.Path, srcVersion: Int, gen: String): Unit = {
@@ -4749,37 +4466,11 @@ object Upsert {
     // tmp + rename: the marker is read by every later refresh, so a
     // crash mid-write must leave either the old marker or none (both
     // degrade to recompute), never a truncated line. The delete→rename
-    // window reads as "no marker" — same safe degrade.
-    val tmp = new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$srcVersion\n$gen".getBytes("UTF-8")) finally out.close()
-    fs.delete(m, false)
-    if (!fs.rename(tmp, m)) {
-      // A filesystem refusing the rename (already-exists race) keeps
-      // the tmp as debris; the marker stays absent → recompute.
-      fs.delete(tmp, false)
-    }
-  }
-
-  private def readSrcMarker(spark: SparkSession, aggPath: String,
-      aggVersion: Int): (Int, Option[String]) =
-    readCoverageMarker(spark, aggPath, srcMarkerPath(aggPath, aggVersion))
-
-  private def writeSrcMarker(spark: SparkSession, aggPath: String,
-      aggVersion: Int, srcVersion: Int, gen: String): Unit =
-    writeCoverageMarker(spark, aggPath, srcMarkerPath(aggPath, aggVersion),
-      srcVersion, gen)
-
-  /** The source version the CURRENT aggregate snapshot covers: the
-    * latest published agg version's `.src` marker, or 0 when there is
-    * none — fresh sink, pre-maintenance sink, or the crash window
-    * between a publish and its marker write (all of which
-    * [[refreshAggregate]] answers with a full recompute, the
-    * correctness-preserving fallback). */
-  def aggregateCoveredVersion(spark: SparkSession, aggPath: String): Int = {
-    val v = latestVersion(spark, aggPath)
-    if (v == 0) return 0
-    readSrcMarker(spark, aggPath, v)._1
+    // window reads as "no marker" — same safe degrade. A filesystem
+    // refusing the rename (already-exists race) leaves the marker
+    // absent → recompute; the tmp is dropped.
+    if (!SnapLog.install(fs, m, s"$srcVersion\n$gen", replace = true))
+      fs.delete(SnapLog.tmpOf(m), false)
   }
 
   /** NULL group keys are REFUSED, loudly, riding the aggregate output
@@ -4823,9 +4514,9 @@ object Upsert {
     *
     * Exactly-once arithmetic across crashes: the marker is written
     * AFTER its version publishes, so the only bad window leaves a
-    * published version with no marker — [[aggregateCoveredVersion]]
-    * reads that as "coverage unknown" and the next refresh recomputes
-    * from the FULL source (idempotent in content), never double-adds a
+    * published version with no marker, which the next refresh reads as
+    * "coverage unknown" and answers with a recompute from the FULL
+    * source (idempotent in content), never double-adds a
     * delta. Deltas are additionally validated for PURITY before use:
     * a dir renamed out of the manifest (merge/erasure rewrite) or a
     * new dir whose provenance overlaps the covered coverage (reconcile
@@ -4842,7 +4533,7 @@ object Upsert {
     require(srcLatest >= 1, s"no source snapshot at $srcPath")
     val aggCur = latestVersion(spark, aggPath)
     val (covered0, gen0) = if (aggCur == 0) (0, None)
-                           else readSrcMarker(spark, aggPath, aggCur)
+      else readCoverageMarker(spark, aggPath, SnapLog.srcMarker(aggPath, aggCur))
     // Generation fingerprint read FIRST: a rewrite landing between this
     // read and the data read makes the recorded gen stale, which the
     // NEXT refresh answers with a recompute — conservative, never
@@ -4866,8 +4557,7 @@ object Upsert {
       if (covered0 == 0 || !genOk) None
       else {
         val srcFs = fsFor(spark, srcPath)
-        if (!srcFs.exists(new org.apache.hadoop.fs.Path(snapDir(srcPath),
-            s"v$covered0.list"))) None
+        if (!srcFs.exists(SnapLog.manifest(srcPath, covered0))) None
         else {
           val cDirs = manifestDirs(spark, srcPath, covered0)
           val lDirs = manifestDirs(spark, srcPath, srcLatest)
@@ -4949,7 +4639,8 @@ object Upsert {
         // covered — re-stamp the marker on the CURRENT agg version and
         // publish nothing.
         lastRefresh.set("noop")
-        writeSrcMarker(spark, aggPath, aggCur, srcLatest, genNow)
+        writeCoverageMarker(spark, aggPath,
+          SnapLog.srcMarker(aggPath, aggCur), srcLatest, genNow)
         return aggCur
       case Some(dirs) =>
         val curAgg = readSnapshot(spark, aggPath, aggCur)
@@ -4993,50 +4684,45 @@ object Upsert {
             lit("U").as("__op")): _*)
         mergeSnapshot(spark, aggPath, changes, groupCols, groupCols, "__op")
       case None =>
-        // Bootstrap OR unknown/impure coverage: full recompute. For a
-        // fresh sink this is writeSnapshot. For an existing sink the
-        // merge's U rows overwrite every surviving group AND groups no
-        // longer present in the source (an erasure or delete-merge can
-        // empty a group entirely) get explicit D ops — without them the
-        // stale row would survive forever, retaining an erased
-        // subject's sums.
+        // Bootstrap OR unknown/impure coverage: full recompute.
         lastRefresh.set("recompute")
-        val full = aggOf(readSnapshot(spark, srcPath, srcLatest))
-        if (aggCur == 0)
-          writeSnapshot(spark, aggPath, full, groupCols, groupCols)
-        else {
-          val gone = readSnapshot(spark, aggPath, aggCur)
-            .select(groupCols.map(col): _*)
-            .join(full.select(groupCols.map(col): _*), groupCols, "left_anti")
-            .withColumn("n", lit(null).cast("long"))
-            .withColumn("sum_v", lit(null).cast(dec))
-            .withColumn("min_v", lit(null).cast(dec))
-            .withColumn("max_v", lit(null).cast(dec))
-            .withColumn("kmv", lit(null).cast("array<string>"))
-            .withColumn("distinct_v", lit(null).cast("long"))
-          mergeSnapshot(spark, aggPath,
-            full.withColumn("__op", lit("U"))
-              .unionByName(gone.withColumn("__op", lit("D"))),
-            groupCols, groupCols, "__op")
-        }
+        replaceAggregate(spark, aggPath, aggCur,
+          aggOf(readSnapshot(spark, srcPath, srcLatest)), groupCols)
     }
-    writeSrcMarker(spark, aggPath, published, srcLatest, genNow)
+    writeCoverageMarker(spark, aggPath, SnapLog.srcMarker(aggPath, published),
+      srcLatest, genNow)
     published
   }
 
+  /** `groups` rows of `like`'s shape whose every other column is a
+    * typed NULL — the value side of an aggregate's `D` rows. */
+  private def nullFilled(groups: DataFrame,
+      like: org.apache.spark.sql.types.StructType,
+      groupCols: Seq[String]): DataFrame =
+    groups.select(groupCols.map(col) ++ like.fields
+      .filterNot(f => groupCols.contains(f.name))
+      .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+
+  /** Full recompute of an aggregate sink from `full`, the recomputed
+    * aggregate: a fresh sink is written; an existing one gets `full`'s
+    * groups as U rows AND explicit D rows for every group no longer in
+    * `full` (an erasure or delete-merge can empty a group entirely —
+    * without the D the stale row would survive forever, retaining an
+    * erased subject's sums). Returns the published version. */
+  private def replaceAggregate(spark: SparkSession, aggPath: String,
+      aggCur: Int, full: DataFrame, groupCols: Seq[String]): Int =
+    if (aggCur == 0) writeSnapshot(spark, aggPath, full, groupCols, groupCols)
+    else {
+      val gone = readSnapshot(spark, aggPath, aggCur)
+        .select(groupCols.map(col): _*)
+        .join(full.select(groupCols.map(col): _*), groupCols, "left_anti")
+      mergeSnapshot(spark, aggPath,
+        full.withColumn("__op", lit("U")).unionByName(
+          nullFilled(gone, full.schema, groupCols).withColumn("__op", lit("D"))),
+        groupCols, groupCols, "__op")
+    }
+
   // ── feed-driven aggregate maintenance (the CDC downstream) ──────
-
-  private def feedMarkerPath(aggPath: String, aggVersion: Int) =
-    new org.apache.hadoop.fs.Path(snapDir(aggPath), s"v$aggVersion.feed")
-
-  private def readFeedMarker(spark: SparkSession, aggPath: String,
-      aggVersion: Int): (Int, Option[String]) =
-    readCoverageMarker(spark, aggPath, feedMarkerPath(aggPath, aggVersion))
-
-  private def writeFeedMarker(spark: SparkSession, aggPath: String,
-      aggVersion: Int, srcVersion: Int, egen: String): Unit =
-    writeCoverageMarker(spark, aggPath,
-      feedMarkerPath(aggPath, aggVersion), srcVersion, egen)
 
   /** Test/ops audit of the last [[refreshAggregateFromFeed]]:
     * `"noop"`, `"recompute"`, or `"feed:<from>-><to>"` naming the span
@@ -5091,7 +4777,7 @@ object Upsert {
     require(srcLatest >= 1, s"no source snapshot at $srcPath")
     val aggCur = latestVersion(spark, aggPath)
     val (covered, egen0) = if (aggCur == 0) (0, None)
-                           else readFeedMarker(spark, aggPath, aggCur)
+      else readCoverageMarker(spark, aggPath, SnapLog.feedMarker(aggPath, aggCur))
     require(covered <= srcLatest,
       s"refreshAggregateFromFeed: marker covers v$covered but the " +
         s"source's latest is v$srcLatest — wrong source or rolled-back " +
@@ -5111,34 +4797,16 @@ object Upsert {
       lastFeedRefresh.set("noop"); return aggCur
     }
     val srcFs = fsFor(spark, srcPath)
-    val coveredLive = covered >= 1 && srcFs.exists(
-      new org.apache.hadoop.fs.Path(snapDir(srcPath), s"v$covered.list"))
+    val coveredLive = covered >= 1 &&
+      srcFs.exists(SnapLog.manifest(srcPath, covered))
     val published =
       if (covered == 0 || !genOk || !coveredLive) {
         // Bootstrap, post-erasure, expired-from-version, or the crash
         // window (published agg version with no marker): full
         // recompute — idempotent in content.
         lastFeedRefresh.set("recompute")
-        val full = aggOf(readSnapshot(spark, srcPath, srcLatest))
-        val vType = full.schema("min_v").dataType
-        if (aggCur == 0)
-          writeSnapshot(spark, aggPath, full, groupCols, groupCols)
-        else {
-          val gone = readSnapshot(spark, aggPath, aggCur)
-            .select(groupCols.map(col): _*)
-            .join(full.select(groupCols.map(col): _*), groupCols,
-              "left_anti")
-            .withColumn("n", lit(null).cast("long"))
-            .withColumn("n_val", lit(null).cast("long"))
-            .withColumn("sum_v", lit(null).cast(dec))
-            .withColumn("min_v", lit(null).cast(vType))
-            .withColumn("max_v", lit(null).cast(vType))
-          mergeSnapshot(spark, aggPath,
-            full.withColumn("__op", lit("U"))
-              .unionByName(gone.withColumn("__op", lit("D")),
-                allowMissingColumns = true),
-            groupCols, groupCols, "__op")
-        }
+        replaceAggregate(spark, aggPath, aggCur,
+          aggOf(readSnapshot(spark, srcPath, srcLatest)), groupCols)
       } else {
         val span = snapshotChangesWithPreImages(spark, srcPath,
           covered, srcLatest, srcKeys, opCol = "__op")
@@ -5169,7 +4837,8 @@ object Upsert {
           // A span with no net change (idempotent replays, pure
           // repackagings): advance the marker, publish nothing.
           lastFeedRefresh.set("noop")
-          writeFeedMarker(spark, aggPath, aggCur, srcLatest, egenNow)
+          writeCoverageMarker(spark, aggPath,
+            SnapLog.feedMarker(aggPath, aggCur), srcLatest, egenNow)
           return aggCur
         }
         lastFeedRefresh.set(s"feed:$covered->$srcLatest")
@@ -5213,14 +4882,9 @@ object Upsert {
           else {
             val recomputed = aggOf(readSnapshotForKeys(spark, srcPath,
               srcLatest, touchedKeys, groupCols))
-            val emptied = touchedKeys
+            val emptied = nullFilled(touchedKeys
               .join(recomputed.select(groupCols.map(col): _*),
-                groupCols, "left_anti")
-              .withColumn("n", lit(null).cast("long"))
-              .withColumn("n_val", lit(null).cast("long"))
-              .withColumn("sum_v", lit(null).cast(dec))
-              .withColumn("min_v", lit(null).cast(vType))
-              .withColumn("max_v", lit(null).cast(vType))
+                groupCols, "left_anti"), recomputed.schema, groupCols)
             untouched
               .unionByName(recomputed.withColumn("__op", lit("U")))
               .unionByName(emptied.withColumn("__op", lit("D")))
@@ -5228,7 +4892,8 @@ object Upsert {
         mergeSnapshot(spark, aggPath, changes, groupCols, groupCols,
           "__op")
       }
-    writeFeedMarker(spark, aggPath, published, srcLatest, egenNow)
+    writeCoverageMarker(spark, aggPath,
+      SnapLog.feedMarker(aggPath, published), srcLatest, egenNow)
     published
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 
 import graft.ops.Upsert
+import graft.table.SnapLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
@@ -82,25 +83,13 @@ class GraftCatalog extends TableCatalog {
       new org.apache.hadoop.fs.Path(_, _)).toString
   }
 
-  private def snapDirOf(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_snapshots")
-
-  private def createdSchemaPath(path: String) =
-    new org.apache.hadoop.fs.Path(snapDirOf(path), "table.schema")
-
   /** The declared schema persisted by CREATE TABLE — what a read or a
     * positional INSERT resolves against before the first publish. */
   private def createdSchema(path: String): Option[StructType] = {
-    val p = createdSchemaPath(path)
-    val f = fs(p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+    val p = SnapLog.tableSchema(path)
+    SnapLog.readTextIfExists(fs(p), p).flatMap(json =>
       scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[StructType]).toOption
-    }
+        .asInstanceOf[StructType]).toOption)
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -112,16 +101,15 @@ class GraftCatalog extends TableCatalog {
     if (!f.exists(nsPath)) throw new NoSuchNamespaceException(
       catalogName +: namespace.toSeq)
     f.listStatus(nsPath).toSeq
-      .filter(st => st.isDirectory &&
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_snapshots")))
+      .filter(st => st.isDirectory && SnapLog.isSink(f, st.getPath.toString))
       .map(st => Identifier.of(namespace, st.getPath.getName))
       .toArray
   }
 
   override def loadTable(ident: Identifier): Table = {
     val path = tablePath(ident)
-    val f = fs(snapDirOf(path))
-    if (!f.exists(snapDirOf(path))) throw new NoSuchTableException(ident)
+    val f = fs(SnapLog.snapDir(path))
+    if (!SnapLog.isSink(f, path)) throw new NoSuchTableException(ident)
     val v = Upsert.latestVersion(spark, path)
     val schema =
       if (v >= 1) Upsert.snapshotLogicalSchema(spark, path, v)
@@ -135,8 +123,8 @@ class GraftCatalog extends TableCatalog {
   /** `VERSION AS OF <n>` — the catalog face of `versionAsOf`. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val path = tablePath(ident)
-    val f = fs(snapDirOf(path))
-    if (!f.exists(snapDirOf(path))) throw new NoSuchTableException(ident)
+    val f = fs(SnapLog.snapDir(path))
+    if (!SnapLog.isSink(f, path)) throw new NoSuchTableException(ident)
     val v = scala.util.Try(version.trim.toInt).getOrElse(
       throw new IllegalArgumentException(
         s"graft: VERSION AS OF wants an integer snapshot version, " +
@@ -147,8 +135,8 @@ class GraftCatalog extends TableCatalog {
   /** `TIMESTAMP AS OF <ts>` — Spark hands epoch MICROseconds. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val path = tablePath(ident)
-    val f = fs(snapDirOf(path))
-    if (!f.exists(snapDirOf(path))) throw new NoSuchTableException(ident)
+    val f = fs(SnapLog.snapDir(path))
+    if (!SnapLog.isSink(f, path)) throw new NoSuchTableException(ident)
     val v = Upsert.versionAsOf(spark, path, timestamp / 1000L)
     new GraftTable(path, v, Upsert.snapshotLogicalSchema(spark, path, v))
   }
@@ -160,10 +148,9 @@ class GraftCatalog extends TableCatalog {
       "graft: PARTITIONED BY is not supported — the sink partitions by " +
         "its own dir protocol (key-range batches + compaction)")
     val path = tablePath(ident)
-    val sd = snapDirOf(path)
-    val f = fs(sd)
-    if (f.exists(sd)) throw new TableAlreadyExistsException(ident)
-    f.mkdirs(sd)
+    val f = fs(SnapLog.snapDir(path))
+    if (SnapLog.isSink(f, path)) throw new TableAlreadyExistsException(ident)
+    f.mkdirs(SnapLog.snapDir(path))
     // Declared keys persist NOW so the first INSERT bootstraps keyed:
     // SQL DDL carries them as OPTIONS ('keys'='…') → "option.keys";
     // writeTo/saveAsTable options arrive under the same prefix.
@@ -181,10 +168,8 @@ class GraftCatalog extends TableCatalog {
             s"declared schema (${schema.fieldNames.mkString(", ")})")
         Upsert.declareKeys(spark, path, ks)
       }
-    if (schema.nonEmpty) {
-      val out = f.create(createdSchemaPath(path), true)
-      try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    }
+    if (schema.nonEmpty)
+      SnapLog.writeText(f, SnapLog.tableSchema(path), schema.json)
     new GraftTable(path, 0, schema)
   }
 
@@ -198,7 +183,7 @@ class GraftCatalog extends TableCatalog {
   override def dropTable(ident: Identifier): Boolean = {
     val path = new org.apache.hadoop.fs.Path(tablePath(ident))
     val f = fs(path)
-    if (!f.exists(snapDirOf(path.toString))) false
+    if (!SnapLog.isSink(f, path.toString)) false
     else f.delete(path, true)
   }
 

@@ -47,9 +47,9 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * checkpoint resumes at the committed version: unchanged keys are
   * never re-delivered.
   *
-  * [[graft.streaming.EventStream.followChanges]] stays the
-  * NON-checkpoint alternative (a driver poll loop around the cursor
-  * protocol) for consumers without a streaming runtime.
+  * [[Upsert.consumeChanges]] stays the NON-checkpoint alternative (a
+  * durable-cursor poll, one span per call) for consumers without a
+  * streaming runtime.
   *
   * The reference has no storage or streaming at all (ref
   * `etl.py:1-487`); this is the extension surface's Spark face. */

@@ -1002,31 +1002,6 @@ object EventStream {
       }
   }
 
-  /** SUBSCRIBE a downstream job to a snapshot sink's CHANGE FEED — the
-    * consume-side driver loop (Structured Streaming has no source for
-    * an arbitrary snapshot sink; the durable cursor IS the offset log,
-    * so the canonical consumer is a foreachBatch-shaped poll:
-    * [[graft.ops.Upsert.consumeChanges]] per tick, each span delivered
-    * exactly once, crash mid-apply re-delivering the SAME span). `f`
-    * sees each non-empty span's I/U/D frame; polls with nothing new
-    * skip `f`. A rewriter holding the sink lock is waited out like the
-    * produce side ([[retryWhileLocked]]). Returns the version the
-    * cursor covers after the last poll. */
-  def followChanges(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, cursorPath: String, keys: Seq[String],
-      opCol: String = "op", polls: Int = 1, pollMs: Long = 0L,
-      lockWaitMs: Long = Long.MaxValue)(
-      f: DataFrame => Unit): Int = {
-    var covered = 0
-    for (i <- 1 to polls) {
-      covered = retryWhileLocked(lockWaitMs)(
-        graft.ops.Upsert.consumeChanges(spark, srcPath, cursorPath,
-          keys, opCol)(f))
-      if (pollMs > 0 && i < polls) Thread.sleep(pollMs)
-    }
-    covered
-  }
-
   /** The canonical feed SUBSCRIBER: keep a grouped aggregate snapshot
     * in lockstep with a source snapshot sink by consuming its change
     * feed ([[graft.ops.Upsert.refreshAggregateFromFeed]]) — merges,

@@ -1351,4 +1351,41 @@ class StreamingSpec extends SparkSpec {
       .filter(col("sum_v") === 300.0).isEmpty,
       "the erased subject's contribution is gone")
   }
+
+  test("expiring a feed aggregate's old versions deletes every file they own, coverage markers included") {
+    import graft.ops.Upsert
+    val src = java.nio.file.Files.createTempDirectory("feedexpsrc").toString
+    val agg = java.nio.file.Files.createTempDirectory("feedexpagg").toString
+    def poll() = EventStream.changeFeedAggregatePoll(spark, src,
+      Seq("id"), agg, Seq("g"), "v")
+    Upsert.writeSnapshot(spark, src,
+      (1L to 6L).map(i => (i, s"g${i % 2}", i.toDouble)).toDF("id", "g", "v"),
+      Seq("id"), Seq("id"))
+    poll()
+    for (r <- 1 to 3) {
+      Upsert.mergeSnapshot(spark, src,
+        Seq(("U", r.toLong, s"g${r % 2}", 100.0 * r),
+          ("I", 100L + r, "g9", r.toDouble)).toDF("op", "id", "g", "v"),
+        Seq("id"), Seq("id"), "op")
+      poll()
+      assert(Upsert.lastFeedRefresh.get().startsWith("feed:"),
+        s"merge $r must apply from the feed: ${Upsert.lastFeedRefresh.get()}")
+    }
+    val latest = Upsert.latestVersion(spark, agg)
+    assert(latest >= 4, s"one aggregate version per poll, got v$latest")
+    val log = new java.io.File(agg, "_snapshots")
+    def owned(v: Int) = log.list().toSeq.filter(n =>
+      Seq(".list", ".feed", ".src", ".meta", ".changes")
+        .exists(s => n.startsWith(s"v$v$s")))
+    assert(owned(1).contains("v1.feed") && owned(2).contains("v2.changes"),
+      s"the expired versions carry markers and records: ${log.list().toSeq}")
+    Upsert.expireSnapshots(spark, agg, latest)
+    val left = (1 until latest).flatMap(owned)
+    assert(left.isEmpty, s"expired versions' files remain: $left")
+    assert(owned(latest).contains(s"v$latest.feed"),
+      "the kept version keeps its coverage marker")
+    poll()
+    assert(Upsert.lastFeedRefresh.get() == "noop",
+      "the kept marker still covers the source")
+  }
 }
