@@ -561,17 +561,14 @@ object Upsert {
           // an EMPTY dir still writes no bloom (its all-"none" stats
           // already prune every probe).
           case Some(bytes) =>
-            SnapLog.writeBytes(fs, SnapLog.bloom(path, dirName), bytes)
+            SnapLog.write(fs, SnapLog.bloom(path, dirName))(_.write(bytes))
           case None =>
             val df = readDirs(spark, Seq(s"$path/$dirName"))
             val nn = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
             val bf = labeledBloom(spark, dirName)(
               nn.stat.bloomFilter(keyCanon(df, keys),
                 math.max(n, 64L), 0.01))
-            val bytes = new java.io.ByteArrayOutputStream()
-            bf.writeTo(bytes)
-            SnapLog.writeBytes(fs, SnapLog.bloom(path, dirName),
-              bytes.toByteArray)
+            SnapLog.write(fs, SnapLog.bloom(path, dirName))(bf.writeTo)
         }
       } catch { case scala.util.control.NonFatal(e) =>
         sidecarSkipped("bloom", dirName, e) }
@@ -845,9 +842,8 @@ object Upsert {
     * contract. */
   private def readKeyBloom(spark: SparkSession, path: String,
       dirName: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(SnapLog.readBytes(fsFor(spark, path),
-        SnapLog.bloom(path, dirName)))))
+    try Some(SnapLog.read(fsFor(spark, path), SnapLog.bloom(path, dirName))(
+      org.apache.spark.util.sketch.BloomFilter.readFrom))
     catch { case scala.util.control.NonFatal(_) => None }
   }
 

@@ -113,13 +113,14 @@ private[graft] object SnapLog {
 
   // ── metadata files ──────────────────────────────────────────────
 
-  def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+  /** Open `p`, hand the stream to `f`, always close it. */
+  def read[T](fs: FileSystem, p: Path)(f: java.io.InputStream => T): T = {
     val in = fs.open(p)
-    try in.readAllBytes() finally in.close()
+    try f(in) finally in.close()
   }
 
   def readText(fs: FileSystem, p: Path): String =
-    new String(readBytes(fs, p), UTF_8)
+    read(fs, p)(in => new String(in.readAllBytes(), UTF_8))
 
   private def lines(text: String): List[String] = text.split("\n").toList
 
@@ -132,13 +133,15 @@ private[graft] object SnapLog {
   def readLinesIfExists(fs: FileSystem, p: Path): Option[List[String]] =
     readTextIfExists(fs, p).map(lines)
 
-  def writeBytes(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
+  /** Create (or overwrite) `p`, hand the stream to `f`, always close
+    * it. */
+  def write(fs: FileSystem, p: Path)(f: java.io.OutputStream => Unit): Unit = {
     val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
+    try f(out) finally out.close()
   }
 
   def writeText(fs: FileSystem, p: Path, text: String): Unit =
-    writeBytes(fs, p, text.getBytes(UTF_8))
+    write(fs, p)(_.write(text.getBytes(UTF_8)))
 
   def tmpOf(p: Path): Path = new Path(p.getParent, p.getName + ".tmp")
 

@@ -3,28 +3,26 @@
 
 Usage, from the root of a checkout, after a test run:
 
-    python3 tools/suite_times.py [REPORT_DIR] [--budget SECONDS]
+    python3 tools/suite_times.py [REPORT_DIR]
 
 REPORT_DIR defaults to target/test-reports; every TEST-*.xml in it is
 one suite. Suites print slowest first, then the total and its share of
-the budget (default 2670 s, the Tier-1 test step's limit). sbt rewrites
+the Tier-1 test step's 2670 s budget. sbt rewrites
 a suite's report only when the suite runs, so delete the directory
 before the run you want to measure, or check the `started` column.
 """
-import argparse
 import sys
 import xml.etree.ElementTree as ET
 from pathlib import Path
 
+BUDGET_S = 2670  # the Tier-1 test step's wall-time limit
+
 
 def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("report_dir", nargs="?", default="target/test-reports")
-    ap.add_argument("--budget", type=float, default=2670.0)
-    args = ap.parse_args()
-    files = sorted(Path(args.report_dir).glob("TEST-*.xml"))
+    report_dir = sys.argv[1] if len(sys.argv) > 1 else "target/test-reports"
+    files = sorted(Path(report_dir).glob("TEST-*.xml"))
     if not files:
-        sys.exit(f"no TEST-*.xml under {args.report_dir}")
+        sys.exit(f"no TEST-*.xml under {report_dir}")
     rows = []
     for f in files:
         s = ET.parse(f).getroot()
@@ -37,8 +35,8 @@ def main():
           f"{'failed':>6}  started")
     for t, name, tests, bad, ts in rows:
         print(f"{name:<36} {t:8.1f} {t / total:6.1%} {tests:5d} {bad:6d}  {ts}")
-    print(f"{'total':<36} {total:8.1f} {total / args.budget:6.1%} of the "
-          f"{args.budget:.0f} s budget")
+    print(f"{'total':<36} {total:8.1f} {total / BUDGET_S:6.1%} of the "
+          f"{BUDGET_S} s budget")
 
 
 if __name__ == "__main__":
