@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.table.SnapLog
+import graft.table.{KeyDomain, SnapLog}
+import graft.table.KeyDomain.Ranges
 
 /** Thrown when a rewriter op (compaction, merge, erasure, vacuum) finds
   * the exclusive `_snapshots/compact.lock` already held. A TYPED class
@@ -369,83 +370,6 @@ object Upsert {
   // gate. Ranges are per-column: disjointness on ANY key column rules
   // out a composite-key match (all columns must match for equality).
 
-  /** Canonical comparable domain per supported key type. Unsupported
-    * types (float/decimal/binary/…) return None and that column simply
-    * never prunes. */
-  private[graft] def statTag(dt: org.apache.spark.sql.types.DataType): Option[String] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => Some("long")
-      case StringType => Some("string")
-      case DateType => Some("date")
-      case TimestampType => Some("ts")
-      case _ => None
-    }
-  }
-
-  /** Accepts both EXTERNAL values (Timestamp/Date/Instant/LocalDate —
-    * what Spark aggregates collect) and the CANONICAL Long the decode
-    * side produces: writeKeyStatsFrom re-encodes decoded range values when
-    * rendering sidecar lines, and before the Number branches below,
-    * that re-encode MatchError'd for date/ts tags — silently swallowed
-    * by the sidecar writer's best-effort catch, so every timestamp- or
-    * date-KEYED sink shipped with NO `.stats`/`.bloom2` sidecars at
-    * all (sound — "always probe" — but unpruned everywhere). */
-  private def encodeStatValue(tag: String, v: Any): String = tag match {
-    case "long" => v.asInstanceOf[Number].longValue.toString
-    case "string" => java.net.URLEncoder.encode(v.asInstanceOf[String], "UTF-8")
-    case "date" => v match {
-      case n: Number => n.longValue.toString // canonical epoch day
-      case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-      case d: java.time.LocalDate => d.toEpochDay.toString
-    }
-    case "ts" => v match {
-      case n: Number => n.longValue.toString // canonical epoch micros
-      // floorDiv, not /: getTime of a pre-1970 timestamp with
-      // fractional seconds is a negative non-multiple of 1000, and
-      // truncation would shift its canon a full second HIGH (-0.5 s →
-      // +0.5 s) — a non-monotone canon that inverts recorded min/max
-      // and bloom-mismatches the write side's exact unix_micros,
-      // silently pruning dirs that hold the probed key.
-      case t: java.sql.Timestamp =>
-        (Math.floorDiv(t.getTime, 1000L) * 1000000L +
-          t.getNanos / 1000L).toString
-      case t: java.time.Instant =>
-        (t.getEpochSecond * 1000000L + t.getNano / 1000L).toString
-    }
-  }
-
-  /** Decoded stat values compare as Long (long/date/ts) or String. */
-  private def decodeStatValue(tag: String, s: String): Any = tag match {
-    case "string" => java.net.URLDecoder.decode(s, "UTF-8")
-    case _ => s.toLong
-  }
-
-  /** Strings compare in UNSIGNED UTF-8 byte order — the order Spark's
-    * min/max computed the sidecar values under. Java's String.compareTo
-    * is UTF-16 code-unit order, which disagrees above the BMP (a
-    * surrogate pair sorts below U+E000 in UTF-16 but above it in
-    * UTF-8); pruning under the wrong order silently DROPS matching
-    * dirs — missing point-read rows, un-rewritten merge dirs
-    * (resurrected deletes), incomplete erasure. */
-  private def utf8Lt(x: String, y: String): Boolean = {
-    val a = x.getBytes("UTF-8"); val b = y.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    a.length < b.length
-  }
-
-  private[graft] def statLt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long) => x < y
-    case (x: String, y: String) => utf8Lt(x, y)
-    case _ => throw new IllegalStateException(s"stat type mismatch: $a / $b")
-  }
-
   /** Per-column (tag, min, max) of `df` over `statCols` — None per
     * column with no non-null values — PLUS the count of rows with
     * every `nnCols` column non-null (the bloom sidecar's sizing input,
@@ -455,15 +379,10 @@ object Upsert {
     * return — no stats means no bloom either, by contract). `statCols`
     * = keys for probes; the sidecar writer extends it with declared
     * skip columns at zero extra passes. */
-  private[graft] def keyRangesWithCount(df: DataFrame, keys: Seq[String])
-      : (Seq[(String, String, Option[(Any, Any)])], Long, Long) =
-    keyRangesWithCount(df, keys, keys)
-
   private[graft] def keyRangesWithCount(df: DataFrame,
-      statCols: Seq[String], nnCols: Seq[String])
-      : (Seq[(String, String, Option[(Any, Any)])], Long, Long) = {
+      statCols: Seq[String], nnCols: Seq[String]): (Ranges, Long, Long) = {
     val tagged = statCols.flatMap(k =>
-      statTag(df.schema(k).dataType).map(k -> _))
+      KeyDomain.tagOf(df.schema(k).dataType).map(k -> _))
     if (tagged.isEmpty) return (Nil, 0L, -1L)
     val nnPred = nnCols.map(col(_).isNotNull)
       .reduceOption(_ && _).getOrElse(lit(true))
@@ -473,42 +392,9 @@ object Upsert {
       count(lit(1)).as("__rows")
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     val ranges = tagged.zipWithIndex.map { case ((k, tag), i) =>
-      val lo = row.get(2 * i); val hi = row.get(2 * i + 1)
-      (k, tag, if (lo == null || hi == null) None
-               else Some((decodeStatValue(tag, encodeStatValue(tag, lo)),
-                          decodeStatValue(tag, encodeStatValue(tag, hi)))))
+      (k, tag, KeyDomain.rangeOf(row.get(2 * i), row.get(2 * i + 1)))
     }
     (ranges, row.getLong(2 * tagged.size), row.getLong(2 * tagged.size + 1))
-  }
-
-  /** Per-key-column (tag, min, max) of `df`, None per column with no
-    * non-null values. Costs one narrow aggregate over the key columns. */
-  private[graft] def keyRanges(df: DataFrame, keys: Seq[String])
-      : Seq[(String, String, Option[(Any, Any)])] =
-    keyRangesWithCount(df, keys)._1
-
-  /** Canonical composite-key string for the bloom sidecars: each key
-    * column canonicalized to a string, unit-separator joined -- in
-    * NAME-SORTED column order, so a point read passing the same key set
-    * in a different order probes the same canon the writer hashed (an
-    * order-sensitive canon would bloom-prune true matches silently).
-    * Timestamp and date keys canonicalize TIMEZONE-INDEPENDENTLY
-    * (epoch micros / epoch day, mirroring [[encodeStatValue]]) — a
-    * plain cast renders under spark.sql.session.timeZone, so a sidecar
-    * written under one zone would false-negative every probe made
-    * under another. Rows with ANY null key component are excluded on
-    * the dir side (equi-joins are null-rejecting — they can never
-    * match a probe) and a null-keyed probe row canonicalizes to a
-    * string that never hits a fully-keyed dir row. */
-  private def keyCanon(df: DataFrame, keys: Seq[String])
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types.{DateType, TimestampType}
-    def canon(k: String) = df.schema(k).dataType match {
-      case TimestampType => unix_micros(col(k)).cast("string")
-      case DateType => unix_date(col(k)).cast("string")
-      case _ => col(k).cast("string")
-    }
-    concat_ws("\u0001", keys.sorted.map(canon): _*)
   }
 
   /** Keys-per-dir cap for the bloom sidecar (~1.2 bytes/key at 1%
@@ -523,30 +409,20 @@ object Upsert {
   private[graft] val BloomProbeMax = 1024
 
   /** Record the `.stats` sidecar of a just-written data dir from its
-    * range/count facts: one line per supported stat column, `col TAB
-    * tag TAB min TAB max` (URL-coded strings), or `col TAB tag TAB
-    * none` when the dir holds no non-null values for it. Small dirs
+    * range/count facts ([[KeyDomain.statsLines]]). Small dirs
     * (≤ [[BloomMaxKeys]] non-null keys) also get a `.bloom2`
-    * exact-membership sketch over [[keyCanon]] — range stats cannot
+    * exact-membership sketch over [[KeyDomain.keyCanon]] — range stats cannot
     * prune hash-distributed keys, the bloom can. Best-effort: a sidecar
     * failure never fails the data write (readers just probe); it logs
     * a WARN naming the dir. */
   private def writeKeyStatsFrom(spark: SparkSession, path: String,
-      dirName: String, keys: Seq[String], ranges: ProbeRanges,
+      dirName: String, keys: Seq[String], ranges: Ranges,
       n: Long, totalRows: Long, preBloom: Option[Array[Byte]]): Unit =
     try {
       val fs = fsFor(spark, path)
-      val lines = ranges.map {
-        case (k, tag, Some((lo, hi))) =>
-          s"$k\t$tag\t${encodeStatValue(tag, lo)}\t${encodeStatValue(tag, hi)}"
-        case (k, tag, None) => s"$k\t$tag\tnone"
-      // Total-row line (same aggregate, zero extra cost): lets
-      // [[countSnapshot]] answer COUNT(*) from driver metadata. The
-      // reserved tag "rows" disambiguates it from the RANGE line of a
-      // key column that happens to be named __rows (whose tag is
-      // always a data-type tag) — both readers match the full
-      // `__rows\trows\t` prefix.
-      } ++ (if (totalRows >= 0) Seq(s"__rows\trows\t$totalRows") else Nil)
+      // The total line (same aggregate, zero extra cost) lets
+      // [[countSnapshot]] answer COUNT(*) from driver metadata.
+      val lines = KeyDomain.statsLines(ranges, totalRows)
       if (lines.isEmpty) return
       SnapLog.writeText(fs, SnapLog.stats(path, dirName), lines.mkString("\n"))
       try {
@@ -566,7 +442,7 @@ object Upsert {
             val df = readDirs(spark, Seq(s"$path/$dirName"))
             val nn = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
             val bf = labeledBloom(spark, dirName)(
-              nn.stat.bloomFilter(keyCanon(df, keys),
+              nn.stat.bloomFilter(KeyDomain.keyCanon(df.schema, keys),
                 math.max(n, 64L), 0.01))
             SnapLog.write(fs, SnapLog.bloom(path, dirName))(bf.writeTo)
         }
@@ -605,7 +481,7 @@ object Upsert {
       else present ++ recordedSkipCols(spark, path)
         .filter(df.columns.contains).filterNot(present.contains)
     val tagged = statCols.flatMap(k =>
-      statTag(df.schema(k).dataType).map(k -> _))
+      KeyDomain.tagOf(df.schema(k).dataType).map(k -> _))
     // OBSERVED bloom (guide §2.4 — remove whole passes): when the
     // caller knows an UPPER BOUND on the dir's key count (a COW
     // rewrite is bounded by its parent's sidecar rows, a merge landing
@@ -633,7 +509,7 @@ object Upsert {
           .optimalNumOfBits(bound, 0.01)
         import org.apache.spark.sql.graftbridge.ColumnBridge
         df.observe(o, ColumnBridge.internalFn("bloom_filter_agg",
-          when(nn, keyCanon(df, keys)), lit(bound), lit(bits))
+          when(nn, KeyDomain.keyCanon(df.schema, keys)), lit(bound), lit(bits))
           .as("bloom"))
       case None => df
     }
@@ -694,14 +570,12 @@ object Upsert {
     * true key count (never undersized), and a 0 bound is exact (some
     * key column is all-NULL → no fully-keyed row exists). String
     * footer stats compare in unsigned byte order — the same order
-    * [[utf8Lt]] and the sidecar contract use — and parquet-mr OMITS
+    * [[KeyDomain.lt]] and the sidecar contract use — and parquet-mr OMITS
     * binary stats it would have to truncate, which lands in the
     * fallback, never a wrong bound. */
   private def footerStats(spark: SparkSession, path: String,
       dirName: String, tagged: Seq[(String, String)], nnCols: Seq[String])
-      : Option[(ProbeRanges, Long, Long)] = try {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+      : Option[(Ranges, Long, Long)] = try {
     val fs = fsFor(spark, path)
     val files = fs.listStatus(new org.apache.hadoop.fs.Path(path, dirName))
       .filter { st =>
@@ -719,37 +593,6 @@ object Upsert {
     // None = this file's stats are unusable → whole-dir fallback.
     case class FileFacts(rows: Long, mins: Map[String, Any],
         maxs: Map[String, Any], nonNull: Map[String, Long])
-    def canonOf(tag: String, pt: org.apache.parquet.schema.PrimitiveType,
-        v: Any): Option[Any] = {
-      val logical = pt.getLogicalTypeAnnotation
-      (tag, pt.getPrimitiveTypeName) match {
-        case ("long", INT32) | ("long", INT64)
-            if logical == null ||
-              logical.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
-          Some(v.asInstanceOf[Number].longValue)
-        case ("string", BINARY)
-            if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-          Some(new String(
-            v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-            java.nio.charset.StandardCharsets.UTF_8))
-        case ("date", INT32)
-            if logical.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
-          Some(v.asInstanceOf[Number].longValue)
-        case ("ts", INT64) => logical match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MICROS =>
-                Some(v.asInstanceOf[Number].longValue)
-              case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                Some(v.asInstanceOf[Number].longValue * 1000L)
-              case LogicalTypeAnnotation.TimeUnit.NANOS =>
-                Some(Math.floorDiv(v.asInstanceOf[Number].longValue, 1000L))
-            }
-          case _ => None
-        }
-        case _ => None // INT96 and anything unexpected: fallback
-      }
-    }
     def factsOf(st: org.apache.hadoop.fs.FileStatus): Option[FileFacts] = {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -780,14 +623,12 @@ object Upsert {
             tagged.find(_._1 == c).foreach { case (_, tag) =>
               if (nn > 0) {
                 if (!stats.hasNonNullValue) return None
-                val lo = canonOf(tag, chunk.getPrimitiveType,
+                val lo = KeyDomain.footerCanon(tag, chunk.getPrimitiveType,
                   stats.genericGetMin).getOrElse(return None)
-                val hi = canonOf(tag, chunk.getPrimitiveType,
+                val hi = KeyDomain.footerCanon(tag, chunk.getPrimitiveType,
                   stats.genericGetMax).getOrElse(return None)
-                fMins(c) = fMins.get(c).filter(m => statLt(m, lo))
-                  .getOrElse(lo)
-                fMaxs(c) = fMaxs.get(c).filter(m => statLt(hi, m))
-                  .getOrElse(hi)
+                fMins(c) = fMins.get(c).fold(lo)(KeyDomain.min(_, lo))
+                fMaxs(c) = fMaxs.get(c).fold(hi)(KeyDomain.max(_, hi))
               }
             }
           }
@@ -819,68 +660,57 @@ object Upsert {
       case Some(f) =>
         totalRows += f.rows
         for ((c, v) <- f.nonNull) nonNull(c) = nonNull(c) + v
-        for ((c, lo) <- f.mins)
-          mins(c) = mins.get(c).filter(m => statLt(m, lo)).getOrElse(lo)
-        for ((c, hi) <- f.maxs)
-          maxs(c) = maxs.get(c).filter(m => statLt(hi, m)).getOrElse(hi)
+        for ((c, lo) <- f.mins) mins(c) = mins.get(c).fold(lo)(KeyDomain.min(_, lo))
+        for ((c, hi) <- f.maxs) maxs(c) = maxs.get(c).fold(hi)(KeyDomain.max(_, hi))
     }
-    val ranges: ProbeRanges = tagged.map { case (k, tag) =>
+    val ranges: Ranges = tagged.map { case (k, tag) =>
       (k, tag, for (lo <- mins.get(k); hi <- maxs.get(k)) yield (lo, hi))
     }
     val nnUpper =
       if (nnCols.isEmpty) 0L
       else nnCols.map(nonNull(_)).min
     Some((ranges, nnUpper, totalRows))
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case scala.util.control.NonFatal(e) =>
+    sidecarReadFailed("footer stats", dirName, e); None }
 
   /** Opens the sidecar DIRECTLY — no exists() precheck. The only
     * caller ([[pruneDirs]]) has already established existence for its
     * `withBloom` set, so a second exists() here doubled the metadata
     * RPCs per bloom-bearing dir — the cost class the hoisted check was
-    * added to avoid on object stores. A missing/corrupt file lands in
-    * the catch and degrades to "always probe", per the sidecar
-    * contract. */
+    * added to avoid on object stores. A missing/corrupt file logs a
+    * WARN and degrades to "always probe", per the sidecar contract. */
   private def readKeyBloom(spark: SparkSession, path: String,
       dirName: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
     try Some(SnapLog.read(fsFor(spark, path), SnapLog.bloom(path, dirName))(
       org.apache.spark.util.sketch.BloomFilter.readFrom))
-    catch { case scala.util.control.NonFatal(_) => None }
+    catch { case scala.util.control.NonFatal(e) =>
+      sidecarReadFailed("bloom", dirName, e); None }
   }
 
-  /** Parsed `.stats` sidecar: col → (tag, None = no non-null values |
-    * Some(min, max)). None overall when the sidecar is absent. */
+  private def sidecarReadFailed(what: String, dirName: String,
+      e: Throwable): Unit =
+    log.warn("graft: {} sidecar of {} not read, falling back: {}", what, dirName, e)
+
+  /** A dir's parsed `.stats` sidecar ([[KeyDomain.parseStats]]): col →
+    * (tag, None = no non-null values | Some(min, max)), and the row
+    * total. None when the sidecar is absent. */
+  private def readStats(spark: SparkSession, path: String, dirName: String)
+      : Option[(Map[String, (String, Option[KeyDomain.Range])], Option[Long])] =
+    SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.stats(path, dirName))
+      .map(KeyDomain.parseStats)
+
   private def readKeyStats(spark: SparkSession, path: String,
-      dirName: String): Option[Map[String, (String, Option[(Any, Any)])]] = {
-    val lines = SnapLog.readLinesIfExists(fsFor(spark, path),
-      SnapLog.stats(path, dirName))
-    // Drop only the reserved total line (tag "rows" — no data column
-    // can produce it); a key column actually NAMED __rows keeps its
-    // range line.
-    lines.map(_.filter(l => l.nonEmpty &&
-        !l.startsWith("__rows\trows\t")).map { l =>
-      val parts = l.split("\t", -1)
-      if (parts(2) == "none") parts(0) -> (parts(1), None)
-      else parts(0) -> (parts(1), Some((decodeStatValue(parts(1), parts(2)),
-        decodeStatValue(parts(1), parts(3)))))
-    }.toMap)
-  }
+      dirName: String): Option[Map[String, (String, Option[KeyDomain.Range])]] =
+    readStats(spark, path, dirName).map(_._1)
 
-  /** The `__rows` total of a dir's `.stats` sidecar — None when the
-    * sidecar (or, for pre-r17 sidecars, the line) is absent. */
+  /** The total of a dir's `.stats` sidecar — None when the sidecar (or,
+    * for pre-r17 sidecars, the line) is absent or unreadable: the
+    * caller scans the dir instead. */
   private def readDirRowCount(spark: SparkSession, path: String,
       dirName: String): Option[Long] =
-    try {
-      // Full-prefix match INCLUDING the reserved "rows" tag: a data
-      // column literally named __rows writes a range line
-      // `__rows\t<long|string|…>\t…` which must never be mistaken for
-      // the total (its tag can never be "rows"). Any truncation or
-      // corruption (the sidecar write is best-effort and non-atomic)
-      // degrades to None → per-dir scan, per the sidecar contract.
-      SnapLog.readLinesIfExists(fsFor(spark, path),
-          SnapLog.stats(path, dirName))
-        .flatMap(_.find(_.startsWith("__rows\trows\t")))
-        .map(_.split("\t", -1)(2).trim.toLong)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try readStats(spark, path, dirName).flatMap(_._2)
+    catch { case scala.util.control.NonFatal(e) =>
+      sidecarReadFailed("stats", dirName, e); None }
 
   /** Audit for [[countSnapshot]]: the dirs whose rows had to be
     * SCANNED (no `__rows` sidecar line) on the last call. Empty ⟺ the
@@ -968,7 +798,7 @@ object Upsert {
         case Some(lines) =>
           lines.nonEmpty && lines.forall {
             case (dvTag, Some((vLo, vHi))) if dvTag == tag =>
-              statLt(bound, vLo) || statLt(vHi, bound)
+              !KeyDomain.overlaps((bound, bound), (vLo, vHi))
             case (dvTag, None) if dvTag == tag => true // empty dv kills nothing
             case _ => false
           }
@@ -1027,25 +857,19 @@ object Upsert {
               s"v$version at $path")
           None
         } else {
-          val tag = statTag(df.schema(column).dataType).getOrElse(
+          val tag = KeyDomain.tagOf(df.schema(column).dataType).getOrElse(
             throw new IllegalArgumentException(
               s"minMaxSnapshot: '$column' has no stats-comparable " +
                 s"type (${df.schema(column).dataType})"))
           val r = df.agg(min(col(column)), max(col(column))).collect()(0)
-          if (r.isNullAt(0) || r.isNullAt(1)) None
-          else Some((tag,
-            (decodeStatValue(tag, encodeStatValue(tag, r.get(0))),
-             decodeStatValue(tag, encodeStatValue(tag, r.get(1))))))
+          KeyDomain.rangeOf(r.get(0), r.get(1)).map(tag -> _)
         }
       }
     val present = fromStats ++ fromScan.toSeq
     require(present.map(_._1).distinct.size <= 1,
       s"minMaxSnapshot: '$column' has mixed stat types across dirs")
-    if (present.isEmpty) (None, None)
-    else ((Some(present.map(_._2._1).reduce((a, b) =>
-        if (statLt(a, b)) a else b)): Option[Any]),
-      (Some(present.map(_._2._2).reduce((a, b) =>
-        if (statLt(a, b)) b else a)): Option[Any]))
+    val hull = present.map(_._2).reduceOption(KeyDomain.hull)
+    (hull.map(_._1), hull.map(_._2))
   }
 
   /** Incremental CHANGE-FEED CONSUMPTION with a durable cursor — the
@@ -1134,26 +958,6 @@ object Upsert {
   private[graft] val lastPresentDirs =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
 
-  /** The subset of `dirs` whose recorded key ranges can overlap
-    * `probe`'s keys. One tiny min/max aggregate over the probe (bounded
-    * driver metadata, like the version manifests themselves); dirs
-    * without a sidecar are kept (conservative). A probe with no
-    * non-null value in some key column matches nothing (equi-joins are
-    * null-rejecting) → no dir qualifies. */
-  /** The closed-interval overlap test both prune stages rest on:
-    * probe range [pLo, pHi] can share a key with dir range [dLo, dHi]
-    * iff neither lies strictly past the other under [[statLt]]'s order
-    * (the order Spark's min/max computed both ranges under — the
-    * PropertySpec prune-never-drops property pins the two agree). */
-  private[graft] def rangeOverlaps(pLo: Any, pHi: Any,
-      dLo: Any, dHi: Any): Boolean =
-    !(statLt(pHi, dLo) || statLt(dHi, pLo))
-
-  /** Per-column (name, tag, min/max) of a probe — [[keyRanges]]'
-    * result shape, reused by every prune/filter consumer so the one
-    * probe aggregate is computed once per op, not once per stage. */
-  private[graft] type ProbeRanges = Seq[(String, String, Option[(Any, Any)])]
-
   /** PUSHABLE bounding-box predicate for a key probe: each supported
     * key column bounded to the probe's [min, max]. Sound as a PRE-JOIN
     * filter on the dir side of any key equi-join/semi/anti probe: a
@@ -1169,11 +973,11 @@ object Upsert {
     * the probe's stat tag contribute no bound (mixed-type comparison
     * semantics would be unsound); None when nothing is boundable. */
   private def probeRangeFilter(schema: org.apache.spark.sql.types.StructType,
-      pr: ProbeRanges): Option[org.apache.spark.sql.Column] = {
+      pr: Ranges): Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType}
     val conds = pr.flatMap { case (k, tag, r) =>
       val scanTag = schema.fields.find(_.name == k)
-        .flatMap(f => statTag(f.dataType))
+        .flatMap(f => KeyDomain.tagOf(f.dataType))
       if (!scanTag.contains(tag)) None
       else r.map { case (lo, hi) =>
         if (tag == "long") {
@@ -1203,16 +1007,7 @@ object Upsert {
               col(k) <= lc(math.min(hiL, tMax))
           }
         } else {
-          def toLit(v: Any) = tag match {
-            case "string" => lit(v.asInstanceOf[String])
-            case "date" => lit(java.time.LocalDate
-              .ofEpochDay(v.asInstanceOf[Long]))
-            case _ => // "ts"
-              val us = v.asInstanceOf[Long]
-              lit(java.time.Instant.ofEpochSecond(
-                java.lang.Math.floorDiv(us, 1000000L),
-                java.lang.Math.floorMod(us, 1000000L) * 1000L))
-          }
+          def toLit(v: Any) = lit(KeyDomain.toExternal(v, schema(k).dataType))
           col(k) >= toLit(lo) && col(k) <= toLit(hi)
         }
       }
@@ -1220,97 +1015,50 @@ object Upsert {
     conds.reduceOption(_ && _)
   }
 
-  private[graft] def overlappingDirs(spark: SparkSession, path: String,
-      dirs: Seq[String], keys: Seq[String], probe: DataFrame): Seq[String] =
-    overlappingDirs(spark, path, dirs,
-      keyRanges(probe, keys.filter(probe.columns.contains)))
-
-  private[graft] def overlappingDirs(spark: SparkSession, path: String,
-      dirs: Seq[String], pr: ProbeRanges): Seq[String] = {
-    if (pr.isEmpty) return dirs // no supported key column → probe all
-    if (pr.exists(_._3.isEmpty)) return Nil // a key col with only NULLs
-    val pRange = pr.map { case (k, tag, r) => k -> (tag, r.get) }.toMap
-    dirs.filter { d =>
-      readKeyStats(spark, path, d) match {
-        case None => true
-        case Some(stats) =>
-          pRange.forall { case (k, (tag, (pLo, pHi))) =>
-            stats.get(k) match {
-              case Some((dTag, Some((dLo, dHi)))) if dTag == tag =>
-                rangeOverlaps(pLo, pHi, dLo, dHi)
-              case Some((dTag, None)) if dTag == tag => false // dir: no keys
-              case _ => true // unknown column/tag → conservative
-            }
-          }
-      }
-    }
-  }
-
-  /** TWO-STAGE dir pruning for a key probe — the one entry point every
-    * probing op (merge's touched scan, erasure's hit scan, point reads,
-    * the keep-existing anti join) goes through. Stage 1: range stats
-    * ([[overlappingDirs]]). Stage 2: when the probe's keys are few
-    * enough to collect (≤ [[BloomProbeMax]] — bounded driver metadata,
-    * the caller's probes are already key-distinct), drop the dirs whose
-    * bloom sidecar proves no probed key is present — the stage that
-    * still prunes under HASH-DISTRIBUTED keys, where every dir's range
-    * spans the whole domain and stage 1 admits everything. Dirs without
-    * sidecars always survive both stages; blooms only ever prune true
-    * negatives, so pruning is an optimization, never a correctness
-    * gate. Callers publish the result to [[lastProbedDirs]] themselves
-    * (several ops run more than one probe per call). */
+  /** THE dir-prune path: every probing op (merge's touched scan and
+    * keep-existing probe, erasure's hit scans, point reads), every
+    * bounded read ([[readSnapshotWhere]]) and the DSv2 admission
+    * ([[admitDirsFor]]) opens exactly the dirs this keeps.
+    *
+    * Stage 1, ranges: a dir is dropped when its `.stats` box is
+    * disjoint from `pr` on ANY column (every column must match for a
+    * composite match). Dirs without a sidecar, and columns it lacks or
+    * tags differently, are kept (conservative). A `pr` column with no
+    * non-null value matches nothing (equi-joins and bounds are
+    * null-rejecting), so no dir is kept.
+    *
+    * Stage 2, blooms: `canons` maps a NAME-SORTED key-column set to the
+    * probe's bloom canons over it ([[KeyDomain.canonRowsOf]]). When it
+    * holds the sink's RECORDED keys — the columns the `.bloom2`
+    * sidecars hash; a probe on any other set would false-negative real
+    * matches — a dir whose bloom holds none of them is dropped: the
+    * stage that still prunes HASH-DISTRIBUTED keys, where every dir's
+    * range spans the domain. Blooms only ever prune true negatives, so
+    * pruning is an optimization, never a correctness gate. Callers
+    * publish the result to their audit slot ([[lastProbedDirs]]). */
   private[graft] def pruneDirs(spark: SparkSession, path: String,
-      dirs: Seq[String], keys: Seq[String], probe: DataFrame,
-      pr0: Option[ProbeRanges] = None,
-      canons0: Option[Option[Array[String]]] = None): Seq[String] = {
-    val pr = pr0.getOrElse(
-      keyRanges(probe, keys.filter(probe.columns.contains)))
-    val ranged = overlappingDirs(spark, path, dirs, pr)
-    if (ranged.isEmpty) return ranged
-    if (!keys.forall(probe.columns.contains)) return ranged
-    // Canon thunk: precomputed by [[probeFacts]] callers (zero extra
-    // jobs — Some(None) means "too many / uncanonizable, skip the bloom
-    // stage"), else the collect-based fallback (a Spark job, run only
-    // when a bloom actually exists — see bloomStage).
-    val canonThunk: () => Option[Array[String]] = canons0 match {
-      case Some(c) => () => c
-      case None => () => {
-        val canon = probe.select(keyCanon(probe, keys).as("__k"))
-          .limit(BloomProbeMax + 1).collect().map(_.getString(0))
-        if (canon.length > BloomProbeMax) None else Some(canon)
-      }
-    }
-    bloomStage(spark, path, ranged, keys, canonThunk)
-  }
-
-  /** Stage-2 bloom pruning over a stage-1 survivor set. The bloom
-    * stage is sound ONLY for the sink's own key set: the sidecars hash
-    * [[keyCanon]] over the RECORDED keys, so a probe on any other
-    * column set (a group-column point read against a doc-keyed sink)
-    * would false-negative real matches and silently prune dirs that
-    * hold them. The canon thunk runs only when some surviving dir
-    * actually HAS a bloom to consult — statless dirs, legacy-canon
-    * sidecars and the big compact dirs (> bloom cap by design) would
-    * otherwise cost every write/merge/erase one dead collect. */
-  private def bloomStage(spark: SparkSession, path: String,
-      ranged: Seq[String], keys: Seq[String],
-      canons: () => Option[Array[String]]): Seq[String] = {
-    if (ranged.isEmpty) return ranged
-    if (keys.toSet != recordedKeyCols(spark, path).toSet) return ranged
-    val fs = fsFor(spark, path)
-    val withBloom = ranged.filter(d =>
-      try fs.exists(SnapLog.bloom(path, d))
-      catch { case scala.util.control.NonFatal(_) => false }).toSet
-    if (withBloom.isEmpty) return ranged
-    canons() match {
-      case None => ranged
-      case Some(canon) => ranged.filter { d =>
-        if (!withBloom.contains(d)) true
-        else readKeyBloom(spark, path, d) match {
-          case None => true
-          case Some(bf) => canon.exists(bf.mightContainString)
+      dirs: Seq[String], pr: Ranges,
+      canons: Map[Seq[String], Array[String]]): Seq[String] = {
+    if (pr.exists(_._3.isEmpty)) return Nil
+    val ranged = if (pr.isEmpty) dirs else dirs.filter(d =>
+      readKeyStats(spark, path, d).forall(stats => pr.forall {
+        case (k, tag, r) => stats.get(k) match {
+          case Some((`tag`, Some(dr))) => KeyDomain.overlaps(r.get, dr)
+          case Some((`tag`, None)) => false // the dir holds no value
+          case _ => true
         }
-      }
+      }))
+    if (ranged.isEmpty || canons.isEmpty) return ranged
+    canons.get(recordedKeyCols(spark, path).sorted) match {
+      case None => ranged
+      case Some(canon) =>
+        val fs = fsFor(spark, path)
+        val withBloom = ranged.filter(d =>
+          try fs.exists(SnapLog.bloom(path, d))
+          catch { case scala.util.control.NonFatal(e) =>
+            sidecarReadFailed("bloom", d, e); false }).toSet
+        ranged.filter(d => !withBloom(d) || readKeyBloom(spark, path, d)
+          .forall(bf => canon.exists(bf.mightContainString)))
     }
   }
 
@@ -1325,20 +1073,6 @@ object Upsert {
       val (l, r) = dfs.splitAt(dfs.size / 2)
       balancedUnion(l).unionByName(balancedUnion(r))
     }
-
-  /** Driver-side bloom canons of collected probe rows — mirrors
-    * [[keyCanon]]: name-sorted columns, NULL components skipped
-    * (concat_ws semantics), canon per [[bloomCanonOf]]. Shared by
-    * [[probeFacts]] and the merge prologue's facts path. */
-  private def canonRowsOf(rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType,
-      keys: Seq[String]): Array[String] =
-    rows.map { r =>
-      keys.sorted.flatMap { k =>
-        val i = schema.fieldIndex(k)
-        if (r.isNullAt(i)) None else bloomCanonOf(r.get(i))
-      }.mkString("\u0001")
-    }.distinct
 
   /** Probe-side key frames whose EXACT row count the caller already
     * knows broadcast explicitly below this cap: without their own
@@ -1358,12 +1092,11 @@ object Upsert {
     * job plus the canon collect job every probing op used to pay. A
     * larger probe falls back to the range aggregate with no canon set,
     * exactly the regime where the bloom stage's own cap skipped it
-    * anyway. Canons are produced only when every key column's type is
-    * inside the canon domain ([[statTag]]) — exotic-typed keys keep
-    * the conservative no-bloom path (such sinks never had blooms
-    * consulted through driver canons before either). */
+    * anyway. Canons (keyed as [[pruneDirs]] takes them) are produced
+    * only when every key column carries a [[KeyDomain.tagOf]] tag —
+    * exotic-typed keys keep the conservative no-bloom path. */
   private def probeFacts(probe: DataFrame, keys: Seq[String])
-      : (ProbeRanges, Option[Option[Array[String]]], Option[Long]) = {
+      : (Ranges, Map[Seq[String], Array[String]], Option[Long]) = {
     val cols = keys.filter(probe.columns.contains)
     val rows = labeled(probe.sparkSession, "graft.probeFacts")(
       probe.limit(BloomProbeMax + 1).collect())
@@ -1372,27 +1105,25 @@ object Upsert {
       // count — an upper bound on its distinct keys, which sizes the
       // observed bloom of the dir the caller is about to write.
       val (pr, _, totalRows) = keyRangesWithCount(probe, cols, cols)
-      return (pr, Some(None),
+      return (pr, Map.empty,
         if (totalRows >= 0) Some(totalRows) else None)
     }
     val schema = probe.schema
-    val pr: ProbeRanges = cols.flatMap { k =>
-      statTag(schema(k).dataType).map { tag =>
+    val pr: Ranges = cols.flatMap { k =>
+      KeyDomain.tagOf(schema(k).dataType).map { tag =>
         val idx = schema.fieldIndex(k)
-        val canon = rows.iterator.filterNot(_.isNullAt(idx))
-          .flatMap(r => probeCanon(r.get(idx)))
-          .collect { case (t, v) if t == tag => v }.toSeq
-        val mn = canon.reduceOption((a, b) => if (statLt(a, b)) a else b)
-        val mx = canon.reduceOption((a, b) => if (statLt(a, b)) b else a)
-        (k, tag, for (lo <- mn; hi <- mx) yield (lo, hi))
+        val vs = rows.iterator.filterNot(_.isNullAt(idx))
+          .flatMap(r => KeyDomain.canon(r.get(idx)))
+          .collect { case (`tag`, v) => (v, v) }.toSeq
+        (k, tag, vs.reduceOption(KeyDomain.hull))
       }
     }
     val canonable = keys.forall(k => probe.columns.contains(k) &&
-      statTag(schema(k).dataType).isDefined)
+      KeyDomain.tagOf(schema(k).dataType).isDefined)
     val canons =
-      if (!canonable) None
-      else Some(canonRowsOf(rows, schema, keys))
-    (pr, Some(canons), Some(rows.length.toLong))
+      if (!canonable) Map.empty[Seq[String], Array[String]]
+      else Map(keys.sorted -> KeyDomain.canonRowsOf(rows, schema, keys))
+    (pr, canons, Some(rows.length.toLong))
   }
 
   /** KEY-SORTED rewrite for compaction outputs: range-partition + sort
@@ -1450,7 +1181,9 @@ object Upsert {
   private def recordedSkipCols(spark: SparkSession, path: String): Seq[String] =
     try SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.skipCols(path))
       .getOrElse(Nil).filter(_.nonEmpty)
-    catch { case scala.util.control.NonFatal(_) => Nil }
+    catch { case scala.util.control.NonFatal(e) =>
+      log.warn("graft: skip columns of {} not read, skipping none: {}", path, e)
+      Nil }
 
   // ── schema-evolution metadata ops ───────────────────────────────
   // The sink tolerates ADDITIVE physical evolution (mergeSchema) but
@@ -1472,17 +1205,23 @@ object Upsert {
   // stats lines simply stop pruning — conservative, never wrong).
 
   /** (kind, a, b) triples in declaration order: ("add", name, ddl) |
-    * ("rename", from, to). */
+    * ("rename", from, to) | ("drop", name, "-"). A map that cannot be
+    * read or parsed FAILS the call, naming the file: read as empty, it
+    * would serve the unmapped view, and [[appendSchemaMapLine]] would
+    * rewrite it with every earlier evolution line erased. */
   private def recordedSchemaMap(spark: SparkSession,
-      path: String): Seq[(String, String, String)] =
-    try SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.schemaMap(path))
+      path: String): Seq[(String, String, String)] = {
+    val file = SnapLog.schemaMap(path)
+    try SnapLog.readLinesIfExists(fsFor(spark, path), file)
       .getOrElse(Nil).filter(_.nonEmpty).map { l =>
         val a = l.split("\t", 3)
         (a(0), java.net.URLDecoder.decode(a(1), "UTF-8"),
           if (a(0) == "add") a(2)
           else java.net.URLDecoder.decode(a(2), "UTF-8"))
       }
-    catch { case scala.util.control.NonFatal(_) => Nil }
+    catch { case scala.util.control.NonFatal(e) =>
+      throw new java.io.IOException(s"graft: cannot read $file: $e", e) }
+  }
 
   /** Append one evolution line under the REWRITER LOCK, published by
     * tmp+rename: evolution ops are rare admin actions, but a plain
@@ -1641,15 +1380,6 @@ object Upsert {
     dead
   }
 
-  /** Stat tag for a PROBE bound supplied as a Scala value. */
-  private def probeTagOf(v: Any): Option[String] = v match {
-    case _: Byte | _: Short | _: Int | _: Long => Some("long")
-    case _: String => Some("string")
-    case _: java.sql.Date | _: java.time.LocalDate => Some("date")
-    case _: java.sql.Timestamp | _: java.time.Instant => Some("ts")
-    case _ => None
-  }
-
   /** EMPTY frame in snapshot `version`'s LOGICAL (schema-mapped) shape,
     * at driver-metadata cost ([[dirsSchema]]: cached per-dir footer
     * schemas, no corpus footer scan) — the schema-stability anchor for
@@ -1661,14 +1391,6 @@ object Upsert {
     applySchemaMap(spark, path, spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw))
   }
-
-  /** (tag, canonical value) of a probe-able Scala value — Long for
-    * integral/date/ts (epoch day / epoch micros), String for strings;
-    * None for unsupported types. The comparison domain [[statLt]]
-    * orders and the DSv2 scan builder intersects filter bounds in. */
-  private[graft] def probeCanon(v: Any): Option[(String, Any)] =
-    probeTagOf(v).map(t =>
-      (t, decodeStatValue(t, encodeStatValue(t, v))))
 
   /** Snapshot `version`'s LOGICAL (schema-mapped) schema at cached
     * driver-metadata cost — the DSv2 relation's inferSchema. */
@@ -1692,16 +1414,23 @@ object Upsert {
   def readSnapshotWhere(spark: SparkSession, path: String, version: Int,
       ranges: Map[String, (Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "readSnapshotWhere: no bounds given")
-    val pr: ProbeRanges = ranges.toSeq.map { case (k, (lo, hi)) =>
-      val tag = probeTagOf(lo).filter(t => probeTagOf(hi).contains(t))
-        .getOrElse(throw new IllegalArgumentException(
+    readSnapshotWithin(spark, path, version, ranges.map { case (k, (lo, hi)) =>
+      (KeyDomain.canon(lo), KeyDomain.canon(hi)) match {
+        case (Some((tag, l)), Some((th, h))) if th == tag => k -> ((tag, (l, h)))
+        case _ => throw new IllegalArgumentException(
           s"readSnapshotWhere: unsupported/mismatched bound types for " +
-            s"'$k': ${lo.getClass.getSimpleName}/${hi.getClass.getSimpleName}"))
-      (k, tag, Some((decodeStatValue(tag, encodeStatValue(tag, lo)),
-        decodeStatValue(tag, encodeStatValue(tag, hi)))))
-    }
+            s"'$k': ${lo.getClass.getSimpleName}/${hi.getClass.getSimpleName}")
+      }
+    })
+  }
+
+  /** [[readSnapshotWhere]] over canonical bounds — the DSv2 V1 bridge's
+    * entry, whose filter bounds are canonical already. */
+  private[graft] def readSnapshotWithin(spark: SparkSession, path: String,
+      version: Int, bounds: KeyDomain.Bounds): DataFrame = {
+    val pr: Ranges = bounds.toSeq.map { case (k, (tag, r)) => (k, tag, Some(r)) }
     val entries = manifestEntries(spark, path, version)
-    val candidates = overlappingDirs(spark, path, entries.map(_.dir), pr)
+    val candidates = pruneDirs(spark, path, entries.map(_.dir), pr, Map.empty)
     lastProbedDirs.set(candidates)
     // The FULL snapshot's logical schema (cached driver metadata, not a
     // per-call corpus footer read) anchors both the bound validation
@@ -1712,11 +1441,11 @@ object Upsert {
     // validating against the pruned subset threw exactly when pruning
     // worked best.
     val full = emptyLogicalFrame(spark, path, version)
-    require(ranges.keys.forall(full.columns.contains),
+    require(bounds.keys.forall(full.columns.contains),
       s"readSnapshotWhere: bounded column(s) absent from the snapshot " +
-        s"schema: ${ranges.keys.filterNot(full.columns.contains).mkString(",")}")
+        s"schema: ${bounds.keys.filterNot(full.columns.contains).mkString(",")}")
     if (candidates.isEmpty) return full
-    // Mapped BEFORE the bounds apply, so `ranges` addresses the
+    // Mapped BEFORE the bounds apply, so `bounds` addresses the
     // LOGICAL (post-evolution) column names; a renamed column's bound
     // filters through the coalesce (no pushdown for that column —
     // conservative, still exact).
@@ -1733,12 +1462,15 @@ object Upsert {
     // the pushdown.
     val boundable = pr.filter { case (k, tag, _) =>
       scan0.schema.fields.find(_.name == k)
-        .flatMap(f => statTag(f.dataType)).contains(tag)
+        .flatMap(f => KeyDomain.tagOf(f.dataType)).contains(tag)
     }
     val pushed = probeRangeFilter(scan.schema, boundable)
     val boundedSet = boundable.map(_._1).toSet
-    val generic = ranges.toSeq.filterNot(kv => boundedSet(kv._1))
-      .map { case (k, (lo, hi)) => col(k) >= lit(lo) && col(k) <= lit(hi) }
+    val generic = bounds.toSeq.filterNot(b => boundedSet(b._1))
+      .map { case (k, (tag, (lo, hi))) =>
+        def toLit(v: Any) = lit(KeyDomain.toExternal(v, KeyDomain.typeOf(tag)))
+        col(k) >= toLit(lo) && col(k) <= toLit(hi)
+      }
       .reduceOption(_ && _)
     val filtered = (pushed.toSeq ++ generic.toSeq).reduceOption(_ && _)
       .map(scan.filter).getOrElse(scan)
@@ -1789,63 +1521,24 @@ object Upsert {
     recordKeyCols(spark, path, keys)
   }
 
-  /** Bloom-canon string of an external probe value — mirrors
-    * [[keyCanon]]'s single-column rendering (cast-to-string for
-    * long/string, epoch day / epoch micros for date/ts). */
-  private def bloomCanonOf(v: Any): Option[String] = v match {
-    case n: java.lang.Number if probeTagOf(v).contains("long") =>
-      Some(n.longValue.toString)
-    case s: String => Some(s)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toString)
-    case d: java.time.LocalDate => Some(d.toEpochDay.toString)
-    case t: java.sql.Timestamp =>
-      // floorDiv: see encodeStatValue — truncation mis-canons pre-1970
-      // fractional-second probes, and bloom admission is recall-bearing.
-      Some((Math.floorDiv(t.getTime, 1000L) * 1000000L +
-        t.getNanos / 1000L).toString)
-    case t: java.time.Instant =>
-      Some((t.getEpochSecond * 1000000L + t.getNano / 1000L).toString)
-    case _ => None
-  }
-
-  /** Dir admission for the DSv2 Batch scan: stage-1 range overlap over
-    * the merged per-column bounds (plan-time filter boxes ∪ runtime
-    * join-key boxes), then the bloom stage when a runtime key SET
-    * addresses the sink's whole recorded key (single column — the
-    * bloom canon is composite, so a partial key can't probe it).
-    * Bounds are external Scala values, same domain as
-    * [[readSnapshotWhere]]. Both stages admit supersets only — a
-    * pruned dir provably holds no matching row — and the join itself
-    * re-filters, so admission is never correctness-bearing for the
-    * runtime part either. Publishes the admitted set to
-    * [[lastProbedDirs]]. */
+  /** Dir admission for the DSv2 Batch scan: [[pruneDirs]] over the
+    * merged canonical per-column bounds (plan-time filter boxes ∩
+    * runtime join-key boxes), its bloom stage probed by a runtime key
+    * SET on a single-column recorded key (the bloom canon is
+    * composite, so a partial key can't probe it). Both stages admit
+    * supersets only — a pruned dir provably holds no matching row —
+    * and the join itself re-filters, so admission is never
+    * correctness-bearing for the runtime part either. Publishes the
+    * admitted set to [[lastProbedDirs]]. */
   private[graft] def admitDirsFor(spark: SparkSession, path: String,
-      version: Int, ranges: Map[String, (Any, Any)],
+      version: Int, bounds: KeyDomain.Bounds,
       keySets: Map[String, Seq[Any]]): Seq[String] = {
-    val pr: ProbeRanges = ranges.toSeq.flatMap { case (k, (lo, hi)) =>
-      for {
-        tl <- probeTagOf(lo); th <- probeTagOf(hi) if tl == th
-      } yield (k, tl, Some((decodeStatValue(tl, encodeStatValue(tl, lo)),
-        decodeStatValue(tl, encodeStatValue(tl, hi)))))
-    }
-    val dirs = manifestEntries(spark, path, version).map(_.dir)
-    val ranged = overlappingDirs(spark, path, dirs, pr)
-    val admitted = recordedKeyCols(spark, path) match {
-      case Seq(k) if ranged.nonEmpty && keySets.contains(k) &&
-          keySets(k).nonEmpty && keySets(k).size <= BloomProbeMax &&
-          keySets(k).forall(v => bloomCanonOf(v).isDefined) =>
-        val canons = keySets(k).flatMap(bloomCanonOf)
-        val fs = fsFor(spark, path)
-        ranged.filter { d =>
-          val hasBloom = try fs.exists(SnapLog.bloom(path, d))
-            catch { case scala.util.control.NonFatal(_) => false }
-          !hasBloom || (readKeyBloom(spark, path, d) match {
-            case None => true
-            case Some(bf) => canons.exists(bf.mightContainString)
-          })
-        }
-      case _ => ranged
-    }
+    val canons = keySets.collect { case (k, vs) if vs.nonEmpty &&
+        vs.size <= BloomProbeMax && vs.forall(KeyDomain.bloomCanon(_).isDefined) =>
+      Seq(k) -> vs.flatMap(KeyDomain.bloomCanon).toArray }
+    val admitted = pruneDirs(spark, path,
+      manifestEntries(spark, path, version).map(_.dir),
+      bounds.toSeq.map { case (k, (tag, r)) => (k, tag, Some(r)) }, canons)
     lastProbedDirs.set(admitted)
     admitted
   }
@@ -2330,8 +2023,7 @@ object Upsert {
     // on the driver — at 100 TB the publish probe costs one bounded
     // collect of the BATCH's keys, never a pass per stage.
     val (pr, canons, batchKeys) = probeFacts(keyRows, keys)
-    val candidates = pruneDirs(spark, path, baseEntries.map(_.dir), keys,
-      keyRows, Some(pr), canons)
+    val candidates = pruneDirs(spark, path, baseEntries.map(_.dir), pr, canons)
     lastProbedDirs.set(candidates)
     // Merged-schema union read, PROJECTED to the key columns: the scan
     // still reads only the keys (Catalyst prunes ReadSchema to the
@@ -2834,8 +2526,7 @@ object Upsert {
     // the checkpointed keys (replacing the range aggregate + the bloom
     // stage's canon collect).
     val (pr, canons, probeCnt) = probeFacts(keyRows, keys)
-    val candidates = pruneDirs(spark, path, entries.map(_.dir), keys,
-      keyRows, Some(pr), canons)
+    val candidates = pruneDirs(spark, path, entries.map(_.dir), pr, canons)
     lastProbedDirs.set(candidates)
     if (candidates.isEmpty)
       readSnapshot(spark, path, version).limit(0)
@@ -3176,7 +2867,7 @@ object Upsert {
     val tPred = !opc.isNull && opc.isin("U", "D")
     val iPred = opc === "I"
     val statKeys = keys.flatMap(k =>
-      statTag(deduped.schema(k).dataType).map(k -> _))
+      KeyDomain.tagOf(deduped.schema(k).dataType).map(k -> _))
     val factAggs =
       Seq(count(when(badPred, lit(1))).as("__bad"),
         count(when(tPred, lit(1))).as("__tn"),
@@ -3192,13 +2883,10 @@ object Upsert {
     val tCnt = facts.getLong(1)
     val iCnt = facts.getLong(2)
     val uCnt = facts.getLong(3)
-    def factRanges(offset: Int): ProbeRanges =
+    def factRanges(offset: Int): Ranges =
       statKeys.zipWithIndex.map { case ((k, tag), j) =>
-        val lo = facts.get(4 + 4 * j + offset)
-        val hi = facts.get(4 + 4 * j + offset + 1)
-        (k, tag, if (lo == null || hi == null) None
-                 else Some((decodeStatValue(tag, encodeStatValue(tag, lo)),
-                            decodeStatValue(tag, encodeStatValue(tag, hi)))))
+        (k, tag, KeyDomain.rangeOf(facts.get(4 + 4 * j + offset),
+          facts.get(4 + 4 * j + offset + 1)))
       }
     val touchedPr = factRanges(0)
     val iPr = factRanges(2)
@@ -3215,17 +2903,12 @@ object Upsert {
     // Bloom canons: one bounded collect per probe class, only when the
     // facts say it fits the cap (the big regime skips the bloom stage
     // by contract, now without even the limit-collect attempt).
-    def canonsFor(keysDf: DataFrame, cnt: Long): Option[Option[Array[String]]] = {
-      val canonable = keys.forall(k =>
-        statTag(deduped.schema(k).dataType).isDefined)
-      if (!canonable) Some(None)
-      else if (cnt > BloomProbeMax) Some(None)
-      else if (cnt == 0) Some(Some(Array.empty[String]))
-      else Some(Some(canonRowsOf(
-        labeled(spark, "graft.merge canons")(
-          keysDf.limit(BloomProbeMax + 1).collect()),
-        keysDf.schema, keys)))
-    }
+    def canonsFor(keysDf: DataFrame, cnt: Long): Map[Seq[String], Array[String]] =
+      if (!keys.forall(k => KeyDomain.tagOf(deduped.schema(k).dataType).isDefined) ||
+          cnt > BloomProbeMax) Map.empty
+      else Map(keys.sorted -> (if (cnt == 0) Array.empty[String]
+        else KeyDomain.canonRowsOf(labeled(spark, "graft.merge canons")(
+          keysDf.limit(BloomProbeMax + 1).collect()), keysDf.schema, keys)))
     val touchedCanons = canonsFor(touched0, tCnt)
     val iCanons = canonsFor(iKeys, iCnt)
     // The marker ENABLES the dv-reattach scan on later publishes —
@@ -3282,8 +2965,7 @@ object Upsert {
       // hold a U/D key get the left-semi probe — the rest carry
       // without being OPENED. On a compacted 100 TB sink a trickle
       // merge probes the handful of dirs its keys can live in.
-      val candidates = pruneDirs(spark, path, baseDirs, keys, touched,
-        Some(touchedPr), touchedCanons)
+      val candidates = pruneDirs(spark, path, baseDirs, touchedPr, touchedCanons)
       lastProbedDirs.set(candidates)
       val tFilter = probeRangeFilter(snapshotSchema, touchedPr)
       // A dir's LIVE view: pinned-schema scan minus its entry's dvs —
@@ -3346,8 +3028,7 @@ object Upsert {
       // live in — the write-path twin of the touched-dir pruning; the
       // corpus-wide readSnapshot scan this replaces was the last
       // corpus-proportional cost in the merge.
-      val presentDirs = pruneDirs(spark, path, baseDirs, keys, iKeys,
-        Some(iPr), iCanons)
+      val presentDirs = pruneDirs(spark, path, baseDirs, iPr, iCanons)
       lastPresentDirs.set(presentDirs)
       val freshI =
         if (presentDirs.isEmpty || !keys.forall(snapshotSchema.fieldNames.contains))
@@ -4297,8 +3978,7 @@ object Upsert {
         val perVersion = listVersions()
         val allDirs = namesOf(perVersion.flatMap(_._2))
         val candidates = pruneDirs(spark, path,
-          allDirs.filterNot(processed.contains), keys, keyRows,
-          Some(doomedPr), doomedCanons)
+          allDirs.filterNot(processed.contains), doomedPr, doomedCanons)
         candidates.foreach { d =>
           val df = readDirs(spark, Seq(s"$path/$d"))
           // Bounded hit PROBE (pushed bounding box + semi join)
@@ -4334,8 +4014,7 @@ object Upsert {
             processed.remove(d)
           }
           val newWork = pruneDirs(spark, path,
-            liveDirs.filterNot(processed.contains), keys, keyRows,
-            Some(doomedPr), doomedCanons)
+            liveDirs.filterNot(processed.contains), doomedPr, doomedCanons)
           if (newWork.isEmpty) {
             val renames = processed.collect {
               case (d, (Some(rw), _)) => d -> rw }.toMap

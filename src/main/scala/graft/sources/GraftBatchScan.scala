@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.ops.Upsert
+import graft.table.KeyDomain
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -18,37 +19,14 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * the join itself (runtime) restores exactness. */
 private[sources] object FilterBounds {
 
-  def tagSentinels(tag: String): (Option[Any], Option[Any]) =
-    tag match {
-      case "long" => (Some(Long.MinValue), Some(Long.MaxValue))
-      case "string" => (Some(""), None)
-      // Int.MinValue, NOT -Int.MaxValue: DateType's legal domain is the
-      // full Int epoch-day range, and dir pruning is correctness-bearing
-      // (a pruned dir is never scanned — the residual can't restore it),
-      // so an off-by-one sentinel would silently drop a dir whose max
-      // is exactly the domain minimum.
-      case "date" => (Some(Int.MinValue.toLong), Some(Int.MaxValue.toLong))
-      case "ts" => (Some(Long.MinValue), Some(Long.MaxValue))
-      case _ => (None, None)
-    }
-
-  def canonToExternal(tag: String, v: Any): Any = tag match {
-    case "date" => java.time.LocalDate.ofEpochDay(v.asInstanceOf[Long])
-    case "ts" =>
-      val us = v.asInstanceOf[Long]
-      java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
-        Math.floorMod(us, 1000000L) * 1000L)
-    case _ => v
-  }
-
   /** (column, canonical lo bound, canonical hi bound) a single filter
     * contributes — None when the filter cannot bound. */
   def boundOf(tableSchema: StructType, f: Filter)
       : Option[(String, Option[Any], Option[Any])] = {
     def canon(name: String, v: Any): Option[Any] = for {
       fld <- tableSchema.fields.find(_.name == name)
-      colTag <- Upsert.statTag(fld.dataType)
-      (vTag, c) <- Upsert.probeCanon(v)
+      colTag <- KeyDomain.tagOf(fld.dataType)
+      (vTag, c) <- KeyDomain.canon(v)
       if vTag == colTag && v != null
     } yield c
     f match {
@@ -64,8 +42,7 @@ private[sources] object FilterBounds {
         if (cs.exists(_.isEmpty)) None
         else {
           val xs = cs.flatten
-          Some((c, Some(xs.reduce((a, b) => if (Upsert.statLt(a, b)) a else b)),
-            Some(xs.reduce((a, b) => if (Upsert.statLt(a, b)) b else a))))
+          Some((c, Some(xs.reduce(KeyDomain.min)), Some(xs.reduce(KeyDomain.max))))
         }
       // A prefix is a closed string range: every `p…` sorts in
       // [p, inc(p)] under the sidecars' UTF-8 byte order. The
@@ -86,17 +63,8 @@ private[sources] object FilterBounds {
       case And(l, r) =>
         (boundOf(tableSchema, l), boundOf(tableSchema, r)) match {
           case (Some((cl, llo, lhi)), Some((cr, rlo, rhi))) if cl == cr =>
-            val lo = (llo, rlo) match {
-              case (Some(a), Some(b)) =>
-                Some(if (Upsert.statLt(a, b)) b else a)
-              case (a, b) => a.orElse(b)
-            }
-            val hi = (lhi, rhi) match {
-              case (Some(a), Some(b)) =>
-                Some(if (Upsert.statLt(a, b)) a else b)
-              case (a, b) => a.orElse(b)
-            }
-            Some((cl, lo, hi))
+            Some((cl, (llo ++ rlo).reduceOption(KeyDomain.max),
+              (lhi ++ rhi).reduceOption(KeyDomain.min)))
           case (one, None) => one
           case (None, one) => one
           case (one, _) => one
@@ -109,10 +77,8 @@ private[sources] object FilterBounds {
       case Or(l, r) =>
         (boundOf(tableSchema, l), boundOf(tableSchema, r)) match {
           case (Some((cl, llo, lhi)), Some((cr, rlo, rhi))) if cl == cr =>
-            val lo = for (a <- llo; b <- rlo)
-              yield if (Upsert.statLt(a, b)) a else b
-            val hi = for (a <- lhi; b <- rhi)
-              yield if (Upsert.statLt(a, b)) b else a
+            val lo = for (a <- llo; b <- rlo) yield KeyDomain.min(a, b)
+            val hi = for (a <- lhi; b <- rhi) yield KeyDomain.max(a, b)
             if (lo.isEmpty && hi.isEmpty) None else Some((cl, lo, hi))
           case _ => None
         }
@@ -120,23 +86,18 @@ private[sources] object FilterBounds {
     }
   }
 
-  /** Fold a conjunct set into per-column closed external bounds:
-    * per column the los max-fold and the his min-fold (intersection),
-    * one-sided results completed with the tag's domain sentinel. */
-  def fold(tableSchema: StructType, filters: Array[Filter])
-      : Map[String, (Any, Any)] = {
-    val perCol = filters.flatMap(boundOf(tableSchema, _)).groupBy(_._1)
-    perCol.flatMap { case (c, bs) =>
-      val tag = Upsert.statTag(tableSchema(c).dataType).get
-      val (sLo, sHi) = tagSentinels(tag)
-      val lo = bs.flatMap(_._2).reduceOption((a, b) =>
-        if (Upsert.statLt(a, b)) b else a).orElse(sLo)
-      val hi = bs.flatMap(_._3).reduceOption((a, b) =>
-        if (Upsert.statLt(a, b)) a else b).orElse(sHi)
-      for (l <- lo; h <- hi)
-        yield c -> ((canonToExternal(tag, l), canonToExternal(tag, h)))
+  /** Fold a conjunct set into per-column closed canonical bounds: per
+    * column the los max-fold and the his min-fold (intersection),
+    * one-sided results completed with the tag's domain end. */
+  def fold(tableSchema: StructType, filters: Array[Filter]): KeyDomain.Bounds =
+    filters.flatMap(boundOf(tableSchema, _)).groupBy(_._1).flatMap { case (c, bs) =>
+      val tag = KeyDomain.tagOf(tableSchema(c).dataType).get
+      val (sLo, sHi) = KeyDomain.sentinels(tag)
+      for {
+        l <- bs.flatMap(_._2).reduceOption(KeyDomain.max).orElse(sLo)
+        h <- bs.flatMap(_._3).reduceOption(KeyDomain.min).orElse(sHi)
+      } yield c -> ((tag, (l, h)))
     }
-  }
 
   /** Exact value SETS carried by equality/In conjuncts — the bloom
     * stage's probe (ranges alone can't prune hash-distributed keys). */
@@ -181,13 +142,13 @@ private[sources] object GraftBatchScan {
 
 private[sources] class GraftBatchScan(path: String, version: Int,
     tableSchema: StructType, required: StructType,
-    staticBounds: Map[String, (Any, Any)], pushed: Array[Filter])
+    staticBounds: KeyDomain.Bounds, pushed: Array[Filter])
   extends Scan with Batch with SupportsRuntimeFiltering {
 
   // Runtime join-key filters land here at execution time (driver),
   // strictly before the re-plan reads them — BatchScanExec calls
   // filter() then planInputPartitions() sequentially.
-  private var runtimeBounds: Map[String, (Any, Any)] = Map.empty
+  private var runtimeBounds: KeyDomain.Bounds = Map.empty
   private var runtimeKeySets: Map[String, Seq[Any]] = Map.empty
 
   override def readSchema(): StructType = required
@@ -203,7 +164,7 @@ private[sources] class GraftBatchScan(path: String, version: Int,
     val spark = SparkSession.active
     Upsert.prunableCols(spark, path)
       .filter(c => tableSchema.fields.exists(f => f.name == c &&
-        Upsert.statTag(f.dataType).isDefined))
+        KeyDomain.tagOf(f.dataType).isDefined))
       .map(Expressions.column).toArray
   }
 
@@ -215,18 +176,9 @@ private[sources] class GraftBatchScan(path: String, version: Int,
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     // Intersect static and runtime boxes per column: both must hold.
-    val merged = (staticBounds.keySet ++ runtimeBounds.keySet).map { c =>
-      (staticBounds.get(c), runtimeBounds.get(c)) match {
-        case (Some((sl, sh)), Some((rl, rh))) =>
-          def canon(v: Any) = Upsert.probeCanon(v).get
-          val lo = if (Upsert.statLt(canon(sl)._2, canon(rl)._2)) rl else sl
-          val hi = if (Upsert.statLt(canon(sh)._2, canon(rh)._2)) sh else rh
-          c -> ((lo, hi))
-        case (Some(b), None) => c -> b
-        case (None, Some(b)) => c -> b
-        case _ => throw new IllegalStateException("unreachable")
-      }
-    }.toMap
+    val merged = staticBounds ++ runtimeBounds.map { case (c, (tag, r)) =>
+      c -> ((tag, staticBounds.get(c).fold(r)(s => KeyDomain.intersect(s._2, r))))
+    }
     val admitted = Upsert.admitDirsFor(spark, path, version, merged,
       runtimeKeySets)
     Upsert.snapshotDataFiles(spark, path, admitted)

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 
 import graft.ops.Upsert
+import graft.table.KeyDomain
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -373,7 +374,7 @@ private[sources] class GraftScanBuilder(path: String, version: Int,
   with SupportsPushDownLimit {
 
   private var required: StructType = tableSchema
-  private var bounds: Map[String, (Any, Any)] = Map.empty
+  private var bounds: KeyDomain.Bounds = Map.empty
   private var pushed: Array[Filter] = Array.empty
   private var agg: Option[Seq[AggCol]] = None
   private var limit: Option[Int] = None
@@ -423,7 +424,7 @@ private[sources] class GraftScanBuilder(path: String, version: Int,
     case nr: NamedReference if nr.fieldNames.length == 1 =>
       val name = nr.fieldNames()(0)
       tableSchema.fields.find(_.name == name)
-        .filter(fl => Upsert.statTag(fl.dataType).isDefined)
+        .filter(fl => KeyDomain.tagOf(fl.dataType).isDefined)
         .map(fl => (name, fl.dataType))
     case _ => None
   }
@@ -462,7 +463,7 @@ private[sources] class GraftScanBuilder(path: String, version: Int,
 }
 
 private[sources] class GraftScan(path: String, version: Int,
-    required: StructType, bounds: Map[String, (Any, Any)],
+    required: StructType, bounds: KeyDomain.Bounds,
     pushed: Array[Filter], agg: Option[Seq[AggCol]],
     limit: Option[Int]) extends V1Scan {
 
@@ -482,28 +483,12 @@ private[sources] class GraftScan(path: String, version: Int,
 }
 
 private[sources] class GraftV1Relation(ctx: SQLContext, path: String,
-    version: Int, out: StructType, bounds: Map[String, (Any, Any)],
+    version: Int, out: StructType, bounds: KeyDomain.Bounds,
     agg: Option[Seq[AggCol]], limit: Option[Int])
   extends BaseRelation with TableScan {
 
   override def sqlContext: SQLContext = ctx
   override def schema: StructType = out
-
-  /** Canonical stat value → the external Row value of `dt`. */
-  private def statToExternal(v: Any, dt: DataType): Any = (v, dt) match {
-    case (l: Long, ByteType) => l.toByte
-    case (l: Long, ShortType) => l.toShort
-    case (l: Long, IntegerType) => l.toInt
-    case (l: Long, LongType) => l
-    case (s: String, StringType) => s
-    case (l: Long, DateType) =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(l))
-    case (l: Long, TimestampType) =>
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(l, 1000000L), Math.floorMod(l, 1000000L) * 1000L))
-    case _ => throw new IllegalStateException(
-      s"graft: stat value $v does not convert to $dt")
-  }
 
   override def buildScan(): RDD[Row] = {
     val spark = ctx.sparkSession
@@ -516,14 +501,14 @@ private[sources] class GraftV1Relation(ctx: SQLContext, path: String,
           Upsert.minMaxSnapshot(spark, path, version, c))
         val row = Row(cols.map {
           case CountStarCol => Upsert.countSnapshot(spark, path, version)
-          case MinCol(c, dt) => mm(c)._1.map(statToExternal(_, dt)).orNull
-          case MaxCol(c, dt) => mm(c)._2.map(statToExternal(_, dt)).orNull
+          case MinCol(c, dt) => mm(c)._1.map(KeyDomain.toExternal(_, dt)).orNull
+          case MaxCol(c, dt) => mm(c)._2.map(KeyDomain.toExternal(_, dt)).orNull
         }: _*)
         spark.sparkContext.parallelize(Seq(row), 1)
       case None =>
         val df0 =
           if (bounds.nonEmpty)
-            Upsert.readSnapshotWhere(spark, path, version, bounds)
+            Upsert.readSnapshotWithin(spark, path, version, bounds)
           else Upsert.readSnapshot(spark, path, version)
         val projected = df0.select(out.fieldNames.toIndexedSeq.map(col): _*)
         limit.map(projected.limit).getOrElse(projected).rdd

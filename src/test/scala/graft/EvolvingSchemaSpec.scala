@@ -238,4 +238,29 @@ class EvolvingSchemaSpec extends SparkSpec {
       Upsert.snapshotChanges(spark, path, 1, 999, Seq("id"))
     }
   }
+
+  test("a malformed schema.map fails evolution loudly and is left as it was") {
+    // Read as empty, the map would be rewritten by the next declaration
+    // with only its own line, erasing every earlier evolution line.
+    import graft.ops.Upsert
+    val path = java.nio.file.Files.createTempDirectory("snapmap").toString
+    Upsert.writeSnapshot(spark, path,
+      Seq((1L, "a", 10L)).toDF("id", "v", "n"), Seq("id"), Seq("id"))
+    Upsert.renameColumn(spark, path, "v", "val")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val map = new org.apache.hadoop.fs.Path(path + "/_snapshots", "schema.map")
+    def text() = {
+      val in = fs.open(map)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    val malformed = text() + "\nrename"
+    val out = fs.create(map, true)
+    try out.write(malformed.getBytes("UTF-8")) finally out.close()
+    val e = intercept[java.io.IOException] {
+      Upsert.renameColumn(spark, path, "n", "count")
+    }
+    assert(e.getMessage.contains("schema.map"), e.getMessage)
+    assert(text() == malformed, "a failed declaration must not rewrite the map")
+  }
 }

@@ -700,8 +700,9 @@ class PropertySpec extends SparkSpec {
         if (rnd.nextBoolean()) trickyStrings(rnd.nextInt(trickyStrings.size))
         else rnd.alphanumeric.take(rnd.nextInt(8) + 1).mkString
       def randLong() = rnd.nextLong() % 1000000L
-      def randTs() = new java.sql.Timestamp(
-        math.abs(rnd.nextLong() % 4102444800000L)) // 1970..2100
+      // 1840..2100 at millisecond precision: pre-1970 instants with
+      // fractional seconds are where a truncating canon goes wrong.
+      def randTs() = new java.sql.Timestamp(rnd.nextLong() % 4102444800000L)
       def randDate() = java.sql.Date.valueOf(java.time.LocalDate
         .ofEpochDay(rnd.nextInt(60000).toLong - 10000))
       def run[T](mk: () => T)(implicit enc: org.apache.spark.sql.Encoder[(T, Int)],
@@ -761,8 +762,7 @@ class PropertySpec extends SparkSpec {
         if (rnd.nextBoolean()) trickyStrings(rnd.nextInt(trickyStrings.size))
         else rnd.alphanumeric.take(rnd.nextInt(8) + 1).mkString
       def randLong() = rnd.nextLong() % 1000000L
-      def randTs() = new java.sql.Timestamp(
-        math.abs(rnd.nextLong() % 4102444800000L))
+      def randTs() = new java.sql.Timestamp(rnd.nextLong() % 4102444800000L)
       def randDate() = java.sql.Date.valueOf(java.time.LocalDate
         .ofEpochDay(rnd.nextInt(60000).toLong - 10000))
       def run[T](mk: () => T)(implicit
@@ -786,6 +786,15 @@ class PropertySpec extends SparkSpec {
         assert(got == full,
           s"bounded read diverged for [$lo, $hi]: missing ${full -- got}, " +
             s"extra ${got -- full} (probed ${Upsert.lastProbedDirs.get()})")
+        // The same bounds as a Spark filter on the DSv2 relation: folded
+        // by the scan builder, admitted by the Batch scan.
+        val viaScan = spark.read.format("graft").load(path)
+          .filter(col("v").between(lo, hi)).select("k", "v")
+          .as[(Long, T)].collect().toSet
+        assert(viaScan == full,
+          s"DSv2 filtered read diverged for [$lo, $hi]: missing " +
+            s"${full -- viaScan}, extra ${viaScan -- full} " +
+            s"(admitted ${Upsert.lastProbedDirs.get()})")
       }
       run(() => randStr())
       run(() => randLong())
