@@ -1228,7 +1228,7 @@ object ExtQueries {
         new org.apache.hadoop.fs.Path(path, "batch-1")).getLength
       val v = graft.ops.Upsert.compactSnapshots(s, path,
         smallBytes = bigSize - 1)
-      val dirs = graft.ops.Upsert.manifestEntries(s, path, v).map(_.dir)
+      val dirs = graft.table.Protocol.manifestDirs(fs, path, v)
       require(dirs.sorted == List("batch-1", s"compact-$v"),
         s"optimize must pack the trickle dirs and carry the big one: $dirs")
       graft.ops.Upsert.readSnapshot(s, path, v).orderBy("doc_id")

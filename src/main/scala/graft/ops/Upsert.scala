@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.table.{KeyDomain, SnapLog}
+import graft.table.{KeyDomain, Protocol, SnapLog}
+import graft.table.Protocol.{SnapEntry, familyRoot, rewriteSeq, rootOf}
 import graft.table.KeyDomain.Ranges
 
 /** Thrown when a rewriter op (compaction, merge, erasure, vacuum) finds
@@ -144,93 +145,10 @@ object Upsert {
     log.get
   }
 
-  /** One manifest line: a data dir plus the DELETION VECTORS applied
-    * to it (merge-on-read tombstone dirs — parquet dirs of the dead
-    * rows' key columns, anti-joined at read). `dvs` is kept SORTED so
-    * two entries compare structurally: staleness checks ("is the base
-    * I read still the live content?") must see a dv added to a dir as
-    * a content change even though the dir name is unchanged.
-    * Line format: `dir` (the pre-MoR format, unchanged on disk for
-    * every dv-less sink) or `dir\tdv1,dv2`. */
-  private[graft] final case class SnapEntry(dir: String, dvs: Seq[String]) {
-    def line: String =
-      if (dvs.isEmpty) dir else s"$dir\t${dvs.mkString(",")}"
-  }
-
-  private def parseEntry(line: String): SnapEntry = {
-    val a = line.split("\t", 2)
-    if (a.length == 1 || a(1).isEmpty) SnapEntry(a(0), Nil)
-    else SnapEntry(a(0), a(1).split(",").toSeq.filter(_.nonEmpty).sorted)
-  }
-
+  /** The entries of published version `version` ([[Protocol.manifestEntries]]). */
   private[graft] def manifestEntries(spark: SparkSession, path: String,
-                                     version: Int): Seq[SnapEntry] = {
-    val fs = fsFor(spark, path)
-    val p = SnapLog.manifest(path, version)
-    require(fs.exists(p), s"no snapshot v$version at $path")
-    SnapLog.readLines(fs, p).filter(_.nonEmpty).map(parseEntry)
-  }
-
-  private def manifestDirs(spark: SparkSession, path: String,
-                           version: Int): Seq[String] =
-    manifestEntries(spark, path, version).map(_.dir)
-
-  /** dir name → the UNION of its dv sets across every published
-    * manifest. Reconciles and carry paths republish manifests from dir
-    * NAMES; reattaching the union keeps every published delete applied
-    * (dv files are immutable and per-dir, so union is monotone-safe:
-    * an extra dv on a dir can only remove rows its own merge already
-    * deleted there — same "deletes are never resurrected" rule the
-    * carry semantics document). Empty map for dv-less sinks. */
-  /** Per-manifest-FILE dv maps, keyed by (path, name:mtime:len):
-    * manifest files are immutable between repoints, so each file's dv
-    * map is computed once — a publish on a deep-history MoR sink opens
-    * only the manifests it has not seen (steady state: the one the
-    * previous publish wrote), not the whole chain per publish. */
-  private val manifestDvCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String),
-        Map[String, Seq[String]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String),
-            Map[String, Seq[String]]]): Boolean = size > 1024
-    })
-
-  private def dvUnionFor(spark: SparkSession,
-      path: String): Map[String, Seq[String]] = {
-    val fs = fsFor(spark, path)
-    // The `mor.on` marker: this sink has (ever) used merge-on-read. One
-    // exists-call lets every publish on the common dv-less sink skip
-    // the all-manifests scan.
-    if (!fs.exists(SnapLog.morMarker(path))) return Map.empty
-    val perFile = SnapLog.list(fs, path).manifests.flatMap { case (st, listV) =>
-      val n = st.getPath.getName
-      val key = (path, s"$n:${st.getModificationTime}:${st.getLen}")
-      val hit = manifestDvCache.get(key)
-      if (hit != null) Some(hit)
-      else try {
-        val m = manifestEntries(spark, path, listV)
-          .filter(_.dvs.nonEmpty)
-          .groupBy(_.dir)
-          .map { case (d, es) => d -> es.flatMap(_.dvs).distinct.sorted }
-        manifestDvCache.put(key, m)
-        Some(m)
-      } catch {
-        // ONLY a vanished file is skippable (expiry deleted a listed
-        // manifest under us — its dirs are dead history). Any OTHER
-        // failure must propagate and fail the publish: swallowing a
-        // transient read error here would publish carried dirs
-        // STRIPPED of their dv annotations — the resurrect-deletes
-        // failure class the mor.on marker is load-bearing against.
-        case _: java.io.FileNotFoundException => None
-        case e: IllegalArgumentException
-            if e.getMessage != null &&
-              e.getMessage.contains("no snapshot v") => None
-      }
-    }
-    perFile.flatten.groupBy(_._1)
-      .map { case (d, kvs) =>
-        d -> kvs.flatMap(_._2).distinct.sorted }
-  }
+      version: Int): Seq[SnapEntry] =
+    Protocol.manifestEntries(fsFor(spark, path), path, version)
 
   // ── sink-dir schemas ────────────────────────────────────────────
   // The one owner of "what schema does this sink dir have". Every read
@@ -450,6 +368,10 @@ object Upsert {
         sidecarSkipped("bloom", dirName, e) }
     } catch { case scala.util.control.NonFatal(e) =>
       sidecarSkipped("stats", dirName, e) }
+
+  /** A best-effort step that failed: logged, never thrown. */
+  private def skipped(what: String, e: Throwable): Unit =
+    log.warn(s"graft: skipped $what: $e")
 
   private def sidecarSkipped(what: String, dirName: String,
       e: Throwable): Unit =
@@ -736,7 +658,7 @@ object Upsert {
       // its merge — already-dead keys never re-enter a dv), so
       // dir − Σdv is the entry's exact live count. Any missing total
       // (dir or dv) degrades the ENTRY to a resolved scan-count.
-      val parts = (e.dir +: e.dvs).map(readDirRowCount(spark, path, _))
+      val parts = e.names.map(readDirRowCount(spark, path, _))
       if (parts.forall(_.isDefined))
         parts.head.get - parts.tail.map(_.get).sum
       else {
@@ -939,7 +861,8 @@ object Upsert {
       s"$cursorName.v$latest"), true).close()
     markers().filter(_._1 < latest).foreach { case (_, p) =>
       try cfs.delete(p, false)
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case scala.util.control.NonFatal(e) => skipped(
+        s"deleting old consumer cursor $p (the max-wins read ignores it)", e) }
     }
     latest
   }
@@ -1387,7 +1310,7 @@ object Upsert {
   private def emptyLogicalFrame(spark: SparkSession, path: String,
       version: Int): DataFrame = {
     val raw = dirsSchema(spark,
-      manifestDirs(spark, path, version).map(d => s"$path/$d"))
+      manifestEntries(spark, path, version).map(e => s"$path/${e.dir}"))
     applySchemaMap(spark, path, spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw))
   }
@@ -1559,270 +1482,6 @@ object Upsert {
     }
   }
 
-  // ── provenance ──────────────────────────────────────────────────
-  // Manifests are dir-name lists, but concurrency reasoning needs ROW
-  // provenance: which original batches a dir's rows descend from.
-  //   batch-N            → root batch-N (itself)
-  //   batch-N-r<k>       → root batch-N (a conflict-resolved REWRITE of
-  //                        batch-N's fresh rows, see reconcileLineage)
-  //   compact-N          → the roots it absorbed, recorded at compaction
-  //                        time in `_snapshots/compact-N.absorbed` (one
-  //                        root per line; the CLOSURE, so reading it
-  //                        never recurses)
-  // coverage(dirs) = union of provenance — "whose contributions does
-  // this lineage already carry". Reconciliation and the compaction
-  // carry diff COVERAGE, never dir names: a dir absorbed by a later
-  // compaction is still reachable, and a compacted base can never be
-  // re-included alongside its own compact dir (the r14 double-read
-  // hazards).
-
-  private[graft] def rootOf(dirName: String): String =
-    dirName.replaceFirst("-r\\d+$", "")
-
-  /** The version number of a dir's LAST rewrite suffix (`-r<v>` heal,
-    * `-m<v>` merge, `-e<v>` erasure), 0 for a pristine dir. Rewrite
-    * versions come from [[claimVersion]] so they are unique and
-    * strictly increase over time, and every rewrite reads the dir's
-    * THEN-CURRENT form — so among same-root, equal-provenance siblings
-    * (e.g. `batch-1-r5` vs `batch-1-r7` from two heal rounds whose
-    * intermediate manifests a crossed publish dropped), the HIGHER
-    * suffix is the newer line of truth: it already carries every yield/
-    * erase the lower one does. */
-  private[graft] def rewriteSeq(dirName: String): Int =
-    "-[rme](\\d+)$".r.findFirstMatchIn(dirName)
-      .map(_.group(1).toInt).getOrElse(0)
-
-  /** The ORIGINAL root a dir's name descends from, stripping EVERY
-    * trailing rewrite suffix, stacked included (`batch-1-m5-r7` →
-    * `batch-1`). [[rootOf]] strips only a final `-r` (it exists to
-    * derive name-based provenance and `-m`/`-e` rewrites carry explicit
-    * `.absorbed` records instead); FAMILY identity — "are these two
-    * dirs rewrites of the same line of truth?" — needs the full strip,
-    * or a heal rewrite (`batch-1-r3`) and a merge rewrite
-    * (`batch-1-m5`) of one root pass as unrelated and ride the same
-    * manifest together, publishing their shared keys twice. */
-  private[graft] def familyRoot(dirName: String): String = {
-    var d = dirName
-    var prev = ""
-    while (d != prev) { prev = d; d = d.replaceFirst("-[rme]\\d+$", "") }
-    d
-  }
-
-  /** Record `dirName`'s provenance explicitly: the roots whose rows it
-    * holds (a rewrite or compact dir's name does not parse to them). */
-  private def writeAbsorbed(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, dirName: String, roots: Set[String]): Unit =
-    SnapLog.writeText(fs, SnapLog.absorbed(path, dirName),
-      roots.toSeq.sorted.mkString("\n"))
-
-  private def provenance(spark: SparkSession, path: String,
-                         dirName: String): Set[String] = {
-    // Any dir may carry an explicit absorbed record (compact dirs
-    // always do; merge rewrites do too — their names don't parse to a
-    // root). A compact dir WITHOUT one (pre-provenance sinks) is its
-    // own opaque root — conservative: it can satisfy no other dir's
-    // reachability and is never skipped from a carry.
-    SnapLog.readLinesIfExists(fsFor(spark, path),
-        SnapLog.absorbed(path, dirName))
-      .map(_.filter(_.nonEmpty).toSet)
-      .getOrElse(
-        if (dirName.startsWith("compact-")) Set(dirName)
-        else Set(rootOf(dirName)))
-  }
-
-  private def coverage(spark: SparkSession, path: String,
-                       dirs: Seq[String]): Set[String] =
-    dirs.iterator.flatMap(d => provenance(spark, path, d)).toSet
-
-  // ── rewrite generation ──────────────────────────────────────────
-  // Content-CHANGING rewrites (merge U/D, erasure, a reconcile heal
-  // that yields keys) are invisible to name-based delta reasoning once
-  // a later compaction absorbs the renamed dirs — so each one drops a
-  // `gen-<version>.touch` marker (version from claimVersion → unique,
-  // race-free without a counter file). Incremental consumers
-  // ([[refreshAggregate]]) record the generation fingerprint they saw;
-  // a changed fingerprint means counted rows were mutated and the only
-  // safe refresh is a recompute. Compaction does NOT touch a marker:
-  // it is content-preserving by construction.
-
-  private def touchRewriteGen(spark: SparkSession, path: String,
-      version: Int): Unit = {
-    // NOT best-effort: this marker is the sole signal that routes
-    // incremental consumers to a recompute after a content rewrite — a
-    // swallowed failure here lets the next refresh double-count the
-    // rewritten rows (or retain an erased subject's sums) silently.
-    // Failing the whole op is the cheap, honest outcome: the caller
-    // retries and no reader ever saw a lie.
-    SnapLog.writeText(fsFor(spark, path),
-      SnapLog.rewriteGenMarker(path, version), "")
-  }
-
-  /** (count, max version) of one kind of generation marker — the ONE
-    * fingerprint body behind [[rewriteGen]] and [[eraseGen]]: markers
-    * are only ever added with unique versions, so any new marker
-    * changes the pair. */
-  private def genFingerprint(spark: SparkSession, path: String,
-      gens: SnapLog.Listing => Seq[Int]): String =
-    SnapLog.listIfSink(fsFor(spark, path), path).map(gens) match {
-      case Some(vs) => s"${vs.size}:${vs.foldLeft(0)(math.max)}"
-      case None => "0:0"
-    }
-
-  /** Fingerprint of the content-rewrite history (merge/heal/erase). */
-  private[graft] def rewriteGen(spark: SparkSession, path: String): String =
-    genFingerprint(spark, path, _.rewriteGens)
-
-  /** Fingerprint of the IN-PLACE history edits only — `erase-*.touch`
-    * markers stamped by [[eraseKeys]] commits. The change feed is exact
-    * across merges/compactions/heals (they publish NEW versions and
-    * never alter an existing manifest's content), so a feed-driven
-    * consumer must NOT recompute on every merge the way name-based
-    * delta readers do ([[rewriteGen]]); erasure is the one op that
-    * rewrites BOTH of a span's endpoints in place — the erased rows
-    * vanish from both sides and the diff can never emit their deletes.
-    * This narrower fingerprint is what feed consumers pin. */
-  private[graft] def eraseGen(spark: SparkSession, path: String): String =
-    genFingerprint(spark, path, _.eraseGens)
-
-  /** Claim version number `latest+1` by CREATE-EXCLUSIVE of a
-    * `v<N>.claim` marker: the optimistic-concurrency step that stops
-    * two writers publishing the same version number. On collision the
-    * loser re-reads the latest version (published OR claimed) and
-    * claims the next slot — so two writers racing for v2 publish v2
-    * and v3, never v2 twice. A crashed claimant leaves an orphaned
-    * claim file; its version number is simply skipped (version numbers
-    * are dense only absent crashes — `latestVersion` counts published
-    * manifests, so readers never see the hole), and [[expireSnapshots]]
-    * sweeps claims the protocol has provably passed. */
-  private def claimVersion(spark: SparkSession, path: String): Int = {
-    val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
-    var attempts = 0
-    while (attempts < 1000) {
-      // One listing answers both: the latest version, published OR
-      // claimed.
-      val log = SnapLog.list(fs, path)
-      val target = math.max(log.latest, log.claims.foldLeft(0)(math.max)) + 1
-      val marker = SnapLog.claim(path, target)
-      try {
-        SnapLog.createExclusive(fs, marker)
-        return target
-      } catch {
-        // Only a LOST RACE retries. java.nio and Hadoop each signal it
-        // with their own FileAlreadyExistsException; some HDFS paths
-        // surface it as a bare IOException, distinguishable by the
-        // marker now existing. Anything else (permission denied,
-        // connectivity) is a real failure — rethrowing immediately
-        // beats spinning 1000 list+create loops into a misleading
-        // "writer storm" report.
-        case _: java.nio.file.FileAlreadyExistsException => attempts += 1
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => attempts += 1
-        case e: java.io.IOException =>
-          if (fs.exists(marker)) attempts += 1 else throw e
-      }
-    }
-    throw new IllegalStateException(
-      s"claimVersion: could not claim a snapshot version at $path after " +
-        "1000 attempts — writer storm or a filesystem refusing exclusive create")
-  }
-
-  /** Mark claim `v` SPENT: its owner will never publish that version
-    * (an erase epoch is only a name source). The marker stays — it
-    * keeps the number unique — but turns non-empty, which the erase's
-    * claim wait reads as "no appender behind this claim" (an appender's
-    * claim stays empty until its publish deletes it). */
-  private def retireClaim(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, v: Int): Unit =
-    SnapLog.writeText(fs, SnapLog.claim(path, v), "spent")
-
-  /** Post-publish LINEAGE reconciliation — the second half of the
-    * optimistic protocol. The hazard: W1 claims v2, W2 claims v3, both
-    * chain off v1; W2 publishes v3 = [b1, b3] first, W1 then publishes
-    * v2 = [b1, b2] — every FUTURE writer chains off v3 (the latest
-    * manifest) and batch-2 silently leaves the lineage despite W1's
-    * "successful" write. So after publishing, a writer verifies its
-    * CONTRIBUTION is reachable from the latest manifest — by COVERAGE
-    * (root provenance), not dir name, so a dir absorbed into a later
-    * compact-* counts as reachable and is never re-published on top of
-    * the compaction that already carries its rows (the r14 duplication
-    * hazard). If an interleaved publish orphaned it, the writer
-    * re-claims a fresh (higher) version and republishes on top of the
-    * latest lineage — converging because claims strictly increase.
-    * Each intermediate version stays a readable, self-consistent
-    * snapshot.
-    *
-    * KEY-LEVEL conflict resolution: both racers anti-joined against
-    * the version published at THEIR claim time, so the latest lineage
-    * may hold keys our batch also claims — appending the dir verbatim
-    * would duplicate them. Before republishing, the batch's rows are
-    * anti-joined against the FOREIGN dirs of the latest lineage (dirs
-    * whose provenance the writer's base chain did not cover); if any
-    * key was stolen, the surviving rows land in an immutable REWRITE
-    * dir `<root>-r<version>` (the original dir stays untouched — its
-    * own published version remains a self-consistent snapshot) and the
-    * rewrite is what joins the lineage. Keep-existing therefore holds
-    * per KEY under concurrency; which racer "existed first" is decided
-    * by reconciliation order, not wall clock. */
-  /** Published versions in `(baseVersion, latest]` whose dirs the
-    * latest manifest's coverage has DROPPED. Coverage is monotone by
-    * design (compaction absorbs, rewrites keep roots, erasure repoints
-    * every manifest), so a non-empty result means a CROSSED publish: a
-    * writer chained its manifest from a base that predates another
-    * writer's already-published version — the other side of the TOCTOU
-    * this module's reconciles exist for. Both writers can pass a naive
-    * "am I latest / am I reachable" check in that interleaving (each
-    * was latest for a moment), so every reconcile must ALSO sweep its
-    * own window for dropped thirds and carry them forward. */
-  private def droppedPublished(spark: SparkSession, path: String,
-      baseVersion: Int, latest: Int,
-      latestCov: Set[String]): Seq[String] = {
-    val fs = fsFor(spark, path)
-    // Dirs of every DROPPED VERSION — the full manifest of any window
-    // version holding an uncovered dir, not just the uncovered dirs
-    // themselves. A dropped version is internally consistent (a merge
-    // publishes its rewrites NEXT TO its merge dir); cherry-picking
-    // only its uncovered dirs can pair a merge dir with the PRE-merge
-    // original from the latest chain, resurrecting deleted keys. The
-    // caller collapses the union with [[collapseShadows]].
-    ((baseVersion + 1) to latest)
-      .filter(v => fs.exists(SnapLog.manifest(path, v)))
-      .map(v => manifestDirs(spark, path, v))
-      .filter(_.exists(d =>
-        !provenance(spark, path, d).subsetOf(latestCov)))
-      .flatten.distinct
-  }
-
-  /** Collapse a carry set to one dir per line of truth: an original is
-    * SHADOWED by its own rewrite (`<dir>-r/m/e...` — name-prefixed,
-    * same root, strictly newer row truth: rewrites only ever yield or
-    * erase rows) and an absorbed dir is shadowed by a dir whose
-    * provenance strictly contains it (compaction) or by a compact dir
-    * with equal provenance (single-batch compaction). Publishing an
-    * original NEXT TO its rewrite would resurrect every yielded/erased
-    * key — the carry paths must never do it. */
-  private[graft] def collapseShadows(spark: SparkSession, path: String,
-      dirs: Seq[String]): Seq[String] = {
-    val distinct = dirs.distinct
-    val prov = distinct.map(d => d -> provenance(spark, path, d)).toMap
-    distinct.filterNot { d =>
-      distinct.exists { e =>
-        e != d && prov(d).subsetOf(prov(e)) && (
-          prov(e) != prov(d) ||               // strict superset: absorbed
-          e.startsWith(d + "-") ||            // my own rewrite
-          (e.startsWith("compact-") && !d.startsWith("compact-")) ||
-          // SIBLING rewrites of one FAMILY root (batch-1-r5 vs
-          // batch-1-r7, or batch-1-r3 vs batch-1-m5: equal provenance,
-          // neither name-prefixes the other — two rewrite lines
-          // re-attached by a dropped-manifest carry). The higher
-          // claim-version suffix is the newer truth ([[rewriteSeq]] —
-          // every rewrite reads the then-current form); keeping both
-          // would publish the same keys twice and resurrect rows the
-          // newer rewrite yielded or deleted.
-          (familyRoot(e) == familyRoot(d) && rewriteSeq(e) > rewriteSeq(d)))
-      }
-    }
-  }
-
   /** Deterministic key-conflict HEALING among CARRIED dirs — closes
     * the crossed-publish residual the r15 design documented as "needs
     * a commit log": when a reconcile's dropped-version sweep
@@ -1847,11 +1506,12 @@ object Upsert {
     // Merge-on-read sinks: carried dirs read through their dv union —
     // a dv-dead key must neither force a yield (lost insert) nor ride
     // into a heal rewrite (resurrected delete; the rewrite FOLDS dvs).
-    val dvs = dvUnionFor(spark, path)
+    val fs = fsFor(spark, path)
+    val dvs = Protocol.dvUnionFor(fs, path)
     def dvRead(d: String) = antiDv(spark, path,
       readDirs(spark, Seq(s"$path/$d")), dvs.getOrElse(d, Nil))
     def selfRooted(d: String) =
-      provenance(spark, path, d) == Set(familyRoot(d))
+      Protocol.provenance(fs, path, d) == Set(familyRoot(d))
     def rootNum(d: String): Long =
       "(\\d+)$".r.findFirstIn(familyRoot(d)).map(_.toLong)
         .getOrElse(Long.MaxValue)
@@ -1882,9 +1542,8 @@ object Upsert {
             writeDirWithStats(spark, path, rw,
               bDf.join(eKeys, keys, "left_anti"), keys,
               keyBound = readDirRowCount(spark, path, bCur))
-            writeAbsorbed(fsFor(spark, path), path, rw,
-              provenance(spark, path, b))
-            touchRewriteGen(spark, path, version)
+            Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, b))
+            Protocol.touchRewriteGen(fs, path, version)
             current(b) = rw
           }
         }
@@ -1893,6 +1552,34 @@ object Upsert {
     union.map(current)
   }
 
+  /** Post-publish LINEAGE reconciliation — the second half of the
+    * optimistic protocol. The hazard: W1 claims v2, W2 claims v3, both
+    * chain off v1; W2 publishes v3 = [b1, b3] first, W1 then publishes
+    * v2 = [b1, b2] — every FUTURE writer chains off v3 (the latest
+    * manifest) and batch-2 silently leaves the lineage despite W1's
+    * "successful" write. So after publishing, a writer verifies its
+    * CONTRIBUTION is reachable from the latest manifest — by COVERAGE
+    * (root provenance), not dir name, so a dir absorbed into a later
+    * compact-* counts as reachable and is never re-published on top of
+    * the compaction that already carries its rows (the r14 duplication
+    * hazard). If an interleaved publish orphaned it, the writer
+    * re-claims a fresh (higher) version and republishes on top of the
+    * latest lineage — converging because claims strictly increase.
+    * Each intermediate version stays a readable, self-consistent
+    * snapshot.
+    *
+    * KEY-LEVEL conflict resolution: both racers anti-joined against
+    * the version published at THEIR claim time, so the latest lineage
+    * may hold keys our batch also claims — appending the dir verbatim
+    * would duplicate them. Before republishing, the batch's rows are
+    * anti-joined against the FOREIGN dirs of the latest lineage (dirs
+    * whose provenance the writer's base chain did not cover); if any
+    * key was stolen, the surviving rows land in an immutable REWRITE
+    * dir `<root>-r<version>` (the original dir stays untouched — its
+    * own published version remains a self-consistent snapshot) and the
+    * rewrite is what joins the lineage. Keep-existing therefore holds
+    * per KEY under concurrency; which racer "existed first" is decided
+    * by reconciliation order, not wall clock. */
   /** Post-publish reconciliation for any SELF-ROOTED dir (a writer's
     * batch dir or a merge's merge dir; compaction has its own variant
     * since a compact dir's provenance never names itself).
@@ -1901,7 +1588,7 @@ object Upsert {
     * dropped PUBLISHED versions, and if either our root is off the
     * chain or a dropped version exists, republish the shadow-collapsed
     * union — one dir per line of truth, rewrites over originals
-    * ([[collapseShadows]]), so a carried merge/rewrite version never
+    * ([[Protocol.collapseShadows]]), so a carried merge/rewrite version never
     * rides next to the pre-rewrite original (that would resurrect
     * yielded/deleted keys). Key conflicts resolve deterministically:
     * rival dirs (roots our base never saw) win, OUR dir yields via a
@@ -1916,21 +1603,19 @@ object Upsert {
       baseCoverage: Set[String],
       schema: org.apache.spark.sql.types.StructType,
       baseVersion: Int): Int = {
+    val fs = fsFor(spark, path)
     var known = baseCoverage + rootOf(dirName)
     var version = published
     var curDir = dirName
     var attempts = 0
     while (attempts < 100) {
-      val latest = latestVersion(spark, path)
-      val latestDirs = manifestDirs(spark, path, latest)
-      val latestCov = coverage(spark, path, latestDirs)
-      val dropped = droppedPublished(spark, path, baseVersion, latest,
-        latestCov)
-      if (latestCov.contains(rootOf(dirName)) && dropped.isEmpty)
+      val w = Protocol.window(fs, path, baseVersion)
+      val dropped = w.dropped
+      if (w.coverage.contains(rootOf(dirName)) && dropped.isEmpty)
         return version
-      version = claimVersion(spark, path)
-      val union0 = collapseShadows(spark, path,
-        latestDirs ++ dropped ++ Seq(curDir))
+      version = Protocol.claimVersion(fs, path)
+      val union0 = Protocol.collapseShadows(fs, path,
+        w.dirs ++ dropped ++ Seq(curDir))
       // Crossed-publish healing: re-attached dirs from a dropped
       // version may conflict with EACH OTHER (both writers exited) —
       // the carrier resolves those pairs deterministically by claim
@@ -1952,7 +1637,7 @@ object Upsert {
       val ownDir = if (sameRoot.isEmpty) curDir
                    else sameRoot.maxBy(rewriteSeq)
       val rivals = union.filter(d => familyRoot(d) != familyRoot(dirName) &&
-        provenance(spark, path, d).exists(r => !known.contains(r)))
+        Protocol.provenance(fs, path, d).exists(r => !known.contains(r)))
       val nextDir =
         if (rivals.isEmpty) ownDir
         else {
@@ -1961,7 +1646,7 @@ object Upsert {
           // dir FOLDS the dvs (republishing dead rows under the new
           // name would resurrect them — the rename sheds the entry's
           // dv annotation).
-          val dvs = dvUnionFor(spark, path)
+          val dvs = Protocol.dvUnionFor(fs, path)
           val own = antiDv(spark, path,
             spark.read.schema(schema).parquet(s"$path/$ownDir"),
             dvs.getOrElse(ownDir, Nil))
@@ -1979,14 +1664,14 @@ object Upsert {
               keyBound = readDirRowCount(spark, path, ownDir))
             // The heal yields keys a reader may already have counted —
             // a content-changing rewrite for delta-purity purposes.
-            touchRewriteGen(spark, path, version)
+            Protocol.touchRewriteGen(fs, path, version)
             rw
           }
         }
       // Accumulate resolved provenance: already-resolved rivals must
       // not be re-read and re-anti-joined on the next iteration.
-      known = known ++ rivals.flatMap(d => provenance(spark, path, d))
-      publishManifest(spark, path, version,
+      known = known ++ rivals.flatMap(d => Protocol.provenance(fs, path, d))
+      Protocol.publishDirs(fs, path, version,
         union.filterNot(d => familyRoot(d) == familyRoot(dirName)) :+ nextDir)
       curDir = nextDir
       attempts += 1
@@ -2057,7 +1742,7 @@ object Upsert {
   }
 
   /** Publish the batch as snapshot latest+1 (version number claimed via
-    * [[claimVersion]] — two writers can never publish the same
+    * [[Protocol.claimVersion]] — two writers can never publish the same
     * version): fresh rows (within-batch dedup + probe-PRUNED anti-join
     * against the CURRENT snapshot, [[freshAgainstSnapshotDirs]]) land
     * in an immutable `batch-N` dir; the manifest
@@ -2097,7 +1782,8 @@ object Upsert {
       fresh0Profile: Option[(Long, Map[String, (Long, Array[String])])] =
         None): Int =
       labeled(spark, "graft.publish") {
-    val target = claimVersion(spark, path)
+    val fs = fsFor(spark, path)
+    val target = Protocol.claimVersion(fs, path)
     val cur = latestVersion(spark, path)
     val baseEntries = if (cur == 0) Seq.empty[SnapEntry]
                       else manifestEntries(spark, path, cur)
@@ -2121,20 +1807,20 @@ object Upsert {
       keyBound = batchKeys,
       dirProfile = if (fresh0Ok) fresh0Profile else None)
     recordKeyCols(spark, path, keys)
-    publishManifest(spark, path, target, baseDirs :+ dirName)
+    Protocol.publishDirs(fs, path, target, baseDirs :+ dirName)
     val rv = reconcileLineage(spark, path, target, dirName, keys,
-      coverage(spark, path, baseDirs), fresh.schema, baseVersion = cur)
+      Protocol.coverage(fs, path, baseDirs), fresh.schema, baseVersion = cur)
     // Change record (append kind): the batch dir IS the version's I
     // set, so the record is one small meta file. Written only when the
     // publish landed EXACTLY as base + our dir (no heal, no carry, no
     // interleaver) — otherwise the feed's key-diff stays the truth.
     try {
       if (rv == target && !fresh.columns.exists(ChangeRecCols) &&
-          manifestDirs(spark, path, rv).sorted ==
+          Protocol.manifestDirs(fs, path, rv).sorted ==
             (baseDirs :+ dirName).sorted)
-        writeChangeMeta(fsFor(spark, path), path, rv, "append", cur,
-          Some(dirName))
-    } catch { case scala.util.control.NonFatal(_) => () }
+        writeChangeMeta(fs, path, rv, "append", cur, Some(dirName))
+    } catch { case scala.util.control.NonFatal(e) => skipped(
+      s"append change record of v$rv at $path (the feed key-diffs it)", e) }
     rv
   }
 
@@ -2300,7 +1986,8 @@ object Upsert {
           s"${java.net.URLEncoder.encode(c, "UTF-8")}\t$nulls\t${fps.mkString(",")}"
       }
       SnapLog.writeText(fs, target, lines.mkString("\n"))
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) => skipped(
+      s"writing profile sidecar $target (re-profiled on demand)", e) }
 
   private def readProfileFile(fs: org.apache.hadoop.fs.FileSystem,
       target: org.apache.hadoop.fs.Path)
@@ -2315,7 +2002,11 @@ object Upsert {
         java.net.URLDecoder.decode(parts(0), "UTF-8") ->
           ((parts(1).toLong, fps))
       }.toMap))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      case _: java.io.FileNotFoundException => None
+      case scala.util.control.NonFatal(e) =>
+        skipped(s"reading profile sidecar $target (re-profiled)", e); None
+    }
 
   /** Test/ops audit of the last [[writeSnapshotGated]] gate evaluation:
     * `"maintained"` (every manifest dir had a profile sidecar — zero
@@ -2364,7 +2055,8 @@ object Upsert {
     // the gate never re-reads published data.
     try { if (!fs.exists(SnapLog.gateMarker(path)))
       SnapLog.writeText(fs, SnapLog.gateMarker(path), "")
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) => skipped(
+      s"writing the gate.on marker of $path (dirs get no profile)", e) }
     requireLiveKeys(spark, path, keys, "writeSnapshotGated")
     val cur = latestVersion(spark, path)
     val deduped = dedupOnKey(normalizeBatch(spark, path, batch),
@@ -2419,73 +2111,10 @@ object Upsert {
       fresh0Profile = freshProfile)
   }
 
-  /** Name-based publish: each carried dir REATTACHES the union of its
-    * published dv sets ([[dvUnionFor]] — one exists-call on dv-less
-    * sinks), so reconcile/carry paths that reason in dir names never
-    * drop a merge-on-read delete; dirs new to every manifest (fresh
-    * batches, rewrites — which FOLD their base's dvs physically) get
-    * none. Publishers attaching a BRAND-NEW dv use the entries form. */
-  private def publishManifest(spark: SparkSession, path: String,
-                              version: Int, dirs: Seq[String]): Unit = {
-    val dvs = dvUnionFor(spark, path)
-    publishManifestEntries(spark, path, version,
-      dirs.map(d => SnapEntry(d, dvs.getOrElse(d, Nil))))
-  }
-
-  /** The ONE manifest writer, behind publishes (a new version) and
-    * erase's repoints (`replace`, an existing version in place). */
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, version: Int, entries: Seq[SnapEntry],
-      replace: Boolean): Boolean =
-    SnapLog.install(fs, SnapLog.manifest(path, version),
-      entries.map(_.line).mkString("\n"), replace)
-
-  private def publishManifestEntries(spark: SparkSession, path: String,
-      version: Int, entries: Seq[SnapEntry]): Unit = {
-    val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
-    // rename is the atomic-publish step; a false return (destination
-    // exists, permission lost, or an object store whose "rename" is a
-    // non-atomic copy that failed) would otherwise let writeSnapshot
-    // report a version whose manifest never appeared — readers of that
-    // version would then fail despite a "successful" write. Throw
-    // instead: the tmp file and batch dir are orphans the next
-    // successful publish ignores. (On object stores without atomic
-    // rename — S3 — front this sink with an HDFS/consistent-rename
-    // layer or swap publishManifest for a conditional PUT.)
-    if (!writeManifest(fs, path, version, entries, replace = false))
-      throw new java.io.IOException(
-        s"publishManifest: atomic rename to " +
-          s"${SnapLog.manifest(path, version).getName} failed at $path — " +
-          "snapshot NOT published (manifest tmp left for inspection)")
-    // Publish timestamp sidecar for AS-OF time travel. Best-effort and
-    // written AFTER the rename: a crash in between leaves a published
-    // version without a .meta, which [[publishedAtMs]] answers with the
-    // manifest file's modification time (close enough for a resolver
-    // whose contract is "latest version published at or before ts").
-    // The sidecar — not mtime — is the primary source because in-place
-    // manifest repoints (eraseKeys) refresh mtime but preserve .meta.
-    try SnapLog.writeText(fs, SnapLog.publishStamp(path, version),
-      System.currentTimeMillis().toString)
-    catch { case scala.util.control.NonFatal(_) => () }
-    // The claim marker has served its purpose once the manifest exists;
-    // best-effort cleanup (an orphaned marker is harmless — claimVersion
-    // skips past it).
-    fs.delete(SnapLog.claim(path, version), false)
-  }
-
-  /** Wall-clock publish time (epoch millis) of snapshot `version`: the
-    * `v<N>.meta` sidecar stamped at publish, or the manifest file's
-    * modification time for pre-.meta sinks. */
-  def publishedAtMs(spark: SparkSession, path: String, version: Int): Long = {
-    val fs = fsFor(spark, path)
-    SnapLog.readTextIfExists(fs, SnapLog.publishStamp(path, version))
-      .map(_.trim.toLong).getOrElse {
-        val list = SnapLog.manifest(path, version)
-        require(fs.exists(list), s"no snapshot v$version at $path")
-        fs.getFileStatus(list).getModificationTime
-      }
-  }
+  /** Wall-clock publish time (epoch millis) of snapshot `version`
+    * ([[Protocol.publishedAtMs]]). */
+  def publishedAtMs(spark: SparkSession, path: String, version: Int): Long =
+    Protocol.publishedAtMs(fsFor(spark, path), path, version)
 
   /** The snapshot version a reader at wall-clock `tsMs` would have seen
     * as latest: the HIGHEST version whose publish time is ≤ tsMs.
@@ -2495,12 +2124,17 @@ object Upsert {
     * answer is the max version that existed then. Throws when nothing
     * was published by `tsMs`. */
   def versionAsOf(spark: SparkSession, path: String, tsMs: Long): Int = {
-    val at = sinkListing(spark, path).versions
-      .filter(v => publishedAtMs(spark, path, v) <= tsMs)
+    val at = latestAt(spark, path, tsMs)
     require(at.nonEmpty,
       s"no snapshot published at or before epoch-ms $tsMs at $path")
-    at.max
+    at.get
   }
+
+  /** The highest version published at or before `tsMs`, if any. */
+  private def latestAt(spark: SparkSession, path: String,
+      tsMs: Long): Option[Int] =
+    sinkListing(spark, path).versions
+      .filter(v => publishedAtMs(spark, path, v) <= tsMs).maxOption
 
   /** Time travel by TIMESTAMP: the sink exactly as a reader at epoch-ms
     * `tsMs` saw it — `readSnapshot` of [[versionAsOf]]. */
@@ -2594,15 +2228,9 @@ object Upsert {
       labeled(spark, "graft.compact") {
     val fs = fsFor(spark, path)
     fs.mkdirs(SnapLog.snapDir(path))
-    var attempts = 0
-    while (attempts < 5) {
-      // Advisory fail-fast (not the protection — the post-lock
-      // staleness check is): a rewriter holding the lock RIGHT NOW is
-      // about to invalidate whatever we'd pack, so don't burn a rewrite
-      // on it. Racy by nature; a collision that slips through just
-      // costs one stale-retry.
-      if (SnapLog.rewriterActive(fs, path))
-        throw SnapLog.lockHeld("compactSnapshots", path, null)
+    Protocol.attempts(fs, path, "compactSnapshots",
+        s"compactSnapshots: packed dirs rewritten under us 5 times at " +
+          s"$path — rewriter storm; retry when merges/erasures quiesce") {
       val cur = latestVersion(spark, path)
       require(cur >= 1, "nothing to compact: no published snapshot")
       val baseEntries = manifestEntries(spark, path, cur)
@@ -2613,58 +2241,53 @@ object Upsert {
             .getLength <= smallBytes
         }
       val full = packedEntries.size == baseEntries.size
-      if (!full && packedEntries.size < 2) return cur
-      val packed = packedEntries.map(_.dir)
-      val absorbed = coverage(spark, path, packed)
-      // Same claim discipline as writeSnapshot: a compactor racing a
-      // writer must not reuse the writer's version number, and the dir
-      // name is unique across racing compactors before either locks.
-      val target = claimVersion(spark, path)
-      val dirName = s"compact-$target"
-      val statKeys = recordedKeyCols(spark, path)
-      val rows =
-        if (full) readSnapshot(spark, path, cur)
-        else readEntriesRaw(spark, path, packedEntries)
-      writeDirWithStats(spark, path, dirName,
-        if (zOrderBy.nonEmpty) zOrderLayout(rows, zOrderBy, zBits, zShards)
-        else keySortedForFooters(rows, statKeys),
-        statKeys)
-      // Provenance BEFORE the manifest publish: a manifest referencing
-      // a compact dir must never be readable without its absorbed set
-      // (reconciliation reasons over it).
-      writeAbsorbed(fs, path, dirName, absorbed)
-      compactPreLockHook()
-      val published = SnapLog.withRewriterLock(fs, path, "compactSnapshots",
-          () => SnapLog.dropDir(fs, path, dirName)) {
-        val latestNow = latestVersion(spark, path)
-        val latestEntries = manifestEntries(spark, path, latestNow)
-        val latestDirs = latestEntries.map(_.dir)
-        // Entry-level: a dv added to a packed dir is a content change.
-        if (!packedEntries.forall(latestEntries.contains)) None
-        else {
+      if (!full && packedEntries.size < 2) Some(cur)
+      else {
+        val packed = packedEntries.map(_.dir)
+        val absorbed = Protocol.coverage(fs, path, packed)
+        // Same claim discipline as writeSnapshot: a compactor racing a
+        // writer must not reuse the writer's version number, and the dir
+        // name is unique across racing compactors before either locks.
+        val target = Protocol.claimVersion(fs, path)
+        val dirName = s"compact-$target"
+        val statKeys = recordedKeyCols(spark, path)
+        val rows =
+          if (full) readSnapshot(spark, path, cur)
+          else readEntriesRaw(spark, path, packedEntries)
+        writeDirWithStats(spark, path, dirName,
+          if (zOrderBy.nonEmpty) zOrderLayout(rows, zOrderBy, zBits, zShards)
+          else keySortedForFooters(rows, statKeys),
+          statKeys)
+        // Provenance BEFORE the manifest publish: a manifest referencing
+        // a compact dir must never be readable without its absorbed set
+        // (reconciliation reasons over it).
+        Protocol.writeAbsorbed(fs, path, dirName, absorbed)
+        compactPreLockHook()
+        // Stale: a rewriter (merge/erasure/another compactor) replaced
+        // part of what we packed; the orphan is dropped and we retry.
+        Protocol.commitOver(fs, path, "compactSnapshots", packedEntries,
+            () => SnapLog.dropDir(fs, path, dirName)) {
+            (latestNow, latestEntries) =>
           // Carry from the LATEST manifest. A full pack carries the
           // dirs a writer published since `cur` whose provenance the
           // pack does not cover (sequential compact-then-write content;
           // the writers' own reconcileLineage covers the inverse
           // order). A partial pack carries every dir it did not pack —
           // large base dirs, appends, even rewrites of large dirs.
+          val latestDirs = latestEntries.map(_.dir)
           val carry =
             if (full) latestDirs
-              .filterNot(d => provenance(spark, path, d).subsetOf(absorbed))
+              .filterNot(d => Protocol.provenance(fs, path, d).subsetOf(absorbed))
             else latestDirs.filterNot(packed.contains)
           carry.foreach { d =>
-            val p = provenance(spark, path, d)
+            val p = Protocol.provenance(fs, path, d)
             if (p.exists(absorbed)) throw new IllegalStateException(
               s"compactSnapshots: carried dir $d partially overlaps " +
                 s"the packed set (${p.filter(absorbed)}) — concurrent " +
                 "compaction artifacts; resolve manually")
           }
-          // Publish strictly above whatever is latest: re-claim when a
-          // writer published past our pre-rewrite claim (readers take
-          // the max version as "current").
-          val pubV = if (latestNow >= target) claimVersion(spark, path)
-                     else target
-          publishManifest(spark, path, pubV, dirName +: carry)
+          val pubV = Protocol.claimAbove(fs, path, target, latestNow)
+          Protocol.publishDirs(fs, path, pubV, dirName +: carry)
           val rv = reconcileCompact(spark, path, pubV, dirName, absorbed,
             baseVersion = cur)
           // Change record (none kind): this version's content equals
@@ -2674,18 +2297,10 @@ object Upsert {
           if (rv == pubV && latestDirs.forall(d =>
               packed.contains(d) || carry.contains(d)))
             writeChangeMeta(fs, path, rv, "none", latestNow, None)
-          Some(rv)
+          rv
         }
       }
-      if (published.nonEmpty) return published.get
-      // Stale: a rewriter (merge/erasure/another compactor) replaced
-      // part of what we packed. Drop the orphan and retry.
-      SnapLog.dropDir(fs, path, dirName)
-      attempts += 1
     }
-    throw new IllegalStateException(
-      s"compactSnapshots: packed dirs rewritten under us 5 times at " +
-        s"$path — rewriter storm; retry when merges/erasures quiesce")
   }
 
   /** The Morton layout of [[compactSnapshots]]' `zOrderBy`. */
@@ -2719,38 +2334,37 @@ object Upsert {
   private def reconcileCompact(spark: SparkSession, path: String,
       published: Int, dirName: String, absorbed: Set[String],
       baseVersion: Int): Int = {
+    val fs = fsFor(spark, path)
     var version = published
     var attempts = 0
     while (attempts < 100) {
-      val latest = latestVersion(spark, path)
-      val latestDirs = manifestDirs(spark, path, latest)
-      val latestCov = coverage(spark, path, latestDirs)
+      val w = Protocol.window(fs, path, baseVersion)
+      val latestDirs = w.dirs
       // Crossed-publish sweep: an appender that published between this
       // compactor's interleaved scan and its manifest rename is in
       // neither the compacted base nor the carry — and its own
       // reconcile may have exited while IT was momentarily latest.
-      val dropped = droppedPublished(spark, path, baseVersion, latest,
-        latestCov).filterNot(d => provenance(spark, path, d)
+      val dropped = w.dropped.filterNot(d => Protocol.provenance(fs, path, d)
           .subsetOf(absorbed))
       // Name check, not coverage: a compact dir's provenance is its
       // ABSORBED set (never itself), and no other compactor can absorb
       // it while this one still holds the lock.
       if (latestDirs.contains(dirName) && dropped.isEmpty) return version
-      version = claimVersion(spark, path)
+      version = Protocol.claimVersion(fs, path)
       // Shadow-collapse the union so a carried original never rides
       // next to its own rewrite; the absorbed-set filter then removes
       // whatever the compact dir itself already carries. Crossed
       // re-attachments heal by claim order like the writer reconcile —
       // the compactor may be the only carrier that ever sees both
       // sides of the cross.
-      val carry0 = collapseShadows(spark, path, latestDirs ++ dropped)
+      val carry0 = Protocol.collapseShadows(fs, path, latestDirs ++ dropped)
         .filterNot(d => d == dirName ||
-          provenance(spark, path, d).subsetOf(absorbed))
+          Protocol.provenance(fs, path, d).subsetOf(absorbed))
       val carry =
         if (dropped.isEmpty) carry0
         else resolveCarriedConflicts(spark, path, carry0, dropped.toSet,
           dirName, recordedKeyCols(spark, path), version)
-      publishManifest(spark, path, version, dirName +: carry)
+      Protocol.publishDirs(fs, path, version, dirName +: carry)
       attempts += 1
     }
     throw new IllegalStateException(
@@ -2925,38 +2539,23 @@ object Upsert {
       if (!fs.exists(SnapLog.morMarker(path)))
         SnapLog.writeText(fs, SnapLog.morMarker(path), "")
     }
-    // The critical section covers ONLY staleness re-validation +
-    // publish — metadata ops, the discipline compaction adopted in r16.
     // Every data rewrite (touched-dir copies, the landing write — the
     // hours-long part when a merge hits a large dir at 100 TB) runs
-    // LOCK-FREE into claim-named paths: holding the lock across it
-    // serialized every other merge, compaction, and streaming CDC batch
-    // behind the slowest rewrite in the sink. Staleness check under the
-    // lock: dirs are immutable and every rewriter REPLACES the dirs it
-    // touches in the latest manifest, so "all base dirs still listed"
-    // <=> "the content we probed/rewrote is still the live content".
-    // Plain appends only ADD dirs and are carried as interleaved. On a
-    // stale base the orphaned rewrites are deleted and the merge
-    // retried from the new latest. (An OFFLINE eraseKeys can still
-    // delete a dir out from under the lock-free reads — that op's
-    // contract quiesces writers, this merge included.)
-    var attempts = 0
-    while (attempts < 5) {
-      // Advisory fail-fast (not the protection — the post-lock
-      // staleness check is): a rewriter holding the lock RIGHT NOW is
-      // about to invalidate whatever base we'd read, so don't burn the
-      // rewrites on it; streaming CDC callers classify this typed
-      // throw and retry with backoff. Racy by nature; a collision that
-      // slips through just costs one stale-retry.
-      if (SnapLog.rewriterActive(fs, path))
-        throw SnapLog.lockHeld("mergeSnapshot", path, null)
+    // LOCK-FREE into claim-named paths; the lock covers only the
+    // re-validation and publish ([[Protocol.commitOver]]). Plain appends
+    // only ADD dirs and are carried as interleaved. (An OFFLINE
+    // eraseKeys can still delete a dir out from under the lock-free
+    // reads — that op's contract quiesces writers, this merge included.)
+    Protocol.attempts(fs, path, "mergeSnapshot",
+        s"mergeSnapshot: base rewritten under us 5 times at $path — " +
+          "rewriter storm; retry when compactions/erasures quiesce") {
       val cur = latestVersion(spark, path)
       require(cur >= 1, "nothing to merge into: no published snapshot")
-      val target = claimVersion(spark, path)
+      val target = Protocol.claimVersion(fs, path)
       val baseEntries = manifestEntries(spark, path, cur)
       val baseDirs = baseEntries.map(_.dir)
       val entryByDir = baseEntries.map(e => e.dir -> e).toMap
-      val baseCoverage = coverage(spark, path, baseDirs)
+      val baseCoverage = Protocol.coverage(fs, path, baseDirs)
       // RAW schema: the rewrites pin it onto per-dir reads, and dirs
       // carry PHYSICAL names — the mapped view would NULL a renamed
       // column out of every pre-rename dir.
@@ -3008,7 +2607,7 @@ object Upsert {
           writeDirWithStats(spark, path, rw,
             liveDir(d).join(touched, keys, "left_anti"), keys,
             keyBound = readDirRowCount(spark, path, d))
-          writeAbsorbed(fs, path, rw, provenance(spark, path, d))
+          Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, d))
           rw
         }
       val dvByDir: Map[String, String] =
@@ -3060,156 +2659,130 @@ object Upsert {
         keyBound = Some(uCnt + iCnt))
       recordKeyCols(spark, path, keys)
       mergePreLockHook()
-      // A rival taking the lock inside the rewrite→acquire window
-      // throws LockHeldException here; without cleanup every such
-      // collision (the streaming CDC sink retries them routinely)
-      // would strand a full set of rewritten dirs for the offline
-      // vacuum — delete the orphans before propagating.
+      // Orphans of a stale base or a lost lock: without cleanup every
+      // lock collision (the streaming CDC sink retries them routinely)
+      // would strand a full set of rewritten dirs for the offline vacuum.
       def dropRewrites(): Unit =
         (rewriteNames ++ dvByDir.values :+ mergeDir)
           .foreach(SnapLog.dropDir(fs, path, _))
-      // Set inside the critical section, ACTED ON after it: the change
+      // The record's version and the rewrite generation are fixed
+      // inside the critical section and ACTED ON after it: the change
       // record re-reads the rewritten dirs and writes a parquet dir —
       // data jobs that must not run under the lock (the critical
       // section's contract is metadata-only; a record write under it
       // would stall every rewriter and the streaming CDC feed behind
       // a scan). The inputs are immutable dirs, so deferring is safe.
-      var committed: Option[Int] = None
-      var recordAt: Option[Int] = None
-      var genAtCommit: String = ""
-      SnapLog.withRewriterLock(fs, path, "mergeSnapshot", dropRewrites _) {
-        val latestNow = latestVersion(spark, path)
-        val latestEntries = manifestEntries(spark, path, latestNow)
+      Protocol.commitOver(fs, path, "mergeSnapshot", baseEntries,
+          dropRewrites _) { (latestNow, latestEntries) =>
         val latestDirs = latestEntries.map(_.dir)
-        // ENTRY-level staleness: a dv added to a base dir by a racing
-        // merge-on-read merge changes its content without renaming it
-        // — the name check alone would let this merge republish the
-        // pre-dv entry and resurrect the rival's deletes.
-        if (baseEntries.forall(latestEntries.contains)) {
-          // Interleaved appenders between the base read and this
-          // publish: carry their dirs (their rows win over this
-          // merge's deletes — sequential merge-then-write
-          // equivalence). Taken from the LATEST manifest, so writers
-          // that claimed above `target` are covered too.
-          val interleaved = latestDirs.filterNot(baseDirs.contains)
-            .filterNot(d =>
-              provenance(spark, path, d).subsetOf(baseCoverage))
-          // Publish strictly above whatever is latest (readers take
-          // the max version as current).
-          val pubV = if (latestNow >= target) claimVersion(spark, path)
-                     else target
-          // Landing rows must ALSO yield to the interleaved appenders'
-          // keys — those dirs are carried unrewritten and the base
-          // presence probe cannot see them, so a landing row sharing a
-          // key would publish the key twice. Only I keys can actually
-          // collide (a U/D key existed in the base, so no interleaved
-          // keep-existing append can carry it), and the cost is
-          // batch-sized on the rare contended path — the long rewrites
-          // above stay lock-free.
-          val finalMerge =
-            if (interleaved.isEmpty) mergeDir
-            else {
-              val inKeys = readEntriesRaw(spark, path,
-                  latestEntries.filter(e => interleaved.contains(e.dir)))
-                .select(keys.map(col): _*).distinct()
-              val rw = s"$mergeDir-r$pubV"
-              writeDirWithStats(spark, path, rw,
-                readDirs(spark, Seq(s"$path/$mergeDir"))
-                  .join(inKeys, keys, "left_anti"), keys,
-                keyBound = readDirRowCount(spark, path, mergeDir))
-              // The unfiltered landing dir is never published — drop
-              // it rather than leave a vacuum-bait orphan.
-              SnapLog.dropDir(fs, path, mergeDir)
-              rw
-            }
-          // Rows of already-published dirs changed -> name-based delta
-          // readers must recompute ([[rewriteGen]]). Before the
-          // manifest rename, so no reader ever sees the publish
-          // without the marker. A merge-on-read dv IS a content
-          // change to a published dir — same rule.
-          if (rewriteNames.nonEmpty || dvByDir.nonEmpty)
-            touchRewriteGen(spark, path, target)
-          if (mor)
-            // Entries form: the NEW dvs are in no manifest yet, so the
-            // name-based reattach cannot supply them.
-            publishManifestEntries(spark, path, pubV,
-              carried.map(entryByDir) ++
-                rewritten.map { d =>
-                  val e = entryByDir(d)
-                  SnapEntry(e.dir, (e.dvs :+ dvByDir(d)).sorted)
-                } ++
-                latestEntries.filter(e => interleaved.contains(e.dir)) :+
-                SnapEntry(finalMerge, Nil))
-          else
-            publishManifest(spark, path, pubV,
-              carried ++ rewriteNames ++ interleaved :+ finalMerge)
-          // The merge dir is self-rooted, so the unified reconcile
-          // applies: its dropped-version sweep carries WHOLE dropped
-          // manifests and shadow-collapses (rewrites over originals),
-          // which is exactly what keeps a re-attached merge from
-          // pairing with pre-merge originals; key conflicts resolve
-          // with the merge dir yielding.
-          val rv = reconcileLineage(spark, path, pubV, finalMerge, keys,
-            baseCoverage ++ rewriteNames ++
-              interleaved.flatMap(d => provenance(spark, path, d)),
-            land0.schema, baseVersion = cur)
-          // Change record: the merge's exact I/U/D sets, persisted so
-          // the feed never re-derives them — skipped on the contended
-          // paths (interleaver carried, reconcile republished), where
-          // what landed differs from what this pass computed. Written
-          // AFTER the lock releases (see recordAt above).
-          if (rv == pubV && interleaved.isEmpty) {
-            recordAt = Some(rv)
-            // Rewrite-generation fingerprint AT COMMIT (still under
-            // the lock): the deferred record write re-validates
-            // against it before its meta publish — an eraseKeys that
-            // completed in the window would otherwise have its
-            // record sweep overwritten, re-persisting the erased
-            // subject's pre-images under v<N>.changes.
-            genAtCommit = rewriteGen(spark, path)
+        // Interleaved appenders between the base read and this
+        // publish: carry their dirs (their rows win over this
+        // merge's deletes — sequential merge-then-write
+        // equivalence). Taken from the LATEST manifest, so writers
+        // that claimed above `target` are covered too.
+        val interleaved = latestDirs.filterNot(baseDirs.contains)
+          .filterNot(d =>
+            Protocol.provenance(fs, path, d).subsetOf(baseCoverage))
+        val pubV = Protocol.claimAbove(fs, path, target, latestNow)
+        // Landing rows must ALSO yield to the interleaved appenders'
+        // keys — those dirs are carried unrewritten and the base
+        // presence probe cannot see them, so a landing row sharing a
+        // key would publish the key twice. Only I keys can actually
+        // collide (a U/D key existed in the base, so no interleaved
+        // keep-existing append can carry it), and the cost is
+        // batch-sized on the rare contended path — the long rewrites
+        // above stay lock-free.
+        val finalMerge =
+          if (interleaved.isEmpty) mergeDir
+          else {
+            val inKeys = readEntriesRaw(spark, path,
+                latestEntries.filter(e => interleaved.contains(e.dir)))
+              .select(keys.map(col): _*).distinct()
+            val rw = s"$mergeDir-r$pubV"
+            writeDirWithStats(spark, path, rw,
+              readDirs(spark, Seq(s"$path/$mergeDir"))
+                .join(inKeys, keys, "left_anti"), keys,
+              keyBound = readDirRowCount(spark, path, mergeDir))
+            // The unfiltered landing dir is never published — drop
+            // it rather than leave a vacuum-bait orphan.
+            SnapLog.dropDir(fs, path, mergeDir)
+            rw
           }
-          committed = Some(rv)
+        // Rows of already-published dirs changed -> name-based delta
+        // readers must recompute ([[Protocol.rewriteGen]]). Before the
+        // manifest rename, so no reader ever sees the publish
+        // without the marker. A merge-on-read dv IS a content
+        // change to a published dir — same rule.
+        if (rewriteNames.nonEmpty || dvByDir.nonEmpty)
+          Protocol.touchRewriteGen(fs, path, target)
+        if (mor)
+          // Entries form: the NEW dvs are in no manifest yet, so the
+          // name-based reattach cannot supply them.
+          Protocol.publish(fs, path, pubV,
+            carried.map(entryByDir) ++
+              rewritten.map { d =>
+                val e = entryByDir(d)
+                SnapEntry(e.dir, (e.dvs :+ dvByDir(d)).sorted)
+              } ++
+              latestEntries.filter(e => interleaved.contains(e.dir)) :+
+              SnapEntry(finalMerge, Nil))
+        else
+          Protocol.publishDirs(fs, path, pubV,
+            carried ++ rewriteNames ++ interleaved :+ finalMerge)
+        // The merge dir is self-rooted, so the unified reconcile
+        // applies: its dropped-version sweep carries WHOLE dropped
+        // manifests and shadow-collapses (rewrites over originals),
+        // which is exactly what keeps a re-attached merge from
+        // pairing with pre-merge originals; key conflicts resolve
+        // with the merge dir yielding.
+        val rv = reconcileLineage(spark, path, pubV, finalMerge, keys,
+          baseCoverage ++ rewriteNames ++
+            interleaved.flatMap(d => Protocol.provenance(fs, path, d)),
+          land0.schema, baseVersion = cur)
+        // Change record: the merge's exact I/U/D sets, persisted so
+        // the feed never re-derives them — skipped on the contended
+        // paths (interleaver carried, reconcile republished), where
+        // what landed differs from what this pass computed. Written
+        // AFTER the lock releases, with the rewrite-generation
+        // fingerprint AT COMMIT (still under the lock): the deferred
+        // record write re-validates against it before its meta
+        // publish — an eraseKeys that completed in the window would
+        // otherwise have its record sweep overwritten, re-persisting
+        // the erased subject's pre-images under v<N>.changes.
+        val record =
+          if (rv == pubV && interleaved.isEmpty)
+            Some((rv, Protocol.rewriteGen(fs, path)))
+          else None
+        (rv, record)
+      }.map { case (rv, record) =>
+        mergePreRecordHook()
+        record.foreach { case (v, genAtCommit) =>
+          // Pre-images = the LIVE rows of the dirty dirs that the
+          // touched keys matched — exactly what the COW rewrites
+          // dropped / the MoR dvs killed. Passed as a THUNK: the
+          // plan's spark.read resolves files at construction, and an
+          // eraseKeys completing in this window may have deleted the
+          // originals — the record writer's gen pre-check must run
+          // before any path resolves (a throw here would fail the
+          // already-committed merge).
+          def removedPre() =
+            if (rewritten.isEmpty)
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                snapshotSchema)
+            else balancedUnion(rewritten.map(liveHits))
+          writeMergeChangeRecord(spark, path, v, base = cur,
+            removedPre _,
+            landingDir = mergeDir, landingSchema = land0.schema,
+            uKeys = deduped.filter(opc === "U")
+              .select(keys.map(col): _*),
+            dKeys = deduped.filter(opc === "D")
+              .select(keys.map(col): _*),
+            keys, genAtCommit, tCnt)
         }
+        rv
       }
-      committed match {
-        case Some(rv) =>
-          mergePreRecordHook()
-          recordAt.foreach { v =>
-            // Pre-images = the LIVE rows of the dirty dirs that the
-            // touched keys matched — exactly what the COW rewrites
-            // dropped / the MoR dvs killed. Passed as a THUNK: the
-            // plan's spark.read resolves files at construction, and an
-            // eraseKeys completing in this window may have deleted the
-            // originals — the record writer's gen pre-check must run
-            // before any path resolves (a throw here would fail the
-            // already-committed merge).
-            def removedPre() =
-              if (rewritten.isEmpty)
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  snapshotSchema)
-              else balancedUnion(rewritten.map(liveHits))
-            writeMergeChangeRecord(spark, path, v, base = cur,
-              removedPre _,
-              landingDir = mergeDir, landingSchema = land0.schema,
-              uKeys = deduped.filter(opc === "U")
-                .select(keys.map(col): _*),
-              dKeys = deduped.filter(opc === "D")
-                .select(keys.map(col): _*),
-              keys, genAtCommit, tCnt)
-          }
-          return rv
-        case None => ()
-      }
-      // Stale base: a rewriter (another merge, a compactor, an
-      // erasure) replaced a dir we probed, carried, or rewrote. Drop
-      // the orphaned rewrites and retry from the new latest.
-      dropRewrites()
-      attempts += 1
     }
-    throw new IllegalStateException(
-      s"mergeSnapshot: base rewritten under us 5 times at $path — " +
-        "rewriter storm; retry when compactions/erasures quiesce")
   }
 
   /** Time travel: version N exactly as published, whatever has been
@@ -3259,8 +2832,7 @@ object Upsert {
     // dv dirs are referenced THROUGH their entries (merge-on-read):
     // they reclaim with the versions that applied them and must never
     // be deleted while a surviving manifest still anti-joins them.
-    def allNames(v: Int) = manifestEntries(spark, path, v)
-      .flatMap(e => e.dir +: e.dvs)
+    def allNames(v: Int) = Protocol.manifestEntries(fs, path, v).flatMap(_.names)
     val referenced = allVersions.filter(_ >= keepFrom)
       .flatMap(allNames).toSet
     val doomedDirs = allVersions.filter(_ < keepFrom)
@@ -3272,21 +2844,7 @@ object Upsert {
       .toMap
     allVersions.filter(_ < keepFrom).flatMap(SnapLog.versionFiles)
       .flatMap(present.get).foreach(fs.delete(_, true))
-    log.claims.filter(_ <= cur)
-      .foreach(v => fs.delete(SnapLog.claim(path, v), false))
-    // Rewrite-generation markers older than the horizon: without a
-    // sweep they accumulate one tiny file per merge/erase/heal forever
-    // (listed by every rewriteGen call — worst exactly on object
-    // stores where small-file listings cost). Sweeping changes the
-    // fingerprint, so the NEXT aggregate refresh recomputes once —
-    // the correct price inside an op that just destroyed history.
-    log.rewriteGens.filter(_ < keepFrom)
-      .foreach(v => fs.delete(SnapLog.rewriteGenMarker(path, v), false))
-    // Erase markers age out the same way; the changed [[eraseGen]]
-    // fingerprint forces feed consumers to recompute once — the
-    // correct price inside an op that just destroyed history.
-    log.eraseGens.filter(_ < keepFrom)
-      .foreach(v => fs.delete(SnapLog.eraseGenMarker(path, v), false))
+    Protocol.sweep(fs, path, log, keepFrom)
     doomedDirs.foreach(SnapLog.dropDir(fs, path, _))
     doomedDirs.size
   }
@@ -3304,14 +2862,8 @@ object Upsert {
     * horizon before the sink's birth must not be an error — retention
     * jobs run it blindly). Returns the number of data dirs deleted. */
   def expireSnapshotsOlderThan(spark: SparkSession, path: String,
-      tsMs: Long): Int = {
-    // One stamp pass serves both the nothing-to-expire guard and the
-    // as-of horizon (versionAsOf would re-open every v<N>.meta).
-    val at = sinkListing(spark, path).versions
-      .filter(v => publishedAtMs(spark, path, v) <= tsMs)
-    if (at.isEmpty) return 0
-    expireSnapshots(spark, path, at.max)
-  }
+      tsMs: Long): Int =
+    latestAt(spark, path, tsMs).map(expireSnapshots(spark, path, _)).getOrElse(0)
 
   /** The rows ADDED between two snapshots, diffed by PROVENANCE, not
     * dir name: a `to`-manifest dir is delta only if its provenance is
@@ -3331,11 +2883,12 @@ object Upsert {
                         from: Int, to: Int): DataFrame = {
     require(from >= 0 && to > from, s"need 0 <= from < to, got $from..$to")
     if (from == 0) return readSnapshot(spark, path, to)
-    val fromCov = coverage(spark, path, manifestDirs(spark, path, from))
+    val fs = fsFor(spark, path)
+    val fromCov = Protocol.coverage(fs, path, Protocol.manifestDirs(fs, path, from))
     // `to`'s OWN dv sets apply: a row added in the span and already
     // dv-deleted by `to` is not an addition a reader of `to` can see.
-    val entries = manifestEntries(spark, path, to)
-      .filterNot(e => provenance(spark, path, e.dir).subsetOf(fromCov))
+    val entries = Protocol.manifestEntries(fs, path, to)
+      .filterNot(e => Protocol.provenance(fs, path, e.dir).subsetOf(fromCov))
     if (entries.isEmpty) readSnapshot(spark, path, to).limit(0)
     else applySchemaMap(spark, path, readEntriesRaw(spark, path, entries))
   }
@@ -3359,7 +2912,7 @@ object Upsert {
     val rows = log.versions.sorted
       .map { v =>
         val r = (v, publishedAtMs(spark, path, v),
-          manifestDirs(spark, path, v).size, countSnapshot(spark, path, v))
+          manifestEntries(spark, path, v).size, countSnapshot(spark, path, v))
         scannedUnion ++= lastCountScanned.get()
         r
       }
@@ -3405,7 +2958,8 @@ object Upsert {
       dir: Option[String]): Unit =
     try SnapLog.writeText(fs, SnapLog.changesMeta(path, version),
       s"kind\t$kind\nbase\t$base" + dir.map(d => s"\ndir\t$d").getOrElse(""))
-    catch { case scala.util.control.NonFatal(_) => () }
+    catch { case scala.util.control.NonFatal(e) => skipped(
+      s"change record meta of v$version at $path (the feed key-diffs it)", e) }
 
   private def readChangeRecord(spark: SparkSession, path: String,
       version: Int): Option[ChangeRecord] =
@@ -3420,7 +2974,8 @@ object Upsert {
         case "delta" => Some(DeltaRecord(base))
         case _ => None
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(e) => skipped(
+      s"reading change record of v$version at $path (key-diffed)", e); None }
 
   /** Reserved internal columns of a delta record; a sink whose DATA
     * schema uses one of these names simply never records (feed falls
@@ -3448,7 +3003,7 @@ object Upsert {
       // guarantee): if history was already rewritten since the commit,
       // don't even resolve the pre-image read (the dirs may be GONE —
       // an erasure deletes originals) or stage its rows on disk.
-      if (rewriteGen(spark, path) != genAtCommit) return
+      if (Protocol.rewriteGen(fs, path) != genAtCommit) return
       val removedPre = removedPreF()
       if (removedPre.columns.exists(ChangeRecCols)) return
       // The record in ONE write job, no standalone checkpoint (guide
@@ -3458,7 +3013,7 @@ object Upsert {
       // anti-join — 3 scans of the dirty dirs plus 2 checkpoint jobs
       // plus a second probe of the base dirs. The post-image side is
       // EXACTLY the published landing dir (uRows ∪ freshI, immutable,
-      // already on disk — recordAt is only set when no interleaver
+      // already on disk — the record is only written when no interleaver
       // rewrote it), so the record READS IT BACK instead of
       // recomputing it, and the P/D and U/I splits are per-row CASE
       // tags over the key-unique batch:
@@ -3510,7 +3065,7 @@ object Upsert {
       var tries = 0
       while (keep.isEmpty) {
         try keep = Some(SnapLog.withRewriterLock(fs, path,
-          "mergeChangeRecord")(rewriteGen(spark, path) == genAtCommit))
+          "mergeChangeRecord")(Protocol.rewriteGen(fs, path) == genAtCommit))
         catch {
           case e: LockHeldException =>
             tries += 1
@@ -3521,12 +3076,14 @@ object Upsert {
       if (keep.get) writeChangeMeta(fs, path, version, "delta", base, None)
       else fs.delete(SnapLog.changesDir(path, version), true)
     } catch {
-      case scala.util.control.NonFatal(_) =>
+      case scala.util.control.NonFatal(e) =>
+        skipped(s"change record of v$version at $path (key-diffed)", e)
         // Never leave an uncommitted record dir: an erasure's sweep
         // keys off `.changes` names, and debris under _snapshots is
         // invisible to the vacuum. Best-effort, like the record.
         try fsFor(spark, path).delete(SnapLog.changesDir(path, version), true)
-        catch { case scala.util.control.NonFatal(_) => () }
+        catch { case scala.util.control.NonFatal(e2) => skipped(
+          s"deleting uncommitted change record of v$version at $path", e2) }
     }
 
   /** Test/ops audit of the last [[snapshotChanges]] path:
@@ -3615,7 +3172,8 @@ object Upsert {
         enriched.filter(col("__v") === col("__maxv") && !pre)
           .drop(internal: _*),
         keys, opCol, preImages))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(e) => skipped(
+      s"composing change records $from..$to at $path (key-diffed)", e); None }
 
   /** The exact diff of an OLD and a NEW side holding at most one row
     * per key each — the one diff behind both change-feed paths:
@@ -3741,8 +3299,7 @@ object Upsert {
     // SHORTER span's diff instead of the key-diff's loud failure.
     val efs = fsFor(spark, path)
     Seq(fromVersion, toVersion).foreach { v =>
-      require(efs.exists(SnapLog.manifest(path, v)),
-        s"no snapshot v$v at $path")
+      require(Protocol.isPublished(efs, path, v), s"no snapshot v$v at $path")
     }
     // RECORDED fast path: when every published version in the span
     // carries a write-time change record whose base chains to its
@@ -3830,8 +3387,7 @@ object Upsert {
       // Entries, not dirs: a live merge-on-read dv swept as an
       // "orphan" would resurrect every row it deletes.
       val referenced = SnapLog.list(fs, path).versions
-        .flatMap(v => manifestEntries(spark, path, v)
-          .flatMap(e => e.dir +: e.dvs)).toSet
+        .flatMap(v => Protocol.manifestEntries(fs, path, v).flatMap(_.names)).toSet
       sweepUnreferencedDirs(fs, path, referenced, minAgeMs).size
     }
   }
@@ -3850,7 +3406,8 @@ object Upsert {
       while (it.hasNext)
         newest = math.max(newest, it.next().getModificationTime)
       newest
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
+    } catch { case scala.util.control.NonFatal(e) =>
+      skipped(s"listing ${st.getPath} (young: not swept)", e); Long.MaxValue }
 
   /** Delete every top-level data dir absent from `referenced` whose
     * newest content mtime is older than `graceMs` (≤ 0 sweeps
@@ -3936,7 +3493,7 @@ object Upsert {
     val (doomedPr, doomedCanons, _) = probeFacts(keyRows, keys)
     def listVersions(): Seq[(Int, Seq[SnapEntry])] =
       SnapLog.list(fs, path).versions
-        .sorted.map(v => v -> manifestEntries(spark, path, v))
+        .sorted.map(v => v -> Protocol.manifestEntries(fs, path, v))
     // The erase universe includes merge-on-read DV DIRS: a dv holds the
     // subject's KEY VALUES (a record that the subject existed) — "the
     // data is gone" covers them. A dv rewrite minus the doomed keys is
@@ -3948,7 +3505,7 @@ object Upsert {
     val dvNames = scala.collection.mutable.Set.empty[String]
     def namesOf(es: Seq[SnapEntry]): Seq[String] = {
       es.foreach(e => dvNames ++= e.dvs)
-      es.flatMap(e => e.dir +: e.dvs).distinct
+      es.flatMap(_.names).distinct
     }
     // dir → (rewrite name if it held doomed keys, rows hit). Probed
     // dirs are immutable, so results carry across retries.
@@ -3963,7 +3520,7 @@ object Upsert {
     // `gen-<epoch>.touch` marker, silently losing a generation bump).
     // One skipped version number per attempt, by construction;
     // [[expireSnapshots]] sweeps them once later publishes pass. Each
-    // is marked SPENT ([[retireClaim]]) as soon as it is taken, so the
+    // is marked SPENT ([[Protocol.retireClaim]]) as soon as it is taken, so the
     // claim wait below — this erase's and every later one's — never
     // mistakes an erase epoch for an in-flight appender.
     var attempts = 0
@@ -3973,8 +3530,8 @@ object Upsert {
         // attempt's epoch unique across every concurrent operation
         // with zero new state formats (two racing erasures must not
         // write the same `-e` name).
-        val epoch = claimVersion(spark, path)
-        retireClaim(fs, path, epoch)
+        val epoch = Protocol.claimVersion(fs, path)
+        Protocol.retireClaim(fs, path, epoch)
         val perVersion = listVersions()
         val allDirs = namesOf(perVersion.flatMap(_._2))
         val candidates = pruneDirs(spark, path,
@@ -3994,7 +3551,7 @@ object Upsert {
               df.join(keyRows, keys, "left_anti"),
               if (statKeys0.nonEmpty) statKeys0 else keys,
               keyBound = readDirRowCount(spark, path, d))
-            writeAbsorbed(fs, path, rw, provenance(spark, path, d))
+            Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, d))
             processed(d) = (Some(rw), hit)
           }
         }
@@ -4020,61 +3577,19 @@ object Upsert {
               case (d, (Some(rw), _)) => d -> rw }.toMap
             erased = processed.collect {
               case (d, (Some(_), h)) if !dvNames.contains(d) => h }.sum
-            def repoint(vs: Seq[(Int, Seq[SnapEntry])]): Boolean = {
-              var any = false
-              vs.foreach { case (v, entries) =>
-                if (entries.exists(e => renames.contains(e.dir) ||
-                    e.dvs.exists(renames.contains))) {
-                  any = true
-                  // Entry-aware: the dir AND its dv references repoint
-                  // together (a dv rewritten minus the doomed keys
-                  // keeps applying to every version that listed it).
-                  val newEntries = entries.map(e => SnapEntry(
-                    renames.getOrElse(e.dir, e.dir),
-                    e.dvs.map(n => renames.getOrElse(n, n)).sorted))
-                  if (!writeManifest(fs, path, v, newEntries, replace = true))
-                    throw new java.io.IOException(
-                      s"eraseKeys: manifest repoint failed for v$v at " +
-                        s"$path — restore from the rewritten dirs before " +
-                        "serving reads")
-                }
-              }
-              any
-            }
             if (renames.nonEmpty) {
-              touchRewriteGen(spark, path, epoch)
-              // Erasure-specific marker ([[eraseGen]]): feed-driven
-              // consumers recompute ONLY on in-place history edits,
-              // not on every merge. Same not-best-effort contract as
-              // the gen marker — a swallowed failure here lets a feed
-              // consumer silently retain the erased subject's sums.
-              SnapLog.writeText(fs, SnapLog.eraseGenMarker(path, epoch), "")
-              repoint(perVersionNow)
+              Protocol.touchRewriteGen(fs, path, epoch)
+              Protocol.touchEraseGen(fs, path, epoch)
+              Protocol.repoint(fs, path, perVersionNow, renames)
               // Claim wait: an appender inside claim→publish read a
               // pre-repoint manifest and may publish dirs we are about
-              // to delete. Fresh foreign claims get a bounded window
-              // to publish (their manifests then hit the fixpoint
-              // below); stale claims are crashed writers and spent
-              // (non-empty) claims are erase epochs — neither blocks.
-              val deadline = System.currentTimeMillis() + 5000
-              var waiting = true
-              while (waiting && System.currentTimeMillis() < deadline) {
-                val now = System.currentTimeMillis()
-                // Malformed claim names (operator debris) are ignored,
-                // not thrown on: a NumberFormatException here lands
-                // mid-commit — after the repoints, before the original
-                // deletes — aborting the erasure; the listing's claim
-                // filter skips them.
-                val freshClaims = SnapLog.list(fs, path).claimStatuses
-                  .filter(st => st.getLen == 0 &&
-                    now - st.getModificationTime < 60000)
-                if (freshClaims.isEmpty) waiting = false
-                else Thread.sleep(100)
-              }
+              // to delete; its manifest then hits the fixpoint below.
+              Protocol.awaitAppenders(fs, path)
               // Fixpoint: repoint manifests published since (or missed)
               // until a listing pass references no original.
               var fix = 0
-              while (repoint(listVersions()) && fix < 20) fix += 1
+              while (Protocol.repoint(fs, path, listVersions(), renames) &&
+                fix < 20) fix += 1
               if (fix >= 20) throw new IllegalStateException(
                 s"eraseKeys: manifests kept re-referencing pre-erase " +
                   s"dirs at $path — appender storm; originals left in " +
@@ -4213,7 +3728,7 @@ object Upsert {
     // read and the data read makes the recorded gen stale, which the
     // NEXT refresh answers with a recompute — conservative, never
     // double-counts.
-    val genNow = rewriteGen(spark, srcPath)
+    val genNow = Protocol.rewriteGen(fsFor(spark, srcPath), srcPath)
     val genOk = gen0.contains(genNow)
     if (covered0 == srcLatest && genOk) { lastRefresh.set("noop"); return aggCur }
     // Delta PURITY classification. The incremental path is sound when
@@ -4232,15 +3747,15 @@ object Upsert {
       if (covered0 == 0 || !genOk) None
       else {
         val srcFs = fsFor(spark, srcPath)
-        if (!srcFs.exists(SnapLog.manifest(srcPath, covered0))) None
+        if (!Protocol.isPublished(srcFs, srcPath, covered0)) None
         else {
-          val cDirs = manifestDirs(spark, srcPath, covered0)
-          val lDirs = manifestDirs(spark, srcPath, srcLatest)
-          val cCov = coverage(spark, srcPath, cDirs)
+          val cDirs = Protocol.manifestDirs(srcFs, srcPath, covered0)
+          val lDirs = Protocol.manifestDirs(srcFs, srcPath, srcLatest)
+          val cCov = Protocol.coverage(srcFs, srcPath, cDirs)
           val counted = lDirs.filter(d =>
-            provenance(spark, srcPath, d).subsetOf(cCov))
+            Protocol.provenance(srcFs, srcPath, d).subsetOf(cCov))
           val fresh = lDirs.filter(d =>
-            provenance(spark, srcPath, d).intersect(cCov).isEmpty)
+            Protocol.provenance(srcFs, srcPath, d).intersect(cCov).isEmpty)
           val mixed = lDirs.exists(d =>
             !counted.contains(d) && !fresh.contains(d))
           // Pristine compact names ONLY: "compact-5-m9" (a merge
@@ -4251,7 +3766,7 @@ object Upsert {
           val carriersOk = counted.forall(d =>
             cDirs.contains(d) || pristineCompact.findFirstIn(d).isDefined)
           val allCarried = cCov.subsetOf(
-            coverage(spark, srcPath, counted))
+            Protocol.coverage(srcFs, srcPath, counted))
           if (!mixed && carriersOk && allCarried) Some(fresh) else None
         }
       }
@@ -4437,7 +3952,7 @@ object Upsert {
     *
     * Exactly-once arithmetic across crashes, sink-as-state: the
     * covered source version + the source's ERASURE fingerprint
-    * ([[eraseGen]] — the one op that edits a span's endpoints in
+    * ([[Protocol.eraseGen]] — the one op that edits a span's endpoints in
     * place, making the feed blind) ride a `v<N>.feed` marker written
     * AFTER its aggregate version publishes; the only crash window
     * leaves a published version with no marker, which the next refresh
@@ -4457,7 +3972,7 @@ object Upsert {
       s"refreshAggregateFromFeed: marker covers v$covered but the " +
         s"source's latest is v$srcLatest — wrong source or rolled-back " +
         "history")
-    val egenNow = eraseGen(spark, srcPath)
+    val egenNow = Protocol.eraseGen(fsFor(spark, srcPath), srcPath)
     val genOk = egen0.contains(egenNow)
     def aggOf(df: DataFrame): DataFrame = refuseNullGroups(
       df.groupBy(groupCols.map(col): _*)
@@ -4473,7 +3988,7 @@ object Upsert {
     }
     val srcFs = fsFor(spark, srcPath)
     val coveredLive = covered >= 1 &&
-      srcFs.exists(SnapLog.manifest(srcPath, covered))
+      Protocol.isPublished(srcFs, srcPath, covered)
     val published =
       if (covered == 0 || !genOk || !coveredLive) {
         // Bootstrap, post-erasure, expired-from-version, or the crash

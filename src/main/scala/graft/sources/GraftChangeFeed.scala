@@ -248,7 +248,9 @@ private[sources] class GraftMicroBatchStream(path: String,
     // the replay window could break it — the same retention contract
     // time travel already carries.
     if (from == 0 && Upsert.batchScanEligible(spark, path, to)) {
-      val dirs = Upsert.manifestEntries(spark, path, to).map(_.dir)
+      val dirs = graft.table.Protocol.manifestDirs(
+        org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+          spark.sparkContext.hadoopConfiguration), path, to)
       return Upsert.snapshotDataFiles(spark, path, dirs)
         .map(f => GraftFeedInitialPartition(f): InputPartition).toArray
     }

@@ -959,16 +959,18 @@ class UpsertPartitionedSpec extends SparkSpec {
 
   test("collapseShadows: equal-provenance sibling rewrites keep only the newest") {
     val path = java.nio.file.Files.createTempDirectory("snapsib").toString
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
     // batch-1-r5 and batch-1-r7 share root batch-1 and (name-derived)
     // provenance {batch-1}; neither prefixes the other. The r15 shape
     // kept both — publishing the same keys twice and resurrecting rows
     // the newer heal yielded.
-    val kept = Upsert.collapseShadows(spark, path,
+    val kept = graft.table.Protocol.collapseShadows(fs, path,
       Seq("batch-1-r5", "batch-1-r7", "batch-2"))
     assert(kept.sorted == Seq("batch-1-r7", "batch-2"),
       s"newest sibling must shadow the older: $kept")
     // And the original next to both: prefix rule + sibling rule compose.
-    val kept2 = Upsert.collapseShadows(spark, path,
+    val kept2 = graft.table.Protocol.collapseShadows(fs, path,
       Seq("batch-1", "batch-1-r5", "batch-1-r7"))
     assert(kept2 == Seq("batch-1-r7"), s"got: $kept2")
     // CROSS-KIND siblings: a heal rewrite (-r3) and a MERGE rewrite
@@ -980,7 +982,7 @@ class UpsertPartitionedSpec extends SparkSpec {
     val af = new java.io.FileWriter(new java.io.File(snap,
       "batch-1-m5.absorbed"))
     try af.write("batch-1") finally af.close()
-    val kept3 = Upsert.collapseShadows(spark, path,
+    val kept3 = graft.table.Protocol.collapseShadows(fs, path,
       Seq("batch-1-r3", "batch-1-m5", "batch-2"))
     assert(kept3.sorted == Seq("batch-1-m5", "batch-2"),
       s"the newer merge rewrite must shadow the heal sibling: $kept3")
