@@ -449,22 +449,24 @@ object Export {
 
   /** Streaming export sink — the continuous-ingest last mile: each
     * micro-batch is shard-assigned (same pure md5 bucket as the batch
-    * writer, so batch- and stream-exported corpora are shard-compatible)
-    * and lands through the keep-existing partitioned upsert: the
-    * anti-join prunes to the shards the batch touches, and a REPLAYED
-    * batch appends nothing — at-least-once delivery becomes
-    * exactly-once-per-key sink contents, which is what keeps the
-    * manifest meaningful under failure/recovery. Validation is the batch
-    * path's: `manifestOf` over the sink read-back vs the logical corpus
-    * (StreamingSpec pins agreement across batches + replay). */
+    * writer, so batch- and stream-exported corpora are shard-compatible;
+    * `shard` is a data column) and publishes through
+    * [[graft.streaming.EventStream.snapshotSink]], keyed on `key`: a
+    * REPLAYED batch publishes an empty-delta version, so at-least-once
+    * delivery becomes exactly-once-per-key sink contents, which is what
+    * keeps the manifest meaningful under failure/recovery. The sink is a
+    * snapshot sink, so it time-travels and the catalog lists it.
+    * Validation is the batch path's: `manifestOf` over the sink's latest
+    * snapshot vs the logical corpus (StreamingSpec pins agreement across
+    * batches + replay). */
   def exportSink(stream: DataFrame, key: String, nShards: Int, path: String,
                  tieBreak: Seq[String], checkpoint: String
                 ): org.apache.spark.sql.streaming.StreamingQuery = {
     require(nShards >= 1, "need at least one shard")
     val sharded = stream.withColumn("shard",
       Sampling.hashBucket(col(key), nShards))
-    graft.streaming.EventStream.upsertSink(
-      sharded, path, Seq(key), tieBreak, "shard", checkpoint)
+    graft.streaming.EventStream.snapshotSink(
+      sharded, path, Seq(key), tieBreak, checkpoint)
   }
 
   // ───────── Z-order layout (multi-dimensional pruning) ─────────

@@ -23,11 +23,6 @@ object Reshape {
       d.withColumn(n, element_at(col(arrCol), i + 1))
     }.drop(arrCol)
 
-  /** Map column → (key, value) rows (ref dict orientation, `etl.py:397`). */
-  def explodeMap(df: DataFrame, mapCol: String, keyName: String,
-                 valName: String): DataFrame =
-    df.select(explode(col(mapCol)).as(Seq(keyName, valName)))
-
   /** Append frames by column name (ref `df.append`, `etl.py:132, 293`). */
   def unionAll(dfs: Seq[DataFrame]): DataFrame = dfs.reduce(_.unionByName(_))
 

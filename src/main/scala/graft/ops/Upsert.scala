@@ -55,9 +55,9 @@ object Upsert {
     * key is absent from `existing` are appended.
     *
     * Scale posture: the anti-join shuffles both sides on the key (or
-    * broadcasts `existing`'s keys if small); at 100 TB one would partition
-    * the sink table by a key prefix/date so the anti-join prunes to the
-    * touched partitions. Within-batch dedup and the anti-join share the
+    * broadcasts `existing`'s keys if small); at 100 TB the snapshot sink
+    * ([[writeSnapshot]]) prunes the anti-join to the dirs the batch's
+    * keys can live in. Within-batch dedup and the anti-join share the
     * same key shuffle.
     */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
@@ -67,42 +67,6 @@ object Upsert {
       keys, "left_anti")
     existing.unionByName(fresh.select(existing.columns.toIndexedSeq.map(col): _*))
   }
-
-  /** The batch's fresh rows against a PARTITIONED parquet sink, reading
-    * only the partitions the batch touches — the 100 TB upsert path: a
-    * daily batch against a years-deep sink anti-joins a handful of
-    * partitions, not the whole table.
-    *
-    * The touched-partition list is collected to the driver: bounded by the
-    * number of distinct `partCol` values IN THE BATCH (e.g. days), not by
-    * data volume — same class of driver-side metadata as IVF centroids.
-    * The `isin` filter lands in the scan's PartitionFilters (asserted in
-    * UpsertPartitionedSpec), so unread partitions are never opened. */
-  def freshAgainstPartitionedSink(spark: SparkSession, sinkPath: String,
-      incoming: DataFrame, keys: Seq[String], tieBreak: Seq[String],
-      partCol: String): DataFrame = {
-    val deduped = dedupOnKey(incoming, keys, tieBreak)
-    val touched = deduped.select(col(partCol)).distinct().collect().map(_.get(0))
-    // Schema is PINNED to the batch's, never inferred: a sink that exists
-    // but holds no data files yet (an empty first micro-batch commits only
-    // _SUCCESS) would fail parquet schema inference and kill the caller —
-    // with the schema supplied, it reads as a valid empty relation. The
-    // partition column in the pinned schema is populated from the
-    // directory values, as with inference.
-    val existingKeys = spark.read.schema(incoming.schema).parquet(sinkPath)
-      .filter(col(partCol).isin(touched.toIndexedSeq: _*))
-      .select(keys.map(col): _*).distinct()
-    deduped.join(existingKeys, keys, "left_anti")
-  }
-
-  /** Keep-existing upsert INTO a partitioned parquet sink: append only the
-    * fresh rows, written with the sink's partitioning. Idempotent: a
-    * re-run of the same batch appends nothing. */
-  def upsertPartitioned(spark: SparkSession, sinkPath: String,
-      incoming: DataFrame, keys: Seq[String], tieBreak: Seq[String],
-      partCol: String): Unit =
-    freshAgainstPartitionedSink(spark, sinkPath, incoming, keys, tieBreak, partCol)
-      .write.mode("append").partitionBy(partCol).parquet(sinkPath)
 
   // ───────── snapshot-versioned sink (time travel, table-format lite) ─────────
   //
@@ -115,8 +79,8 @@ object Upsert {
   // tmp-then-rename: readers either see a complete snapshot or none —
   // a crash mid-write leaves at most an orphaned data dir the next
   // successful write ignores (never a torn table). Data dirs are
-  // immutable after publish; there is no compaction here by design
-  // (compactShards composes when batch counts grow).
+  // immutable after publish; compaction (`compactSnapshots`) packs
+  // them into new dirs and publishes a new version.
 
   /** Label every Spark job `body` submits (guide §1.5): the UI (and
     * graft.Profile) show which operator phase each of a publish's jobs
@@ -2227,7 +2191,6 @@ object Upsert {
       zBits: Int = 12, zShards: Int = 0): Int =
       labeled(spark, "graft.compact") {
     val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
     Protocol.attempts(fs, path, "compactSnapshots",
         s"compactSnapshots: packed dirs rewritten under us 5 times at " +
           s"$path — rewriter storm; retry when merges/erasures quiesce") {
@@ -3382,7 +3345,10 @@ object Upsert {
   def vacuumOrphans(spark: SparkSession, path: String,
       minAgeMs: Long): Int = {
     val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
+    // Before the lock: on a path with no `_snapshots` dir the lock's
+    // create would fail as a misleading LockHeldException. A sink whose
+    // first writer crashed (a log, no manifest) stays vacuumable.
+    require(SnapLog.isSink(fs, path), s"no snapshot sink at $path")
     SnapLog.withRewriterLock(fs, path, "vacuumOrphans") {
       // Entries, not dirs: a live merge-on-read dv swept as an
       // "orphan" would resurrect every row it deletes.
@@ -3483,7 +3449,6 @@ object Upsert {
                 keys: Seq[String], orphanGraceMs: Long = 0L): Long =
       labeled(spark, "graft.erase") {
     val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
     require(latestVersion(spark, path) >= 1,
       s"no snapshot to erase from at $path")
     val keyRows = doomed.select(keys.map(col): _*).distinct()

@@ -139,8 +139,4 @@ object Tables {
 
   val AllTables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Register every testdata table as a temp view for Spark SQL use. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    AllTables.foreach(t => table(spark, dir, t).createOrReplaceTempView(t))
 }

@@ -2,7 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
+
+import graft.ops.Upsert
 
 /** Structured Streaming extension (north star; the reference is batch-only —
   * SURVEY.md §2.10 records the absence). The events table is the streaming
@@ -237,20 +240,23 @@ object EventStream {
       .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
       .parquet(dir)
 
-  /** Streaming keep-existing upsert sink: each micro-batch dedups within
-    * itself, anti-joins the partitioned parquet sink (reading ONLY the
-    * partitions the batch touches — `Upsert.freshAgainstPartitionedSink`),
-    * and appends the fresh keys. This turns at-least-once delivery into
-    * exactly-once-per-key sink contents: a replayed batch finds all its
-    * keys already present and appends nothing, which is the idempotence
-    * Structured Streaming needs from a foreachBatch sink. First batch
-    * bootstraps the sink (nothing to anti-join yet); an EMPTY first batch
-    * commits a data-file-less sink dir, which later batches read safely
-    * because the anti-join pins the batch schema instead of inferring
-    * (`Upsert.freshAgainstPartitionedSink`). The 100 TB story is
-    * the batch one: state lives in the sink table itself, partitioned so
-    * each micro-batch prunes to its touched partitions — no streaming
-    * state store grows with corpus size. */
+  /** Start `stream` with `write` as its `foreachBatch` sink, in update
+    * mode under `checkpoint`. Every sink below starts here. */
+  private def startBatchSink(stream: DataFrame, checkpoint: String)(
+      write: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("update")
+      .foreachBatch(write)
+      .start()
+
+  /** The latest published state of the snapshot sink at `path`, or None
+    * before its first publish. */
+  private def latestState(s: SparkSession, path: String): Option[DataFrame] = {
+    val v = Upsert.latestVersion(s, path)
+    if (v == 0) None else Some(Upsert.readSnapshot(s, path, v))
+  }
+
   /** Streaming NEAR-dup dedup sink — the near-dup twin of
     * `dedupWithinWatermark` (which is exact-only), built as the
     * incremental-dedup shape (`Dedup.dedupAgainstReferenceWithBands`)
@@ -262,67 +268,47 @@ object EventStream {
     *     anti-join, then batch bands equi-joined against the PERSISTED
     *     band table — candidates only within buckets, never
     *     batch × corpus, and the curated corpus is never re-signed
-    *     (each accepted doc is signed once, its bands appended once);
-    *  3. appends survivors to `docs/` and their bands to `bands/`.
+    *     (each accepted doc is signed once);
+    *  3. publishes the survivors' bands to the snapshot sink
+    *     `<sink>/bands` (keyed on (`docKey`, `band_id`)), then the
+    *     survivors to the snapshot sink `<sink>/docs` (keyed on
+    *     `docKey`), each through [[Upsert.writeSnapshot]].
     *
-    * State lives in the SINK, like `upsertSink`: no streaming state
-    * store grows with the corpus, so no watermark is needed for
+    * State lives in the SINK, as in [[snapshotSink]]: no streaming
+    * state store grows with the corpus, so no watermark is needed for
     * boundedness (compose `dedupWithinWatermark` upstream to pre-thin
-    * exact duplicates cheaply). A REPLAYED batch is removed wholesale
-    * by the exact pass — at-least-once delivery becomes
-    * exactly-once-per-content sink contents. Empty first batch commits
-    * data-file-less dirs; later reads pin the schema instead of
-    * inferring (the `upsertSink` contract).
-    *
-    * Crash-ordering contract: `bands/` is written BEFORE `docs/`. The
-    * two appends are not atomic together, so a crash can land between
-    * them; with bands-first the failure mode is an ORPHAN band set — a
-    * replayed batch re-admits the doc (the exact anti-join sees no
-    * docs/ row) and re-appends identical band rows, so the doc is never
-    * silently missing from the band table and future near-dup detection
-    * against it keeps working. Duplicate band rows are benign: the
-    * candidate join has set semantics (pairs are distinct-ed before
-    * verify), they just cost one extra bucket row. The reverse order
-    * (docs first, the r7 layout) was strictly worse: a crash there made
-    * the exact pass drop the replayed doc, so its bands were NEVER
-    * appended and the accepted doc became permanently invisible to
-    * near-dup checks. */
+    * exact duplicates cheaply). Both tables are snapshot sinks: they
+    * time-travel, the catalog lists them, and a re-delivered batch
+    * publishes an empty-delta version to each. A REPLAYED batch is
+    * removed wholesale by the exact pass; a later doc that reuses an
+    * accepted key is dropped as keep-existing. Bands publish first and
+    * both sides keep existing rows, so a replay after a crash between
+    * the two publishes re-admits the doc and adds no duplicate band
+    * rows. */
   def nearDupDedupSink(stream: DataFrame, sinkPath: String, docKey: String,
                        textCol: String, k: Int, bands: Int, rowsPerBand: Int,
-                       threshold: Double, checkpoint: String
-                      ): org.apache.spark.sql.streaming.StreamingQuery = {
+                       threshold: Double, checkpoint: String): StreamingQuery = {
     import graft.ext.Dedup
-    val write: (DataFrame, Long) => Unit = (batch0, _) => {
+    val docsPath = s"$sinkPath/docs"
+    val bandsPath = s"$sinkPath/bands"
+    startBatchSink(stream, checkpoint) { (batch0, _) =>
       val s = batch0.sparkSession
-      val docsPath = s"$sinkPath/docs"
-      val bandsPath = s"$sinkPath/bands"
-      val fs = new org.apache.hadoop.fs.Path(sinkPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val b1 = batch0.dropDuplicates(docKey)
       val within = Dedup.verifiedNearDupPairs(b1, docKey, textCol,
         k, bands, rowsPerBand, threshold)
       val b2 = Dedup.removeNearDups(b1, within, docKey)
-      val exists = fs.exists(new org.apache.hadoop.fs.Path(docsPath))
-      val accepted = (if (!exists) b2 else {
-        val ref = s.read.schema(batch0.schema).parquet(docsPath)
-        val bandSchema = Dedup.lshBands(
-          Dedup.minhashSignature(b1, docKey, textCol, k),
-          docKey, bands, rowsPerBand).schema
-        val refBands = s.read.schema(bandSchema).parquet(bandsPath)
-        Dedup.dedupAgainstReferenceWithBands(b2, ref, refBands,
+      val accepted = latestState(s, docsPath).fold(b2) { ref =>
+        Dedup.dedupAgainstReferenceWithBands(b2, ref,
+          Upsert.readSnapshot(s, bandsPath, Upsert.latestVersion(s, bandsPath)),
           docKey, textCol, k, bands, rowsPerBand, threshold)
-      }).localCheckpoint() // two writes below — don't run the chain twice
-      // bands BEFORE docs — see the crash-ordering contract above.
-      Dedup.lshBands(Dedup.minhashSignature(accepted, docKey, textCol, k),
-          docKey, bands, rowsPerBand)
-        .write.mode("append").parquet(bandsPath)
-      accepted.write.mode("append").parquet(docsPath)
+      }.localCheckpoint() // two publishes below — don't run the chain twice
+      Upsert.writeSnapshot(s, bandsPath,
+        Dedup.lshBands(Dedup.minhashSignature(accepted, docKey, textCol, k),
+          docKey, bands, rowsPerBand),
+        Seq(docKey, "band_id"), Seq(docKey))
+      Upsert.writeSnapshot(s, docsPath, accepted, Seq(docKey), Seq(docKey))
+      ()
     }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch(write)
-      .start()
   }
 
   /** Streaming WINNOW-fingerprint dedup sink — the fuzzy twin of
@@ -336,53 +322,52 @@ object EventStream {
     *
     *  1. dedups WITHIN itself (within-batch pairs, greedy higher-id
     *     eviction);
-    *  2. drops exact replays (content-hash anti-join against `docs/` —
+    *  2. drops exact replays (content-hash anti-join against `docs` —
     *     the bloom-composed [[graft.ext.Dedup.freshByContent]] guard,
     *     which also makes at-least-once delivery exactly-once even for
     *     docs too short to carry `minShared` fingerprints);
     *  3. drops fuzzy duplicates: batch fingerprints equi-join the
-    *     PERSISTED `fps/` table on the hash — candidates only inside a
+    *     PERSISTED `fps` table on the hash — candidates only inside a
     *     shared fingerprint's bucket, never batch × corpus — and a
     *     per-(batch doc, landed doc) distinct-hash count ≥ `minShared`
     *     evicts;
-    *  4. appends survivors' fingerprints to `fps/` THEN the docs to
-    *     `docs/`.
+    *  4. publishes the survivors' fingerprints to the snapshot sink
+    *     `<sink>/fps` (keyed on (`docKey`, `fp`)), then the survivors to
+    *     the snapshot sink `<sink>/docs` (keyed on `docKey`).
     *
-    * Crash-ordering: with fps-first, a crash between the writes leaves
-    * ORPHAN fingerprints. Unlike [[nearDupDedupSink]]'s bands (mere
-    * candidates, neutralized by the text verify), a fingerprint match
-    * IS the decision here — so the landed side is SEMI-JOINED to
-    * `docs/` keys before matching, which filters orphans out: the
-    * replayed doc re-admits, re-appends its fps (duplicate rows are
-    * collapsed by the distinct on read), and lands. State lives in the
-    * sink — no streaming state store grows with the corpus. */
+    * Both tables are snapshot sinks, as in [[nearDupDedupSink]]: they
+    * time-travel, the catalog lists them, a re-delivered batch
+    * publishes an empty-delta version to each, and a later doc that
+    * reuses an accepted key is dropped as keep-existing. Fingerprints
+    * publish first and both sides keep existing rows, so a replay after
+    * a crash between the two publishes adds no duplicate rows. A
+    * fingerprint match IS the eviction decision here, so the landed
+    * side is still SEMI-JOINED to `docs` keys before matching: an
+    * orphan fingerprint from such a crash can never evict its own
+    * replayed doc. State lives in the sink — no streaming state store
+    * grows with the corpus. */
   def winnowDedupSink(stream: DataFrame, sinkPath: String, docKey: String,
                       textCol: String, k: Int, w: Int, minShared: Int,
-                      checkpoint: String
-                     ): org.apache.spark.sql.streaming.StreamingQuery = {
+                      checkpoint: String): StreamingQuery = {
     import graft.ext.{Dedup, TextAnalysis}
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val write: (DataFrame, Long) => Unit = (batch0, _) => {
+    val docsPath = s"$sinkPath/docs"
+    val fpsPath = s"$sinkPath/fps"
+    startBatchSink(stream, checkpoint) { (batch0, _) =>
       val s = batch0.sparkSession
-      val docsPath = s"$sinkPath/docs"
-      val fpsPath = s"$sinkPath/fps"
-      val fs = new org.apache.hadoop.fs.Path(sinkPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val b1 = batch0.dropDuplicates(docKey)
       val within = TextAnalysis.winnowSimilarPairs(b1, docKey, textCol,
         k, w, minShared).select(col("a"), col("b"))
       val b2 = Dedup.removeNearDups(b1, within, docKey)
-      val exists = fs.exists(new org.apache.hadoop.fs.Path(docsPath))
-      val accepted = (if (!exists) b2 else {
-        val ref = s.read.schema(batch0.schema).parquet(docsPath)
+      val accepted = latestState(s, docsPath).fold(b2) { ref =>
+        // A doc reusing an accepted key drops here, before its
+        // fingerprints could land under that key.
         val fresh = Dedup.freshByContent(b2, ref, textCol)
-        val fpSchema = org.apache.spark.sql.types.StructType(Seq(
-          batch0.schema(docKey),
-          org.apache.spark.sql.types.StructField("fp",
-            org.apache.spark.sql.types.LongType)))
+          .join(ref.select(col(docKey)), Seq(docKey), "left_anti")
         // Orphan-proof landed side: only fingerprints whose doc actually
-        // committed to docs/ may evict (see crash-ordering above).
-        val landed = s.read.schema(fpSchema).parquet(fpsPath)
+        // published to docs may evict.
+        val landed = Upsert.readSnapshot(s, fpsPath,
+            Upsert.latestVersion(s, fpsPath))
           .join(ref.select(col(docKey)), Seq(docKey), "left_semi")
           .select(col(docKey).as("__ref"), col("fp")).distinct()
         val batchFps = TextAnalysis.winnowFingerprints(fresh, docKey,
@@ -394,27 +379,23 @@ object EventStream {
           .filter(col("__sh") >= minShared)
           .select(col(docKey)).distinct()
         fresh.join(dupIds, Seq(docKey), "left_anti")
-      }).localCheckpoint() // two writes below — don't run the chain twice
-      // fps BEFORE docs — see the crash-ordering contract above.
-      TextAnalysis.winnowFingerprints(accepted, docKey, textCol, k, w)
-        .select(col(docKey), col("fp")).distinct()
-        .write.mode("append").parquet(fpsPath)
-      accepted.write.mode("append").parquet(docsPath)
+      }.localCheckpoint() // two publishes below — don't run the chain twice
+      Upsert.writeSnapshot(s, fpsPath,
+        TextAnalysis.winnowFingerprints(accepted, docKey, textCol, k, w)
+          .select(col(docKey), col("fp")).distinct(),
+        Seq(docKey, "fp"), Seq(docKey))
+      Upsert.writeSnapshot(s, docsPath, accepted, Seq(docKey), Seq(docKey))
+      ()
     }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch(write)
-      .start()
   }
 
-  /** Streaming decontamination: append to `sinkPath` only the arriving
-    * documents that share fewer than `minHits` distinct n-gram shingles
-    * with the benchmark set — the streaming twin of
-    * `Contamination.decontaminate`, in the [[nearDupDedupSink]] mold:
-    * state lives in the SINK plus one STATIC bench-side table, never in
-    * a streaming state store, so nothing grows with the stream and no
-    * watermark is needed for boundedness.
+  /** Streaming decontamination: publish to the snapshot sink at
+    * `sinkPath` only the arriving documents that share fewer than
+    * `minHits` distinct n-gram shingles with the benchmark set — the
+    * streaming twin of `Contamination.decontaminate`, in the
+    * [[nearDupDedupSink]] mold: state lives in the SINK plus one STATIC
+    * bench-side table, never in a streaming state store, so nothing
+    * grows with the stream and no watermark is needed for boundedness.
     *
     * The df-capped bench shingle table is computed ONCE here (eager
     * `localCheckpoint` — benchmark sets are small by construction) and
@@ -422,257 +403,37 @@ object EventStream {
     * pays exactly the batch operator's cost per arrival and the
     * benchmark is never re-shingled.
     *
-    * Replay contract: survivors anti-join on their content fingerprint
-    * against the docs already landed, so at-least-once delivery becomes
-    * exactly-once-per-content sink contents; a replayed batch appends
-    * nothing. The landed fingerprints are STORED: every sink row
-    * carries a `__fp` column (md5 of its text, the reserved-name
-    * convention) written in the same parquet files as the doc itself,
-    * so the exact guard can never disagree with the sink contents (a
-    * sibling fingerprint TABLE would be cheaper to scan but cannot be
-    * atomic with the docs append — fp-first loses docs on a crash
-    * between the writes, docs-first re-admits them). The fingerprint is
-    * NULL-SAFE (null-text docs map to a sentinel outside the md5 hex
-    * space) so a nullable text column cannot re-admit its rows on every
-    * replay. Within one batch only key duplicates are dropped — two
-    * same-content docs under different keys both land (compose an
-    * exact-dedup stage upstream if content uniqueness within a batch
-    * matters). Empty first batch commits a data-file-less dir; later
-    * reads pin the schema instead of inferring (the `upsertSink`
-    * contract).
-    *
-    * Guard cost — O(batch), not O(sink), per micro-batch: beside the
-    * data files lives `_fp_blooms/`, fixed-size bloom filters over the
-    * landed fingerprints (one per committed batch, merged at read
-    * time). Each batch's bloom is written durably BEFORE its data
-    * append, so every landed row is bloom-covered at every crash point
-    * — a merged-bloom MISS therefore proves the row's content has never
-    * landed, and those rows append with ZERO sink IO (the normal
-    * fresh-content case: the guard is |batch| map-side probes against
-    * driver-merged metadata). Only bloom HITS — replays, cross-batch
-    * content re-deliveries, and an fpp-bounded residue of false
-    * positives — fall through to the exact anti-join against the
-    * sink's `__fp` column (column-pruned, bloom-prefiltered at the
-    * scan, ~32 B/doc: the [[graft.ext.Dedup.freshByFingerprint]]
-    * shape). Bloom false positives cost only that fallback, never a
-    * dropped row. A bloom written for an append that then crashed
-    * claims content that never landed — harmless for the same reason:
-    * hits are verified exactly. As the stream outgrows
-    * `guardBloomItems` × committed batches the merged filter saturates
-    * and more batches pay the exact fallback — degradation is back to
-    * the pre-bloom guard cost, never incorrectness; recompact or
-    * rebuild `_fp_blooms/` with larger sizing to restore the fast
-    * path. Sizing is part of the sink's on-disk contract: all bloom
-    * files must share one (items × bitsPerItem) shape to merge, so
-    * changing the parameters on an existing sink requires rebuilding
-    * the bloom dir.
-    *
-    * Format notes. A sink written by a pre-`__fp` version has no
-    * stored fingerprints — the guard cannot recognize anything, so
-    * resuming FAILS FAST with a migrate-once instruction instead of
-    * silently duplicating (the actual file footers are inspected, not
-    * the pinned read schema). A sink written by the pre-bloom `__fp`
-    * version migrates automatically: one O(sink-fp) scan builds a
-    * single legacy bloom covering everything landed so far (if the
-    * landed count exceeds `guardBloomItems` that bloom is saturated —
-    * correct but slow — so pass sizing that covers the legacy
-    * corpus). */
+    * Exactly once per content: every sink row carries a `__fp` column
+    * (md5 of its text, the reserved-name convention) and the sink is
+    * keyed on it, so [[Upsert.writeSnapshot]]'s keep-existing publish
+    * IS the replay guard — a re-delivered batch publishes an
+    * empty-delta version. Within one batch, same-content docs under
+    * different keys land once, keeping the lowest `docKey`. The guard
+    * costs O(batch), not O(sink): the keep-existing probe prunes the
+    * sink's dirs by the `.bloom2` sidecar each publish writes on
+    * `__fp`, so a batch of fresh content opens no sink dir, and only
+    * bloom hits (replays, re-delivered content, false positives) read
+    * the `__fp` column of the dirs that may hold them. The fingerprint
+    * is NULL-SAFE: null-text docs map to a sentinel outside the md5 hex
+    * space, because a NULL key never matches and would re-land on every
+    * replay. The sink time-travels and the catalog lists it. */
   def decontaminationSink(stream: DataFrame, bench: DataFrame,
                           sinkPath: String, docKey: String, textCol: String,
                           n: Int, minHits: Int, maxShingleDf: Int,
-                          checkpoint: String,
-                          guardBloomItems: Long = 1L << 20,
-                          guardBloomBitsPerItem: Long = 8L,
-                          guardCompactAt: Int = 64
-                         ): org.apache.spark.sql.streaming.StreamingQuery = {
+                          checkpoint: String): StreamingQuery = {
     import graft.ext.Contamination
     val benchSh = Contamination
       .cappedBenchShingles(bench, docKey, textCol, n, maxShingleDf)
       .localCheckpoint()
-    // Once per query run, not per batch: the footer inspection +
-    // legacy-bloom migration below list and read sink files.
-    var guardReady = false
-    val write: (DataFrame, Long) => Unit = (batch0, batchId) => {
-      val s = batch0.sparkSession
-      val sink = new org.apache.hadoop.fs.Path(sinkPath)
-      val fs = sink.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val sinkSchema = org.apache.spark.sql.types.StructType(
-        batch0.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "__fp", org.apache.spark.sql.types.StringType))
-      if (!guardReady) {
-        ensureGuardReady(s, fs, sink, sinkPath, sinkSchema,
-          guardBloomItems, guardBloomBitsPerItem)
-        guardReady = true
-      }
-      val b1 = batch0.dropDuplicates(docKey)
-      val clean = Contamination.decontaminateAgainst(b1, benchSh, docKey,
-        textCol, n, minHits)
-      // Null-safe: md5(NULL) is NULL, and a NULL fingerprint matches
-      // nothing in the anti-join — a null-text doc would re-land on
-      // every replay. The sentinel is not 32 hex chars, so it cannot
-      // collide with any real md5 (and stays distinct from md5('')).
-      val fp = coalesce(md5(col(textCol)), lit("__fp:null-text"))
-      val (fresh0, consultedSink) =
-        bloomGuardedFresh(clean, fp, sinkPath, sinkSchema, textCol)
-      // The consulted path embeds the sink anti-join, and `fresh` feeds
-      // three jobs below (emptiness probe, bloom aggregate, append) —
-      // materialize once so the sink fp column is scanned once, not 3×.
-      val fresh = if (consultedSink) fresh0.localCheckpoint() else fresh0
-      // Bloom BEFORE data — the coverage invariant the whole guard
-      // rests on: whatever the crash point, every landed row already
-      // has a durable bloom claiming it. (Bloom-then-crash claims rows
-      // that never landed; the exact fallback on hits absorbs that.)
-      if (!fresh.isEmpty) {
-        val bytes = graft.ops.BloomJoin.keyBloom(fresh, col("__fp"),
-          guardBloomItems, guardBloomBitsPerItem)
-        FpBlooms.write(fs, sink,
-          s"batch-$batchId-${java.util.UUID.randomUUID}.bloom", bytes)
-      }
-      fresh.write.mode("append").parquet(sinkPath)
-      // Bound the per-batch driver merge (and the small-files creep):
-      // fold the accumulated per-batch blooms into one. Write-new-then-
-      // delete-old, so a crash mid-compaction leaves double coverage,
-      // never a gap.
-      val files = FpBlooms.list(fs, sink)
-      if (files.size > guardCompactAt) FpBlooms.compact(fs, sink, files, batchId)
+    startBatchSink(stream, checkpoint) { (batch0, _) =>
+      val clean = Contamination.decontaminateAgainst(
+        batch0.dropDuplicates(docKey), benchSh, docKey, textCol, n, minHits)
+      Upsert.writeSnapshot(batch0.sparkSession, sinkPath,
+        clean.withColumn("__fp",
+          coalesce(md5(col(textCol)), lit("__fp:null-text"))),
+        Seq("__fp"), Seq(docKey))
+      ()
     }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch(write)
-      .start()
-  }
-
-  /** The bloom-guarded exactly-once-per-content filter behind
-    * [[decontaminationSink]], exposed for direct testing. Returns the
-    * fresh rows (with `__fp` attached) and whether the sink's stored
-    * fingerprint column had to be consulted — `false` exactly when
-    * every batch row missed the merged persisted bloom, i.e. the
-    * normal fresh-content batch pays no sink IO at all. Callers must
-    * have run the migration check first ([[decontaminationSink]]
-    * does): with no bloom files present the guard treats everything
-    * as fresh. */
-  private[graft] def bloomGuardedFresh(batch: DataFrame,
-      fp: org.apache.spark.sql.Column, sinkPath: String,
-      sinkSchema: org.apache.spark.sql.types.StructType,
-      textCol: String): (DataFrame, Boolean) = {
-    val s = batch.sparkSession
-    val sink = new org.apache.hadoop.fs.Path(sinkPath)
-    val fs = sink.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // The batch feeds two filters plus the downstream jobs — pin it so
-    // the decontamination chain upstream runs once.
-    val keyed = batch.withColumn("__fp", fp).localCheckpoint()
-    FpBlooms.readMerged(fs, FpBlooms.list(fs, sink)) match {
-      case None => (keyed, false) // nothing ever landed (post-migration)
-      case Some(merged) =>
-        val hit = graft.ops.BloomJoin.mightContain(merged, col("__fp"))
-        val suspects = keyed.filter(hit)
-        val definite = keyed.filter(!hit)
-        if (suspects.isEmpty) (definite, false)
-        else if (!fs.exists(sink)) (keyed, false) // bloom-then-crash before 1st append
-        else {
-          val landedFp = s.read.schema(sinkSchema).parquet(sinkPath)
-            .select("__fp")
-          val verified = graft.ext.Dedup.freshByFingerprint(suspects,
-            landedFp, "__fp", textCol, batchFp = Some(col("__fp")))
-          (definite.unionByName(verified), true)
-        }
-    }
-  }
-
-  /** Once per resume: fail fast on a pre-`__fp` sink (no stored
-    * fingerprints — the guard would silently duplicate on replay), and
-    * auto-migrate a pre-bloom `__fp` sink by building one legacy bloom
-    * over everything landed (a single column-pruned O(sink-fp) scan).
-    * Inspects the ACTUAL parquet footers, not the pinned read schema —
-    * the pinned read would happily return `__fp` as all-NULL. */
-  private def ensureGuardReady(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, sink: org.apache.hadoop.fs.Path,
-      sinkPath: String, sinkSchema: org.apache.spark.sql.types.StructType,
-      bloomItems: Long, bloomBitsPerItem: Long): Unit = {
-    if (!fs.exists(sink)) return
-    // Inference throws on a data-file-less dir (empty first batch
-    // committed only _SUCCESS) — nothing landed, nothing to migrate.
-    scala.util.Try(s.read.parquet(sinkPath).schema).foreach { actual =>
-      require(actual.fieldNames.contains("__fp"),
-        s"decontamination sink at $sinkPath was written without stored " +
-          "fingerprints (no __fp column in the data files): resuming " +
-          "would silently duplicate on replay. Migrate once: read the " +
-          "old sink, add __fp = coalesce(md5(<textCol>), " +
-          "'__fp:null-text'), and rewrite the sink.")
-      if (FpBlooms.list(fs, sink).isEmpty) {
-        val landed = s.read.schema(sinkSchema).parquet(sinkPath)
-        val bytes = graft.ops.BloomJoin.keyBloom(landed.select("__fp"),
-          col("__fp"), bloomItems, bloomBitsPerItem)
-        FpBlooms.write(fs, sink, "legacy-0.bloom", bytes)
-      }
-    }
-  }
-
-  /** On-disk replay-guard blooms for [[decontaminationSink]]:
-    * `.bloom` files under `<sink>/_fp_blooms`, each a fixed-size
-    * `org.apache.spark.util.sketch.BloomFilter` over landed `__fp`
-    * values (xxhash64 keys — the [[graft.ops.BloomJoin]] encoding, so
-    * the probe side is the same codegen'd `might_contain`). All files
-    * share one sizing so they OR together; membership is the union of
-    * files, so duplicate coverage (retry attempts, interrupted
-    * compactions) is always harmless. */
-  private object FpBlooms {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    import org.apache.spark.util.sketch.BloomFilter
-
-    private def dir(sink: Path) = new Path(sink, "_fp_blooms")
-
-    def list(fs: FileSystem, sink: Path): Seq[Path] = {
-      val d = dir(sink)
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".bloom"))
-    }
-
-    private def readOne(fs: FileSystem, p: Path): BloomFilter = {
-      val in = fs.open(p)
-      try BloomFilter.readFrom(in) finally in.close()
-    }
-
-    /** Driver-side union of every persisted bloom, serialized for the
-      * codegen'd probe. Distinct sizings cannot OR — surface the
-      * contract instead of the sketch library's internal error. */
-    def readMerged(fs: FileSystem, files: Seq[Path]): Option[Array[Byte]] =
-      files.map(readOne(fs, _)).reduceOption { (a, b) =>
-        try a.mergeInPlace(b)
-        catch {
-          case e: org.apache.spark.util.sketch.IncompatibleMergeException =>
-            throw new IllegalStateException(
-              "_fp_blooms files have mixed sizings (guardBloomItems × " +
-                "guardBloomBitsPerItem changed on an existing sink?); " +
-                "rebuild the bloom dir with one sizing", e)
-        }
-      }.map { bf =>
-        val out = new java.io.ByteArrayOutputStream()
-        bf.writeTo(out)
-        out.toByteArray
-      }
-
-    /** Durable create via tmp + rename so a crash mid-write cannot
-      * leave a truncated `.bloom` for the next batch's `readFrom`. */
-    def write(fs: FileSystem, sink: Path, name: String,
-              bloom: Array[Byte]): Unit = {
-      val d = dir(sink)
-      if (!fs.exists(d)) fs.mkdirs(d)
-      val tmp = new Path(d, s".$name.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bloom) finally out.close()
-      fs.rename(tmp, new Path(d, name))
-    }
-
-    def compact(fs: FileSystem, sink: Path, files: Seq[Path],
-                batchId: Long): Unit =
-      readMerged(fs, files).foreach { merged =>
-        write(fs, sink,
-          s"compact-$batchId-${java.util.UUID.randomUUID}.bloom", merged)
-        files.foreach(fs.delete(_, false))
-      }
   }
 
   /** Streaming TRENDING-TERM counts: watermarked tumbling-window word
@@ -708,62 +469,32 @@ object EventStream {
 
   /** Streaming LEARNED-quality gate — the streaming twin of
     * [[graft.ext.Classify.scoreLinear]] ∘ filter(label = 'keep'),
-    * composed with the keyed keep-existing upsert so at-least-once
-    * replays append nothing. Per micro-batch: score against the
-    * broadcast weight table (map-only + ONE batch-local per-doc agg —
-    * no cross-batch streaming state; the model is the only state and
-    * it is read-only), keep docs whose 6dp sigmoid clears the
-    * threshold, re-attach the batch's payload columns by key, then
-    * the [[upsertSink]] idempotence shape: anti-join only the sink
-    * partitions the batch touches, append the fresh keys. State lives
-    * in the sink table itself — nothing grows with stream length. */
+    * composed with the keyed keep-existing publish so at-least-once
+    * replays add nothing. Per micro-batch: score against the broadcast
+    * weight table (map-only + ONE batch-local per-doc agg — no
+    * cross-batch streaming state; the model is the only state and it is
+    * read-only), keep docs whose 6dp sigmoid clears the threshold,
+    * re-attach the batch's payload columns by key, then publish them to
+    * the snapshot sink at `sinkPath` through [[Upsert.writeSnapshot]],
+    * keyed on `docKey` with tie-break `prob`. A re-delivered batch
+    * publishes an empty-delta version, and a later doc that reuses an
+    * accepted key is dropped as keep-existing. The sink time-travels
+    * and the catalog lists it. State lives in the sink table itself —
+    * nothing grows with stream length. */
   def classifierGatedSink(stream: DataFrame, sinkPath: String, docKey: String,
                           textCol: String, weights: DataFrame, buckets: Int,
-                          bias: Double, threshold: Double, partCol: String,
-                          checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val write: (DataFrame, Long) => Unit = (batch, _) => {
-      val s = batch.sparkSession
+                          bias: Double, threshold: Double,
+                          checkpoint: String): StreamingQuery =
+    startBatchSink(stream, checkpoint) { (batch, _) =>
       val kept = graft.ext.Classify
         .scoreLinear(batch, docKey, textCol, weights, buckets, bias, threshold)
         .filter(col("label") === "keep")
         .select(col(docKey), col("prob"))
         .join(batch, Seq(docKey))
-      val sink = new org.apache.hadoop.fs.Path(sinkPath)
-      val exists = sink.getFileSystem(s.sparkContext.hadoopConfiguration).exists(sink)
-      val fresh =
-        if (exists)
-          graft.ops.Upsert.freshAgainstPartitionedSink(
-            s, sinkPath, kept, Seq(docKey), Seq("prob"), partCol)
-        else graft.ops.Upsert.dedupOnKey(kept, Seq(docKey), Seq("prob"))
-      fresh.write.mode("append").partitionBy(partCol).parquet(sinkPath)
+      Upsert.writeSnapshot(batch.sparkSession, sinkPath, kept, Seq(docKey),
+        Seq("prob"))
+      ()
     }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch(write)
-      .start()
-  }
-
-  def upsertSink(stream: DataFrame, sinkPath: String, keys: Seq[String],
-                 tieBreak: Seq[String], partCol: String,
-                 checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val write: (DataFrame, Long) => Unit = (batch, _) => {
-      val s = batch.sparkSession
-      val sink = new org.apache.hadoop.fs.Path(sinkPath)
-      val exists = sink.getFileSystem(s.sparkContext.hadoopConfiguration).exists(sink)
-      val fresh =
-        if (exists)
-          graft.ops.Upsert.freshAgainstPartitionedSink(
-            s, sinkPath, batch, keys, tieBreak, partCol)
-        else graft.ops.Upsert.dedupOnKey(batch, keys, tieBreak)
-      fresh.write.mode("append").partitionBy(partCol).parquet(sinkPath)
-    }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch(write)
-      .start()
-  }
 
   /** Streaming front end of the SNAPSHOT-VERSIONED sink
     * ([[graft.ops.Upsert.writeSnapshot]]): every micro-batch publishes
@@ -776,17 +507,11 @@ object EventStream {
     * of any version see no duplicates — version numbers may advance on
     * replay, row content never does. */
   def snapshotSink(stream: DataFrame, sinkPath: String, keys: Seq[String],
-                   tieBreak: Seq[String],
-                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Upsert.writeSnapshot(batch.sparkSession, sinkPath,
-          batch, keys, tieBreak)
-        ()
-      }
-      .start()
+                   tieBreak: Seq[String], checkpoint: String): StreamingQuery =
+    startBatchSink(stream, checkpoint) { (batch, _) =>
+      Upsert.writeSnapshot(batch.sparkSession, sinkPath, batch, keys, tieBreak)
+      ()
+    }
 
   /** [[snapshotSink]] behind the PROFILE-DRIFT GATE, with a DEAD-LETTER
     * path: each micro-batch publishes via
@@ -802,47 +527,27 @@ object EventStream {
       keys: Seq[String], tieBreak: Seq[String], checkpoint: String,
       quarantinePath: String,
       maxNullRateJump: Double, maxRowGrowthPct: Double,
-      minRowGrowthPct: Double = 0.0): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        try {
-          graft.ops.Upsert.writeSnapshotGated(s, sinkPath, batch,
-            keys, tieBreak, maxNullRateJump, maxRowGrowthPct,
-            minRowGrowthPct)
-          ()
-        } catch {
-          // TYPED, not message-matched: routing on exception text is
-          // exactly the fragility the LockHeldException rework removed
-          // — a reworded gate message would turn quarantining into
-          // stream death silently.
-          case e: graft.ops.DriftRefusedException =>
-            System.err.println(
-              s"[snapshotSinkGated] batch $batchId quarantined: " +
-                e.getMessage)
-            batch.withColumn("__batch_id", lit(batchId))
-              .write.mode("append").parquet(quarantinePath)
-        }
+      minRowGrowthPct: Double = 0.0): StreamingQuery =
+    startBatchSink(stream, checkpoint) { (batch, batchId) =>
+      try {
+        Upsert.writeSnapshotGated(batch.sparkSession, sinkPath, batch,
+          keys, tieBreak, maxNullRateJump, maxRowGrowthPct,
+          minRowGrowthPct)
+        ()
+      } catch {
+        // TYPED, not message-matched: routing on exception text is
+        // exactly the fragility the LockHeldException rework removed
+        // — a reworded gate message would turn quarantining into
+        // stream death silently.
+        case e: graft.ops.DriftRefusedException =>
+          System.err.println(
+            s"[snapshotSinkGated] batch $batchId quarantined: " +
+              e.getMessage)
+          batch.withColumn("__batch_id", lit(batchId))
+            .write.mode("append").parquet(quarantinePath)
       }
-      .start()
+    }
 
-  /** Streaming CDC APPLY: each micro-batch of change rows (opCol ∈
-    * I/U/D) MERGES into the snapshot sink
-    * ([[graft.ops.Upsert.mergeSnapshot]]) — the streaming front end of
-    * a Debezium/binlog-style feed. Every micro-batch publishes one new
-    * version; copy-on-write rewrites only the dirs holding touched
-    * keys, so a trickle of updates against a compacted 100 TB snapshot
-    * rewrites per-batch work, not the corpus. Replay safety is
-    * CONTENT-level like [[snapshotSink]]: re-merging a delivered batch
-    * republishes the same state (U re-lands its value over itself, D of
-    * a gone key is a no-op, I of a present key drops) — version numbers
-    * may advance on replay, row content never does. An EMPTY sink
-    * bootstraps from the first batch's I/U rows. Ordering: at-least-once
-    * + content idempotence needs IN-ORDER batch delivery per key, which
-    * Structured Streaming's sequential foreachBatch provides; the
-    * within-batch collapse picks one op per key by `tieBreak`. */
   /** Retry `f` while it throws [[graft.ops.LockHeldException]] — the
     * TYPED signal that a rewriter (compaction, another merge) holds the
     * sink's exclusive lock — with exponential backoff (250 ms doubling
@@ -885,7 +590,23 @@ object EventStream {
     sys.error("unreachable")
   }
 
-  /** `mor = true` applies each micro-batch MERGE-ON-READ
+  /** Streaming CDC APPLY: each micro-batch of change rows (opCol ∈
+    * I/U/D) MERGES into the snapshot sink
+    * ([[graft.ops.Upsert.mergeSnapshot]]) — the streaming front end of
+    * a Debezium/binlog-style feed. Every micro-batch publishes one new
+    * version; copy-on-write rewrites only the dirs holding touched
+    * keys, so a trickle of updates against a compacted 100 TB snapshot
+    * rewrites per-batch work, not the corpus. Replay safety is
+    * CONTENT-level like [[snapshotSink]]: re-merging a delivered batch
+    * republishes the same state (U re-lands its value over itself, D of
+    * a gone key is a no-op, I of a present key drops) — version numbers
+    * may advance on replay, row content never does. An EMPTY sink
+    * bootstraps from the first batch's I/U rows. Ordering: at-least-once
+    * + content idempotence needs IN-ORDER batch delivery per key, which
+    * Structured Streaming's sequential foreachBatch provides; the
+    * within-batch collapse picks one op per key by `tieBreak`.
+    *
+    * `mor = true` applies each micro-batch MERGE-ON-READ
     * ([[graft.ops.Upsert.mergeSnapshotMoR]]): trickle CDC on hot keys
     * is EXACTLY the write-amplification case deletion vectors exist
     * for — per batch the sink writes the landing dir plus key-sized
@@ -896,38 +617,32 @@ object EventStream {
                    tieBreak: Seq[String], opCol: String,
                    checkpoint: String,
                    lockWaitMs: Long = Long.MaxValue,
-                   mor: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // upper() here must mirror mergeSnapshot's own normalization:
-        // a lowercase-op feed's FIRST batch would otherwise bootstrap
-        // empty (every row filtered) while later batches merge fine —
-        // a silent, permanent loss of the first batch.
-        if (graft.ops.Upsert.latestVersion(s, sinkPath) == 0) {
-          // Bootstrap must mirror mergeSnapshot's dedup-THEN-apply: the
-          // per-key op collapse picks one winning op per key BEFORE any
-          // filtering, so a key whose tieBreak winner is D (an I and a
-          // D of the same key in the first batch) bootstraps ABSENT —
-          // filtering to I/U first would resurrect the discarded I row.
-          val collapsed = graft.ops.Upsert.dedupOnKey(
-            batch.withColumn(opCol, upper(col(opCol))), keys, tieBreak)
-          graft.ops.Upsert.writeSnapshot(s, sinkPath,
-            collapsed.filter(col(opCol).isin("I", "U")).drop(opCol),
-            keys, tieBreak)
-        } else
-          retryWhileLocked(lockWaitMs)(
-            if (mor)
-              graft.ops.Upsert.mergeSnapshotMoR(s, sinkPath, batch,
-                keys, tieBreak, opCol)
-            else
-              graft.ops.Upsert.mergeSnapshot(s, sinkPath, batch,
-                keys, tieBreak, opCol))
-        ()
-      }
-      .start()
+                   mor: Boolean = false): StreamingQuery =
+    startBatchSink(stream, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      // upper() here must mirror mergeSnapshot's own normalization:
+      // a lowercase-op feed's FIRST batch would otherwise bootstrap
+      // empty (every row filtered) while later batches merge fine —
+      // a silent, permanent loss of the first batch.
+      if (Upsert.latestVersion(s, sinkPath) == 0) {
+        // Bootstrap must mirror mergeSnapshot's dedup-THEN-apply: the
+        // per-key op collapse picks one winning op per key BEFORE any
+        // filtering, so a key whose tieBreak winner is D (an I and a
+        // D of the same key in the first batch) bootstraps ABSENT —
+        // filtering to I/U first would resurrect the discarded I row.
+        val collapsed = Upsert.dedupOnKey(
+          batch.withColumn(opCol, upper(col(opCol))), keys, tieBreak)
+        Upsert.writeSnapshot(s, sinkPath,
+          collapsed.filter(col(opCol).isin("I", "U")).drop(opCol),
+          keys, tieBreak)
+      } else
+        retryWhileLocked(lockWaitMs)(
+          if (mor)
+            Upsert.mergeSnapshotMoR(s, sinkPath, batch, keys, tieBreak, opCol)
+          else
+            Upsert.mergeSnapshot(s, sinkPath, batch, keys, tieBreak, opCol))
+      ()
+    }
 
   /** Re-feed BLESSED quarantined batches into the gated snapshot sink —
     * the missing half of [[snapshotSinkGated]]'s dead-letter loop (the
@@ -984,10 +699,10 @@ object EventStream {
         val ok =
           try {
             if (force)
-              graft.ops.Upsert.writeSnapshot(spark, sinkPath, batch,
+              Upsert.writeSnapshot(spark, sinkPath, batch,
                 keys, tieBreak)
             else
-              graft.ops.Upsert.writeSnapshotGated(spark, sinkPath, batch,
+              Upsert.writeSnapshotGated(spark, sinkPath, batch,
                 keys, tieBreak, maxNullRateJump, maxRowGrowthPct,
                 minRowGrowthPct)
             true
@@ -1015,6 +730,6 @@ object EventStream {
       groupCols: Seq[String], valueCol: String,
       lockWaitMs: Long = Long.MaxValue): Int =
     retryWhileLocked(lockWaitMs)(
-      graft.ops.Upsert.refreshAggregateFromFeed(spark, srcPath, srcKeys,
+      Upsert.refreshAggregateFromFeed(spark, srcPath, srcKeys,
         aggPath, groupCols, valueCol))
 }

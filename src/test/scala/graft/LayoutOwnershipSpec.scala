@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.table`: the `_snapshots` layout ([[graft.table.SnapLog]]),
   * the key domain ([[graft.table.KeyDomain]]) and the commit protocol
   * ([[graft.table.Protocol]]). Reads `src/main` so that no other module
-  * grows a second copy. */
+  * grows a second copy, and so that the streaming sinks keep writing
+  * through the snapshot sink alone. */
 class LayoutOwnershipSpec extends AnyFunSuite {
 
   private lazy val main: Path =
@@ -55,5 +56,20 @@ class LayoutOwnershipSpec extends AnyFunSuite {
     assert(outsideTable.collect { case (f, text)
       if "class\\s+SnapEntry\\b|def\\s+parseEntry\\b".r.findFirstIn(text).isDefined => f
     }.isEmpty)
+  }
+
+  test("streaming sinks write only through the snapshot sink, plus the quarantine") {
+    val streaming = outsideTable.filter(_._1.startsWith("graft/streaming/"))
+    assert(streaming.nonEmpty)
+    assert(offenders(streaming, "\"_fp_blooms\"").isEmpty)
+    assert(offenders(streaming, "partitionBy(").isEmpty)
+    // Every DataFrame write (`.write`, not `writeStream`/`writeSnapshot`)
+    // is snapshotSinkGated's append of a refused batch.
+    val writes = streaming.flatMap { case (_, text) =>
+      "\\.write\\b(?:\\s*\\.\\w+\\([^)]*\\))*".r.findAllIn(text)
+        .map(_.replaceAll("\\s+", "")).toList
+    }
+    assert(writes == Seq(""".write.mode("append").parquet(quarantinePath)"""),
+      s"streaming parquet writes: $writes")
   }
 }

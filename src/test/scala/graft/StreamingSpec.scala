@@ -15,6 +15,11 @@ class StreamingSpec extends SparkSpec {
   private def ev(id: Long, t: String, user: Long, typ: String, v: Double) =
     Event(id, Timestamp.valueOf(t), user, typ, v)
 
+  /** The latest snapshot of the sink at `path`. */
+  private def latest(path: String) =
+    graft.ops.Upsert.readSnapshot(spark, path,
+      graft.ops.Upsert.latestVersion(spark, path))
+
   test("streaming tumbling window agg equals batch q_window_hourly semantics") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Event]
@@ -238,7 +243,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b1: _*); q.processAllAvailable()      // replayed batch
     q.stop()
     val cols = Seq("doc_id", "text")
-    val got = Export.manifestOf(spark.read.parquet(sink), cols)
+    val got = Export.manifestOf(latest(sink), cols)
       .orderBy("shard").collect().toSeq
     val logical = Export.manifestOf(
       (0L until 15L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
@@ -246,7 +251,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy("shard").collect().toSeq
     assert(got == logical,
       "sink manifest == logical manifest of the distinct keys; replay added nothing")
-    assert(spark.read.parquet(sink).count() == 15)
+    assert(latest(sink).count() == 15)
   }
 
   test("streaming near-dup sink: agrees with the batch incremental pipeline, replay-safe") {
@@ -276,7 +281,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*); q.processAllAvailable()
     mem.addData(b1: _*); q.processAllAvailable()    // replay: must add nothing
     q.stop()
-    val got = spark.read.parquet(s"$sink/docs")
+    val got = latest(s"$sink/docs")
       .select("doc_id").as[Long].collect().sorted.toSeq
     // Batch reference: the SAME incremental policy run batch-by-batch
     // with the reference bands recomputed from scratch (no persisted
@@ -294,7 +299,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq(1L, 2L, 6L),
       "3 evicted within-batch, 4 by exact pass, 5 by the persisted bands")
     // Band table stays in lockstep with the accepted corpus.
-    assert(spark.read.parquet(s"$sink/bands").select("doc_id").distinct().count() == 3)
+    assert(latest(s"$sink/bands").select("doc_id").distinct().count() == 3)
   }
 
   test("streaming winnow sink: shared passages evict, short docs replay-safe") {
@@ -321,15 +326,21 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*); q.processAllAvailable()
     mem.addData(b1: _*); q.processAllAvailable()      // replay: must add nothing
     mem.addData(b2: _*); q.processAllAvailable()      // replay incl. the no-fp doc
+    // A later doc that reuses accepted key 2 with new content is dropped
+    // as keep-existing, and none of its fingerprints land under key 2.
+    val fpRows = latest(s"$sink/fps").count()
+    mem.addData(2L -> "glacial kelp forests drift past obsidian lighthouses every evening")
+    q.processAllAvailable()
     q.stop()
-    val got = spark.read.parquet(s"$sink/docs")
+    assert(latest(s"$sink/fps").count() == fpRows, "a reused key adds no fingerprints")
+    val got = latest(s"$sink/docs")
       .select("doc_id").as[Long].collect().sorted.toSeq
     // 3 evicted within-batch (shares the passage with 1), 4 by the
     // exact pass, 5 by the persisted fingerprints; 7 lands despite
     // carrying zero fingerprints and survives replay via the exact
     // guard.
     assert(got == Seq(1L, 2L, 6L, 7L), s"sink holds $got")
-    assert(spark.read.parquet(s"$sink/fps").select("doc_id").distinct()
+    assert(latest(s"$sink/fps").select("doc_id").distinct()
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 6L),
       "fingerprint table tracks accepted docs with >= 1 selection")
   }
@@ -340,10 +351,9 @@ class StreamingSpec extends SparkSpec {
       .resolve("t").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt").toString
     val mem = MemoryStream[(Long, Double, String)]
-    val q = EventStream.upsertSink(
+    val q = EventStream.snapshotSink(
       mem.toDF().toDF("id", "value", "day"),
-      sink, keys = Seq("id"), tieBreak = Seq("value"), partCol = "day",
-      checkpoint = ckpt)
+      sink, keys = Seq("id"), tieBreak = Seq("value"), checkpoint = ckpt)
     // Batch 1 bootstraps the sink (and dedups within itself: id 2 keeps
     // its lowest tie-break value).
     mem.addData((1L, 10.0, "d1"), (2L, 20.0, "d1"), (2L, 99.0, "d1"))
@@ -356,7 +366,7 @@ class StreamingSpec extends SparkSpec {
     // sink must not change.
     mem.addData((2L, 555.0, "d1"), (3L, 30.0, "d2"))
     q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(sink).select("id", "value")
+    val got = latest(sink).select("id", "value")
       .as[(Long, Double)].collect().sorted.toSeq
     assert(got == Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)),
       s"keep-existing semantics + replay idempotence, got $got")
@@ -380,11 +390,17 @@ class StreamingSpec extends SparkSpec {
       2L -> "totally clean words nothing shared here at all")
     val b2 = Seq(3L -> "pack my box with care every day",
       4L -> "another clean document arrives in batch two")
+    val probed = graft.ops.Upsert.lastProbedDirs
     mem.addData(b1: _*); q.processAllAvailable()
+    // The replay guard is the sink's own bloom prune: a batch of fresh
+    // content opens no sink dir, re-delivered content opens the dir
+    // that holds it.
+    probed.set(Seq("unset"))
     mem.addData(b2: _*); q.processAllAvailable()
+    assert(probed.get().isEmpty, s"fresh content probed ${probed.get()}")
     mem.addData(b1: _*); q.processAllAvailable()   // replay: must add nothing
-    q.stop()
-    val got = spark.read.parquet(sink).select("doc_id")
+    assert(probed.get().nonEmpty, "re-delivered content must be probed")
+    val got = latest(sink).select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(got == Seq(2L, 4L), s"contaminated docs 1 and 3 must not land, got $got")
     // The batch operator over the union of unique arrivals must agree
@@ -394,20 +410,29 @@ class StreamingSpec extends SparkSpec {
         n = 3, minHits = 2, maxShingleDf = 2)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(got == expected, "stream sink != batch decontaminate over the same docs")
-    // Every landed row carries its stored fingerprint, and the replay
-    // guard's sink scan reads ONLY that column — the plan the stored
-    // __fp exists for: no re-read of the sink text on batch N>1.
-    val landed = spark.read.parquet(sink)
+    // Within one batch, same-content docs under different keys land
+    // once, keeping the lowest key.
+    mem.addData(8L -> "one shared clean text", 7L -> "one shared clean text")
+    q.processAllAvailable(); q.stop()
+    assert(latest(sink).select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(2L, 4L, 7L), "same content within a batch lands once")
+    // Every landed row carries its stored fingerprint, and a
+    // fingerprint guard's scan of a table of them reads ONLY that
+    // column: no re-read of the text.
+    val landed = latest(sink)
     assert(landed.columns.contains("__fp"))
     assert(landed.filter(col("__fp") =!= md5(col("text"))).count() == 0,
       "stored __fp must be the md5 of the landed text")
+    val plain = java.nio.file.Files.createTempDirectory("graft_decon_fp")
+      .resolve("t").toString
+    landed.select("doc_id", "text", "__fp").write.parquet(plain)
     val sinkSchema = org.apache.spark.sql.types.StructType(
       Seq(1L -> "x").toDF("doc_id", "text").schema.fields :+
         org.apache.spark.sql.types.StructField("__fp",
           org.apache.spark.sql.types.StringType))
     val guard = graft.ext.Dedup.freshByFingerprint(
       Seq(5L -> "probe doc").toDF("doc_id", "text"),
-      spark.read.schema(sinkSchema).parquet(sink).select("__fp"),
+      spark.read.schema(sinkSchema).parquet(plain).select("__fp"),
       "__fp", "text")
     // (plan-string match, the PlanShapeSpec idiom — AQE wraps the scan)
     val planStr = guard.queryExecution.executedPlan.toString
@@ -418,99 +443,10 @@ class StreamingSpec extends SparkSpec {
       s"guard must not re-read the sink's data columns:\n$planStr")
   }
 
-  test("decontamination guard: fresh batches pay zero sink IO, hits fall back exactly") {
-    implicit val sc = spark.sqlContext
-    val sink = java.nio.file.Files.createTempDirectory("graft_decon_bloom")
-      .resolve("c").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_decon_bloom_ck").toString
-    val bench = Seq(100L -> "the quick brown fox jumps over the lazy dog")
-      .toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStream.decontaminationSink(mem.toDF().toDF("doc_id", "text"),
-      bench, sink, "doc_id", "text", n = 3, minHits = 2, maxShingleDf = 2,
-      checkpoint = ckpt)
-    mem.addData(1L -> "alpha beta gamma delta", 2L -> "epsilon zeta eta theta")
-    q.processAllAvailable()
-    mem.addData(3L -> "iota kappa lambda mu")
-    q.processAllAvailable(); q.stop()
-    val bloomDir = new java.io.File(s"$sink/_fp_blooms")
-    assert(bloomDir.listFiles().count(_.getName.endsWith(".bloom")) == 2,
-      "one guard bloom per non-empty committed batch")
-    val fpExpr = coalesce(md5(col("text")), lit("__fp:null-text"))
-    val sinkSchema = org.apache.spark.sql.types.StructType(
-      Seq(1L -> "x").toDF("doc_id", "text").schema.fields :+
-        org.apache.spark.sql.types.StructField("__fp",
-          org.apache.spark.sql.types.StringType))
-    // Hit path first (needs the data files): a batch re-delivering doc
-    // 1's content plus one fresh doc consults the sink and drops
-    // exactly the landed content.
-    val (dup, consulted) = EventStream.bloomGuardedFresh(
-      Seq(9L -> "alpha beta gamma delta", 10L -> "nu xi omicron pi")
-        .toDF("doc_id", "text"),
-      fpExpr, sink, sinkSchema, "text")
-    assert(consulted, "re-delivered content must hit the bloom and verify exactly")
-    assert(dup.select("doc_id").as[Long].collect().toSeq == Seq(10L),
-      "only the genuinely fresh doc survives the exact fallback")
-    // IO proof for the miss path: delete every parquet data file
-    // (blooms stay). A disjoint-content batch's guard can now only
-    // succeed if it truly never reads the sink's fp column.
-    new java.io.File(sink).listFiles()
-      .filter(_.getName.endsWith(".parquet")).foreach(f => assert(f.delete()))
-    val (fresh, consulted2) = EventStream.bloomGuardedFresh(
-      Seq(11L -> "rho sigma tau upsilon", 12L -> "phi chi psi omega")
-        .toDF("doc_id", "text"),
-      fpExpr, sink, sinkSchema, "text")
-    assert(!consulted2, "all-miss batch must not consult the sink")
-    assert(fresh.count() == 2, "every miss is definitely fresh")
-  }
-
-  test("decontaminationSink: pre-__fp sink fails fast; pre-bloom __fp sink auto-migrates") {
-    implicit val sc = spark.sqlContext
-    // Pre-__fp sink: data files without stored fingerprints.
-    val oldSink = java.nio.file.Files.createTempDirectory("graft_decon_prefp")
-      .resolve("c").toString
-    Seq(1L -> "previously landed doc").toDF("doc_id", "text")
-      .write.parquet(oldSink)
-    val bench = Seq(100L -> "the quick brown fox jumps over the lazy dog")
-      .toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStream.decontaminationSink(mem.toDF().toDF("doc_id", "text"),
-      bench, oldSink, "doc_id", "text", n = 3, minHits = 2, maxShingleDf = 2,
-      checkpoint = java.nio.file.Files.createTempDirectory("graft_prefp_ck").toString)
-    mem.addData(2L -> "some arriving doc")
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.processAllAvailable()
-    }
-    q.stop()
-    assert(err.getMessage.contains("Migrate once") ||
-      Option(err.getCause).exists(_.getMessage.contains("Migrate once")),
-      s"must fail with the migrate-once instruction, got: ${err.getMessage}")
-    // Pre-bloom sink: stored __fp but no _fp_blooms — one legacy bloom
-    // is built automatically and the guard stays exact.
-    val legacy = java.nio.file.Files.createTempDirectory("graft_decon_legacy")
-      .resolve("c").toString
-    Seq(1L -> "previously landed doc").toDF("doc_id", "text")
-      .withColumn("__fp", coalesce(md5(col("text")), lit("__fp:null-text")))
-      .write.parquet(legacy)
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = EventStream.decontaminationSink(mem2.toDF().toDF("doc_id", "text"),
-      bench, legacy, "doc_id", "text", n = 3, minHits = 2, maxShingleDf = 2,
-      checkpoint = java.nio.file.Files.createTempDirectory("graft_legacy_ck").toString)
-    mem2.addData(2L -> "previously landed doc", 3L -> "a new doc entirely")
-    q2.processAllAvailable(); q2.stop()
-    val got = spark.read.parquet(legacy).select("doc_id")
-      .as[Long].collect().sorted.toSeq
-    assert(got == Seq(1L, 3L),
-      s"legacy content must be recognized via the migrated bloom, got $got")
-    assert(new java.io.File(s"$legacy/_fp_blooms").listFiles()
-      .exists(_.getName.startsWith("legacy-")), "legacy bloom written once")
-  }
-
   test("decontaminationSink survives an empty first micro-batch") {
-    // Same shape as the upsertSink case: an empty first batch commits a
-    // footer-less sink dir; batch 2's replay guard reads it with the
-    // PINNED schema (including __fp) and must see an empty relation,
-    // not throw.
+    // An empty first batch publishes v1 with an empty data dir; batch
+    // 2's keep-existing probe must treat it as holding nothing, not
+    // throw.
     implicit val sc = spark.sqlContext
     val sink = java.nio.file.Files.createTempDirectory("graft_decon_e")
       .resolve("c").toString
@@ -531,17 +467,15 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     mem.addData(6L -> (null: String))             // replay
     q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(sink).select("doc_id").as[Long].collect().sorted.toSeq
+    val got = latest(sink).select("doc_id").as[Long].collect().sorted.toSeq
     assert(got == Seq(5L, 6L),
       s"clean + null-text docs must land exactly once each, got $got")
   }
 
   test("upsertSink survives an empty first micro-batch") {
-    // An empty first batch commits a sink dir holding only _SUCCESS; the
-    // next batch's anti-join then reads the sink — which, inferred, has no
-    // parquet footers and would throw, killing the query. The pinned-
-    // schema read (freshAgainstPartitionedSink) makes it a valid empty
-    // relation instead.
+    // The keep-existing snapshot sink (the upsert sink): an empty first
+    // batch publishes v1 with an empty data dir, and the next batch's
+    // anti-join must read it as an empty relation, not kill the query.
     implicit val sc = spark.sqlContext
     val sink = java.nio.file.Files.createTempDirectory("graft_upsert_empty")
       .resolve("t").toString
@@ -549,10 +483,9 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Double, String)]
     // The gate empties batch 1 entirely (the source still triggers the
     // micro-batch, so the sink commit happens — the crash setup).
-    val q = EventStream.upsertSink(
+    val q = EventStream.snapshotSink(
       mem.toDF().toDF("id", "value", "day").filter(col("id") =!= 99L),
-      sink, keys = Seq("id"), tieBreak = Seq("value"), partCol = "day",
-      checkpoint = ckpt)
+      sink, keys = Seq("id"), tieBreak = Seq("value"), checkpoint = ckpt)
     mem.addData((99L, 1.0, "d1"))
     q.processAllAvailable()
     mem.addData((1L, 10.0, "d1"), (99L, 2.0, "d1"))
@@ -560,7 +493,7 @@ class StreamingSpec extends SparkSpec {
     // Keep-existing still holds after the empty bootstrap.
     mem.addData((1L, 555.0, "d1"))
     q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(sink).select("id", "value")
+    val got = latest(sink).select("id", "value")
       .as[(Long, Double)].collect().toSeq
     assert(got == Seq((1L, 10.0)),
       s"empty first batch must not kill the query nor change semantics, got $got")
@@ -705,8 +638,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String, String)]
     val q = EventStream.classifierGatedSink(
       mem.toDF().toDF("doc_id", "text", "day"), sink, "doc_id", "text",
-      weights, buckets = 64, bias = 0.0, threshold = 0.5, partCol = "day",
-      checkpoint = ckpt)
+      weights, buckets = 64, bias = 0.0, threshold = 0.5, checkpoint = ckpt)
     mem.addData(docs.take(3): _*)
     q.processAllAvailable()
     mem.addData(docs.drop(3): _*)
@@ -714,7 +646,7 @@ class StreamingSpec extends SparkSpec {
     // replay batch 2 verbatim (at-least-once delivery) — no growth
     mem.addData(docs.drop(3): _*)
     q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(sink).select("doc_id", "prob")
+    val got = latest(sink).select("doc_id", "prob")
       .as[(Long, Double)].collect().toMap
     assert(got == batchKeep, s"stream gate must equal the batch gate, got $got")
   }

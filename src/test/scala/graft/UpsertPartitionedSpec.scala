@@ -3,41 +3,10 @@ package graft
 import graft.ops.Upsert
 import org.apache.spark.sql.functions._
 
-/** Partitioned-sink upsert: the anti-join must read ONLY the partitions
-  * the batch touches (PartitionFilters pruning), keep-existing semantics
-  * must hold across partitions, and a re-run must append nothing. */
+/** The snapshot sink: keep-existing publishes, merges, compaction,
+  * expiry, vacuum and erasure, their races and their pruning. */
 class UpsertPartitionedSpec extends SparkSpec {
   import spark.implicits._
-
-  test("partition-pruned anti-join + idempotent append") {
-    val sink = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    Seq((1L, "d1", 10.0), (2L, "d1", 20.0), (3L, "d2", 30.0))
-      .toDF("id", "day", "v")
-      .write.mode("overwrite").partitionBy("day").parquet(sink)
-
-    // Batch touches ONLY d2: a dup of key 3 (existing wins), a new key 4,
-    // and an in-batch dup of key 4 (lowest v survives per tieBreak).
-    val batch = Seq((3L, "d2", 999.0), (4L, "d2", 40.0), (4L, "d2", 41.0))
-      .toDF("id", "day", "v")
-
-    val fresh = Upsert.freshAgainstPartitionedSink(
-      spark, sink, batch, Seq("id"), Seq("v"), "day")
-    val scan = fresh.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") && scan.contains("d2"),
-      s"sink scan must prune to touched partitions, plan:\n$scan")
-    assert(!scan.contains("d1"), s"untouched partition d1 must not be read:\n$scan")
-    assert(fresh.select("id", "v").as[(Long, Double)].collect().toSeq ==
-      Seq((4L, 40.0)), "only the new key survives; existing key 3 wins; in-batch dup collapsed")
-
-    Upsert.upsertPartitioned(spark, sink, batch, Seq("id"), Seq("v"), "day")
-    val after = spark.read.parquet(sink)
-    assert(after.count() == 4)
-    assert(after.filter(col("id") === 3).select("v").as[Double].head() == 30.0,
-      "keep-existing: the sink's row 3 is untouched")
-
-    Upsert.upsertPartitioned(spark, sink, batch, Seq("id"), Seq("v"), "day")
-    assert(spark.read.parquet(sink).count() == 4, "re-run appends nothing")
-  }
 
   test("snapshot sink: time travel stable, replay delta empty, manifests atomic") {
     val path = java.nio.file.Files.createTempDirectory("snap").toString
@@ -273,6 +242,45 @@ class UpsertPartitionedSpec extends SparkSpec {
     assert(Upsert.readSnapshot(spark, path, 1).as[(Long, String)]
       .collect().toSet == Set((1L, "a")), "referenced dir untouched")
     assert(Upsert.vacuumOrphans(spark, path) == 0, "idempotent")
+    // A sink whose FIRST writer crashed after its claim and data write:
+    // a log with no manifest. It is still a sink, so its debris reclaims.
+    val crashed = java.nio.file.Files.createTempDirectory("snapvac1").toString
+    assert(graft.table.Protocol.claimVersion(fs, crashed) == 1)
+    Seq((99L, "ghost")).toDF("id", "v").write.parquet(s"$crashed/batch-1")
+    assert(Upsert.vacuumOrphans(spark, crashed) == 1)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(crashed, "batch-1")),
+      "a crashed first writer's dir is reclaimed")
+  }
+
+  test("maintenance on a path that is no sink throws and changes no file") {
+    import scala.jdk.CollectionConverters._
+    val empty = java.nio.file.Files.createTempDirectory("nosink").toString
+    val plain = java.nio.file.Files.createTempDirectory("nosinkpq")
+      .resolve("t").toString
+    spark.range(100).select(col("id"), (col("id") % 3).as("day"))
+      .write.partitionBy("day").parquet(plain)
+    def listing(root: String): Seq[(String, Long)] = {
+      val r = java.nio.file.Paths.get(root)
+      val w = java.nio.file.Files.walk(r)
+      try w.iterator().asScala.toSeq.map(p => r.relativize(p).toString ->
+          (if (java.nio.file.Files.isDirectory(p)) -1L
+           else java.nio.file.Files.size(p))).sorted
+      finally w.close()
+    }
+    for (path <- Seq(empty, plain)) {
+      val before = listing(path)
+      val doomed = Seq(1L).toDF("id")
+      Seq[(String, () => Any)](
+        "vacuumOrphans" -> (() => Upsert.vacuumOrphans(spark, path)),
+        "compactSnapshots" -> (() => Upsert.compactSnapshots(spark, path)),
+        "eraseKeys" -> (() => Upsert.eraseKeys(spark, path, doomed, Seq("id"))),
+        "expireSnapshots" -> (() => Upsert.expireSnapshots(spark, path, 1))
+      ).foreach { case (op, call) =>
+        intercept[IllegalArgumentException](call())
+        assert(listing(path) == before, s"$op changed files under $path")
+      }
+    }
+    assert(spark.read.parquet(plain).count() == 100, "the table's data is intact")
   }
 
   test("vacuumOrphans with grace: a crashed rewriter's claim-named dirs reclaim after the window, not before") {
