@@ -410,8 +410,10 @@ object EventStream {
     * empty-delta version. Within one batch, same-content docs under
     * different keys land once, keeping the lowest `docKey`. The guard
     * costs O(batch), not O(sink): the keep-existing probe prunes the
-    * sink's dirs by the `.bloom2` sidecar each publish writes on
-    * `__fp`, so a batch of fresh content opens no sink dir, and only
+    * sink's dirs by the range stats and `.bloom2` sidecar each publish
+    * writes on `__fp`, so a batch of fresh content opens no sink dir
+    * that carries a bloom (a dir too large for one is pruned on its
+    * range alone), and only
     * bloom hits (replays, re-delivered content, false positives) read
     * the `__fp` column of the dirs that may hold them. The fingerprint
     * is NULL-SAFE: null-text docs map to a sentinel outside the md5 hex
