@@ -8843,7 +8843,7 @@ object ExtQueries {
             END AS max_err
           FROM s ORDER BY vec_id""",
 
-    // The analytic twin of the PNG pixel formula (Multimodal.synthPng):
+    // The analytic twin of the PNG pixel formula (Multimodal.synthImage):
     // the Spark side ENCODES then DECODES real compressed images; the
     // oracle never touches a codec — it recomputes what the decoded
     // raster must sum to.

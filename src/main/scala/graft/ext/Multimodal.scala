@@ -75,13 +75,6 @@ object Multimodal {
   private def pngReader(): javax.imageio.ImageReader =
     javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
 
-  /** Single-shot encode (tests, one-off rows); the hot path is the
-    * per-partition writer inside `withSyntheticPng`. */
-  private[ext] def synthPng(id: Long): Array[Byte] = {
-    val w = pngWriter()
-    try encodePng(w, synthImage(id)) finally w.dispose()
-  }
-
   /** Attach a REAL (tiny, deterministic) PNG per row as a binary `media`
     * column + typed metadata — the image-corpus stand-in whose decode is
     * honest: the bytes are a genuine compressed image a codec must parse.

@@ -47,10 +47,7 @@ object Cardinality {
     // shuffling any non-surviving fingerprint.
     val partials = fps.as[String](Encoders.STRING).mapPartitions { it =>
       val buf = new java.util.TreeSet[String]()
-      it.foreach { fp =>
-        if (buf.size < k) buf.add(fp)
-        else if (fp < buf.last && buf.add(fp)) buf.pollLast()
-      }
+      it.foreach(offer(buf, _, k))
       scala.jdk.CollectionConverters.IteratorHasAsScala(buf.iterator()).asScala
     }(Encoders.STRING).toDF("fp")
     // Global merge over partitions×k rows — tiny by construction; the
@@ -64,18 +61,43 @@ object Cardinality {
     * of the kth hash) is surfaced so the estimate is auditable. */
   def kmvEstimate(df: DataFrame, key: Column, k: Int): DataFrame = {
     val sketch = kmvSketch(df, key, k)
-    // 15 hex chars → 60-bit integer, in pure integer arithmetic
-    // (conv is exact here; 60 bits fits a long with headroom).
-    val prefixInt = conv(substring(col("fp"), 1, 15), 16, 10).cast(LongType)
     sketch
       .agg(count(lit(1)).as("n_sketch"),
-        max(prefixInt).as("kth_prefix"))
+        max(prefix(col("fp"))).as("kth_prefix"))
       .select(
         col("n_sketch").cast(LongType).as("n_sketch"),
         col("kth_prefix"),
-        when(col("n_sketch") < k, col("n_sketch").cast(DoubleType))
-          .otherwise(
-            round(lit((k - 1).toDouble * HexNormalizer) / col("kth_prefix").cast(DoubleType), 6))
-          .as("n_est"))
+        round(estimate(col("n_sketch"), col("kth_prefix"), k), 6).as("n_est"))
   }
+
+  /** Offer fingerprint `fp` to a buffer of the k smallest distinct
+    * fingerprints: the mergeable KMV partial's insert. */
+  private[graft] def offer(buf: java.util.TreeSet[String], fp: String,
+      k: Int): Unit =
+    if (buf.size < k) buf.add(fp)
+    else if (fp < buf.last && buf.add(fp)) buf.pollLast()
+
+  /** The KMV merge: the k smallest of two sketches' union, ascending.
+    * The k smallest of A∪B all lie in (k smallest of A) ∪ (k smallest
+    * of B), so this IS the sketch of the union. */
+  private[graft] def union(a: Array[String], b: Array[String],
+      k: Int): Array[String] = {
+    val buf = new java.util.TreeSet[String]()
+    (a.iterator ++ b.iterator).foreach(offer(buf, _, k))
+    buf.toArray(new Array[String](0))
+  }
+
+  /** A fingerprint's 15-hex-digit prefix as a 60-bit integer, in pure
+    * integer arithmetic (conv is exact here; 60 bits fits a long with
+    * headroom). */
+  private[graft] def prefix(fp: Column): Column =
+    conv(substring(fp, 1, 15), 16, 10).cast(LongType)
+
+  /** The estimator over a sketch of `n` fingerprints whose kth smallest
+    * has prefix `kthPrefix` ([[prefix]]): exact `n` below k (the sketch
+    * IS the value set), else `(k-1) / R_k`. Unrounded: each caller
+    * rounds. */
+  private[graft] def estimate(n: Column, kthPrefix: Column, k: Int): Column =
+    when(n < k, n.cast(DoubleType)).otherwise(
+      lit((k - 1).toDouble * HexNormalizer) / kthPrefix.cast(DoubleType))
 }

@@ -48,9 +48,6 @@ object Cleaning {
   def castCols(df: DataFrame, cols: Seq[String], to: DataType): DataFrame =
     cols.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(to)))
 
-  /** null → 0.0 for lag-edge rows (ref `.fillna(0)`, `etl.py:167,170,422`). */
-  def zeroIfNull(c: Column): Column = coalesce(c, lit(0.0))
-
   /** Winsorization: clip a numeric column to its per-group [lo, hi]
     * percentiles — the standard outlier treatment before a numeric
     * feature feeds training. Exact R-7 percentiles (the q_length_stats
@@ -58,7 +55,7 @@ object Cleaning {
     * clipping so both engines clip against the identical boundary.
     *
     * Semantics a cleaning op owes dirty data: a NULL value stays NULL
-    * (imputation is imputeMean/zeroIfNull's explicit job — greatest/
+    * (imputation is imputeMean's explicit job — greatest/
     * least SKIP nulls, which would silently fabricate the p05 value);
     * a NULL group key keeps its rows and clips within the NULL group
     * (the join is null-safe — plain using-column equality would drop

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.table.{KeyDomain, Protocol, SnapLog}
+import graft.table.{KeyDomain, Protocol, Sidecars, SnapLog}
 import graft.table.Protocol.{SnapEntry, familyRoot, rewriteSeq, rootOf}
 import graft.table.KeyDomain.Ranges
 
@@ -121,10 +121,6 @@ object Upsert {
   // submits Spark's parquet schema-discovery job — a footer scan per
   // read, the bulk of a small read's jobs and driver gap.
 
-  /** Key under which Spark stores the writing frame's schema in every
-    * parquet footer it writes. */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
   /** Dir schema by (qualified dir path, dir modification time). A data
     * dir is immutable once written (its sidecars live under
     * `_snapshots/`), so one footer read per dir is a permanent fact.
@@ -173,36 +169,12 @@ object Upsert {
         val hit = dirSchemaCache.get(key)
         if (hit != null) hit
         else {
-          val sc = footerSchema(spark, fs, st.getPath)
+          val sc = Sidecars.footerSchema(fs, st.getPath)
           dirSchemaCache.put(key, sc)
           sc
         }
       }
       .reduce(ColumnBridge.mergeSchemas(_, _, caseSensitive)))
-  }
-
-  /** The Spark schema in the footer of `dir`'s first data file: every
-    * file of a dir comes from one write, so one footer speaks for all,
-    * and a Spark write always leaves at least one file (partition 0
-    * writes even when empty, carrying the schema). */
-  private def footerSchema(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path)
-      : org.apache.spark.sql.types.StructType = {
-    val st = fs.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.sortBy(_.getPath.getName).headOption.getOrElse(
-      throw new IllegalStateException(s"no parquet data file in $dir"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-        st, spark.sparkContext.hadoopConfiguration))
-    val json = try reader.getFooter.getFileMetaData
-      .getKeyValueMetaData.get(SparkSchemaKey)
-    finally reader.close()
-    if (json == null) throw new IllegalStateException(
-      s"${st.getPath}: no Spark schema in the footer")
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
   /** Read of sink dirs (full paths) under their pinned schema. */
@@ -290,81 +262,37 @@ object Upsert {
     * bounded driver set, same class as the manifest listings. */
   private[graft] val BloomProbeMax = 1024
 
-  /** Record the `.stats` sidecar of a just-written data dir from its
-    * range/count facts ([[KeyDomain.statsLines]]). Small dirs
-    * (≤ [[BloomMaxKeys]] non-null keys) also get a `.bloom2`
-    * exact-membership sketch over [[KeyDomain.keyCanon]] — range stats cannot
-    * prune hash-distributed keys, the bloom can. Best-effort: a sidecar
-    * failure never fails the data write (readers just probe); it logs
-    * a WARN naming the dir. */
-  private def writeKeyStatsFrom(spark: SparkSession, path: String,
-      dirName: String, keys: Seq[String], ranges: Ranges,
-      n: Long, totalRows: Long, preBloom: Option[Array[Byte]]): Unit =
-    try {
-      val fs = fsFor(spark, path)
-      // The total line (same aggregate, zero extra cost) lets
-      // [[countSnapshot]] answer COUNT(*) from driver metadata.
-      val lines = KeyDomain.statsLines(ranges, totalRows)
-      if (lines.isEmpty) return
-      SnapLog.writeText(fs, SnapLog.stats(path, dirName), lines.mkString("\n"))
-      try {
-        // n == 0: every range line is "none", so stage-1 pruning
-        // already drops this dir for ANY probe — don't spend a Spark
-        // job building a bloom nothing will ever consult. (Empty dirs
-        // are routine: idempotent replays, fully-duplicate batches.)
-        if (n > 0 && n <= BloomMaxKeys) preBloom match {
-          // Bloom observed on the write job itself (writeDirWithStats):
-          // write the serialized bytes — same bloom_filter_agg builder,
-          // same keyCanon hashing, zero extra pass. n > 0 gates it so
-          // an EMPTY dir still writes no bloom (its all-"none" stats
-          // already prune every probe).
-          case Some(bytes) =>
-            SnapLog.write(fs, SnapLog.bloom(path, dirName))(_.write(bytes))
-          case None =>
-            val df = readDirs(spark, Seq(s"$path/$dirName"))
-            val nn = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
-            val bf = labeledBloom(spark, dirName)(
-              nn.stat.bloomFilter(KeyDomain.keyCanon(df.schema, keys),
-                math.max(n, 64L), 0.01))
-            SnapLog.write(fs, SnapLog.bloom(path, dirName))(bf.writeTo)
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        sidecarSkipped("bloom", dirName, e) }
-    } catch { case scala.util.control.NonFatal(e) =>
-      sidecarSkipped("stats", dirName, e) }
-
   /** A best-effort step that failed: logged, never thrown. */
   private def skipped(what: String, e: Throwable): Unit =
     log.warn(s"graft: skipped $what: $e")
 
-  private def sidecarSkipped(what: String, dirName: String,
-      e: Throwable): Unit =
-    log.warn("graft: {} sidecar of {} not written: {}", what, dirName, e)
-
   /** Write `df` as data dir `<path>/<dirName>` — every data dir the
-    * sink writes goes through here — and stamp its `.stats` sidecar
-    * from the just-written PARQUET FOOTERS at driver-metadata cost: the
-    * footers already carry exact per-column min/max/null-count
-    * statistics (guide §6: footer stats are the skip machinery), so no
-    * re-read range aggregate runs. Declared skip columns ride the same
-    * footers. The bloom build (small dirs) stays the one post-write
-    * pass unless `keyBound` lets it ride the write job; gated sinks
-    * keep their profile pass (a KMV sketch needs the data). Unusable
-    * footers (INT96 timestamps, stats omitted for oversized values,
-    * unexpected physical types) fall back to one range aggregate over
-    * the re-read dir, so the sidecar contract is unchanged. */
+    * sink writes goes through here — and stamp its [[Sidecars]]. The
+    * `.stats` come from the just-written PARQUET FOOTERS at
+    * driver-metadata cost: the footers already carry exact per-column
+    * min/max/null-count statistics (guide §6: footer stats are the skip
+    * machinery), so no re-read range aggregate runs. Declared skip
+    * columns ride the same footers; unusable footers fall back to one
+    * range aggregate over the re-read dir. Small dirs (≤
+    * [[BloomMaxKeys]] non-null keys) also get a `.bloom2`
+    * exact-membership sketch over [[KeyDomain.keyCanon]] — range stats
+    * cannot prune hash-distributed keys, the bloom can. The bloom build
+    * stays the one post-write pass unless `keyBound` lets it ride the
+    * write job; gated sinks keep their profile pass (a KMV sketch needs
+    * the data). Best-effort: a sidecar failure never fails the data
+    * write (readers just probe); it logs a WARN naming the dir. */
   private def writeDirWithStats(spark: SparkSession, path: String,
       dirName: String, df: DataFrame, keys: Seq[String],
       keyBound: Option[Long] = None,
-      dirProfile: Option[(Long, Map[String, (Long, Array[String])])] = None)
-      : Unit =
+      dirProfile: Option[Sidecars.Profile] = None): Unit =
     labeled(spark, s"graft.writeDir $dirName") {
+    val fs = fsFor(spark, path)
     val present = keys.filter(df.columns.contains)
     // A keyless write (a sink that never recorded its keys) gets no
     // sidecar: nothing prunes by a key it does not have.
     val statCols =
       if (keys.isEmpty || present.size != keys.size) Nil
-      else present ++ recordedSkipCols(spark, path)
+      else present ++ Sidecars.skipCols(fs, path)
         .filter(df.columns.contains).filterNot(present.contains)
     val tagged = statCols.flatMap(k =>
       KeyDomain.tagOf(df.schema(k).dataType).map(k -> _))
@@ -406,14 +334,11 @@ object Upsert {
     // sketch — the dir's own re-read pass disappears (guide §2.4);
     // otherwise the KMV sketch reads the new dir as before.
     try {
-      val fs = fsFor(spark, path)
-      if (fs.exists(SnapLog.gateMarker(path))) {
-        val (rows, m) = dirProfile.getOrElse(profileSketch(
-          spark.read.schema(df.schema).parquet(s"$path/$dirName")))
-        writeProfileFile(fs, SnapLog.profile(path, dirName), rows, m)
-      }
+      if (Sidecars.gateOn(fs, path))
+        Sidecars.writeProfile(fs, path, dirName, dirProfile.getOrElse(
+          profileSketch(spark.read.schema(df.schema).parquet(s"$path/$dirName"))))
     } catch { case scala.util.control.NonFatal(e) =>
-      sidecarSkipped("profile", dirName, e) }
+      skipped(s"the profile sidecar of $dirName", e) }
     if (present.size != keys.size || tagged.isEmpty) return
     // Drain the observation (the listener delivering it is async —
     // poll briefly, then fall back to the scan-built pass; a missing
@@ -432,171 +357,34 @@ object Upsert {
       }
       bytes
     }
-    val facts = footerStats(spark, path, dirName, tagged, present)
+    val facts = Sidecars.footerStats(fs,
+        new org.apache.hadoop.fs.Path(path, dirName), tagged, present)
       .orElse(try Some(keyRangesWithCount(
           readDirs(spark, Seq(s"$path/$dirName")), statCols, present))
         catch { case scala.util.control.NonFatal(e) =>
-          sidecarSkipped("stats", dirName, e); None })
-    facts.foreach { case (ranges, nn, totalRows) =>
-      writeKeyStatsFrom(spark, path, dirName, keys, ranges, nn,
-        totalRows, preBloom)
-    }
+          skipped(s"the stats sidecar of $dirName", e); None })
+    // The total line (same facts, zero extra cost) lets
+    // [[countSnapshot]] answer COUNT(*) from driver metadata. n == 0:
+    // every range line is "none", so stage-1 pruning already drops this
+    // dir for ANY probe — no bloom nothing will ever consult. (Empty
+    // dirs are routine: idempotent replays, fully-duplicate batches.)
+    for ((ranges, n, totalRows) <- facts) try {
+      if (Sidecars.writeStats(fs, path, dirName, ranges, totalRows) &&
+          n > 0 && n <= BloomMaxKeys)
+        Sidecars.writeBloom(fs, path, dirName)(preBloom match {
+          // Observed on the write job: the same bloom_filter_agg
+          // builder over the same keyCanon, serialized.
+          case Some(bytes) => _.write(bytes)
+          case None =>
+            val dir = readDirs(spark, Seq(s"$path/$dirName"))
+            val nn = dir.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+            val bf = labeled(spark, s"graft.bloom $dirName")(nn.stat.bloomFilter(
+              KeyDomain.keyCanon(dir.schema, keys), math.max(n, 64L), 0.01))
+            bf.writeTo(_)
+        })
+    } catch { case scala.util.control.NonFatal(e) =>
+      skipped(s"the sidecars of $dirName", e) }
   }
-
-  /** [[labeled]] wrappers for the jobs sidecar writes submit. */
-  private def labeledBloom[T](spark: SparkSession, dirName: String)
-      (body: => T): T = labeled(spark, s"graft.bloom $dirName")(body)
-
-  /** Range/count facts of a just-written dir read from its parquet
-    * FOOTERS — zero data passes. Returns (per-column ranges in
-    * [[keyRangesWithCount]]' shape, joint-non-null UPPER bound over
-    * `nnCols`, exact row total), or None when any needed column's
-    * stats are unusable. The non-null bound sizes the bloom: joint
-    * non-null ≤ min per-column non-null, so the bloom is sized ≥ the
-    * true key count (never undersized), and a 0 bound is exact (some
-    * key column is all-NULL → no fully-keyed row exists). String
-    * footer stats compare in unsigned byte order — the same order
-    * [[KeyDomain.lt]] and the sidecar contract use — and parquet-mr OMITS
-    * binary stats it would have to truncate, which lands in the
-    * fallback, never a wrong bound. */
-  private def footerStats(spark: SparkSession, path: String,
-      dirName: String, tagged: Seq[(String, String)], nnCols: Seq[String])
-      : Option[(Ranges, Long, Long)] = try {
-    val fs = fsFor(spark, path)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(path, dirName))
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")
-      }
-    val need = (tagged.map(_._1) ++ nnCols).distinct
-    var totalRows = 0L
-    val mins = scala.collection.mutable.Map.empty[String, Any]
-    val maxs = scala.collection.mutable.Map.empty[String, Any]
-    val nonNull = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    // Per-file facts, so the footer opens can run CONCURRENTLY (below):
-    // None = this file's stats are unusable → whole-dir fallback.
-    case class FileFacts(rows: Long, mins: Map[String, Any],
-        maxs: Map[String, Any], nonNull: Map[String, Long])
-    def factsOf(st: org.apache.hadoop.fs.FileStatus): Option[FileFacts] = {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          st.getPath, spark.sparkContext.hadoopConfiguration))
-      try {
-        var rows = 0L
-        val fMins = scala.collection.mutable.Map.empty[String, Any]
-        val fMaxs = scala.collection.mutable.Map.empty[String, Any]
-        val fNn = scala.collection.mutable.Map.empty[String, Long]
-          .withDefaultValue(0L)
-        val blocks = reader.getFooter.getBlocks
-        val it = blocks.iterator()
-        while (it.hasNext) {
-          val b = it.next()
-          rows += b.getRowCount
-          val byName = {
-            import scala.jdk.CollectionConverters._
-            b.getColumns.asScala
-              .filter(_.getPath.size == 1)
-              .map(c => c.getPath.toDotString -> c).toMap
-          }
-          for (c <- need) {
-            val chunk = byName.getOrElse(c, return None)
-            val stats = chunk.getStatistics
-            if (stats == null || !stats.isNumNullsSet) return None
-            val nn = b.getRowCount - stats.getNumNulls
-            fNn(c) = fNn(c) + nn
-            tagged.find(_._1 == c).foreach { case (_, tag) =>
-              if (nn > 0) {
-                if (!stats.hasNonNullValue) return None
-                val lo = KeyDomain.footerCanon(tag, chunk.getPrimitiveType,
-                  stats.genericGetMin).getOrElse(return None)
-                val hi = KeyDomain.footerCanon(tag, chunk.getPrimitiveType,
-                  stats.genericGetMax).getOrElse(return None)
-                fMins(c) = fMins.get(c).fold(lo)(KeyDomain.min(_, lo))
-                fMaxs(c) = fMaxs.get(c).fold(hi)(KeyDomain.max(_, hi))
-              }
-            }
-          }
-        }
-        Some(FileFacts(rows, fMins.toMap, fMaxs.toMap, fNn.toMap))
-      } finally reader.close()
-    }
-    // Footer opens run in a SMALL bounded pool, not a sequential driver
-    // loop: a compaction output on an object store would otherwise
-    // serialize N metadata RPCs on the driver (guide §5 driver-bound).
-    // Bounded at 8 — footer reads are latency-bound, not CPU-bound.
-    val perFile: Seq[Option[FileFacts]] =
-      if (files.length <= 1) files.toSeq.map(factsOf)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.length))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[Option[FileFacts]]] =
-            files.toSeq.map(st =>
-              new java.util.concurrent.Callable[Option[FileFacts]] {
-                override def call(): Option[FileFacts] = factsOf(st)
-              })
-          pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-        } finally pool.shutdown()
-      }
-    for (ff <- perFile) ff match {
-      case None => return None
-      case Some(f) =>
-        totalRows += f.rows
-        for ((c, v) <- f.nonNull) nonNull(c) = nonNull(c) + v
-        for ((c, lo) <- f.mins) mins(c) = mins.get(c).fold(lo)(KeyDomain.min(_, lo))
-        for ((c, hi) <- f.maxs) maxs(c) = maxs.get(c).fold(hi)(KeyDomain.max(_, hi))
-    }
-    val ranges: Ranges = tagged.map { case (k, tag) =>
-      (k, tag, for (lo <- mins.get(k); hi <- maxs.get(k)) yield (lo, hi))
-    }
-    val nnUpper =
-      if (nnCols.isEmpty) 0L
-      else nnCols.map(nonNull(_)).min
-    Some((ranges, nnUpper, totalRows))
-  } catch { case scala.util.control.NonFatal(e) =>
-    sidecarReadFailed("footer stats", dirName, e); None }
-
-  /** Opens the sidecar DIRECTLY — no exists() precheck. The only
-    * caller ([[pruneDirs]]) has already established existence for its
-    * `withBloom` set, so a second exists() here doubled the metadata
-    * RPCs per bloom-bearing dir — the cost class the hoisted check was
-    * added to avoid on object stores. A missing/corrupt file logs a
-    * WARN and degrades to "always probe", per the sidecar contract. */
-  private def readKeyBloom(spark: SparkSession, path: String,
-      dirName: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    try Some(SnapLog.read(fsFor(spark, path), SnapLog.bloom(path, dirName))(
-      org.apache.spark.util.sketch.BloomFilter.readFrom))
-    catch { case scala.util.control.NonFatal(e) =>
-      sidecarReadFailed("bloom", dirName, e); None }
-  }
-
-  private def sidecarReadFailed(what: String, dirName: String,
-      e: Throwable): Unit =
-    log.warn("graft: {} sidecar of {} not read, falling back: {}", what, dirName, e)
-
-  /** A dir's parsed `.stats` sidecar ([[KeyDomain.parseStats]]): col →
-    * (tag, None = no non-null values | Some(min, max)), and the row
-    * total. None when the sidecar is absent. */
-  private def readStats(spark: SparkSession, path: String, dirName: String)
-      : Option[(Map[String, (String, Option[KeyDomain.Range])], Option[Long])] =
-    SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.stats(path, dirName))
-      .map(KeyDomain.parseStats)
-
-  private def readKeyStats(spark: SparkSession, path: String,
-      dirName: String): Option[Map[String, (String, Option[KeyDomain.Range])]] =
-    readStats(spark, path, dirName).map(_._1)
-
-  /** The total of a dir's `.stats` sidecar — None when the sidecar (or,
-    * for pre-r17 sidecars, the line) is absent or unreadable: the
-    * caller scans the dir instead. */
-  private def readDirRowCount(spark: SparkSession, path: String,
-      dirName: String): Option[Long] =
-    try readStats(spark, path, dirName).flatMap(_._2)
-    catch { case scala.util.control.NonFatal(e) =>
-      sidecarReadFailed("stats", dirName, e); None }
 
   /** Audit for [[countSnapshot]]: the dirs whose rows had to be
     * SCANNED (no `__rows` sidecar line) on the last call. Empty ⟺ the
@@ -614,6 +402,7 @@ object Upsert {
     * rests on a sidecar. */
   def countSnapshot(spark: SparkSession, path: String,
       version: Int): Long = {
+    val fs = fsFor(spark, path)
     val entries = manifestEntries(spark, path, version)
     val scanned = scala.collection.mutable.ArrayBuffer.empty[String]
     val total = entries.map { e =>
@@ -622,7 +411,7 @@ object Upsert {
       // its merge — already-dead keys never re-enter a dv), so
       // dir − Σdv is the entry's exact live count. Any missing total
       // (dir or dv) degrades the ENTRY to a resolved scan-count.
-      val parts = e.names.map(readDirRowCount(spark, path, _))
+      val parts = e.names.map(n => Sidecars.stats(fs, path, n).flatMap(_.rows))
       if (parts.forall(_.isDefined))
         parts.head.get - parts.tail.map(_.get).sum
       else {
@@ -660,9 +449,10 @@ object Upsert {
       s"minMaxSnapshot: '$column' was dropped")
     require(!renamedAwayCols(spark, path).contains(column),
       s"minMaxSnapshot: '$column' was renamed away — use the live name")
+    val fs = fsFor(spark, path)
     val aliases = {
       var set = Set(column)
-      recordedSchemaMap(spark, path).reverse.foreach {
+      Sidecars.schemaMap(fs, path).reverse.foreach {
         case ("rename", f, t) if set(t) => set += f
         case _ => ()
       }
@@ -691,7 +481,7 @@ object Upsert {
         case None => false
       }
     val fromStats: Seq[(String, (Any, Any))] = entries.flatMap { e =>
-      readKeyStats(spark, path, e.dir) match {
+      Sidecars.stats(fs, path, e.dir).map(_.ranges) match {
         // A merge-on-read entry's stats box is a SUPERSET (the extreme
         // row may be dv-dead). The dv boxes decide: bounds no dv can
         // touch answer at metadata cost; a touched bound falls back to
@@ -706,8 +496,8 @@ object Upsert {
           // ONE sidecar read per dv, tested against both bounds of
           // every alias box (not one read per test — on an object
           // store each read is a GET).
-          val dvLines = e.dvs.map(dv => readKeyStats(spark, path, dv)
-            .map(dvStats => aliases.toSeq.flatMap(dvStats.get)))
+          val dvLines = e.dvs.map(dv => Sidecars.stats(fs, path, dv)
+            .map(dvStats => aliases.toSeq.flatMap(dvStats.ranges.get)))
           if (boxes.nonEmpty && boxes.forall { case (tag, (lo, hi)) =>
               boundAlive(dvLines, tag, lo) && boundAlive(dvLines, tag, hi) })
             boxes
@@ -927,25 +717,20 @@ object Upsert {
       dirs: Seq[String], pr: Ranges,
       canons: Map[Seq[String], Array[String]]): Seq[String] = {
     if (pr.exists(_._3.isEmpty)) return Nil
+    val fs = fsFor(spark, path)
     val ranged = if (pr.isEmpty) dirs else dirs.filter(d =>
-      readKeyStats(spark, path, d).forall(stats => pr.forall {
-        case (k, tag, r) => stats.get(k) match {
+      Sidecars.stats(fs, path, d).forall(stats => pr.forall {
+        case (k, tag, r) => stats.ranges.get(k) match {
           case Some((`tag`, Some(dr))) => KeyDomain.overlaps(r.get, dr)
           case Some((`tag`, None)) => false // the dir holds no value
           case _ => true
         }
       }))
     if (ranged.isEmpty || canons.isEmpty) return ranged
-    canons.get(recordedKeyCols(spark, path).sorted) match {
+    canons.get(Sidecars.keyCols(fs, path).sorted) match {
       case None => ranged
-      case Some(canon) =>
-        val fs = fsFor(spark, path)
-        val withBloom = ranged.filter(d =>
-          try fs.exists(SnapLog.bloom(path, d))
-          catch { case scala.util.control.NonFatal(e) =>
-            sidecarReadFailed("bloom", d, e); false }).toSet
-        ranged.filter(d => !withBloom(d) || readKeyBloom(spark, path, d)
-          .forall(bf => canon.exists(bf.mightContainString)))
+      case Some(canon) => ranged.filter(d => Sidecars.bloom(fs, path, d)
+        .forall(bf => canon.exists(bf.mightContainString)))
     }
   }
 
@@ -1029,19 +814,6 @@ object Upsert {
         .sortWithinPartitions(statKeys.map(col): _*)
     else df
 
-  /** The sink's key columns, persisted once so keyless ops (compaction)
-    * can still record stats sidecars for the dirs they write. */
-  private def recordKeyCols(spark: SparkSession, path: String,
-      keys: Seq[String]): Unit =
-    try SnapLog.writeText(fsFor(spark, path), SnapLog.keyCols(path),
-      keys.mkString("\n"))
-    catch { case scala.util.control.NonFatal(e) =>
-      log.warn("graft: key columns of {} not recorded: {}", path, e) }
-
-  private def recordedKeyCols(spark: SparkSession, path: String): Seq[String] =
-    SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.keyCols(path))
-      .getOrElse(Nil).filter(_.nonEmpty)
-
   // ── value-column data skipping ──────────────────────────────────
   // Key-range sidecars prune KEY probes; a reader filtering on a
   // non-key column (`n_chars > x`) still opens every dir. Declared
@@ -1059,18 +831,8 @@ object Upsert {
     * records for data skipping. Overwrites the previous declaration
     * (the sidecars of already-written dirs are unaffected either way). */
   def declareSkipCols(spark: SparkSession, path: String,
-      cols: Seq[String]): Unit = {
-    val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
-    SnapLog.writeText(fs, SnapLog.skipCols(path), cols.mkString("\n"))
-  }
-
-  private def recordedSkipCols(spark: SparkSession, path: String): Seq[String] =
-    try SnapLog.readLinesIfExists(fsFor(spark, path), SnapLog.skipCols(path))
-      .getOrElse(Nil).filter(_.nonEmpty)
-    catch { case scala.util.control.NonFatal(e) =>
-      log.warn("graft: skip columns of {} not read, skipping none: {}", path, e)
-      Nil }
+      cols: Seq[String]): Unit =
+    Sidecars.declareSkipCols(fsFor(spark, path), path, cols)
 
   // ── schema-evolution metadata ops ───────────────────────────────
   // The sink tolerates ADDITIVE physical evolution (mergeSchema) but
@@ -1091,56 +853,10 @@ object Upsert {
   // declared skip columns rename atomically with the map (old dirs'
   // stats lines simply stop pruning — conservative, never wrong).
 
-  /** (kind, a, b) triples in declaration order: ("add", name, ddl) |
-    * ("rename", from, to) | ("drop", name, "-"). A map that cannot be
-    * read or parsed FAILS the call, naming the file: read as empty, it
-    * would serve the unmapped view, and [[appendSchemaMapLine]] would
-    * rewrite it with every earlier evolution line erased. */
-  private def recordedSchemaMap(spark: SparkSession,
-      path: String): Seq[(String, String, String)] = {
-    val file = SnapLog.schemaMap(path)
-    try SnapLog.readLinesIfExists(fsFor(spark, path), file)
-      .getOrElse(Nil).filter(_.nonEmpty).map { l =>
-        val a = l.split("\t", 3)
-        (a(0), java.net.URLDecoder.decode(a(1), "UTF-8"),
-          if (a(0) == "add") a(2)
-          else java.net.URLDecoder.decode(a(2), "UTF-8"))
-      }
-    catch { case scala.util.control.NonFatal(e) =>
-      throw new java.io.IOException(s"graft: cannot read $file: $e", e) }
-  }
-
-  /** Append one evolution line under the REWRITER LOCK, published by
-    * tmp+rename: evolution ops are rare admin actions, but a plain
-    * read-modify-overwrite had two silent failure modes — concurrent
-    * declarations losing lines, and a reader catching the truncate
-    * window of an overwriting create, seeing an EMPTY map, and serving
-    * unhealed data / landing un-normalized batches (the exact fork the
-    * map exists to prevent). The lock serializes declarers; the rename
-    * makes every read all-or-nothing. */
-  private def appendSchemaMapLine(spark: SparkSession, path: String,
-      kind: String, a: String, b: String): Unit = {
-    val fs = fsFor(spark, path)
-    fs.mkdirs(SnapLog.snapDir(path))
-    SnapLog.withRewriterLock(fs, path, s"${kind}Column") {
-      val prior = recordedSchemaMap(spark, path)
-      val bEnc = if (kind == "add") b
-                 else java.net.URLEncoder.encode(b, "UTF-8")
-      val lines = prior.map { case (k, x, y) =>
-        val yEnc = if (k == "add") y else java.net.URLEncoder.encode(y, "UTF-8")
-        s"$k\t${java.net.URLEncoder.encode(x, "UTF-8")}\t$yEnc"
-      } :+ s"$kind\t${java.net.URLEncoder.encode(a, "UTF-8")}\t$bEnc"
-      if (!SnapLog.install(fs, SnapLog.schemaMap(path), lines.mkString("\n"),
-          replace = true))
-        throw new java.io.IOException(
-          s"schema.map publish failed at $path — declaration NOT applied")
-    }
-  }
-
   /** Names currently DROPPED by the map (a later add/rename-to would
     * re-use the name — refused, see [[dropColumn]]). */
   private def droppedCols(spark: SparkSession, path: String): Set[String] =
-    recordedSchemaMap(spark, path)
+    Sidecars.schemaMap(fsFor(spark, path), path)
       .collect { case ("drop", n, _) => n }.toSet
 
   /** Declare a column added to the sink's LOGICAL schema: reads
@@ -1157,7 +873,8 @@ object Upsert {
       s"addColumn: '$name' was dropped — a dropped name cannot be " +
         "re-used (no column IDs in this format-lite sink: the old " +
         "physical values would resurrect); pick a new name")
-    appendSchemaMapLine(spark, path, "add", name, dataType.sql)
+    Sidecars.appendSchemaMapLine(fsFor(spark, path), path, "add", name,
+      dataType.sql)
   }
 
   /** Declare a column RENAME as metadata: reads project the old
@@ -1169,7 +886,9 @@ object Upsert {
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Unit = {
     require(from != to, "renameColumn: from == to")
-    require(!recordedKeyCols(spark, path).contains(from),
+    val fs = fsFor(spark, path)
+    val keys = Sidecars.keyCols(fs, path)
+    require(!keys.contains(from),
       s"renameColumn: '$from' is a key column — keys are the sink's " +
         "identity and cannot rename (create a new sink and backfill)")
     // The TARGET must not collide with anything live: a rename onto a
@@ -1178,8 +897,7 @@ object Upsert {
     // column the coalesce projection would silently merge two
     // unrelated columns, discarding `to`'s NULLs' counterparts —
     // Delta refuses rename-onto-existing for exactly this reason.
-    require(!recordedKeyCols(spark, path).contains(to),
-      s"renameColumn: target '$to' is a key column")
+    require(!keys.contains(to), s"renameColumn: target '$to' is a key column")
     require(!droppedCols(spark, path).contains(to),
       s"renameColumn: target '$to' was dropped — a dropped name " +
         "cannot be re-used (old physical values would resurrect)")
@@ -1189,10 +907,10 @@ object Upsert {
         s"renameColumn: target '$to' already exists in the sink's " +
           "logical schema — renaming onto a live column would silently " +
           "merge two unrelated columns")
-    appendSchemaMapLine(spark, path, "rename", from, to)
-    val skips = recordedSkipCols(spark, path)
+    Sidecars.appendSchemaMapLine(fs, path, "rename", from, to)
+    val skips = Sidecars.skipCols(fs, path)
     if (skips.contains(from))
-      declareSkipCols(spark, path, skips.map(c => if (c == from) to else c))
+      Sidecars.declareSkipCols(fs, path, skips.map(c => if (c == from) to else c))
   }
 
   /** Declare a column DROPPED from the sink's logical schema: reads
@@ -1205,13 +923,14 @@ object Upsert {
     * first — a dropped column must not keep driving dir pruning).
     * Metadata-only. */
   def dropColumn(spark: SparkSession, path: String, name: String): Unit = {
-    require(!recordedKeyCols(spark, path).contains(name),
+    val fs = fsFor(spark, path)
+    require(!Sidecars.keyCols(fs, path).contains(name),
       s"dropColumn: '$name' is a key column — keys are the sink's " +
         "identity and cannot drop")
-    require(!recordedSkipCols(spark, path).contains(name),
+    require(!Sidecars.skipCols(fs, path).contains(name),
       s"dropColumn: '$name' is a declared skip column — " +
         "declareSkipCols without it first")
-    appendSchemaMapLine(spark, path, "drop", name, "-")
+    Sidecars.appendSchemaMapLine(fs, path, "drop", name, "-")
   }
 
   /** The logical view of a physically-read frame: apply the declared
@@ -1219,7 +938,7 @@ object Upsert {
     * no-ops every entry). */
   private def applySchemaMap(spark: SparkSession, path: String,
       df: DataFrame): DataFrame =
-    recordedSchemaMap(spark, path).foldLeft(df) {
+    Sidecars.schemaMap(fsFor(spark, path), path).foldLeft(df) {
       case (d, ("add", name, ddl)) =>
         if (d.columns.contains(name)) d
         else d.withColumn(name, lit(null).cast(
@@ -1246,7 +965,7 @@ object Upsert {
     * reads as NULL. */
   private def normalizeBatch(spark: SparkSession, path: String,
       batch: DataFrame): DataFrame =
-    recordedSchemaMap(spark, path).foldLeft(batch) {
+    Sidecars.schemaMap(fsFor(spark, path), path).foldLeft(batch) {
       case (d, ("rename", from, to)) if d.columns.contains(from) &&
           !d.columns.contains(to) => d.withColumnRenamed(from, to)
       case (d, ("drop", name, _)) if d.columns.contains(name) =>
@@ -1258,8 +977,8 @@ object Upsert {
     * loudly (the physical dirs still carry it, but it is no longer the
     * sink's live identity and the landing rows would fork). */
   private def renamedAwayCols(spark: SparkSession, path: String): Set[String] = {
-    val m = recordedSchemaMap(spark, path)
-    val renames = m.collect { case ("rename", f, t) => (f, t) }
+    val renames = Sidecars.schemaMap(fsFor(spark, path), path)
+      .collect { case ("rename", f, t) => (f, t) }
     // A name re-introduced by a later rename chain (a→b then c→a) is
     // live again; walk in order.
     var dead = Set.empty[String]
@@ -1382,21 +1101,8 @@ object Upsert {
     * snapshots fall back to the V1 bridge, never a wrong answer. */
   private[graft] def batchScanEligible(spark: SparkSession, path: String,
       version: Int): Boolean =
-    recordedSchemaMap(spark, path).isEmpty &&
+    Sidecars.schemaMap(fsFor(spark, path), path).isEmpty &&
       manifestEntries(spark, path, version).forall(_.dvs.isEmpty)
-
-  /** Columns whose sidecar stats can prune dirs — the sink's recorded
-    * keys plus declared skip columns. The DSv2 scan advertises exactly
-    * these as runtime-filterable (anything else could never prune, so
-    * a DPP subquery on it would be pure overhead). */
-  private[graft] def prunableCols(spark: SparkSession,
-      path: String): Seq[String] =
-    (recordedKeyCols(spark, path) ++ recordedSkipCols(spark, path)).distinct
-
-  /** The sink's recorded key columns — the change-feed relation's
-    * default `keys`. */
-  private[graft] def recordedKeyColsOf(spark: SparkSession,
-      path: String): Seq[String] = recordedKeyCols(spark, path)
 
   /** Persist the sink's key declaration ahead of the first write —
     * the catalog's CREATE TABLE hook, so a later plain INSERT
@@ -1404,8 +1110,9 @@ object Upsert {
   private[graft] def declareKeys(spark: SparkSession, path: String,
       keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "declareKeys: empty key list")
-    fsFor(spark, path).mkdirs(SnapLog.snapDir(path))
-    recordKeyCols(spark, path, keys)
+    val fs = fsFor(spark, path)
+    fs.mkdirs(SnapLog.snapDir(path))
+    Sidecars.recordKeyCols(fs, path, keys)
   }
 
   /** Dir admission for the DSv2 Batch scan: [[pruneDirs]] over the
@@ -1435,15 +1142,8 @@ object Upsert {
   private[graft] def snapshotDataFiles(spark: SparkSession, path: String,
       dirs: Seq[String]): Seq[String] = {
     val fs = fsFor(spark, path)
-    dirs.flatMap { d =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(path, d)).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          st.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith(".")
-        }
-        .map(_.getPath.toString)
-    }
+    dirs.flatMap(d => Sidecars.dataFiles(fs, new org.apache.hadoop.fs.Path(path, d))
+      .map(_.getPath.toString))
   }
 
   /** Deterministic key-conflict HEALING among CARRIED dirs — closes
@@ -1505,7 +1205,7 @@ object Upsert {
             val rw = s"${current(b)}-r$version"
             writeDirWithStats(spark, path, rw,
               bDf.join(eKeys, keys, "left_anti"), keys,
-              keyBound = readDirRowCount(spark, path, bCur))
+              keyBound = Sidecars.stats(fs, path, bCur).flatMap(_.rows))
             Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, b))
             Protocol.touchRewriteGen(fs, path, version)
             current(b) = rw
@@ -1625,7 +1325,7 @@ object Upsert {
             val rw = s"${rootOf(dirName)}-r$version"
             writeDirWithStats(spark, path, rw,
               own.join(rivalKeys, keys, "left_anti"), keys,
-              keyBound = readDirRowCount(spark, path, ownDir))
+              keyBound = Sidecars.stats(fs, path, ownDir).flatMap(_.rows))
             // The heal yields keys a reader may already have counted —
             // a content-changing rewrite for delta-purity purposes.
             Protocol.touchRewriteGen(fs, path, version)
@@ -1743,8 +1443,7 @@ object Upsert {
   private def writeSnapshotFrom(spark: SparkSession, path: String,
       deduped: DataFrame, fresh0: Option[DataFrame], basedOn: Int,
       keys: Seq[String], tieBreak: Seq[String],
-      fresh0Profile: Option[(Long, Map[String, (Long, Array[String])])] =
-        None): Int =
+      fresh0Profile: Option[Sidecars.Profile] = None): Int =
       labeled(spark, "graft.publish") {
     val fs = fsFor(spark, path)
     val target = Protocol.claimVersion(fs, path)
@@ -1770,7 +1469,7 @@ object Upsert {
     writeDirWithStats(spark, path, dirName, fresh, keys,
       keyBound = batchKeys,
       dirProfile = if (fresh0Ok) fresh0Profile else None)
-    recordKeyCols(spark, path, keys)
+    Sidecars.recordKeyCols(fs, path, keys)
     Protocol.publishDirs(fs, path, target, baseDirs :+ dirName)
     val rv = reconcileLineage(spark, path, target, dirName, keys,
       Protocol.coverage(fs, path, baseDirs), fresh.schema, baseVersion = cur)
@@ -1812,10 +1511,6 @@ object Upsert {
   // like the bloom canon).
 
   private[graft] val ProfileK = 256
-  /** 16^15 = 2^60 as an exact double — maps a 15-hex-digit fingerprint
-    * prefix onto the unit interval without precision loss (the same
-    * estimator constant as [[Cardinality]]). */
-  private val ProfileHexNorm = math.pow(16.0, 15.0)
 
   // Qualified-private, not `private`: the encoder's generated code
   // instantiates this class reflectively, and a Scala-private nested
@@ -1835,22 +1530,12 @@ object Upsert {
     new String(out)
   }
 
-  private def capSet(buf: java.util.TreeSet[String], k: Int): Array[String] = {
-    while (buf.size > k) buf.pollLast()
-    val out = new Array[String](buf.size)
-    var i = 0
-    val it = buf.iterator()
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    out
-  }
-
   /** ONE distributed pass over `df`: per column — row count, null
     * count, and the KMV partial (k smallest md5 fingerprints of the
     * distinct non-null values). Partitions keep capped sorted buffers
     * (the map-side combine), the per-column merge is distributed, and
     * only #columns merged sketches reach the driver. */
-  private def profileSketch(df: DataFrame, k: Int = ProfileK)
-      : (Long, Map[String, (Long, Array[String])]) = {
+  private def profileSketch(df: DataFrame, k: Int = ProfileK): Sidecars.Profile = {
     import org.apache.spark.sql.types.{DateType, TimestampType}
     val spark = df.sparkSession
     import spark.implicits._
@@ -1873,23 +1558,18 @@ object Upsert {
         while (i < n) {
           rows(i) += 1
           if (r.isNullAt(i)) nulls(i) += 1
-          else {
-            val fp = fpHex(md.digest(r.getString(i).getBytes("UTF-8")))
-            val buf = bufs(i)
-            if (buf.size < k) { buf.add(fp); () }
-            else if (fp < buf.last && buf.add(fp)) { buf.pollLast(); () }
-          }
+          else Cardinality.offer(bufs(i),
+            fpHex(md.digest(r.getString(i).getBytes("UTF-8"))), k)
           i += 1
         }
       }
-      (0 until n).iterator.map(i =>
-        ColSketch(i, rows(i), nulls(i), capSet(bufs(i), k)))
+      (0 until n).iterator.map(i => ColSketch(i, rows(i), nulls(i),
+        bufs(i).toArray(new Array[String](0))))
     }
     val merged = partials.groupByKey(_.idx)
       .reduceGroups { (a: ColSketch, b: ColSketch) =>
-        val buf = new java.util.TreeSet[String]()
-        a.fps.foreach(buf.add); b.fps.foreach(buf.add)
-        ColSketch(a.idx, a.rows + b.rows, a.nulls + b.nulls, capSet(buf, k))
+        ColSketch(a.idx, a.rows + b.rows, a.nulls + b.nulls,
+          Cardinality.union(a.fps, b.fps, k))
       }.map(_._2).collect()
     val byIdx = merged.map(cs => cs.idx -> cs).toMap
     val rowsTotal = byIdx.values.headOption.map(_.rows).getOrElse(0L)
@@ -1899,78 +1579,22 @@ object Upsert {
     }.toMap)
   }
 
-  /** KMV estimate from a sketch: exact when fewer than k fingerprints
-    * exist (the sketch IS the distinct set), else (k-1)/R_k —
-    * [[Cardinality]]'s estimator, rounded to a count. */
-  private def kmvDistinct(fps: Array[String], k: Int = ProfileK): Long =
-    if (fps.length < k) fps.length.toLong
-    else {
-      val kth = java.lang.Long.parseLong(fps(fps.length - 1).substring(0, 15), 16)
-      math.round((k - 1).toDouble * ProfileHexNorm / kth.toDouble)
-    }
-
-  /** Profile union: counts add; a column missing on one side was
-    * all-NULL there (unionByName allowMissingColumns semantics);
-    * sketches union-then-recap. */
-  private def mergeProfileStats(prevRows: Long,
-      prev: Map[String, (Long, Array[String])], freshRows: Long,
-      fresh: Map[String, (Long, Array[String])], k: Int = ProfileK)
-      : (Long, Map[String, (Long, Array[String])]) = {
-    val cols = prev.keySet ++ fresh.keySet
-    (prevRows + freshRows, cols.iterator.map { c =>
-      val (pn, pf) = prev.getOrElse(c, (prevRows, Array.empty[String]))
-      val (fn, ff) = fresh.getOrElse(c, (freshRows, Array.empty[String]))
-      val buf = new java.util.TreeSet[String]()
-      pf.foreach(buf.add); ff.foreach(buf.add)
-      c -> ((pn + fn, capSet(buf, k)))
-    }.toMap)
-  }
-
   /** A maintained profile as the 4-column frame [[Validate.profileDrift]]
     * reads (column, n_rows, n_nulls, n_distinct) — distinct from the
-    * sketch, exact below k. */
-  private def profileStatsToDF(spark: SparkSession, rows: Long,
-      m: Map[String, (Long, Array[String])]): DataFrame = {
+    * sketch ([[Cardinality.estimate]], rounded to a count), exact below
+    * k. */
+  private def profileStatsToDF(spark: SparkSession,
+      profile: Sidecars.Profile): DataFrame = {
     import spark.implicits._
+    val (rows, m) = profile
     m.toSeq.sortBy(_._1)
-      .map { case (c, (nulls, fps)) => (c, rows, nulls, kmvDistinct(fps)) }
-      .toDF("column", "n_rows", "n_nulls", "n_distinct")
+      .map { case (c, (nulls, fps)) => (c, rows, nulls, fps) }
+      .toDF("column", "n_rows", "n_nulls", "fps")
+      .select(col("column"), col("n_rows"), col("n_nulls"),
+        round(Cardinality.estimate(size(col("fps")),
+          Cardinality.prefix(element_at(col("fps"), ProfileK)), ProfileK))
+          .cast("long").as("n_distinct"))
   }
-
-  /** Sidecar format: `#rows<TAB>n` then one line per column —
-    * `urlenc(col) TAB nulls TAB fp,fp,…`. Best-effort write: a missing
-    * sidecar only costs the next gated publish a profile pass over
-    * that dir. */
-  private def writeProfileFile(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, rows: Long,
-      m: Map[String, (Long, Array[String])]): Unit =
-    try {
-      val lines = s"#rows\t$rows" +: m.toSeq.sortBy(_._1).map {
-        case (c, (nulls, fps)) =>
-          s"${java.net.URLEncoder.encode(c, "UTF-8")}\t$nulls\t${fps.mkString(",")}"
-      }
-      SnapLog.writeText(fs, target, lines.mkString("\n"))
-    } catch { case scala.util.control.NonFatal(e) => skipped(
-      s"writing profile sidecar $target (re-profiled on demand)", e) }
-
-  private def readProfileFile(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path)
-      : Option[(Long, Map[String, (Long, Array[String])])] =
-    try {
-      val lines = SnapLog.readLines(fs, target).filter(_.nonEmpty)
-      val rows = lines.head.split("\t")(1).toLong
-      Some((rows, lines.tail.map { l =>
-        val parts = l.split("\t", -1)
-        val fps = if (parts(2).isEmpty) Array.empty[String]
-                  else parts(2).split(",")
-        java.net.URLDecoder.decode(parts(0), "UTF-8") ->
-          ((parts(1).toLong, fps))
-      }.toMap))
-    } catch {
-      case _: java.io.FileNotFoundException => None
-      case scala.util.control.NonFatal(e) =>
-        skipped(s"reading profile sidecar $target (re-profiled)", e); None
-    }
 
   /** Test/ops audit of the last [[writeSnapshotGated]] gate evaluation:
     * `"maintained"` (every manifest dir had a profile sidecar — zero
@@ -2017,17 +1641,13 @@ object Upsert {
     // `gate.on` marker, this call's own batch dir (and every later
     // rewrite) gets its `.profile` sidecar stamped at write time, so
     // the gate never re-reads published data.
-    try { if (!fs.exists(SnapLog.gateMarker(path)))
-      SnapLog.writeText(fs, SnapLog.gateMarker(path), "")
-    } catch { case scala.util.control.NonFatal(e) => skipped(
-      s"writing the gate.on marker of $path (dirs get no profile)", e) }
+    Sidecars.markGate(fs, path)
     requireLiveKeys(spark, path, keys, "writeSnapshotGated")
     val cur = latestVersion(spark, path)
     val deduped = dedupOnKey(normalizeBatch(spark, path, batch),
       keys, tieBreak)
     var freshForWrite: Option[DataFrame] = None
-    var freshProfile: Option[(Long, Map[String, (Long, Array[String])])] =
-      None
+    var freshProfile: Option[Sidecars.Profile] = None
     if (cur >= 1) {
       val baseEntries = manifestEntries(spark, path, cur)
       val baseDirs = baseEntries.map(_.dir)
@@ -2039,24 +1659,22 @@ object Upsert {
       freshForWrite = Some(fresh)
       var missing = List.empty[String]
       val perDir = baseDirs.map { d =>
-        readProfileFile(fs, SnapLog.profile(path, d)).getOrElse {
+        Sidecars.profile(fs, path, d).getOrElse {
           missing ::= d
           val p = profileSketch(readDirs(spark, Seq(s"$path/$d")))
-          writeProfileFile(fs, SnapLog.profile(path, d), p._1, p._2)
+          Sidecars.writeProfile(fs, path, d, p)
           p
         }
       }
       lastGateMode.set(if (missing.isEmpty) "maintained" else "recomputed")
-      val (prevRows, prevM) = perDir
-        .reduceOption((a, b) => mergeProfileStats(a._1, a._2, b._1, b._2))
+      val prev = perDir.reduceOption(Sidecars.mergeProfiles(_, _, ProfileK))
         .getOrElse((0L, Map.empty[String, (Long, Array[String])]))
-      val (fRows, fM) = labeled(spark, "graft.gate profile")(
-        profileSketch(fresh))
-      freshProfile = Some((fRows, fM))
-      val cand = mergeProfileStats(prevRows, prevM, fRows, fM)
+      val fProfile = labeled(spark, "graft.gate profile")(profileSketch(fresh))
+      freshProfile = Some(fProfile)
       val bad = Validate.driftViolations(
-        Validate.profileDrift(profileStatsToDF(spark, cand._1, cand._2),
-          profileStatsToDF(spark, prevRows, prevM)),
+        Validate.profileDrift(profileStatsToDF(spark,
+          Sidecars.mergeProfiles(prev, fProfile, ProfileK)),
+          profileStatsToDF(spark, prev)),
         maxNullRateJump, maxRowGrowthPct, minRowGrowthPct,
         allowAddedColumns, allowDroppedColumns)
         .select(col("violation"), col("column")).collect()
@@ -2213,7 +1831,7 @@ object Upsert {
         // name is unique across racing compactors before either locks.
         val target = Protocol.claimVersion(fs, path)
         val dirName = s"compact-$target"
-        val statKeys = recordedKeyCols(spark, path)
+        val statKeys = Sidecars.keyCols(fs, path)
         val rows =
           if (full) readSnapshot(spark, path, cur)
           else readEntriesRaw(spark, path, packedEntries)
@@ -2326,7 +1944,7 @@ object Upsert {
       val carry =
         if (dropped.isEmpty) carry0
         else resolveCarriedConflicts(spark, path, carry0, dropped.toSet,
-          dirName, recordedKeyCols(spark, path), version)
+          dirName, Sidecars.keyCols(fs, path), version)
       Protocol.publishDirs(fs, path, version, dirName +: carry)
       attempts += 1
     }
@@ -2569,7 +2187,7 @@ object Upsert {
           // rides the rewrite job.
           writeDirWithStats(spark, path, rw,
             liveDir(d).join(touched, keys, "left_anti"), keys,
-            keyBound = readDirRowCount(spark, path, d))
+            keyBound = Sidecars.stats(fs, path, d).flatMap(_.rows))
           Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, d))
           rw
         }
@@ -2620,7 +2238,7 @@ object Upsert {
       // row of the (key-unique) batch.
       writeDirWithStats(spark, path, mergeDir, land0, keys,
         keyBound = Some(uCnt + iCnt))
-      recordKeyCols(spark, path, keys)
+      Sidecars.recordKeyCols(fs, path, keys)
       mergePreLockHook()
       // Orphans of a stale base or a lost lock: without cleanup every
       // lock collision (the streaming CDC sink retries them routinely)
@@ -2665,7 +2283,7 @@ object Upsert {
             writeDirWithStats(spark, path, rw,
               readDirs(spark, Seq(s"$path/$mergeDir"))
                 .join(inKeys, keys, "left_anti"), keys,
-              keyBound = readDirRowCount(spark, path, mergeDir))
+              keyBound = Sidecars.stats(fs, path, mergeDir).flatMap(_.rows))
             // The unfiltered landing dir is never published — drop
             // it rather than leave a vacuum-bait orphan.
             SnapLog.dropDir(fs, path, mergeDir)
@@ -3511,11 +3129,11 @@ object Upsert {
           if (hit == 0) processed(d) = (None, 0L)
           else {
             val rw = s"$d-e$epoch"
-            val statKeys0 = recordedKeyCols(spark, path)
+            val statKeys0 = Sidecars.keyCols(fs, path)
             writeDirWithStats(spark, path, rw,
               df.join(keyRows, keys, "left_anti"),
               if (statKeys0.nonEmpty) statKeys0 else keys,
-              keyBound = readDirRowCount(spark, path, d))
+              keyBound = Sidecars.stats(fs, path, d).flatMap(_.rows))
             Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, d))
             processed(d) = (Some(rw), hit)
           }
@@ -3770,13 +3388,9 @@ object Upsert {
         .filter(col("__rn") <= ProfileK).drop("__rn")
         .groupBy(groupCols.map(col): _*)
         .agg(sort_array(collect_list(col("__fp"))).as("kmv"))
-    // The estimator mirrors [[kmvDistinct]]: exact below k; else
-    // (k-1) / (kth fingerprint's unit-interval position).
     def kmvEst(kmvCol: org.apache.spark.sql.Column) =
-      when(size(kmvCol) < ProfileK, size(kmvCol).cast("long"))
-        .otherwise(round(lit((ProfileK - 1).toDouble * ProfileHexNorm) /
-          conv(substring(element_at(kmvCol, ProfileK), 1, 15),
-            16, 10).cast("double")).cast("long"))
+      round(Cardinality.estimate(size(kmvCol),
+        Cardinality.prefix(element_at(kmvCol, ProfileK)), ProfileK)).cast("long")
     def aggOf(df: DataFrame): DataFrame = {
       val agg = df.groupBy(groupCols.map(col): _*)
         .agg(count(lit(1)).as("n"),

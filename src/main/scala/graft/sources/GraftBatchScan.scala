@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.ops.Upsert
-import graft.table.KeyDomain
+import graft.table.{KeyDomain, Sidecars}
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -161,8 +161,12 @@ private[sources] class GraftBatchScan(path: String, version: Int,
   override def toBatch: Batch = this
 
   override def filterAttributes(): Array[NamedReference] = {
-    val spark = SparkSession.active
-    Upsert.prunableCols(spark, path)
+    // Columns whose sidecar stats can prune dirs — the recorded keys
+    // plus the declared skip columns. Anything else could never prune,
+    // so a DPP subquery on it would be pure overhead.
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    (Sidecars.keyCols(fs, path) ++ Sidecars.skipCols(fs, path)).distinct
       .filter(c => tableSchema.fields.exists(f => f.name == c &&
         KeyDomain.tagOf(f.dataType).isDefined))
       .map(Expressions.column).toArray

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 
 import graft.ops.Upsert
+import graft.table.Sidecars
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -66,7 +67,8 @@ private[sources] object GraftChangeFeed {
     val declared = Option(opts.get("keys")).toSeq
       .flatMap(_.split(",").toSeq).map(_.trim).filter(_.nonEmpty)
     val keys = if (declared.nonEmpty) declared
-               else Upsert.recordedKeyColsOf(spark, path)
+               else Sidecars.keyCols(new org.apache.hadoop.fs.Path(path)
+                 .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
     require(keys.nonEmpty,
       s"graft changeFeed: no key columns — the sink at $path has no " +
         "recorded keys; pass option(\"keys\", \"col[,col…]\")")

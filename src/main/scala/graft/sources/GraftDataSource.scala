@@ -3,7 +3,7 @@ package graft.sources
 import java.util
 
 import graft.ops.Upsert
-import graft.table.KeyDomain
+import graft.table.{KeyDomain, Sidecars}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -327,8 +327,9 @@ private[sources] class GraftTable(path: String, version: Int,
             val keys = Option(opts.get("keys"))
               .map(_.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty))
               .filter(_.nonEmpty)
-              .getOrElse(graft.ops.Upsert
-                .recordedKeyColsOf(spark0, path).toIndexedSeq)
+              .getOrElse(Sidecars.keyCols(new org.apache.hadoop.fs.Path(path)
+                .getFileSystem(spark0.sparkContext.hadoopConfiguration), path)
+                .toIndexedSeq)
             require(keys.nonEmpty,
               "graft: writes require option(\"keys\", \"col[,col…]\") — " +
                 "the snapshot sink is keyed (keep-existing upsert); a " +

@@ -5,8 +5,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** The layout of a snapshot sink's `_snapshots` log: every file name in
-  * it, every read and write of its small metadata files, and the
-  * rewriter lock. No other code builds a `_snapshots` path.
+  * it, the small-file IO under every read and write of it, and the
+  * rewriter lock. No other code builds a `_snapshots` path; the codecs
+  * of the per-dir sidecars and the sink declarations are
+  * [[Sidecars]]'.
   *
   * Per version N:
   *   - `v<N>.list` — the manifest (`v<N>.list.tmp` while publishing);
@@ -127,8 +129,11 @@ private[graft] object SnapLog {
   def readLines(fs: FileSystem, p: Path): List[String] =
     lines(readText(fs, p))
 
+  /** The text of `p`, or None when it is absent: one open, no
+    * `exists` call before it. */
   def readTextIfExists(fs: FileSystem, p: Path): Option[String] =
-    if (fs.exists(p)) Some(readText(fs, p)) else None
+    try Some(readText(fs, p))
+    catch { case _: java.io.FileNotFoundException => None }
 
   def readLinesIfExists(fs: FileSystem, p: Path): Option[List[String]] =
     readTextIfExists(fs, p).map(lines)

@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Each on-disk decision of the snapshot sink has one owner in
   * `graft.table`: the `_snapshots` layout ([[graft.table.SnapLog]]),
-  * the key domain ([[graft.table.KeyDomain]]) and the commit protocol
-  * ([[graft.table.Protocol]]). Reads `src/main` so that no other module
-  * grows a second copy, and so that the streaming sinks keep writing
-  * through the snapshot sink alone. */
+  * the key domain ([[graft.table.KeyDomain]]), the commit protocol
+  * ([[graft.table.Protocol]]) and the per-dir sidecars and sink
+  * declarations ([[graft.table.Sidecars]]). Reads `src/main` so that
+  * no other module grows a second copy, and so that the streaming sinks
+  * keep writing through the snapshot sink alone. */
 class LayoutOwnershipSpec extends AnyFunSuite {
 
   private lazy val main: Path =
@@ -56,6 +57,11 @@ class LayoutOwnershipSpec extends AnyFunSuite {
     assert(outsideTable.collect { case (f, text)
       if "class\\s+SnapEntry\\b|def\\s+parseEntry\\b".r.findFirstIn(text).isDefined => f
     }.isEmpty)
+  }
+
+  test("per-dir sidecars and sink declarations are read and written only in graft.table") {
+    for (name <- Seq("stats", "bloom", "profile", "keyCols", "skipCols", "schemaMap"))
+      assert(offenders(outsideTable, s"SnapLog.$name(").isEmpty, name)
   }
 
   test("streaming sinks write only through the snapshot sink, plus the quarantine") {

@@ -2017,6 +2017,63 @@ class UpsertPartitionedSpec extends SparkSpec {
       Seq(Tuple1(100L)).toDF("__rows"), Seq("__rows"))
       .as[(Long, String)].collect().toSeq
     assert(got == Seq((100L, "x")))
+    // A torn RANGE line (`id TAB long TAB 1`, its max cut off) makes the
+    // whole sidecar absent: every read probes or scans that dir and
+    // answers exactly, none throws.
+    val p3 = java.nio.file.Files.createTempDirectory("snaprb3").toString
+    Upsert.writeSnapshot(spark, p3,
+      (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"), Seq("id"))
+    Upsert.writeSnapshot(spark, p3,
+      (6L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"), Seq("id"))
+    val torn = new java.io.File(p3 + "/_snapshots", "batch-1.stats")
+    val tornLines = scala.io.Source.fromFile(torn).getLines().toList
+    assert(tornLines.exists(_.startsWith("id\tlong\t1\t")), tornLines)
+    val w3 = new java.io.FileWriter(torn)
+    try w3.write(tornLines.map(l =>
+      if (l.startsWith("id\tlong\t")) "id\tlong\t1" else l).mkString("\n"))
+    finally w3.close()
+    // Without its stale checksum file the read reaches the line parser.
+    assert(new java.io.File(p3 + "/_snapshots", ".batch-1.stats.crc").delete())
+    assert(Upsert.readSnapshotForKeys(spark, p3, 2, Seq(Tuple1(3L)).toDF("id"),
+      Seq("id")).as[(Long, String)].collect().toSeq == Seq((3L, "v3")))
+    assert(Upsert.lastProbedDirs.get() == Seq("batch-1"),
+      s"point read probes the torn dir: ${Upsert.lastProbedDirs.get()}")
+    assert(Upsert.readSnapshotWhere(spark, p3, 2, Map("id" -> ((2L, 7L))))
+      .as[(Long, String)].collect().toSet ==
+      (2L to 7L).map(i => (i, s"v$i")).toSet)
+    assert(Upsert.lastProbedDirs.get().toSet == Set("batch-1", "batch-2"),
+      s"bounded read probes the torn dir: ${Upsert.lastProbedDirs.get()}")
+    assert(Upsert.minMaxSnapshot(spark, p3, 2, "id") == ((Some(1L), Some(10L))))
+    assert(Upsert.lastMinMaxScanned.get() == Seq("batch-1"),
+      s"min/max scans the torn dir: ${Upsert.lastMinMaxScanned.get()}")
+    assert(Upsert.countSnapshot(spark, p3, 2) == 10L)
+    assert(Upsert.lastCountScanned.get() == Seq("batch-1"))
+  }
+
+  test("keys.cols is written once: later publishes and merges leave it untouched") {
+    val path = java.nio.file.Files.createTempDirectory("snapkeys").toString
+    Upsert.writeSnapshot(spark, path,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), Seq("id"))
+    val keysFile = new java.io.File(path + "/_snapshots", "keys.cols")
+    def keysText = new String(java.nio.file.Files.readAllBytes(keysFile.toPath), "UTF-8")
+    assert(keysText == "id")
+    // A sentinel mtime: any rewrite of the file (a truncating create or
+    // a tmp-then-rename install) moves it.
+    val sentinel = 1000000000L
+    assert(keysFile.setLastModified(sentinel))
+    Upsert.writeSnapshot(spark, path,
+      Seq((3L, "c")).toDF("id", "v"), Seq("id"), Seq("id"))
+    Upsert.mergeSnapshot(spark, path,
+      Seq(("U", 1L, "A"), ("I", 4L, "d")).toDF("op", "id", "v"),
+      Seq("id"), Seq("id"), "op")
+    Upsert.mergeSnapshotMoR(spark, path,
+      Seq(("D", 2L, null.asInstanceOf[String])).toDF("op", "id", "v"),
+      Seq("id"), Seq("id"), "op")
+    assert(keysFile.lastModified == sentinel,
+      "publishes and merges must not rewrite an unchanged key declaration")
+    assert(keysText == "id")
+    assert(Upsert.readSnapshot(spark, path, Upsert.latestVersion(spark, path))
+      .as[(Long, String)].collect().toSet == Set((1L, "A"), (3L, "c"), (4L, "d")))
   }
 
   test("wall-clock retention: expireSnapshotsOlderThan keeps every version a reader at ts could see") {
