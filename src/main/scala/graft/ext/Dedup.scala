@@ -689,7 +689,7 @@ object Dedup {
     * (nondeterministic; 25 rounds of lingering label sets on a big
     * graph is real executor storage). Falls back to that GC path if the
     * plan isn't the expected LogicalRDD scan. */
-  private def freeCheckpoint(df: DataFrame): Unit =
+  private[graft] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()

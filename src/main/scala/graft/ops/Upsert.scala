@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -224,31 +224,43 @@ object Upsert {
   // gate. Ranges are per-column: disjointness on ANY key column rules
   // out a composite-key match (all columns must match for equality).
 
-  /** Per-column (tag, min, max) of `df` over `statCols` — None per
-    * column with no non-null values — PLUS the count of rows with
-    * every `nnCols` column non-null (the bloom sidecar's sizing input,
-    * folded into the same aggregate so a sidecar write costs one range
-    * pass, not a range pass plus a count pass). ONE narrow aggregate.
-    * Count is 0 when no column has a supported stat type (the early
-    * return — no stats means no bloom either, by contract). `statCols`
-    * = keys for probes; the sidecar writer extends it with declared
-    * skip columns at zero extra passes. */
-  private[graft] def keyRangesWithCount(df: DataFrame,
-      statCols: Seq[String], nnCols: Seq[String]): (Ranges, Long, Long) = {
+  /** The range aggregates over `statCols` of a frame of `schema`: per
+    * tagged column its min and max, then the count of rows with every
+    * `nnCols` column non-null (the bloom sidecar's sizing input) and
+    * the row total — with the (column, tag) pairs they cover. Columns
+    * without a [[KeyDomain.tagOf]] tag get no aggregate. */
+  private def rangeAggs(schema: org.apache.spark.sql.types.StructType,
+      statCols: Seq[String], nnCols: Seq[String])
+      : (Seq[(String, String)], Seq[Column]) = {
     val tagged = statCols.flatMap(k =>
-      KeyDomain.tagOf(df.schema(k).dataType).map(k -> _))
-    if (tagged.isEmpty) return (Nil, 0L, -1L)
+      KeyDomain.tagOf(schema(k).dataType).map(k -> _))
     val nnPred = nnCols.map(col(_).isNotNull)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val aggs = tagged.flatMap { case (k, _) =>
+    (tagged, tagged.flatMap { case (k, _) =>
       Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")) } :+
       count(when(nnPred, lit(1))).as("__nn") :+
-      count(lit(1)).as("__rows")
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      count(lit(1)).as("__rows"))
+  }
+
+  /** [[rangeAggs]]' values, read from the row that computed them:
+    * (per-column ranges — None per column with no non-null value —,
+    * joint non-null count, row total). */
+  private def rangeFacts(tagged: Seq[(String, String)],
+      row: org.apache.spark.sql.Row): (Ranges, Long, Long) = {
     val ranges = tagged.zipWithIndex.map { case ((k, tag), i) =>
       (k, tag, KeyDomain.rangeOf(row.get(2 * i), row.get(2 * i + 1)))
     }
     (ranges, row.getLong(2 * tagged.size), row.getLong(2 * tagged.size + 1))
+  }
+
+  /** [[rangeFacts]] of `df` by ONE narrow aggregate. Count is 0 and the
+    * total -1 when no column has a supported stat type (no stats means
+    * no bloom either, by contract). `statCols` = keys for probes. */
+  private[graft] def keyRangesWithCount(df: DataFrame,
+      statCols: Seq[String], nnCols: Seq[String]): (Ranges, Long, Long) = {
+    val (tagged, aggs) = rangeAggs(df.schema, statCols, nnCols)
+    if (tagged.isEmpty) (Nil, 0L, -1L)
+    else rangeFacts(tagged, df.agg(aggs.head, aggs.tail: _*).collect()(0))
   }
 
   /** Keys-per-dir cap for the bloom sidecar (~1.2 bytes/key at 1%
@@ -266,68 +278,57 @@ object Upsert {
   private def skipped(what: String, e: Throwable): Unit =
     log.warn(s"graft: skipped $what: $e")
 
+  /** How long a dir write waits for its observed facts to arrive from
+    * the listener bus before it re-reads the dir instead. */
+  private val ObservedWaitMs = 3000L
+
   /** Write `df` as data dir `<path>/<dirName>` — every data dir the
     * sink writes goes through here — and stamp its [[Sidecars]]. The
-    * `.stats` come from the just-written PARQUET FOOTERS at
-    * driver-metadata cost: the footers already carry exact per-column
-    * min/max/null-count statistics (guide §6: footer stats are the skip
-    * machinery), so no re-read range aggregate runs. Declared skip
-    * columns ride the same footers; unusable footers fall back to one
-    * range aggregate over the re-read dir. Small dirs (≤
-    * [[BloomMaxKeys]] non-null keys) also get a `.bloom2`
-    * exact-membership sketch over [[KeyDomain.keyCanon]] — range stats
-    * cannot prune hash-distributed keys, the bloom can. The bloom build
-    * stays the one post-write pass unless `keyBound` lets it ride the
-    * write job; gated sinks keep their profile pass (a KMV sketch needs
-    * the data). Best-effort: a sidecar failure never fails the data
-    * write (readers just probe); it logs a WARN naming the dir. */
+    * `.stats` facts ([[rangeAggs]] over the keys and the declared skip
+    * columns) ride the WRITE job as a CollectMetrics observation, so no
+    * pass re-reads the dir for them; every tagged type is covered,
+    * INT96 timestamps included. Small dirs (≤ [[BloomMaxKeys]] non-null
+    * keys) also get a `.bloom2` exact-membership sketch over
+    * [[KeyDomain.keyCanon]] — range stats cannot prune hash-distributed
+    * keys, the bloom can. When the caller knows an UPPER BOUND on the
+    * dir's key count (a rewrite is bounded by its parent's rows, a
+    * merge landing by the batch's U+I counts, a publish by the batch's
+    * keys, a compaction by its packed dirs' rows) and it fits the cap,
+    * the bloom rides the same observation: a bound only OVERSIZES the
+    * filter, so the zero-false-negative contract holds. An observation
+    * that does not arrive costs one `graft.stats` pass over the dir,
+    * and a bloom with no bound one `graft.bloom` pass; gated sinks keep
+    * their profile pass (a KMV sketch needs the data). Best-effort: a
+    * sidecar failure never fails the data write (readers just probe);
+    * it logs a WARN naming the dir. */
   private def writeDirWithStats(spark: SparkSession, path: String,
       dirName: String, df: DataFrame, keys: Seq[String],
       keyBound: Option[Long] = None,
       dirProfile: Option[Sidecars.Profile] = None): Unit =
     labeled(spark, s"graft.writeDir $dirName") {
     val fs = fsFor(spark, path)
-    val present = keys.filter(df.columns.contains)
     // A keyless write (a sink that never recorded its keys) gets no
     // sidecar: nothing prunes by a key it does not have.
     val statCols =
-      if (keys.isEmpty || present.size != keys.size) Nil
-      else present ++ Sidecars.skipCols(fs, path)
-        .filter(df.columns.contains).filterNot(present.contains)
-    val tagged = statCols.flatMap(k =>
-      KeyDomain.tagOf(df.schema(k).dataType).map(k -> _))
-    // OBSERVED bloom (guide §2.4 — remove whole passes): when the
-    // caller knows an UPPER BOUND on the dir's key count (a COW
-    // rewrite is bounded by its parent's sidecar rows, a merge landing
-    // by the batch's U+I counts, a publish by the batch's keys) and it
-    // fits the bloom cap, the bloom aggregate rides the WRITE job as a
-    // CollectMetrics observation over the same keyCanon the scan-built
-    // path hashes — the post-write bloom pass disappears. A bound can
-    // only OVERSIZE the filter (bits for `bound` items, contents =
-    // actual keys): same zero-false-negative contract, slightly larger
-    // sidecar. Best-effort: if the observation doesn't deliver, the
-    // scan-built path below still runs.
-    val obs: Option[org.apache.spark.sql.Observation] =
-      keyBound match {
-        case Some(bound) if present.size == keys.size &&
-            tagged.nonEmpty && bound > 0 && bound <= BloomMaxKeys =>
-          Some(new org.apache.spark.sql.Observation(
-            s"graft_bloom_${dirName}_${System.nanoTime()}"))
-        case _ => None
-      }
-    val toWrite = obs match {
-      case Some(o) =>
-        val bound = math.max(keyBound.get, 64L)
-        val nn = keys.map(col(_).isNotNull).reduce(_ && _)
-        val bits = org.apache.spark.util.sketch.BloomFilter
-          .optimalNumOfBits(bound, 0.01)
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        df.observe(o, ColumnBridge.internalFn("bloom_filter_agg",
-          when(nn, KeyDomain.keyCanon(df.schema, keys)), lit(bound), lit(bits))
-          .as("bloom"))
-      case None => df
+      if (keys.isEmpty || !keys.forall(df.columns.contains)) Nil
+      else keys ++ Sidecars.skipCols(fs, path)
+        .filter(df.columns.contains).filterNot(keys.contains)
+    val (tagged, aggs) = rangeAggs(df.schema, statCols, keys)
+    val bloomBound = keyBound.filter(b => tagged.nonEmpty && b > 0 &&
+      b <= BloomMaxKeys).map(math.max(_, 64L))
+    val observed = aggs ++ bloomBound.map { bound =>
+      import org.apache.spark.sql.graftbridge.ColumnBridge
+      ColumnBridge.internalFn("bloom_filter_agg",
+        when(keys.map(col(_).isNotNull).reduce(_ && _),
+          KeyDomain.keyCanon(df.schema, keys)), lit(bound),
+        lit(org.apache.spark.util.sketch.BloomFilter
+          .optimalNumOfBits(bound, 0.01))).as("__bloom")
     }
-    toWrite.write.mode("overwrite").parquet(s"$path/$dirName")
+    val obs = if (tagged.isEmpty) None else Some(
+      new org.apache.spark.sql.Observation(
+        s"graft_stats_${dirName}_${System.nanoTime()}"))
+    obs.fold(df)(df.observe(_, observed.head, observed.tail: _*))
+      .write.mode("overwrite").parquet(s"$path/$dirName")
     // Gate profile: best-effort, gated sinks only. When the caller
     // already profiled EXACTLY these rows (writeSnapshotGated sketches
     // its fresh set for the drift diff), the sidecar reuses that
@@ -339,30 +340,16 @@ object Upsert {
           profileSketch(spark.read.schema(df.schema).parquet(s"$path/$dirName"))))
     } catch { case scala.util.control.NonFatal(e) =>
       skipped(s"the profile sidecar of $dirName", e) }
-    if (present.size != keys.size || tagged.isEmpty) return
-    // Drain the observation (the listener delivering it is async —
-    // poll briefly, then fall back to the scan-built pass; a missing
-    // metric costs one extra job, never a wrong sidecar).
-    val preBloom: Option[Array[Byte]] = obs.flatMap { o =>
-      var bytes: Option[Array[Byte]] = None
-      var waited = 0
-      while (bytes.isEmpty && waited < 50) {
-        val m = org.apache.spark.sql.graftbridge.ColumnBridge
-          .observationGetOrEmpty(o)
-        if (m.nonEmpty)
-          bytes = Option(m.getOrElse("bloom", null))
-            .collect { case b: Array[Byte] => b }
-        else { Thread.sleep(20); waited += 1 }
-        if (m.nonEmpty && bytes.isEmpty) waited = 50
-      }
-      bytes
-    }
-    val facts = Sidecars.footerStats(fs,
-        new org.apache.hadoop.fs.Path(path, dirName), tagged, present)
-      .orElse(try Some(keyRangesWithCount(
-          readDirs(spark, Seq(s"$path/$dirName")), statCols, present))
+    if (obs.isEmpty) return
+    val row = obs.flatMap(org.apache.spark.sql.graftbridge.ColumnBridge
+      .observedRow(_, ObservedWaitMs))
+    val facts = row.map(rangeFacts(tagged, _)).orElse(
+      try Some(labeled(spark, s"graft.stats $dirName")(keyRangesWithCount(
+          readDirs(spark, Seq(s"$path/$dirName")), statCols, keys)))
         catch { case scala.util.control.NonFatal(e) =>
           skipped(s"the stats sidecar of $dirName", e); None })
+    val preBloom = row.filter(_ => bloomBound.isDefined)
+      .flatMap(r => Option(r.getAs[Array[Byte]](aggs.size)))
     // The total line (same facts, zero extra cost) lets
     // [[countSnapshot]] answer COUNT(*) from driver metadata. n == 0:
     // every range line is "none", so stage-1 pruning already drops this
@@ -1835,10 +1822,16 @@ object Upsert {
         val rows =
           if (full) readSnapshot(spark, path, cur)
           else readEntriesRaw(spark, path, packedEntries)
+        // keyBound: the pack holds at most its dirs' rows (dv'd rows
+        // only shrink it), so the observed bloom rides the pack's write.
+        val packedRows = packedEntries.map(e =>
+          Sidecars.stats(fs, path, e.dir).flatMap(_.rows))
         writeDirWithStats(spark, path, dirName,
           if (zOrderBy.nonEmpty) zOrderLayout(rows, zOrderBy, zBits, zShards)
           else keySortedForFooters(rows, statKeys),
-          statKeys)
+          statKeys,
+          keyBound = if (packedRows.forall(_.isDefined))
+            Some(packedRows.flatten.sum) else None)
         // Provenance BEFORE the manifest publish: a manifest referencing
         // a compact dir must never be readable without its absorbed set
         // (reconciliation reasons over it).
@@ -2127,7 +2120,9 @@ object Upsert {
     // only ADD dirs and are carried as interleaved. (An OFFLINE
     // eraseKeys can still delete a dir out from under the lock-free
     // reads — that op's contract quiesces writers, this merge included.)
-    Protocol.attempts(fs, path, "mergeSnapshot",
+    // Each attempt's classify checkpoint is freed when the merge returns.
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try Protocol.attempts(fs, path, "mergeSnapshot",
         s"mergeSnapshot: base rewritten under us 5 times at $path — " +
           "rewriter storm; retry when compactions/erasures quiesce") {
       val cur = latestVersion(spark, path)
@@ -2159,19 +2154,23 @@ object Upsert {
         tFilter.map(sc.filter).getOrElse(sc)
           .join(touched, keys, "left_semi")
       }
-      // Dirty/clean classification in ONE Spark job for ALL candidate
-      // dirs (a per-dir isEmpty probe was one sequential job per dir —
-      // on a 100 TB sink with many touched dirs, that serializes round
-      // trips the scheduler can run in parallel): each candidate's
-      // pruned semi-join contributes its dir tag, the union's distinct
-      // tags are the dirty set. Same per-dir scans, same pushed probe
-      // bounds, one job.
-      val hitDirs: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else labeled(spark, "graft.merge classify")(balancedUnion(
-            candidates.map(d => liveHits(d).select(lit(d).as("__dir"))))
-          .distinct()
-          .collect()).map(_.getString(0)).toSet
+      // Dirty/clean classification in ONE pass over ALL candidate dirs
+      // (the scheduler runs their scans in parallel): each candidate's
+      // pruned semi-join contributes its matched LIVE rows,
+      // packed as `__row` beside their `__dir` tag — exactly the rows
+      // the COW rewrites drop and the MoR dvs kill, i.e. the change
+      // record's pre-images. A LAZY local checkpoint keeps them
+      // (batch-sized: at most the touched keys), so the per-dir counts
+      // are the job that materializes it, and the dvs and the record
+      // read its blocks instead of scanning the dirty dirs again.
+      val hits: Option[DataFrame] =
+        if (candidates.isEmpty) None
+        else Some(balancedUnion(candidates.map(d => liveHits(d)
+            .select(struct(col("*")).as("__row"), lit(d).as("__dir"))))
+          .localCheckpoint(false))
+      pins ++= hits
+      val hitDirs: Set[String] = hits.fold(Set.empty[String])(h =>
+        labeled(spark, "graft.merge classify")(dirCounts(h)).keySet)
       val (rewritten, probedClean) = candidates.partition(hitDirs.contains)
       val carried = probedClean ++ baseDirs.filterNot(candidates.contains)
       // COW: rewrite each dirty dir minus touched keys, FOLDING its dvs
@@ -2195,11 +2194,13 @@ object Upsert {
         if (!mor) Map.empty
         else rewritten.zipWithIndex.map { case (d, i) =>
           val dv = s"dv-$target-$i"
-          // keyBound: a dv's keys are a subset of the batch's touched
-          // keys.
+          // The dir's hit keys from the classify checkpoint (a dir holds
+          // each key once), as ONE file: every read of the entry
+          // anti-joins it. keyBound: a subset of the touched keys.
           writeDirWithStats(spark, path, dv,
-            liveHits(d).select(keys.map(col): _*).distinct(), keys,
-            keyBound = Some(tCnt))
+            hits.get.filter(col("__dir") === d)
+              .select(keys.map(k => col("__row")(k).as(k)): _*).coalesce(1),
+            keys, keyBound = Some(tCnt))
           d -> dv
         }.toMap
       // Landing rows: every U (old copy just removed by the rewrites),
@@ -2320,51 +2321,46 @@ object Upsert {
           baseCoverage ++ rewriteNames ++
             interleaved.flatMap(d => Protocol.provenance(fs, path, d)),
           land0.schema, baseVersion = cur)
-        // Change record: the merge's exact I/U/D sets, persisted so
-        // the feed never re-derives them — skipped on the contended
-        // paths (interleaver carried, reconcile republished), where
-        // what landed differs from what this pass computed. Written
-        // AFTER the lock releases, with the rewrite-generation
-        // fingerprint AT COMMIT (still under the lock): the deferred
-        // record write re-validates against it before its meta
-        // publish — an eraseKeys that completed in the window would
-        // otherwise have its record sweep overwritten, re-persisting
-        // the erased subject's pre-images under v<N>.changes.
+        // Change record: the landing dir (the new side) named, and
+        // the classify's pre-images (the old side) stored — skipped on
+        // the contended paths (interleaver carried, reconcile
+        // republished), where what landed differs from what this pass
+        // computed. Without pre-images it is an `append` record, one
+        // meta file written here under the lock. Pre-images are a data
+        // job, written AFTER the lock releases, with the
+        // rewrite-generation fingerprint AT COMMIT (still under the
+        // lock): the deferred record write re-validates against it
+        // before its meta publish — an eraseKeys that completed in the
+        // window would otherwise have its record sweep overwritten,
+        // re-persisting the erased subject's pre-images under
+        // v<N>.changes.
+        val recordable = rv == pubV && interleaved.isEmpty &&
+          !(land0.columns ++ snapshotSchema.fieldNames).exists(ChangeRecCols)
+        if (recordable && hitDirs.isEmpty)
+          writeChangeMeta(fs, path, rv, "append", cur, Some(mergeDir))
         val record =
-          if (rv == pubV && interleaved.isEmpty)
+          if (recordable && hitDirs.nonEmpty)
             Some((rv, Protocol.rewriteGen(fs, path)))
           else None
         (rv, record)
       }.map { case (rv, record) =>
         mergePreRecordHook()
         record.foreach { case (v, genAtCommit) =>
-          // Pre-images = the LIVE rows of the dirty dirs that the
-          // touched keys matched — exactly what the COW rewrites
-          // dropped / the MoR dvs killed. Passed as a THUNK: the
-          // plan's spark.read resolves files at construction, and an
-          // eraseKeys completing in this window may have deleted the
-          // originals — the record writer's gen pre-check must run
-          // before any path resolves (a throw here would fail the
-          // already-committed merge).
-          def removedPre() =
-            if (rewritten.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                snapshotSchema)
-            else balancedUnion(rewritten.map(liveHits))
+          // One file, like a dv: every feed span over v reads it.
           writeMergeChangeRecord(spark, path, v, base = cur,
-            removedPre _,
-            landingDir = mergeDir, landingSchema = land0.schema,
-            uKeys = deduped.filter(opc === "U")
-              .select(keys.map(col): _*),
-            dKeys = deduped.filter(opc === "D")
-              .select(keys.map(col): _*),
-            keys, genAtCommit, tCnt)
+            hits.get.select(col("__row.*")).coalesce(1), mergeDir,
+            genAtCommit)
         }
         rv
       }
-    }
+    } finally pins.foreach(graft.ext.Dedup.freeCheckpoint)
   }
+
+  /** Rows per `__dir` tag of `tagged`, in one grouped pass: the
+    * classify step of merges and erasure (dirs with no row are absent). */
+  private def dirCounts(tagged: DataFrame): Map[String, Long] =
+    tagged.groupBy("__dir").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Time travel: version N exactly as published, whatever has been
     * written since — a union read of its manifest's immutable dirs.
@@ -2508,31 +2504,32 @@ object Upsert {
   // where the key-diff degrades to a join of two full corpora. Layout
   // (all under `_snapshots`, invisible to data readers and the vacuum
   // sweep):
-  //   v<N>.changes.meta — tiny text: record kind (delta|append|none),
-  //     the BASE version the record diffs against, and (append) the
-  //     batch dir name. Written LAST: its presence commits the record.
-  //   v<N>.changes      — (kind delta only) parquet dir of change
-  //     rows: `__op` ∈ I/U/D/P — I and U carry post-images, D carries
-  //     the deleted row's PRE-image, P carries a U key's pre-image
-  //     (composition needs it to diff a multi-version span's endpoints
-  //     and to drop a no-op U chain).
-  // Appends store only the batch dir NAME — its content IS the I set,
-  // so the record costs one small file. Pure repackagings (compaction,
-  // bin-pack) record `none`. Records are BEST-EFFORT: a publish that
-  // was healed, carried, or interleaved skips its record (describing
-  // what actually landed would need the reconcile's full state), and
-  // any missing/broken link degrades the feed to the key-diff — never
-  // to a wrong answer. The recorded base version is what makes
-  // composition safe under racing writers: a version published into
-  // the span out of claim order breaks the chain (base mismatch) and
-  // the feed falls back rather than composing against the wrong
-  // predecessor.
+  //   v<N>.changes.meta — tiny text: record kind (append|delta|none),
+  //     the BASE version the record diffs against, and (append, delta)
+  //     the LANDING dir: the version's new rows, published by the
+  //     version itself. Written LAST: its presence commits the record.
+  //   v<N>.changes      — (kind delta only) parquet dir of the
+  //     PRE-IMAGES: the rows the version deleted or replaced, as they
+  //     were at the base. Composition diffs a span's endpoints from
+  //     them.
+  // Neither side copies data the version already holds: an append (a
+  // publish, or a merge that replaced no row) costs one small file; a
+  // merge writes only its pre-images, which its classify pass already
+  // holds. Pure repackagings (compaction, bin-pack) record `none`.
+  // Records are BEST-EFFORT: a publish that was healed, carried, or
+  // interleaved skips its record (describing what actually landed
+  // would need the reconcile's full state), and any missing/broken
+  // link degrades the feed to the key-diff — never to a wrong answer.
+  // The recorded base version is what makes composition safe under
+  // racing writers: a version published into the span out of claim
+  // order breaks the chain (base mismatch) and the feed falls back
+  // rather than composing against the wrong predecessor.
 
-  private sealed trait ChangeRecord { def base: Int }
-  private final case class AppendRecord(base: Int, dir: String)
-    extends ChangeRecord
-  private final case class RepackRecord(base: Int) extends ChangeRecord
-  private final case class DeltaRecord(base: Int) extends ChangeRecord
+  /** A version's change record: its base, the landing dir holding its
+    * new rows (None for a repackaging), and whether `v<N>.changes`
+    * holds pre-images. */
+  private final case class ChangeRecord(base: Int, landing: Option[String],
+      pre: Boolean)
 
   private def writeChangeMeta(fs: org.apache.hadoop.fs.FileSystem,
       path: String, version: Int, kind: String, base: Int,
@@ -2542,6 +2539,8 @@ object Upsert {
     catch { case scala.util.control.NonFatal(e) => skipped(
       s"change record meta of v$version at $path (the feed key-diffs it)", e) }
 
+  /** The record of `version`; None when it has none, or one of another
+    * layout (the feed key-diffs it). */
   private def readChangeRecord(spark: SparkSession, path: String,
       version: Int): Option[ChangeRecord] =
     try SnapLog.readLinesIfExists(fsFor(spark, path),
@@ -2550,80 +2549,33 @@ object Upsert {
         .map { l => val a = l.split("\t", 2); a(0) -> a(1) }.toMap
       val base = m("base").toInt
       m("kind") match {
-        case "append" => Some(AppendRecord(base, m("dir")))
-        case "none" => Some(RepackRecord(base))
-        case "delta" => Some(DeltaRecord(base))
+        case "append" => m.get("dir").map(d => ChangeRecord(base, Some(d), pre = false))
+        case "delta" => m.get("dir").map(d => ChangeRecord(base, Some(d), pre = true))
+        case "none" => Some(ChangeRecord(base, None, pre = false))
         case _ => None
       }
     } catch { case scala.util.control.NonFatal(e) => skipped(
       s"reading change record of v$version at $path (key-diffed)", e); None }
 
-  /** Reserved internal columns of a delta record; a sink whose DATA
+  /** Reserved internal columns of a composed record; a sink whose DATA
     * schema uses one of these names simply never records (feed falls
     * back to the key-diff — degradation, not corruption). */
-  private val ChangeRecCols = Set("__op", "__v")
+  private val ChangeRecCols = Set("__pre", "__v")
 
-  /** Persist a merge's exact change set. `removedPre` are the
-    * pre-images of every row the touched-dir rewrites dropped (U and D
-    * keys that were present); one probe-filtered re-read of the
-    * rewritten dirs, batch-proportional via the same pruning that
-    * selected them. A U whose key was NOT present landed as an insert
-    * and records as I — the record mirrors what the key-diff would
-    * emit, not the caller's op labels. */
+  /** Persist a merge's pre-images `pre` (the live rows its touched keys
+    * matched, from the classify checkpoint) as `v<version>.changes` in
+    * ONE write job, and commit the record naming `landingDir` as its
+    * new side. */
   private def writeMergeChangeRecord(spark: SparkSession, path: String,
-      version: Int, base: Int, removedPreF: () => DataFrame,
-      landingDir: String,
-      landingSchema: org.apache.spark.sql.types.StructType,
-      uKeys: DataFrame, dKeys: DataFrame,
-      keys: Seq[String],
-      genAtCommit: String, touchedCnt: Long): Unit =
+      version: Int, base: Int, pre: DataFrame, landingDir: String,
+      genAtCommit: String): Unit =
     try labeled(spark, "graft.changeRecord") {
-      if (landingSchema.fieldNames.exists(ChangeRecCols)) return
       val fs = fsFor(spark, path)
       // Cheap pre-check (the locked re-validation below is the
       // guarantee): if history was already rewritten since the commit,
-      // don't even resolve the pre-image read (the dirs may be GONE —
-      // an erasure deletes originals) or stage its rows on disk.
+      // don't stage the pre-images on disk at all.
       if (Protocol.rewriteGen(fs, path) != genAtCommit) return
-      val removedPre = removedPreF()
-      if (removedPre.columns.exists(ChangeRecCols)) return
-      // The record in ONE write job, no standalone checkpoint (guide
-      // §2.4). Old shape: a 5-frame union of two semi-joins over
-      // removedPre, a semi + an anti of uRows against a CHECKPOINTED
-      // removedKeys, and a re-execution of the freshI presence
-      // anti-join — 3 scans of the dirty dirs plus 2 checkpoint jobs
-      // plus a second probe of the base dirs. The post-image side is
-      // EXACTLY the published landing dir (uRows ∪ freshI, immutable,
-      // already on disk — the record is only written when no interleaver
-      // rewrote it), so the record READS IT BACK instead of
-      // recomputing it, and the P/D and U/I splits are per-row CASE
-      // tags over the key-unique batch:
-      //  - every removedPre key is in touched = uKeys ∪ dKeys, so
-      //    key ∈ dKeys ⇒ D else P — one join against the D keys;
-      //  - a landing row is U iff its key is a batch U key AND was
-      //    removed from some dirty dir (the pre-image exists); every
-      //    other landing row is an insert.
-      val dMark = dKeys.withColumn("__is_d", lit(true))
-      val preOp = removedPre.join(maybeBroadcastKeys(dMark, touchedCnt),
-          keys, "left")
-        .withColumn("__op",
-          when(col("__is_d").isNotNull, "D").otherwise("P"))
-        .drop("__is_d")
-      val landing = spark.read.schema(landingSchema)
-        .parquet(s"$path/$landingDir")
-      val uMark = uKeys.withColumn("__is_u", lit(true))
-      val rmMark = removedPre.select(keys.map(col): _*).distinct()
-        .withColumn("__rm", lit(true))
-      val landOp = landing
-        .join(maybeBroadcastKeys(uMark, touchedCnt), keys, "left")
-        .join(maybeBroadcastKeys(rmMark, touchedCnt), keys, "left")
-        .withColumn("__op",
-          when(col("__is_u").isNotNull && col("__rm").isNotNull, "U")
-            .otherwise("I"))
-        .drop("__is_u", "__rm")
-      val rec = Seq(preOp, landOp)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      rec.write.mode("overwrite")
+      pre.write.mode("overwrite")
         .parquet(SnapLog.changesDir(path, version).toString)
       // The meta file is the record's COMMIT POINT, and this write
       // runs AFTER the merge's lock released (a data job must not run
@@ -2654,7 +2606,8 @@ object Upsert {
             Thread.sleep(100L * tries)
         }
       }
-      if (keep.get) writeChangeMeta(fs, path, version, "delta", base, None)
+      if (keep.get)
+        writeChangeMeta(fs, path, version, "delta", base, Some(landingDir))
       else fs.delete(SnapLog.changesDir(path, version), true)
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -2678,11 +2631,11 @@ object Upsert {
     * record, a base link mismatches, a referenced dir is gone, or a
     * reserved column collides) and the caller falls back to the
     * key-diff. Per key over the unioned records: the FIRST version's
-    * pre-image (P/D row) tells whether — and with which values — the
-    * key existed at `from`; the LAST version's non-P row tells whether
-    * it exists at `to`; the endpoint compare drops no-op chains
-    * (U back to the original value, delete-then-reinsert of the same
-    * row) exactly like the key-diff. Cost: a read of the record dirs
+    * pre-image tells whether — and with which values — the key existed
+    * at `from`; the LAST version's landing row tells whether it exists
+    * at `to`; the endpoint compare drops no-op chains (U back to the
+    * original value, delete-then-reinsert of the same row) exactly like
+    * the key-diff. Cost: a read of the record and landing dirs
     * (O(changes)) + one key shuffle — never the corpus. */
   private def composeRecordedChanges(spark: SparkSession, path: String,
       from: Int, to: Int, keys: Seq[String],
@@ -2699,31 +2652,22 @@ object Upsert {
         if (r.get.base != prev) return None
         prev = v
       }
-      // Schema map applied PER FRAME, before the union: records carry
-      // PHYSICAL column names frozen at their write time (a merge's
-      // pre-images use the then-raw snapshot schema), so a feed
-      // spanning a renameColumn would otherwise emit dead physical
-      // columns with spurious NULLs — diverging from the key-diff
-      // path and from every mapped read surface.
-      val frames: Seq[DataFrame] = chain.flatMap {
-        case (_, Some(RepackRecord(_))) => None
-        case (v, Some(AppendRecord(_, dir))) =>
-          if (!fs.exists(new org.apache.hadoop.fs.Path(path, dir)))
-            return None
-          val df = applySchemaMap(spark, path,
-            readDirs(spark, Seq(s"$path/$dir")))
+      // Schema map applied PER FRAME, before the union: records and
+      // landing dirs carry PHYSICAL column names frozen at their write
+      // time (a merge's pre-images use the then-raw snapshot schema),
+      // so a feed spanning a renameColumn would otherwise emit dead
+      // physical columns with spurious NULLs — diverging from the
+      // key-diff path and from every mapped read surface.
+      val frames: Seq[DataFrame] = chain.flatMap { case (v, rec) =>
+        val r = rec.get
+        val sides = r.landing.map(d => new org.apache.hadoop.fs.Path(path, d) -> false) ++
+          (if (r.pre) Some(SnapLog.changesDir(path, v) -> true) else None)
+        sides.map { case (p, isPre) =>
+          if (!fs.exists(p)) return None
+          val df = applySchemaMap(spark, path, readDirs(spark, Seq(p.toString)))
           if (df.columns.exists(ChangeRecCols)) return None
-          Some(df.withColumn("__op", lit("I")).withColumn("__v", lit(v)))
-        case (v, Some(DeltaRecord(_))) =>
-          if (!fs.exists(SnapLog.changesDir(path, v))) return None
-          val raw = readDirs(spark, Seq(SnapLog.changesDir(path, v).toString))
-          // The op marker must survive the map (it is ours, not data):
-          // shelter it under a reserved alias across the application.
-          Some(applySchemaMap(spark, path,
-              raw.withColumnRenamed("__op", "__rec_op"))
-            .withColumnRenamed("__rec_op", "__op")
-            .withColumn("__v", lit(v)))
-        case (_, None) => return None
+          df.withColumn("__pre", lit(isPre)).withColumn("__v", lit(v))
+        }
       }
       lastChangesMode.set(s"recorded:${published.mkString(",")}")
       lastDiffDirs.set((Nil, Nil))
@@ -2736,21 +2680,20 @@ object Upsert {
           .select((col(opCol) +: keys.map(col)) ++ cs.map(col): _*))
       }
       // The span's endpoints per key: the OLD side is the first
-      // version's pre-image (P/D row) — the key's row at `from`, if it
-      // had one; the NEW side is the last version's live row (I/U) —
-      // the key's row at `to`. The key-diff of the two sides drops
-      // no-op chains exactly like the full key-diff.
+      // version's pre-image — the key's row at `from`, if it had one;
+      // the NEW side is the last version's landing row — the key's row
+      // at `to`. The key-diff of the two sides drops no-op chains
+      // exactly like the full key-diff.
       val rec = frames.reduce(_.unionByName(_, allowMissingColumns = true))
       val w = Window.partitionBy(keys.map(col): _*)
       val enriched = rec.filter(keys.map(col(_).isNotNull).reduce(_ && _))
         .withColumn("__minv", min(col("__v")).over(w))
         .withColumn("__maxv", max(col("__v")).over(w))
-      val pre = col("__op").isin("P", "D")
-      val internal = Seq("__op", "__v", "__minv", "__maxv")
+      val internal = Seq("__pre", "__v", "__minv", "__maxv")
       Some(keyDiff(
-        enriched.filter(col("__v") === col("__minv") && pre)
+        enriched.filter(col("__v") === col("__minv") && col("__pre"))
           .drop(internal: _*),
-        enriched.filter(col("__v") === col("__maxv") && !pre)
+        enriched.filter(col("__v") === col("__maxv") && !col("__pre"))
           .drop(internal: _*),
         keys, opCol, preImages))
     } catch { case scala.util.control.NonFatal(e) => skipped(
@@ -3119,19 +3062,25 @@ object Upsert {
         val allDirs = namesOf(perVersion.flatMap(_._2))
         val candidates = pruneDirs(spark, path,
           allDirs.filterNot(processed.contains), doomedPr, doomedCanons)
+        // Bounded hit PROBE (pushed bounding box + semi join) of every
+        // candidate in ONE grouped pass decides which dirs rewrite, and
+        // counts their erased rows.
+        val hits =
+          if (candidates.isEmpty) Map.empty[String, Long]
+          else labeled(spark, "graft.erase classify")(dirCounts(
+            balancedUnion(candidates.map { d =>
+              val df = readDirs(spark, Seq(s"$path/$d"))
+              probeRangeFilter(df.schema, doomedPr).map(df.filter).getOrElse(df)
+                .join(keyRows, keys, "left_semi").select(lit(d).as("__dir"))
+            })))
         candidates.foreach { d =>
-          val df = readDirs(spark, Seq(s"$path/$d"))
-          // Bounded hit PROBE (pushed bounding box + semi join)
-          // decides whether the dir rewrites at all.
-          val probeSide = probeRangeFilter(df.schema, doomedPr)
-            .map(df.filter).getOrElse(df)
-          val hit = probeSide.join(keyRows, keys, "left_semi").count()
+          val hit = hits.getOrElse(d, 0L)
           if (hit == 0) processed(d) = (None, 0L)
           else {
             val rw = s"$d-e$epoch"
             val statKeys0 = Sidecars.keyCols(fs, path)
             writeDirWithStats(spark, path, rw,
-              df.join(keyRows, keys, "left_anti"),
+              readDirs(spark, Seq(s"$path/$d")).join(keyRows, keys, "left_anti"),
               if (statKeys0.nonEmpty) statKeys0 else keys,
               keyBound = Sidecars.stats(fs, path, d).flatMap(_.rows))
             Protocol.writeAbsorbed(fs, path, rw, Protocol.provenance(fs, path, d))

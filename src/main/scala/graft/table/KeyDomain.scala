@@ -3,8 +3,6 @@ package graft.table
 import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions.{col, concat_ws, unix_date, unix_micros}
 import org.apache.spark.sql.types._
@@ -19,8 +17,8 @@ import org.apache.spark.sql.types._
   *   - A CANONICAL value per tag: a Long (the integral value, the epoch
   *     day, the epoch micros) or the String itself.
   *   - One ORDER: Longs numerically, Strings in unsigned UTF-8 byte
-  *     order — the order Spark's min/max and parquet's footer stats
-  *     computed every recorded bound under.
+  *     order — the order Spark's min/max computes every recorded
+  *     bound under.
   *   - The `.stats` line codec: `col TAB tag TAB min TAB max` (strings
   *     URL-coded), `col TAB tag TAB none` for no non-null value, and the
   *     reserved `__rows TAB rows TAB <n>` total.
@@ -80,39 +78,6 @@ private[graft] object KeyDomain {
 
   private def canonValue(v: Any): Any = canon(v).map(_._2).getOrElse(
     throw new IllegalStateException(s"graft: $v is outside the key domain"))
-
-  /** Canonical value of a parquet footer min/max of a `tag` column —
-    * None for a physical/logical type the canon does not cover (INT96
-    * timestamps, unexpected encodings): the caller falls back to a
-    * range aggregate. */
-  def footerCanon(tag: String, pt: PrimitiveType, v: Any): Option[Any] = {
-    val logical = pt.getLogicalTypeAnnotation
-    def long = v.asInstanceOf[Number].longValue
-    (tag, pt.getPrimitiveTypeName) match {
-      case ("long", INT32) | ("long", INT64)
-          if logical == null ||
-            logical.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
-        Some(long)
-      case ("string", BINARY)
-          if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-        Some(new String(
-          v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes, UTF_8))
-      case ("date", INT32)
-          if logical.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
-        Some(long)
-      case ("ts", INT64) => logical match {
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          t.getUnit match {
-            case LogicalTypeAnnotation.TimeUnit.MICROS => Some(long)
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => Some(long * 1000L)
-            case LogicalTypeAnnotation.TimeUnit.NANOS =>
-              Some(Math.floorDiv(long, 1000L))
-          }
-        case _ => None
-      }
-      case _ => None
-    }
-  }
 
   /** Canonical → the external value of `dt`: a narrowed integral, the
     * String, a `LocalDate`, an `Instant` — what a literal or a Row of

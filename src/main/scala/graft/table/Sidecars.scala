@@ -26,8 +26,7 @@ import graft.table.KeyDomain.Ranges
   *   - `.bloom2`: membership of the dir's key canons;
   *   - `.profile`: the drift gate's row count, and per column the null
   *     count and KMV sketch;
-  *   - the parquet footers of its data files: the Spark schema and the
-  *     per-column statistics.
+  *   - the Spark schema in the parquet footers of its data files.
   *
   * A per-dir fact may cost speed but never changes results: a missing
   * file reads as absent, and one that cannot be read or parsed reads as
@@ -143,12 +142,6 @@ private[graft] object Sidecars {
     * parquet footer it writes. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  private def footer[T](fs: FileSystem, st: FileStatus)(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
-    try f(reader.getFooter) finally reader.close()
-  }
-
   /** The Spark schema in the footer of `dir`'s first data file: every
     * file of a dir comes from one write, so one footer speaks for all,
     * and a Spark write always leaves at least one file (partition 0
@@ -156,112 +149,12 @@ private[graft] object Sidecars {
   def footerSchema(fs: FileSystem, dir: Path): StructType = {
     val st = dataFiles(fs, dir).headOption.getOrElse(
       throw new IllegalStateException(s"no parquet data file in $dir"))
-    val json = footer(fs, st)(_.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(SparkSchemaKey) finally reader.close()
     if (json == null) throw new IllegalStateException(
       s"${st.getPath}: no Spark schema in the footer")
     DataType.fromJson(json).asInstanceOf[StructType]
-  }
-
-  /** Range/count facts of a just-written dir read from its parquet
-    * FOOTERS — zero data passes. Returns (per-column ranges of the
-    * `tagged` columns, joint-non-null UPPER bound over `nnCols`, exact
-    * row total), or None when any needed column's stats are unusable
-    * (INT96 timestamps, stats omitted for oversized values, unexpected
-    * physical types): the caller falls back to a range aggregate. The
-    * non-null bound sizes the bloom: joint non-null ≤ min per-column
-    * non-null, so the bloom is sized ≥ the true key count (never
-    * undersized), and a 0 bound is exact (some key column is all-NULL →
-    * no fully-keyed row exists). String footer stats compare in unsigned
-    * byte order — the same order [[KeyDomain.lt]] and the sidecar
-    * contract use — and parquet-mr OMITS binary stats it would have to
-    * truncate, which lands in the fallback, never a wrong bound. */
-  def footerStats(fs: FileSystem, dir: Path, tagged: Seq[(String, String)],
-      nnCols: Seq[String]): Option[(Ranges, Long, Long)] = try {
-    val files = dataFiles(fs, dir)
-    val need = (tagged.map(_._1) ++ nnCols).distinct
-    var totalRows = 0L
-    val mins = scala.collection.mutable.Map.empty[String, Any]
-    val maxs = scala.collection.mutable.Map.empty[String, Any]
-    val nonNull = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    // Per-file facts, so the footer opens can run CONCURRENTLY (below):
-    // None = this file's stats are unusable → whole-dir fallback.
-    case class FileFacts(rows: Long, mins: Map[String, Any],
-        maxs: Map[String, Any], nonNull: Map[String, Long])
-    def factsOf(st: FileStatus): Option[FileFacts] = footer(fs, st) { meta =>
-      var rows = 0L
-      val fMins = scala.collection.mutable.Map.empty[String, Any]
-      val fMaxs = scala.collection.mutable.Map.empty[String, Any]
-      val fNn = scala.collection.mutable.Map.empty[String, Long]
-        .withDefaultValue(0L)
-      val it = meta.getBlocks.iterator()
-      while (it.hasNext) {
-        val b = it.next()
-        rows += b.getRowCount
-        val byName = {
-          import scala.jdk.CollectionConverters._
-          b.getColumns.asScala
-            .filter(_.getPath.size == 1)
-            .map(c => c.getPath.toDotString -> c).toMap
-        }
-        for (c <- need) {
-          val chunk = byName.getOrElse(c, return None)
-          val stats = chunk.getStatistics
-          if (stats == null || !stats.isNumNullsSet) return None
-          val nn = b.getRowCount - stats.getNumNulls
-          fNn(c) = fNn(c) + nn
-          tagged.find(_._1 == c).foreach { case (_, tag) =>
-            if (nn > 0) {
-              if (!stats.hasNonNullValue) return None
-              val lo = KeyDomain.footerCanon(tag, chunk.getPrimitiveType,
-                stats.genericGetMin).getOrElse(return None)
-              val hi = KeyDomain.footerCanon(tag, chunk.getPrimitiveType,
-                stats.genericGetMax).getOrElse(return None)
-              fMins(c) = fMins.get(c).fold(lo)(KeyDomain.min(_, lo))
-              fMaxs(c) = fMaxs.get(c).fold(hi)(KeyDomain.max(_, hi))
-            }
-          }
-        }
-      }
-      Some(FileFacts(rows, fMins.toMap, fMaxs.toMap, fNn.toMap))
-    }
-    // Footer opens run in a SMALL bounded pool, not a sequential driver
-    // loop: a compaction output on an object store would otherwise
-    // serialize N metadata RPCs on the driver (guide §5 driver-bound).
-    // Bounded at 8 — footer reads are latency-bound, not CPU-bound.
-    val perFile: Seq[Option[FileFacts]] =
-      if (files.length <= 1) files.map(factsOf)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.length))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[Option[FileFacts]]] =
-            files.map(st =>
-              new java.util.concurrent.Callable[Option[FileFacts]] {
-                override def call(): Option[FileFacts] = factsOf(st)
-              })
-          pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-        } finally pool.shutdown()
-      }
-    for (ff <- perFile) ff match {
-      case None => return None
-      case Some(f) =>
-        totalRows += f.rows
-        for ((c, v) <- f.nonNull) nonNull(c) = nonNull(c) + v
-        for ((c, lo) <- f.mins) mins(c) = mins.get(c).fold(lo)(KeyDomain.min(_, lo))
-        for ((c, hi) <- f.maxs) maxs(c) = maxs.get(c).fold(hi)(KeyDomain.max(_, hi))
-    }
-    val ranges: Ranges = tagged.map { case (k, tag) =>
-      (k, tag, for (lo <- mins.get(k); hi <- maxs.get(k)) yield (lo, hi))
-    }
-    val nnUpper =
-      if (nnCols.isEmpty) 0L
-      else nnCols.map(nonNull(_)).min
-    Some((ranges, nnUpper, totalRows))
-  } catch { case NonFatal(e) =>
-    log.warn("graft: footer stats of {} not read, falling back: {}", dir, e)
-    None
   }
 
   // ── sink declarations ───────────────────────────────────────────

@@ -21,10 +21,14 @@ object ColumnBridge {
   def internalFn(name: String, args: Column*): Column =
     Column.internalFn(name, args: _*)
 
-  /** Non-blocking read of an Observation's metrics (private[sql]):
-    * empty map until the async listener delivers them. */
-  def observationGetOrEmpty(o: org.apache.spark.sql.Observation)
-      : Map[String, Any] = o.getOrEmpty
+  /** An Observation's metrics row, in the order of its expressions,
+    * waiting at most `waitMs` for the async listener that delivers it;
+    * None when it has not arrived. */
+  def observedRow(o: org.apache.spark.sql.Observation, waitMs: Long)
+      : Option[org.apache.spark.sql.Row] =
+    try Some(scala.concurrent.Await.result(o.future,
+      scala.concurrent.duration.Duration(waitMs, "ms")))
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** `StructType.merge` (private[sql]) — the merge parquet's
     * `mergeSchema` folds footer schemas with: fields of `a` first in

@@ -2,8 +2,6 @@ package graft
 
 import graft.ops.Upsert
 import graft.streaming.EventStream
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,21 +18,9 @@ class SinkSchemaSpec extends SparkSpec {
   /** Stage names of the schema-discovery jobs `body` submits: a
     * `parquet at …` stage outside any SQL execution. (A parquet WRITE's
     * job carries the same stage name, but runs inside an execution.) */
-  private def discoveryJobs(body: => Any): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val inSql = Option(e.properties)
-          .exists(_.getProperty("spark.sql.execution.id") != null)
-        if (!inSql) e.stageInfos.map(_.name)
-          .filter(_.startsWith("parquet at")).foreach(seen.add)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; ListenerBridge.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    seen.toArray(Array.empty[String]).toSeq
-  }
+  private def discoveryJobs(body: => Any): Seq[String] =
+    JobProbe.jobsOf(spark)(body).filterNot(_.inSql)
+      .flatMap(_.stages.filter(_.startsWith("parquet at")))
 
   private def run(df: DataFrame): Unit = { df.collect(); () }
 
